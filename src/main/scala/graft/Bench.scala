@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.runtime.Scratch
+
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query seconds, rows/s, failures, and a
   * round-over-round history table.
@@ -214,7 +216,7 @@ object Bench {
       val left = e.select(col("event_id"), col("user_id"), col("ts_us").as("t"))
       val right = e.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts_us").as("rt"), col("value").as("pval"))
-      val tmp = java.nio.file.Files.createTempDirectory("bench_smb").toString
+      val tmp = Scratch.dir("graft-bench-smb")
       left.write.mode("overwrite").parquet(s"$tmp/l")
       right.write.mode("overwrite").parquet(s"$tmp/r")
       // a FRESH session's in-memory catalog doesn't know a prior run's
@@ -302,8 +304,7 @@ object Bench {
       catch { case _: Throwable => """{"bags":-1,"direct":-1,"manifest":-1}""" }
     def manifestRaw(): String = {
       import org.apache.spark.sql.functions._
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bench-manifest").toString
+      val dir = Scratch.uri("graft-bench-manifest")
       val msgs = sources.Tables.eventsUs(spark, sfDir).select(
         pmod(col("user_id"), lit(64)).as("g"),
         struct(col("event_type").as("topic"), col("ts_us").as("ts_us"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{GeoFunctions, TextFunctions, ZOrder}
 import graft.multimodal.Multimodal
 import graft.operators._
+import graft.runtime.Scratch
 import graft.sources.{Tables, TopicStore}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (inventory) / §7 (plan).
@@ -50,15 +51,83 @@ object SparkEntry {
         struct(col("event_type").as("topic"), col("ts_us").as("ts_us"),
           encode(col("props"), "utf-8").as("payload")).as("m"))
       .filter(wave)
-    val bags = msgs.groupBy(col("g"))
-      .agg(graft.sources.Containers.bagPackTyped(
-        sort_array(collect_list(col("m"))),
-        when(pmod(col("g"), lit(3)) === 0, "none")
-          .when(pmod(col("g"), lit(3)) === 1, "bz2")
-          .otherwise("lz4"),
-        lit("uint8[] data\n"), messagesPerChunk = 256).as("bag"))
-      .select(concat(lit("g"), col("g")).as("bag_file"), col("bag"))
-    graft.sources.Containers.writeBags(bags, dir)
+    writeTypedBags(msgs, Seq(col("g")), lit("uint8[] data\n"), Some(256),
+      concat(lit("g"), col("g")), dir)
+  }
+
+  /** none / bz2 / lz4 by `key` mod 3, so all three codec paths of a bag
+    * fleet face the oracle.
+    */
+  private def codecByResidue(key: Column): Column =
+    when(pmod(key, lit(3)) === 0, "none")
+      .when(pmod(key, lit(3)) === 1, "bz2")
+      .otherwise("lz4")
+
+  /** One typed bag per `keys` group of `msgs`: the group's `m` structs
+    * (topic, ts_us, payload), ts-sorted so chunks tile time, packed
+    * under `msgDef` in chunks of `messagesPerChunk` (one chunk when
+    * None), codec by the first key's residue. Returns the keys + `bag`.
+    */
+  private def packTypedBags(msgs: DataFrame, keys: Seq[Column], msgDef: Column,
+                            messagesPerChunk: Option[Int]): DataFrame = {
+    val (ms, codec) = (sort_array(collect_list(col("m"))), codecByResidue(keys.head))
+    msgs.groupBy(keys: _*).agg(messagesPerChunk
+      .fold(graft.sources.Containers.bagPackTyped(ms, codec, msgDef))(
+        graft.sources.Containers.bagPackTyped(ms, codec, msgDef, _))
+      .as("bag"))
+  }
+
+  /** [[packTypedBags]] written as real `<bagFile>.bag` files under `dir`
+    * (Containers.writeBags: executor-side Hadoop FS, no collect).
+    */
+  private def writeTypedBags(msgs: DataFrame, keys: Seq[Column], msgDef: Column,
+                             messagesPerChunk: Option[Int], bagFile: Column,
+                             dir: String): Unit =
+    graft.sources.Containers.writeBags(
+      packTypedBags(msgs, keys, msgDef, messagesPerChunk)
+        .select(bagFile.as("bag_file"), col("bag")), dir)
+
+  private val GpsDef = "float64 lat\nfloat64 lng\n"
+  private val TagDef = "uint32 seq\nstring label\n"
+
+  /** The two-topic fleet of q_bag_typed_multi and
+    * q_bag_extract_incremental: even events are `gps` messages (two
+    * float64), odd ones `tag` messages (uint32 + string), over 32 drive
+    * groups `g`; written as one typed bag per (g, topic) named `bagFile`.
+    */
+  private def writeGpsTagBags(events: DataFrame, bagFile: Column, dir: String): Unit = {
+    val ser = events.select(
+      pmod(col("user_id"), lit(32)).as("g"),
+      when(col("event_id") % 2 === 0, "gps").otherwise("tag").as("t"),
+      struct(
+        when(col("event_id") % 2 === 0, "gps").otherwise("tag").as("topic"),
+        col("ts_us").as("ts_us"),
+        when(col("event_id") % 2 === 0,
+          graft.sources.Containers.rosSerialize(
+            struct(col("value").cast("double").as("lat"),
+              (-col("value")).cast("double").as("lng")),
+            lit(GpsDef)))
+        .otherwise(
+          graft.sources.Containers.rosSerialize(
+            struct(col("event_id").cast("long").as("seq"),
+              col("event_type").as("label")),
+            lit(TagDef))).as("payload")).as("m"))
+    writeTypedBags(ser, Seq(col("g"), col("t")),
+      when(col("t") === "gps", GpsDef).otherwise(TagDef), Some(512), bagFile, dir)
+  }
+
+  /** Both topics of a [[writeGpsTagBags]] fleet read back from the typed
+    * store, unioned and ordered.
+    */
+  private def readGpsTag(s: SparkSession, store: String): DataFrame = {
+    val gps = graft.sources.Containers.readTypedStore(s, store, "gps")
+      .select(lit("gps").as("topic"), col("ts_us").as("ts"),
+        round(col("lat"), 4).as("num"),
+        lit(null).cast("string").as("label"))
+    val tag = graft.sources.Containers.readTypedStore(s, store, "tag")
+      .select(lit("tag").as("topic"), col("ts_us").as("ts"),
+        col("seq").cast("double").as("num"), col("label"))
+    gps.unionByName(tag).orderBy(col("topic"), col("ts"), col("num"))
   }
 
   /** The driver-generated testdata parquet has ONE row group per table,
@@ -77,8 +146,9 @@ object SparkEntry {
     * `Exchange rangepartitioning` whose RangePartitioner SAMPLES its
     * child — a full second execution of everything above the query's
     * last exchange. For the codec-/merge-heavy queries that segment IS
-    * the query (tools/SortAmpProbe measured ×1.3–3.2 at sf0.1:
-    * q_asof_forward 3.18×, q_bag_typed 2.13×, q_obj_in_lane 2.12×).
+    * the query (×1.3–3.2 at sf0.1, declared vs sortless:
+    * q_asof_forward 3.18×, q_bag_typed 2.13×, q_obj_in_lane 2.12×;
+    * `graft.tools.Dev ab <n> q q:sortless` re-measures one query).
     * Mechanism: the inserted hash `repartition` is an extra Exchange —
     * a STAGE BOUNDARY whose shuffle files materialize the expensive
     * segment once; the range sampler (and then the sort's shuffle)
@@ -805,9 +875,7 @@ object SparkEntry {
             "utf-8").as("payload")).as("m"))
       msgs.groupBy(col("user_id"))
         .agg(graft.sources.Containers.bagPack(sort_array(collect_list(col("m"))),
-          when(pmod(col("user_id"), lit(3)) === 0, "none")
-            .when(pmod(col("user_id"), lit(3)) === 1, "bz2")
-            .otherwise("lz4")).as("bag"))
+          codecByResidue(col("user_id"))).as("bag"))
         .select(col("user_id"),
           explode(graft.sources.Containers.bagUnpack(col("bag"))).as("m"))
         .select(col("user_id"), col("m.topic").as("topic"),
@@ -836,13 +904,7 @@ object SparkEntry {
               col("value").cast("double").as("x"),
               col("event_type").as("label")),
             lit(msgDef)).as("payload")).as("m"))
-      ser.groupBy(col("user_id"))
-        .agg(graft.sources.Containers.bagPackTyped(
-          sort_array(collect_list(col("m"))),
-          when(pmod(col("user_id"), lit(3)) === 0, "none")
-            .when(pmod(col("user_id"), lit(3)) === 1, "bz2")
-            .otherwise("lz4"),
-          lit(msgDef)).as("bag"))
+      packTypedBags(ser, Seq(col("user_id")), lit(msgDef), None)
         .select(col("user_id"),
           explode(graft.sources.Containers.bagUnpack(col("bag"))).as("m"))
         .select(col("user_id"), col("m.ts_us").as("ts"),
@@ -866,8 +928,7 @@ object SparkEntry {
       // Every output field is predicted by the oracle from events.
       graft.plans.GraftExtensions.register(s)
       val msgDef = "uint32 user\nuint32 seq\ntime stamp\nfloat64 x\nstring label\n"
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagscan").toString
+      val dir = Scratch.uri("graft-bagscan")
       val ser = eventsUs(s, d).select(
         pmod(col("user_id"), lit(64)).as("g"),
         struct(lit("ev").as("topic"), col("ts_us").as("ts_us"),
@@ -880,15 +941,8 @@ object SparkEntry {
               col("value").cast("double").as("x"),
               col("event_type").as("label")),
             lit(msgDef)).as("payload")).as("m"))
-      val bags = ser.groupBy(col("g"))
-        .agg(graft.sources.Containers.bagPackTyped(
-          sort_array(collect_list(col("m"))),
-          when(pmod(col("g"), lit(3)) === 0, "none")
-            .when(pmod(col("g"), lit(3)) === 1, "bz2")
-            .otherwise("lz4"),
-          lit(msgDef), messagesPerChunk = 512).as("bag"))
-        .select(concat(lit("g"), col("g")).as("bag_file"), col("bag"))
-      graft.sources.Containers.writeBags(bags, dir)
+      writeTypedBags(ser, Seq(col("g")), lit(msgDef), Some(512),
+        concat(lit("g"), col("g")), dir)
       graft.sources.Containers.readBagTyped(s, dir, "ev")
         .select(col("user").as("user_id"), col("ts_us").as("ts"),
           col("seq"),
@@ -911,8 +965,7 @@ object SparkEntry {
       // arithmetic on the oracle side.
       graft.plans.GraftExtensions.register(s)
       val msgDef = "uint32 user\nuint32 seq\nfloat64 x\nstring label\n"
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagband").toString
+      val dir = Scratch.uri("graft-bagband")
       val ser = eventsUs(s, d).select(
         pmod(col("user_id"), lit(64)).as("g"),
         struct(lit("ev").as("topic"), col("ts_us").as("ts_us"),
@@ -923,15 +976,8 @@ object SparkEntry {
               col("value").cast("double").as("x"),
               col("event_type").as("label")),
             lit(msgDef)).as("payload")).as("m"))
-      val bags = ser.groupBy(col("g"))
-        .agg(graft.sources.Containers.bagPackTyped(
-          sort_array(collect_list(col("m"))), // ts-sorted → chunks tile time
-          when(pmod(col("g"), lit(3)) === 0, "none")
-            .when(pmod(col("g"), lit(3)) === 1, "bz2")
-            .otherwise("lz4"),
-          lit(msgDef), messagesPerChunk = 256).as("bag"))
-        .select(concat(lit("g"), col("g")).as("bag_file"), col("bag"))
-      graft.sources.Containers.writeBags(bags, dir)
+      writeTypedBags(ser, Seq(col("g")), lit(msgDef), Some(256),
+        concat(lit("g"), col("g")), dir)
       // size-guarded driver scalars: the two band bounds
       val mm = eventsUs(s, d)
         .agg(min(col("ts_us")).as("mn"), max(col("ts_us")).as("mx")).head()
@@ -955,48 +1001,12 @@ object SparkEntry {
       // topic read back partition-pruned and unioned — every field
       // predicted by the oracle from events.
       graft.plans.GraftExtensions.register(s)
-      val gpsDef = "float64 lat\nfloat64 lng\n"
-      val tagDef = "uint32 seq\nstring label\n"
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagmulti").toString
-      val store = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagmulti-store").toString
-      val ser = eventsUs(s, d).select(
-        pmod(col("user_id"), lit(32)).as("g"),
-        when(col("event_id") % 2 === 0, "gps").otherwise("tag").as("t"),
-        struct(
-          when(col("event_id") % 2 === 0, "gps").otherwise("tag").as("topic"),
-          col("ts_us").as("ts_us"),
-          when(col("event_id") % 2 === 0,
-            graft.sources.Containers.rosSerialize(
-              struct(col("value").cast("double").as("lat"),
-                (-col("value")).cast("double").as("lng")),
-              lit(gpsDef)))
-          .otherwise(
-            graft.sources.Containers.rosSerialize(
-              struct(col("event_id").cast("long").as("seq"),
-                col("event_type").as("label")),
-              lit(tagDef))).as("payload")).as("m"))
-      val bags = ser.groupBy(col("g"), col("t"))
-        .agg(graft.sources.Containers.bagPackTyped(
-          sort_array(collect_list(col("m"))),
-          when(pmod(col("g"), lit(3)) === 0, "none")
-            .when(pmod(col("g"), lit(3)) === 1, "bz2")
-            .otherwise("lz4"),
-          when(col("t") === "gps", gpsDef).otherwise(tagDef),
-          messagesPerChunk = 512).as("bag"))
-        .select(concat(lit("g"), col("g"), lit("_"), col("t")).as("bag_file"),
-          col("bag"))
-      graft.sources.Containers.writeBags(bags, dir)
+      val dir = Scratch.uri("graft-bagmulti")
+      val store = Scratch.uri("graft-bagmulti-store")
+      writeGpsTagBags(eventsUs(s, d),
+        concat(lit("g"), col("g"), lit("_"), col("t")), dir)
       graft.sources.Containers.typedExtractTo(s, dir, store, Seq("gps", "tag"))
-      val gps = graft.sources.Containers.readTypedStore(s, store, "gps")
-        .select(lit("gps").as("topic"), col("ts_us").as("ts"),
-          round(col("lat"), 4).as("num"),
-          lit(null).cast("string").as("label"))
-      val tag = graft.sources.Containers.readTypedStore(s, store, "tag")
-        .select(lit("tag").as("topic"), col("ts_us").as("ts"),
-          col("seq").cast("double").as("num"), col("label"))
-      gps.unionByName(tag).orderBy(col("topic"), col("ts"), col("num"))
+      readGpsTag(s, store)
     }),
     "q_bag_extract_incremental" -> ((s, d) => {
       // the NIGHTLY-INGEST contract: half the fleet lands and extracts
@@ -1008,42 +1018,11 @@ object SparkEntry {
       // every field predicted by the oracle from events — identical
       // output contract to q_bag_typed_multi, reached incrementally.
       graft.plans.GraftExtensions.register(s)
-      val gpsDef = "float64 lat\nfloat64 lng\n"
-      val tagDef = "uint32 seq\nstring label\n"
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagincq").toString
-      val store = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagincq-store").toString
-      def land(wave: Column): Unit = {
-        val ser = eventsUs(s, d).filter(wave).select(
-          pmod(col("user_id"), lit(32)).as("g"),
-          when(col("event_id") % 2 === 0, "gps").otherwise("tag").as("t"),
-          struct(
-            when(col("event_id") % 2 === 0, "gps").otherwise("tag").as("topic"),
-            col("ts_us").as("ts_us"),
-            when(col("event_id") % 2 === 0,
-              graft.sources.Containers.rosSerialize(
-                struct(col("value").cast("double").as("lat"),
-                  (-col("value")).cast("double").as("lng")),
-                lit(gpsDef)))
-            .otherwise(
-              graft.sources.Containers.rosSerialize(
-                struct(col("event_id").cast("long").as("seq"),
-                  col("event_type").as("label")),
-                lit(tagDef))).as("payload")).as("m"))
-        val bags = ser.groupBy(col("g"), col("t"))
-          .agg(graft.sources.Containers.bagPackTyped(
-            sort_array(collect_list(col("m"))),
-            when(pmod(col("g"), lit(3)) === 0, "none")
-              .when(pmod(col("g"), lit(3)) === 1, "bz2")
-              .otherwise("lz4"),
-            when(col("t") === "gps", gpsDef).otherwise(tagDef),
-            messagesPerChunk = 512).as("bag"))
-          .select(concat(lit("g"), col("g"), lit("_w"),
-            pmod(col("g"), lit(2)), lit("_"), col("t")).as("bag_file"),
-            col("bag"))
-        graft.sources.Containers.writeBags(bags, dir)
-      }
+      val dir = Scratch.uri("graft-bagincq")
+      val store = Scratch.uri("graft-bagincq-store")
+      def land(wave: Column): Unit =
+        writeGpsTagBags(eventsUs(s, d).filter(wave), concat(lit("g"), col("g"),
+          lit("_w"), pmod(col("g"), lit(2)), lit("_"), col("t")), dir)
       // waves split by group parity so BOTH are non-empty at any SF
       land(pmod(pmod(col("user_id"), lit(32)), lit(2)) === 0)
       graft.sources.Containers.typedExtractIncremental(
@@ -1068,14 +1047,7 @@ object SparkEntry {
       require(incReads == expectedReads && incReads > 0,
         s"incremental extraction must decode only the new bags' chunks " +
           s"($incReads vs $expectedReads planned)")
-      val gps = graft.sources.Containers.readTypedStore(s, store, "gps")
-        .select(lit("gps").as("topic"), col("ts_us").as("ts"),
-          round(col("lat"), 4).as("num"),
-          lit(null).cast("string").as("label"))
-      val tag = graft.sources.Containers.readTypedStore(s, store, "tag")
-        .select(lit("tag").as("topic"), col("ts_us").as("ts"),
-          col("seq").cast("double").as("num"), col("label"))
-      gps.unionByName(tag).orderBy(col("topic"), col("ts"), col("num"))
+      readGpsTag(s, store)
     }),
     "q_bag_scene_pipeline" -> ((s, d) => {
       // THE reference end-to-end chain in ONE oracle-keyed plan
@@ -1094,10 +1066,8 @@ object SparkEntry {
       graft.plans.GraftExtensions.register(s)
       val npDef = "uint32 user\nuint32 np\n"
       val spdDef = "uint32 user\nfloat64 v\n"
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagscene").toString
-      val store = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagscene-store").toString
+      val dir = Scratch.uri("graft-bagscene")
+      val store = Scratch.uri("graft-bagscene-store")
       val ser = eventsUs(s, d).select(
         pmod(col("user_id"), lit(32)).as("g"),
         when(col("event_id") % 2 === 0, "np").otherwise("spd").as("t"),
@@ -1114,17 +1084,9 @@ object SparkEntry {
               struct(col("user_id").cast("long").as("user"),
                 col("value").cast("double").as("v")),
               lit(spdDef))).as("payload")).as("m"))
-      val bags = ser.groupBy(col("g"), col("t"))
-        .agg(graft.sources.Containers.bagPackTyped(
-          sort_array(collect_list(col("m"))),
-          when(pmod(col("g"), lit(3)) === 0, "none")
-            .when(pmod(col("g"), lit(3)) === 1, "bz2")
-            .otherwise("lz4"),
-          when(col("t") === "np", npDef).otherwise(spdDef),
-          messagesPerChunk = 512).as("bag"))
-        .select(concat(lit("g"), col("g"), lit("_"), col("t")).as("bag_file"),
-          col("bag"))
-      graft.sources.Containers.writeBags(bags, dir)
+      writeTypedBags(ser, Seq(col("g"), col("t")),
+        when(col("t") === "np", npDef).otherwise(spdDef), Some(512),
+        concat(lit("g"), col("g"), lit("_"), col("t")), dir)
       graft.sources.Containers.typedExtractTo(s, dir, store, Seq("np", "spd"))
       val np = graft.sources.Containers.readTypedStore(s, store, "np")
         .select(col("user").as("user_id"), col("ts_us").as("ts"),
@@ -1160,8 +1122,7 @@ object SparkEntry {
       // array<short> — a per-byte array row; base64 keeps the encoded
       // image as ONE string field, lossless and plan-native both ways)
       val camDef = "uint32 seq\nstring format\nstring data\n"
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagframes").toString
+      val dir = Scratch.uri("graft-bagframes")
       val media = graft.multimodal.Multimodal.synthesize(
         spread(Tables.documents(s, d)), "doc_id")
       val ser = media.toDF().select(
@@ -1174,14 +1135,8 @@ object SparkEntry {
               col("media_type").as("format"),
               base64(col("payload")).as("data")),
             lit(camDef)).as("payload")).as("m"))
-      val bags = ser.groupBy(col("g"))
-        .agg(graft.sources.Containers.bagPackTyped(
-          sort_array(collect_list(col("m"))),
-          when(pmod(col("g"), lit(3)) === 0, "none")
-            .when(pmod(col("g"), lit(3)) === 1, "bz2").otherwise("lz4"),
-          lit(camDef), messagesPerChunk = 64).as("bag"))
-        .select(concat(lit("cam_g"), col("g")).as("bag_file"), col("bag"))
-      graft.sources.Containers.writeBags(bags, dir)
+      writeTypedBags(ser, Seq(col("g")), lit(camDef), Some(64),
+        concat(lit("cam_g"), col("g")), dir)
       val typed = graft.sources.Containers.readBagTyped(s, dir, "cam")
         .withColumn("img", unbase64(col("data")))
       val diffs = graft.multimodal.Multimodal.frameDiffs(
@@ -1206,8 +1161,7 @@ object SparkEntry {
       // positioned read per bag instead of a full decompress-scan.
       // BagDataSourceSpec pins readCalls == 0; the oracle pins values.
       graft.plans.GraftExtensions.register(s)
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagcnt").toString
+      val dir = Scratch.uri("graft-bagcnt")
       packEventBags(s, d, dir)
       s.read.format("graft.sources.v2.BagDataSource").load(dir)
         .groupBy(col("topic")).agg(count(lit(1)).as("cnt"))
@@ -1221,8 +1175,7 @@ object SparkEntry {
       // message lives in exactly one chunk). Same zero-chunk-read
       // contract as q_bag_counts, oracle-pinned from events.
       graft.plans.GraftExtensions.register(s)
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-baginfo").toString
+      val dir = Scratch.uri("graft-baginfo")
       packEventBags(s, d, dir)
       s.read.format("graft.sources.v2.BagDataSource").load(dir)
         .agg(count(lit(1)).as("n"), min(col("ts_us")).as("min_ts"),
@@ -1237,8 +1190,7 @@ object SparkEntry {
       // reads are header-sized positioned reads, ZERO chunks
       // decompressed — BagDataSourceSpec pins readCalls == 0).
       graft.plans.GraftExtensions.register(s)
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-baginfot").toString
+      val dir = Scratch.uri("graft-baginfot")
       packEventBags(s, d, dir)
       s.read.format("graft.sources.v2.BagDataSource").load(dir)
         .groupBy(col("topic"))
@@ -1258,8 +1210,7 @@ object SparkEntry {
       // (BagManifestSpec), so freshness is a speed contract, never a
       // correctness one.
       graft.plans.GraftExtensions.register(s)
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagmanq").toString
+      val dir = Scratch.uri("graft-bagmanq")
       packEventBags(s, d, dir)
       graft.sources.BagManifest.write(s, dir)
       graft.sources.v2.BagScan.resetPlanProbe()
@@ -1283,8 +1234,7 @@ object SparkEntry {
       // values identical to the raw events — the nightly-touch-up
       // contract a growing 100 TB lake runs on.
       graft.plans.GraftExtensions.register(s)
-      val dir = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-bagmanrefq").toString
+      val dir = Scratch.uri("graft-bagmanrefq")
       // waves split by group parity so BOTH are non-empty at any SF
       // (small corpora populate few user_id residues)
       packEventBags(s, d, dir, wave = pmod(col("g"), lit(2)) === 0)
@@ -1321,8 +1271,7 @@ object SparkEntry {
       // rides the same DSv2 delegation as q_snapshot_dsv2.
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snaptt").toString + "/docs"
+      val t = Scratch.uri("graft-snaptt") + "/docs"
       graft.sources.SnapshotStore.append(
         docs.filter(col("doc_id") % 10 < 8), t, statsCols = Seq("doc_id"))
       Thread.sleep(10)
@@ -1346,8 +1295,7 @@ object SparkEntry {
       // DuckDB ground truth)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapq").toString + "/docs"
+      val t = Scratch.uri("graft-snapq") + "/docs"
       graft.sources.SnapshotStore.append(
         docs.filter(col("doc_id") % 10 < 8), t, statsCols = Seq("doc_id"))
       graft.sources.SnapshotStore.append(
@@ -1364,8 +1312,7 @@ object SparkEntry {
       // that the refine actually skipped files.
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snappoint").toString + "/docs"
+      val t = Scratch.uri("graft-snappoint") + "/docs"
       (0 until 4).foreach { k =>
         graft.sources.SnapshotStore.append(
           docs.filter(col("doc_id") % 4 === k).coalesce(1), t,
@@ -1392,8 +1339,7 @@ object SparkEntry {
       // which is also the form whose log-stats pruning SnapshotVariantSpec
       // pins), then typed-extract with variant_get — no per-read JSON
       // re-tokenization, binary-encoded payload fidelity preserved.
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-variant").toString + "/ev"
+      val t = Scratch.uri("graft-variant") + "/ev"
       graft.sources.SnapshotStore.append(
         spread(Tables.events(s, d)).select(col("event_id"), col("event_type"),
           parse_json(col("props")).as("v"),
@@ -1415,8 +1361,7 @@ object SparkEntry {
       // files before any scan, readBox applies the residual predicate
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapstrbox").toString + "/docs"
+      val t = Scratch.uri("graft-snapstrbox") + "/docs"
       Seq("de", "en", "es", "fr", "zh").foreach { lang =>
         graft.sources.SnapshotStore.append(
           docs.filter(col("lang") === lang).coalesce(1), t,
@@ -1438,8 +1383,7 @@ object SparkEntry {
       // SnapshotDataSourceSpec)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapdsv2").toString + "/docs"
+      val t = Scratch.uri("graft-snapdsv2") + "/docs"
       val store = graft.sources.SnapshotStore
       store.append(docs.filter(col("doc_id") % 10 < 8), t)  // v1
       store.append(docs.filter(col("doc_id") % 10 >= 8), t) // v2
@@ -1456,8 +1400,7 @@ object SparkEntry {
       // keys insert, everything else carries over
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapup").toString + "/docs"
+      val t = Scratch.uri("graft-snapup") + "/docs"
       val store = graft.sources.SnapshotStore
       store.append(docs.filter(col("doc_id") % 10 < 8), t,
         statsCols = Seq("doc_id"))
@@ -1476,8 +1419,7 @@ object SparkEntry {
       // addedSince refuses; one parquet scan + broadcast tag join
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapcdf").toString + "/docs"
+      val t = Scratch.uri("graft-snapcdf") + "/docs"
       val store = graft.sources.SnapshotStore
       store.append(docs.filter(col("doc_id") % 10 < 5), t)    // v1
       store.append(docs.filter(col("doc_id") % 10 === 5), t)  // v2
@@ -1496,8 +1438,7 @@ object SparkEntry {
       // aggregate pushdown by the full file count.
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapagg").toString + "/docs"
+      val t = Scratch.uri("graft-snapagg") + "/docs"
       graft.sources.SnapshotStore.append(
         docs.filter(col("doc_id") % 10 < 5), t,
         statsCols = Seq("doc_id", "n_chars"))
@@ -1521,8 +1462,7 @@ object SparkEntry {
         .select(col("doc_id"),
           when(pmod(col("doc_id"), lit(3)) =!= 0, col("lang")).as("lang"),
           col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapnull").toString + "/docs"
+      val t = Scratch.uri("graft-snapnull") + "/docs"
       graft.sources.SnapshotStore.append(docs, t,
         statsCols = Seq("doc_id", "lang", "n_chars"))
       s.read.format("graft.sources.v2.SnapshotDataSource").load(t)
@@ -1543,8 +1483,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       docs.createOrReplaceTempView("snapshot_sql_src")
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapsql").toString + "/docs"
+      val t = Scratch.uri("graft-snapsql") + "/docs"
       s.sql(s"CREATE TABLE graft.`$t` AS " +
         "SELECT * FROM snapshot_sql_src WHERE doc_id % 10 < 8")   // v1
       s.sql(s"INSERT INTO graft.`$t` " +
@@ -1568,8 +1507,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapdel").toString + "/docs"
+      val t = Scratch.uri("graft-snapdel") + "/docs"
       graft.sources.SnapshotStore.append(docs, t, statsCols = Seq("doc_id"))
       s.sql(s"DELETE FROM graft.`$t` WHERE n_chars < 600 AND lang = 'en'")
       graft.sources.SnapshotStore.snapshot(s, t).orderBy(col("doc_id"))
@@ -1589,8 +1527,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapdv").toString + "/docs"
+      val t = Scratch.uri("graft-snapdv") + "/docs"
       graft.sources.SnapshotStore.append(docs, t, statsCols = Seq("doc_id"))
       s.sql(s"CALL graft.enable_dv('$t')").collect()
       val before = graft.sources.SnapshotStore.state(s, t).live.map(_.path).toSet
@@ -1621,8 +1558,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapdvp").toString + "/docs"
+      val t = Scratch.uri("graft-snapdvp") + "/docs"
       graft.sources.SnapshotStore.append(docs, t, statsCols = Seq("doc_id"))
       s.sql(s"CALL graft.enable_dv('$t')").collect()
       s.sql(s"DELETE FROM graft.`$t` WHERE n_chars >= 900 OR lang = 'ja'")
@@ -1644,8 +1580,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapdvc").toString + "/docs"
+      val t = Scratch.uri("graft-snapdvc") + "/docs"
       graft.sources.SnapshotStore.append(docs, t, statsCols = Seq("doc_id"))
       s.sql(s"CALL graft.enable_dv('$t')").collect()
       s.sql(s"DELETE FROM graft.`$t` WHERE lang = 'de'")
@@ -1668,8 +1603,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       docs.createOrReplaceTempView("snapshot_replace_src")
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snaprepl").toString + "/docs"
+      val t = Scratch.uri("graft-snaprepl") + "/docs"
       graft.sources.SnapshotStore.append(docs, t, statsCols = Seq("doc_id"))
       s.sql(s"INSERT INTO graft.`$t` REPLACE WHERE lang = 'en' " +
         "SELECT doc_id, lang, n_chars + 5000 AS n_chars " +
@@ -1689,8 +1623,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       docs.createOrReplaceTempView("snapshot_evolve_src")
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapevo").toString + "/docs"
+      val t = Scratch.uri("graft-snapevo") + "/docs"
       graft.sources.SnapshotStore.append(
         docs.filter(col("doc_id") % 10 < 8).select(col("doc_id"), col("lang")),
         t, statsCols = Seq("doc_id"))
@@ -1734,8 +1667,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
         .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
           col("n_chars").cast("long").as("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapopt").toString + "/docs"
+      val t = Scratch.uri("graft-snapopt") + "/docs"
       val store = graft.sources.SnapshotStore
       (0 until 4).foreach(i => store.append(
         docs.filter(col("doc_id") % 4 === i), t,
@@ -1768,8 +1700,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapupd").toString + "/docs"
+      val t = Scratch.uri("graft-snapupd") + "/docs"
       graft.sources.SnapshotStore.append(docs, t, statsCols = Seq("doc_id"))
       s.sql(s"UPDATE graft.`$t` SET n_chars = n_chars + 10000, " +
         s"lang = concat(lang, '-upd') WHERE n_chars < 500 AND doc_id % 3 = 0")
@@ -1790,8 +1721,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d).select(col("doc_id"),
         when(col("lang") =!= "de",
           struct(col("lang").as("lang"), col("n_chars").as("n_chars"))).as("meta"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapnest").toString + "/docs"
+      val t = Scratch.uri("graft-snapnest") + "/docs"
       graft.sources.SnapshotStore.append(docs, t, statsCols = Seq("doc_id"))
       s.sql(s"UPDATE graft.`$t` SET meta.n_chars = meta.n_chars + 10000 " +
         s"WHERE doc_id % 3 = 0")
@@ -1818,8 +1748,7 @@ object SparkEntry {
             round(col("value"), 4).as("val")).as("det"))
         .groupBy(col("user_id"))
         .agg(sort_array(collect_list(col("det"))).as("dets"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snaparr").toString + "/dets"
+      val t = Scratch.uri("graft-snaparr") + "/dets"
       graft.sources.SnapshotStore.append(dets, t, statsCols = Seq("user_id"))
       s.sql(s"UPDATE graft.`$t` SET dets.val = 0.0 WHERE user_id % 5 = 0")
       graft.sources.SnapshotStore.snapshot(s, t)
@@ -1843,8 +1772,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapmerge").toString + "/docs"
+      val t = Scratch.uri("graft-snapmerge") + "/docs"
       graft.sources.SnapshotStore.append(
         docs.filter(col("doc_id") % 10 < 8), t, statsCols = Seq("doc_id"))
       docs.filter(col("doc_id") % 10 >= 6)
@@ -1872,8 +1800,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapupdv").toString + "/docs"
+      val t = Scratch.uri("graft-snapupdv") + "/docs"
       graft.sources.SnapshotStore.append(docs, t, statsCols = Seq("doc_id"))
       s.sql(s"CALL graft.enable_dv('$t')").collect()
       val before = graft.sources.SnapshotStore.state(s, t).live.map(_.path).toSet
@@ -1898,8 +1825,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapmgdv").toString + "/docs"
+      val t = Scratch.uri("graft-snapmgdv") + "/docs"
       graft.sources.SnapshotStore.append(
         docs.filter(col("doc_id") % 10 < 8), t, statsCols = Seq("doc_id"))
       s.sql(s"CALL graft.enable_dv('$t')").collect()
@@ -1936,8 +1862,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapcons").toString + "/docs"
+      val t = Scratch.uri("graft-snapcons") + "/docs"
       graft.sources.SnapshotStore.append(
         docs.filter(col("lang") === "en" && col("doc_id") % 2 === 0), t,
         statsCols = Seq("doc_id"))
@@ -1980,8 +1905,7 @@ object SparkEntry {
         classOf[graft.sources.v2.SnapshotCatalog].getName)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val base = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-snapclone").toString
+      val base = Scratch.uri("graft-snapclone")
       val src = s"$base/src"; val dst = s"$base/clone"; val hist = s"$base/clone_v1"
       graft.sources.SnapshotStore.append(
         docs.filter(col("lang") === "en"), src, statsCols = Seq("doc_id")) // v1
@@ -2286,8 +2210,7 @@ object SparkEntry {
       // refuse on staleness, pure appends assign to the trained
       // centroids O(delta). Answers identically to q_ann_ivf_trained
       // (same oracle); index-vs-DML semantics pinned by VectorIndexSpec.
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ivfidx").toString
+      val dir = Scratch.dir("graft-ivfidx")
       val (tbl, idx) = (s"file:$dir/emb", s"file:$dir/ivf")
       graft.sources.SnapshotStore.append(spread(Tables.embeddings(s, d)),
         tbl, statsCols = Seq("vec_id"))
@@ -2302,8 +2225,7 @@ object SparkEntry {
       // assignment) and delta appends assign two-level against the
       // stamped centroids — the persisted twin of q_ann_ivf_scaled,
       // same dynamic oracle derivation
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ivfsidx").toString
+      val dir = Scratch.dir("graft-ivfsidx")
       val (tbl, idx) = (s"file:$dir/emb", s"file:$dir/ivf")
       graft.sources.SnapshotStore.append(spread(Tables.embeddings(s, d)),
         tbl, statsCols = Seq("vec_id"))
@@ -2375,8 +2297,7 @@ object SparkEntry {
       // table; the embeddings join back for the finalists alone.
       // Answers identically to q_ann_sq (same oracle); index-vs-DML
       // semantics are pinned by VectorIndexSpec.
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-sqidx").toString
+      val dir = Scratch.dir("graft-sqidx")
       val (tbl, idx) = (s"file:$dir/emb", s"file:$dir/sq")
       graft.sources.SnapshotStore.append(spread(Tables.embeddings(s, d)),
         tbl, statsCols = Seq("vec_id"))

@@ -10,6 +10,8 @@ object Verify {
     // optional subset for fast dev iteration (tools/check.py takes the
     // same trailing names); the driver always runs the full surface
     val only: Set[String] = args.drop(2).toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.configure(
       SparkSession.builder()

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.plans.BagPlanner
 import graft.sources.v2.{BagScan, PlannedBag, SerializableHadoopConf}
 
-/** PERSISTED bag-index manifest — [[StatsManifest]]'s move applied to
-  * ROS bag indexes. Planning a bag directory costs one O(index)
+/** PERSISTED bag-index manifest — the log-resident file stats of
+  * [[SnapshotStore]] applied to ROS bag indexes. Planning a bag directory costs one O(index)
   * positioned read PER BAG ([[BagScan.readPlans]] — pooled, but still
   * 100k round trips on a 100k-bag lake, re-paid by EVERY query). The
   * manifest harvests each bag's complete planning state ONCE,

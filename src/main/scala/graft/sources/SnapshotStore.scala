@@ -46,11 +46,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Commit files carry per-file row counts and long-column [min,max]
   * harvested from parquet footers at WRITE time, so
   * [[prunedLiveFiles]] answers box/point queries from the log alone —
-  * no per-query footer reads (the scale fix [[StatsManifest]] makes for
-  * plain directories, here transactional for free because commits are
-  * immutable). Checkpoints every [[checkpointEvery]] commits bound
-  * replay cost: a reader lists the log, loads the newest checkpoint ≤
-  * its target version, and replays only the tail.
+  * no per-query footer reads, and the stats are transactional for free
+  * because commits are immutable. Checkpoints every [[checkpointEvery]]
+  * commits bound replay cost: a reader lists the log, loads the newest
+  * checkpoint ≤ its target version, and replays only the tail.
   *
   * FORMAT COMPATIBILITY POLICY: every commit written by this code ends
   * with a CRC32 integrity footer (`e\t<crc>`), and that is the ONLY

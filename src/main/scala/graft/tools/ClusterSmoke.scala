@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.runtime.Scratch
+
 /** Multi-PROCESS executor smoke — the regime `local[*]` structurally
   * cannot reach: `local-cluster[2,2,1024]` spawns two REAL executor
   * JVMs (SPARK_HOME required), so every task closure, custom Catalyst
@@ -50,8 +52,7 @@ object ClusterSmoke {
       leg("q_bag_roundtrip")(qs("q_bag_roundtrip")(spark, sfDir))
       // snapshot store end to end on the cluster: distributed write,
       // DSv2 snapshot read, bloom/box point-skip scan
-      val t = "file:" + java.nio.file.Files
-        .createTempDirectory("graft-cluster-snap").toString + "/t"
+      val t = Scratch.uri("graft-cluster-snap") + "/t"
       import spark.implicits._
       graft.sources.SnapshotStore.append(
         spark.range(10000).map(i => (i, s"v$i")).toDF("id", "v")

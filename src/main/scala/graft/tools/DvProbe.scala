@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.runtime.Scratch
 import graft.sources.{SnapshotStore, Tables}
 
 /** Deletion-vector read-path cost at ADVERSARIAL delete cardinality —
@@ -21,15 +21,13 @@ import graft.sources.{SnapshotStore, Tables}
   *   B. after `purgeDv` rewrote the files clean (`scan_purged`),
   * fresh-execution median of 5, the Bench operator-level methodology.
   * `ratio` = A/B: the pure read-side overhead of carrying the delete as
-  * positions instead of rewritten files.
-  *
-  * Usage: runMain graft.tools.DvProbe [sfDir] [rep] [files] [pct]
+  * positions instead of rewritten files. [[graft.Bench]] reports it as
+  * `dv_operator_level`.
   */
 object DvProbe {
   def measure(spark: SparkSession, sfDir: String, rep: Int, files: Int,
               pct: Int, passes: Int = 5): String = {
-    val t = "file:" + java.nio.file.Files
-      .createTempDirectory("graft-dvprobe").toString + "/t"
+    val t = Scratch.uri("graft-dvprobe") + "/t"
     val base = Tables.eventsUs(spark, sfDir)
       .crossJoin(spark.range(rep.toLong).select(col("id").as("rep")))
       .select((col("event_id") * rep + col("rep")).as("id"),
@@ -70,18 +68,5 @@ object DvProbe {
       f""""passes":$passes,"scan_dv":$scanDv%.3f,"sd_dv":$sdDv%.3f,""" +
       f""""scan_purged":$scanPurged%.3f,"sd_purged":$sdPurged%.3f,""" +
       f""""ratio":$ratio%.2f,"floor":${if (pct >= 100) -1.0 else 1.0 / (1.0 - pct / 100.0)}%.2f}"""
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val rep = args.lift(1).map(_.toInt).getOrElse(8)
-    val files = args.lift(2).map(_.toInt).getOrElse(64)
-    val pct = args.lift(3).map(_.toInt).getOrElse(30)
-    val passes = args.lift(4).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus, "graft-dvprobe")
-    spark.sparkContext.setLogLevel("WARN")
-    println("[dvprobe] " + measure(spark, sfDir, rep, files, pct, passes))
-    spark.stop()
   }
 }

@@ -11,6 +11,14 @@ import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSpark
   * `org.apache.spark.sql` subpackage.
   */
 object GraftShim {
+  /** A fresh `<prefix>-<uuid>` directory under `java.io.tmpdir`, which
+    * Spark's shutdown hook deletes recursively at JVM exit, after the
+    * SparkContext has stopped.
+    */
+  def tempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(
+      System.getProperty("java.io.tmpdir"), prefix)
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 

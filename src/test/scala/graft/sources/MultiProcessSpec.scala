@@ -140,4 +140,30 @@ class MultiProcessSpec extends SparkSpec {
     assert(exit == 0 && out.contains("[cluster-smoke] OK"),
       s"cluster smoke failed (exit=$exit):\n${out.takeRight(6000)}")
   }
+
+  test("SmokeSim: SparkEntry.entry runs on a bare session with no graft conf or extensions") {
+    val (exit, out) = fork(Map.empty, Seq("graft.tools.SmokeSim"), timeoutSec = 300)
+    assert(exit == 0 && out.contains("[smokesim] entry rows="),
+      s"smoke sim failed (exit=$exit):\n${out.takeRight(6000)}")
+  }
+
+  test("Verify leaves no graft-* scratch directory behind in java.io.tmpdir") {
+    val tmp = java.nio.file.Files.createTempDirectory("mproc-tmpdir")
+    val out = tmp.resolve("out").toString
+    // one bag-fleet query and one snapshot-store query: both write
+    // their scratch data under java.io.tmpdir
+    try {
+      val (exit, log) = fork(Map("SPARK_GRAFT_CPUS" -> "2"),
+        Seq(s"-Djava.io.tmpdir=$tmp", "graft.Verify", "/root/testdata/sf0.001",
+          out, "q_bag_typed_scan", "q_snapshot_delete_dv"),
+        timeoutSec = 420)
+      assert(exit == 0 && !log.contains("[verify]"),
+        s"verify failed (exit=$exit):\n${log.takeRight(6000)}")
+      Seq("q_bag_typed_scan", "q_snapshot_delete_dv").foreach { q =>
+        assert(new java.io.File(s"$out/$q/_SUCCESS").isFile, s"$q wrote no result")
+      }
+      val left = tmp.toFile.list().filter(_.startsWith("graft-"))
+      assert(left.isEmpty, s"scratch left in java.io.tmpdir: ${left.mkString(", ")}")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
 }

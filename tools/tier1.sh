@@ -1,0 +1,27 @@
+#!/usr/bin/env bash
+# The tier-1 gate in one command: a clean compile of both source sets,
+# the full test suite, and the DuckDB oracle compare (Verify, then
+# tools/check.py) at sf0.001 and sf0.01. check.py fails on any key that
+# does not match its oracle or has no output, so a zero exit means every
+# oracle key passed at both scale factors and every test is green.
+#
+# Usage: tools/tier1.sh <testdata dir holding sf0.001/ and sf0.01/>
+# Verify runs with $SPARK_GRAFT_CPUS threads (default 8).
+set -euo pipefail
+if [ $# -ne 1 ]; then
+  echo "usage: $0 <testdata dir>" >&2
+  exit 2
+fi
+data=$1
+cd "$(dirname "$0")/.."
+out=$(mktemp -d)
+trap 'rm -rf "$out"' EXIT
+
+sbt -batch compile Test/compile test
+for sf in sf0.001 sf0.01; do
+  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
+    sbt -batch "runMain graft.Verify $data/$sf $out/$sf"
+  echo "== oracle $sf"
+  python3 tools/check.py "$data/$sf" "$out/$sf" | grep -v ' PASS '
+done
+echo "tier-1 green"
