@@ -226,14 +226,7 @@ object BagManifest {
 
   // loaded manifests, keyed by manifest dir; invalidated when the
   // manifest's own file signature changes (one listStatus per probe)
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Map[String, Entry])]()
-
-  private def signature(fs: org.apache.hadoop.fs.FileSystem,
-                        p: HPath): String =
-    fs.listStatus(p).filter(_.isFile)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
+  private val cache = new SignatureCache[Map[String, Entry]]
 
   /** The manifest's entries per bag path, or empty when no manifest
     * exists. The parquet read happens at most once per manifest version
@@ -244,13 +237,8 @@ object BagManifest {
               conf: org.apache.hadoop.conf.Configuration): Map[String, Entry] = {
     val mp = new HPath(manifestDir(dir))
     val fs = mp.getFileSystem(conf)
-    if (!fs.exists(mp)) return Map.empty
-    val sig = signature(fs, mp)
-    val cached = cache.get(dir)
-    if (cached != null && cached._1 == sig) return cached._2
-    val loaded = load(SparkSession.active, dir)
-    cache.put(dir, (sig, loaded))
-    loaded
+    if (!fs.exists(mp)) Map.empty
+    else cache.get(fs, mp)(load(SparkSession.active, dir))
   }
 
   private def load(spark: SparkSession, dir: String): Map[String, Entry] = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.GraftExtensions
+import graft.sources.v2.{BagScan, PlannedBag}
 
 /** Binary container ingestion — the reference's topic-extraction stage
   * (service/app/main.py:77 `process_file`: read a bag container, split
@@ -99,42 +100,28 @@ object Containers {
   /** The connection table of a directory of bags: one row per (bag,
     * connection) with the embedded self-description — `rosbag info`'s
     * topic table as a DataFrame, and the schema feed for
-    * [[readBagTyped]]. Distributed: one task per bag, each an O(index)
-    * positioned-read plan (never chunk data).
+    * [[readBagTyped]]. Built from the bag plans ([[BagScan.readPlans]]):
+    * a fresh [[BagManifest]] answers with zero bag reads; new, changed
+    * or unrecorded bags take the pooled O(index) positioned read (never
+    * chunk data).
     */
   def bagConnections(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.{Path => HPath}
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new HPath(dir)
-    val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(st => st.isFile && st.getPath.getName.endsWith(".bag"))
-          .map(_.getPath.toString).sorted.toSeq
-      else Seq(dir)
-    val hconf = new v2.SerializableHadoopConf(conf)
-    spark.createDataset(files).repartition(files.size.max(1))
-      .mapPartitions { paths =>
-        paths.flatMap { f =>
-          val fp = new HPath(f)
-          val ffs = fp.getFileSystem(hconf.value)
-          val len = ffs.getFileStatus(fp).getLen
-          val in = ffs.open(fp)
-          val plan =
-            try graft.plans.BagPlanner.plan((off, n) => {
-              val b = new Array[Byte](n); in.readFully(off, b); b
-            }, len)
-            finally in.close()
-          val bag = fp.getName.stripSuffix(".bag")
-          plan.connInfo.toSeq.sortBy(_._1).map { case (c, ci) =>
-            (bag, c, ci.topic, ci.msgType, ci.md5sum, ci.messageDefinition)
-          }
-        }
-      }
+    connRows(BagScan.readPlans(dir, spark.sessionState.newHadoopConf()))
       .toDF("bag_file", "conn", "topic", "msg_type", "md5sum",
         "message_definition")
   }
+
+  /** (bag_file, conn, topic, msg_type, md5sum, message_definition) per
+    * planned bag and connection, in file-then-connection order. */
+  private def connRows(plans: Seq[PlannedBag])
+      : Seq[(String, Int, String, String, String, String)] =
+    plans.flatMap { pb =>
+      val bag = new org.apache.hadoop.fs.Path(pb.file).getName.stripSuffix(".bag")
+      pb.plan.connInfo.toSeq.sortBy(_._1).map { case (c, ci) =>
+        (bag, c, ci.topic, ci.msgType, ci.md5sum, ci.messageDefinition)
+      }
+    }
 
   /** Distributed `.bag`-file writer: one file per row of
     * `(nameCol, bagCol binary)`, written executor-side through the
@@ -185,11 +172,15 @@ object Containers {
     * iterates topics, re-reading the bag per topic — here every topic
     * lands from a SINGLE chunk-parallel scan):
     *
-    *  1. Schema phase: [[bagConnections]] (distributed, O(index) per
-    *     bag — never chunk data) yields each topic's embedded
-    *     `message_definition`; exactly one distinct definition per
-    *     topic is required — a drifted IDL fails loudly here;
-    *     [[typedExtractToVersioned]] is the extractor that embraces it.
+    *  1. Schema phase: each topic's embedded `message_definition`
+    *     comes from the bag plans of ONE listing
+    *     ([[BagScan.readPlansOf]]) — manifest-answered for bags a fresh
+    *     [[BagManifest]] records, a pooled driver-side O(index) read
+    *     for the rest, never chunk data and no Spark job. Exactly one
+    *     distinct definition per topic is required — a drifted IDL
+    *     fails loudly here; [[typedExtractToVersioned]] is the
+    *     extractor that embraces it. The same plans feed the
+    *     index-planned clustering below.
     *  2. Data phase: ONE untyped DSv2 scan with the topic IN-list
     *     pushed into the reader; each row's payload decodes through a
     *     codegen'd CASE on the topic column into that topic's
@@ -222,14 +213,24 @@ object Containers {
                      topics: Seq[String],
                      extraPartitionCols: Seq[String] = Nil): DataFrame = {
     require(topics.nonEmpty, "typedExtractTo needs at least one topic")
+    extractAll(spark, bagDir, storeDir, topics,
+      BagScan.readPlans(bagDir, spark.sessionState.newHadoopConf()),
+      extraPartitionCols)
+  }
+
+  /** [[typedExtractTo]] over the already-read plans of every bag under
+    * `bagDir`. */
+  private def extractAll(spark: SparkSession, bagDir: String, storeDir: String,
+                         topics: Seq[String], plans: Seq[PlannedBag],
+                         extraPartitionCols: Seq[String] = Nil): DataFrame = {
     val sanitized = topics.map(typedColName)
     require(sanitized.distinct.size == topics.size,
       s"topics collide after column-name sanitization: ${topics.mkString(", ")}")
-    val defOf = strictDefs(spark, bagDir, topics)
+    val defOf = strictDefs(bagDir, plans, topics)
     val statsCols = Seq("topic", "ts_us", "bag_file") ++ extraPartitionCols
     val meta = Map("graft.extract.topics" -> topics.sorted.mkString(","))
     val decoded = decodeTopics(spark, bagDir, topics, defOf)
-    indexPlannedPid(spark, bagDir, topics) match {
+    indexPlannedPid(spark, plans, topics) match {
       case Some((pid, n)) if extraPartitionCols.isEmpty =>
         // index-planned direct path: ONE decode pass, ONE shuffle into
         // the final (topic, ts-band) layout, ONE write — no staging
@@ -247,15 +248,16 @@ object Containers {
   }
 
   /** One unambiguous message definition per topic across the WHOLE
-    * directory — a drifted IDL fails loudly ([[typedExtractToVersioned]]
-    * is the extractor that embraces drift). */
-  private def strictDefs(spark: SparkSession, bagDir: String,
+    * directory, from the plans of every bag under `bagDir` — a drifted
+    * IDL fails loudly ([[typedExtractToVersioned]] is the extractor that
+    * embraces drift). */
+  private def strictDefs(bagDir: String, plans: Seq[PlannedBag],
                          topics: Seq[String]): Map[String, String] = {
-    val defsByTopic: Map[String, Seq[String]] = bagConnections(spark, bagDir)
-      .filter(col("topic").isin(topics: _*))
-      .select("topic", "message_definition").distinct()
-      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
-      .groupMap(_._1)(_._2)
+    val defsByTopic: Map[String, Seq[String]] =
+      plans.flatMap(_.plan.connInfo.values)
+        .filter(ci => topics.contains(ci.topic))
+        .groupMap(_.topic)(_.messageDefinition)
+        .map { case (t, ds) => t -> ds.distinct }
     topics.map { t =>
       val ds = defsByTopic.getOrElse(t, Nil).filter(_.nonEmpty)
       require(ds.nonEmpty,
@@ -307,17 +309,12 @@ object Containers {
     * partition i we pick the pid VALUE whose hash lands in slot i
     * (driver-side search over ints — expected n·ln(n) murmur calls) and
     * the CASE maps each (topic, band) to exactly one partition/file.
-    * Returns None (fallback to [[publishExtractStore]]'s staging) when
-    * any bag lacks chunk counts/windows or carries raw spans.
+    * `plans` are the bags the decode scan reads. Returns None (fallback
+    * to [[publishExtractStore]]'s staging) when any bag lacks chunk
+    * counts/windows or carries raw spans.
     */
-  private def indexPlannedPid(spark: SparkSession, bagDir: String,
-                              topics: Seq[String],
-                              keepBag: String => Boolean = _ => true)
-      : Option[(Column, Int)] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val plans = graft.sources.v2.BagScan.readPlans(bagDir, conf)
-      .filter(pb => keepBag(new org.apache.hadoop.fs.Path(pb.file)
-        .getName.stripSuffix(".bag")))
+  private def indexPlannedPid(spark: SparkSession, plans: Seq[PlannedBag],
+                              topics: Seq[String]): Option[(Column, Int)] = {
     if (plans.isEmpty) return None
     val hist = scala.collection.mutable.Map
       .empty[String, scala.collection.mutable.ArrayBuffer[(Long, Long)]]
@@ -514,10 +511,20 @@ object Containers {
     * loudly (strict contract; [[typedExtractToVersioned]] embraces
     * drift).
     *
+    * The metadata phase is O(new bags) and runs no Spark job: ONE
+    * listing feeds the change detection, and ONE plan read of it
+    * ([[BagScan.readPlansOf]] — manifest-answered for every bag a fresh
+    * [[BagManifest]] records, so after a refresh only the new bags'
+    * indexes are opened) feeds both the strict-IDL check over the whole
+    * directory and the index-planned clustering of the changed bags.
+    *
     * Extraction state (per-bag path/len/mtime) persists as one small
     * parquet under `storeDir/_extract_state`, swapped via temp+rename
     * (cf. [[BagManifest.refresh]]); rows = bags in the lake, the same
-    * scale as the directory listing every scan already pays.
+    * scale as the directory listing every scan already pays. The driver
+    * caches the loaded state keyed on that directory's file signature
+    * (the [[BagManifest.entries]] rule), so a wave re-reads it only
+    * after an external change.
     */
   def typedExtractIncremental(spark: SparkSession, bagDir: String,
                               storeDir: String,
@@ -529,7 +536,8 @@ object Containers {
     require(live.nonEmpty, s"no .bag files under $bagDir")
     val prior = readExtractState(spark, storeDir, conf)
     if (SnapshotStore.latestVersion(spark, storeDir) == 0L || prior.isEmpty) {
-      val out = typedExtractTo(spark, bagDir, storeDir, topics)
+      val out = extractAll(spark, bagDir, storeDir, topics,
+        BagScan.readPlansOf(bagDir, live, conf))
       writeExtractState(spark, storeDir, live, conf)
       return out
     }
@@ -542,7 +550,8 @@ object Containers {
     val removedNames = (changed.map(_._1).filter(prior.contains) ++ deleted)
       .map(base).distinct
     val changedNames = changed.map(c => base(c._1))
-    val defOf = strictDefs(spark, bagDir, topics) // old + new must agree
+    val plans = BagScan.readPlansOf(bagDir, live, conf)
+    val defOf = strictDefs(bagDir, plans, topics) // old + new must agree
     val newRows = decodeTopics(spark, bagDir, topics, defOf)
       .filter(col("bag_file").isin(changedNames: _*)) // static pushdown
     val snap = SnapshotStore.state(spark, storeDir)
@@ -566,8 +575,9 @@ object Containers {
         statsCols = Seq("topic", "ts_us", "bag_file"))
       ()
     }
-    indexPlannedPid(spark, bagDir, topics,
-        keepBag = changedNames.toSet.contains) match {
+    val changedPaths = changed.map(_._1).toSet
+    indexPlannedPid(spark, plans.filter(pb => changedPaths(pb.file)),
+        topics) match {
       case Some((pid, n)) =>
         // index-planned delta: bands from the CHANGED bags' indexes only
         lastExtractIndexPlanned = true
@@ -602,14 +612,19 @@ object Containers {
   private def extractStateDir(storeDir: String): String =
     s"$storeDir/_extract_state"
 
+  // loaded extraction states, keyed by state dir; invalidated when the
+  // state's own file signature changes (one listStatus per wave)
+  private val extractStates = new SignatureCache[Map[String, (Long, Long)]]
+
   private def readExtractState(spark: SparkSession, storeDir: String,
                                conf: org.apache.hadoop.conf.Configuration)
       : Map[String, (Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(extractStateDir(storeDir))
-    if (!p.getFileSystem(conf).exists(p)) Map.empty
-    else spark.read.parquet(p.toString)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Map.empty
+    else extractStates.get(fs, p)(spark.read.parquet(p.toString)
       .select("bag_path", "len", "mtime").collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
   }
 
   private def writeExtractState(spark: SparkSession, storeDir: String,
@@ -628,7 +643,9 @@ object Containers {
       s"${extractStateDir(storeDir)}_tmp_${java.util.UUID.randomUUID}")
     live.toDF("bag_path", "len", "mtime").coalesce(1).write.parquet(tmp.toString)
     fs.delete(p, true)
-    if (!fs.rename(tmp, p)) {
+    if (fs.rename(tmp, p))
+      extractStates.put(fs, p, live.map { case (f, l, m) => f -> (l, m) }.toMap)
+    else {
       // a concurrent extraction's swap won — accept it (both states
       // derive from a live listing; staleness only re-extracts)
       fs.delete(tmp, true)
@@ -663,11 +680,10 @@ object Containers {
                               storeDir: String,
                               topics: Seq[String]): DataFrame = {
     require(topics.nonEmpty, "typedExtractToVersioned needs at least one topic")
-    val conns = bagConnections(spark, bagDir)
-      .filter(col("topic").isin(topics: _*))
-      .select("bag_file", "topic", "md5sum", "message_definition")
-      .distinct().collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+    val conns = connRows(BagScan.readPlans(bagDir, spark.sessionState.newHadoopConf()))
+      .collect { case (bag, _, t, _, md5, defn) if topics.contains(t) =>
+        (bag, t, md5, defn) }
+      .distinct
     val perBagTopic = conns.groupBy(c => (c._1, c._2))
     perBagTopic.foreach { case ((bag, t), vs) =>
       require(vs.map(_._3).distinct.length == 1,

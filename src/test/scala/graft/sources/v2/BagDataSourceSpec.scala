@@ -404,30 +404,38 @@ class BagDataSourceSpec extends SparkSpec {
       s"per-topic read must skip topic-disjoint files: kept ${kept.size} of $total")
   }
 
-  test("incremental typed extraction: only new/changed bags decode; replaced rows swap in one commit") {
+  /** One typed bag of topic `m` under `dir`: `uint32 a` per message, or
+    * with `drifted` the firmware-update IDL `uint32 a / float64 b`; two
+    * messages per chunk. */
+  private def landM(dir: String, name: String, vals: Range,
+                    drifted: Boolean = false): Unit = {
     import java.nio.{ByteBuffer, ByteOrder}
+    val defn = if (drifted) "uint32 a\nfloat64 b\n" else "uint32 a\n"
+    def p(i: Int): Array[Byte] = {
+      val bb = ByteBuffer.allocate(if (drifted) 12 else 4)
+        .order(ByteOrder.LITTLE_ENDIAN).putInt(i)
+      if (drifted) bb.putDouble(0.5 * i)
+      bb.array()
+    }
+    Files.write(Paths.get(dir, s"$name.bag"),
+      BagCodec.pack(vals.map(i => ("m", 1000L + i, p(i))),
+        "none", messagesPerChunk = 2, typeInfo = Some(("m/M", defn))))
+  }
+
+  private def storedM(store: String): Seq[Long] =
+    graft.sources.Containers.readTypedStore(spark, store, "m")
+      .select("a").as[Long].collect().sorted.toSeq
+
+  test("incremental typed extraction: only new/changed bags decode; replaced rows swap in one commit") {
     import graft.sources.{Containers, SnapshotStore}
     graft.plans.GraftExtensions.register(spark)
-    val defn = "uint32 a\n"
     val dir = Files.createTempDirectory("graft-incext").toString
-    def land(name: String, vals: Range, perChunk: Int = 2): Unit = {
-      def p(i: Int): Array[Byte] = {
-        val bb = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-        bb.putInt(i); bb.array()
-      }
-      Files.write(Paths.get(dir, s"$name.bag"),
-        BagCodec.pack(vals.map(i => ("m", 1000L + i, p(i))),
-          "none", messagesPerChunk = perChunk, typeInfo = Some(("m/M", defn))))
-    }
-    def stored(store: String): Seq[Long] =
-      Containers.readTypedStore(spark, store, "m")
-        .select("a").as[Long].collect().sorted.toSeq
-    land("w1a", 0 until 4)   // 2 chunks
-    land("w1b", 4 until 8)   // 2 chunks
+    landM(dir, "w1a", 0 until 4)   // 2 chunks
+    landM(dir, "w1b", 4 until 8)   // 2 chunks
     val store = Files.createTempDirectory("graft-incext-store").toString
     // bootstrap: full extraction
     Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
-    assert(stored(store) === (0L until 8L))
+    assert(storedM(store) === (0L until 8L))
     val v1 = SnapshotStore.latestVersion(spark, store)
     val filesV1 = SnapshotStore.state(spark, store).live.map(_.path).toSet
 
@@ -438,33 +446,33 @@ class BagDataSourceSpec extends SparkSpec {
     assert(SnapshotStore.latestVersion(spark, store) === v1)
 
     // NEW bag: only ITS chunks decode; prior files survive by path
-    land("w2", 8 until 12)   // 2 chunks
+    landM(dir, "w2", 8 until 12)   // 2 chunks
     BagChunkIO.readCalls.set(0)
     Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
     assert(BagChunkIO.readCalls.get() === 2,
       s"only the new bag's 2 chunks decode, read ${BagChunkIO.readCalls.get()}")
     assert(Containers.lastExtractIndexPlanned,
       "the incremental delta takes the index-planned path too")
-    assert(stored(store) === (0L until 12L))
+    assert(storedM(store) === (0L until 12L))
     assert(filesV1.subsetOf(SnapshotStore.state(spark, store).live.map(_.path).toSet),
       "append-only delta: the prior extraction's files survive by path")
     val (v2, op2, _) = SnapshotStore.history(spark, store).head
     assert(op2 === "extract")
 
     // CHANGED bag: its old rows swap for the re-decode in ONE commit
-    land("w1b", 20 until 24)
+    landM(dir, "w1b", 20 until 24)
     BagChunkIO.readCalls.set(0)
     Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
     assert(BagChunkIO.readCalls.get() === 2,
       s"only the changed bag re-decodes, read ${BagChunkIO.readCalls.get()}")
-    assert(stored(store) === ((0L until 4L) ++ (8L until 12L) ++ (20L until 24L)))
+    assert(storedM(store) === ((0L until 4L) ++ (8L until 12L) ++ (20L until 24L)))
     assert(SnapshotStore.latestVersion(spark, store) === v2 + 1,
       "replace lands as ONE commit (no separate delete)")
 
     // DELETED bag: its rows drop
     Files.delete(Paths.get(dir, "w2.bag"))
     Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
-    assert(stored(store) === ((0L until 4L) ++ (20L until 24L)))
+    assert(storedM(store) === ((0L until 4L) ++ (20L until 24L)))
 
     // TIME TRAVEL: the store is a full snapshot table — the bootstrap
     // version still reads exactly the first extraction's rows
@@ -475,13 +483,13 @@ class BagDataSourceSpec extends SparkSpec {
     // MAINTENANCE trigger: many more waves with maintain on — the live
     // file count stays bounded while contents stay exact
     (0 until 4).foreach { w =>
-      land(s"wave$w", (100 + w * 4) until (100 + w * 4 + 4))
+      landM(dir, s"wave$w", (100 + w * 4) until (100 + w * 4 + 4))
       Containers.typedExtractIncremental(spark, dir, store, Seq("m"),
         maintain = Some((6, 2)))
     }
     assert(graft.sources.SnapshotStore.state(spark, store).live.size <= 6,
       "size-triggered maintenance must bound the delta-file accumulation")
-    assert(stored(store) === ((0L until 4L) ++ (20L until 24L) ++
+    assert(storedM(store) === ((0L until 4L) ++ (20L until 24L) ++
       (100L until 116L)))
     // maintenance re-clusters on (topic, ts_us): a narrow time band must
     // keep pruning files after the compaction — a plain coalesce would
@@ -491,6 +499,96 @@ class BagDataSourceSpec extends SparkSpec {
     assert(totalBand > 1, s"store must hold multiple files, got $totalBand")
     assert(keptBand.size < totalBand,
       s"time-band read must skip files post-maintenance: kept ${keptBand.size} of $totalBand")
+  }
+
+  test("incremental extraction never opens extracted bags: a corrupted old bag stays unread") {
+    import graft.sources.{BagManifest, Containers}
+    graft.plans.GraftExtensions.register(spark)
+    val dir = Files.createTempDirectory("graft-incold").toString
+    val store = Files.createTempDirectory("graft-incold-store").toString
+    landM(dir, "old_a", 0 until 4)
+    landM(dir, "old_b", 4 until 8)
+    Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    BagManifest.refresh(spark, dir)
+    // corrupt an extracted bag IN PLACE: magic zeroed, length and mtime
+    // kept, so the manifest and the extraction state still call it fresh
+    // — any open of its index now throws "bad magic"
+    val old = Paths.get(dir, "old_a.bag").toFile
+    val mtime = old.lastModified()
+    val bytes = Files.readAllBytes(old.toPath)
+    java.util.Arrays.fill(bytes, 0, BagCodec.magicBytes.length, 0.toByte)
+    Files.write(old.toPath, bytes)
+    assert(old.setLastModified(mtime))
+    landM(dir, "new_c", 8 until 12) // 2 chunks
+    BagManifest.refresh(spark, dir)
+    BagChunkIO.readCalls.set(0)
+    Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    assert(BagChunkIO.readCalls.get() === 2,
+      s"only the new bag's 2 chunks may read, read ${BagChunkIO.readCalls.get()}")
+    assert(storedM(store) === (0L until 12L))
+  }
+
+  test("incremental extraction: a wave landing a drifted IDL fails loudly and publishes nothing") {
+    import graft.sources.{Containers, SnapshotStore}
+    graft.plans.GraftExtensions.register(spark)
+    val dir = Files.createTempDirectory("graft-incdrift").toString
+    val store = Files.createTempDirectory("graft-incdrift-store").toString
+    landM(dir, "d1", 0 until 4)
+    Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    val v1 = SnapshotStore.latestVersion(spark, store)
+    // the state dir's files are uniquely named per write: an unchanged
+    // (name, length, mtime) listing means no swap happened
+    val stateDir = Paths.get(store.stripPrefix("file:"), "_extract_state").toFile
+    def stateListing = stateDir.listFiles().map(f =>
+      (f.getName, f.length, f.lastModified)).sorted.toSeq
+    val stateBefore = stateListing
+    landM(dir, "d2", 4 until 8, drifted = true)
+    val err = intercept[IllegalArgumentException] {
+      Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    }
+    assert(err.getMessage.contains("distinct message definitions"), err.getMessage)
+    assert(SnapshotStore.latestVersion(spark, store) === v1,
+      "a refused wave must not commit")
+    assert(stateListing === stateBefore, "a refused wave must not swap the state")
+    // the drifted bag withdrawn, the next wave extracts normally
+    Files.delete(Paths.get(dir, "d2.bag"))
+    landM(dir, "d3", 8 until 12) // 2 chunks
+    BagChunkIO.readCalls.set(0)
+    Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    assert(BagChunkIO.readCalls.get() === 2,
+      s"only d3's 2 chunks decode, read ${BagChunkIO.readCalls.get()}")
+    assert(storedM(store) === ((0L until 4L) ++ (8L until 12L)))
+  }
+
+  test("incremental extraction: an externally deleted _extract_state forces the full extraction") {
+    import graft.sources.{Containers, SnapshotStore}
+    graft.plans.GraftExtensions.register(spark)
+    val dir = Files.createTempDirectory("graft-incstate").toString
+    val store = Files.createTempDirectory("graft-incstate-store").toString
+    landM(dir, "s1", 0 until 4) // 2 chunks
+    Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    landM(dir, "s2", 4 until 8) // 2 chunks
+    BagChunkIO.readCalls.set(0)
+    Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    assert(BagChunkIO.readCalls.get() === 2)
+    assert(SnapshotStore.history(spark, store).head._2 === "extract")
+    // the driver holds the state from the wave above; an external delete
+    // must still reach the next wave, exactly as in a fresh JVM
+    val stateDir = new org.apache.hadoop.fs.Path(store, "_extract_state")
+    assert(stateDir.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(stateDir, true))
+    BagChunkIO.readCalls.set(0)
+    Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    assert(BagChunkIO.readCalls.get() === 4,
+      s"the full extraction re-decodes all 4 chunks, read ${BagChunkIO.readCalls.get()}")
+    assert(SnapshotStore.history(spark, store).head._2 === "overwrite")
+    assert(storedM(store) === (0L until 8L))
+    // and the rewritten state serves the next wave incrementally again
+    landM(dir, "s3", 8 until 12) // 2 chunks
+    BagChunkIO.readCalls.set(0)
+    Containers.typedExtractIncremental(spark, dir, store, Seq("m"))
+    assert(BagChunkIO.readCalls.get() === 2)
+    assert(storedM(store) === (0L until 12L))
   }
 
   test("typed extraction store is transactional: torn or concurrent extractions never visible") {
