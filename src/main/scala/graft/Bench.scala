@@ -27,6 +27,9 @@ object Bench {
     val spark = GraftSession.configure(
       SparkSession.builder()
         .master(s"local[$cpus]")
+        // managed tables (the SMB operator probe) in a scratch warehouse
+        // deleted at exit, not in the working directory
+        .config("spark.sql.warehouse.dir", Scratch.dir("graft-warehouse"))
         .withExtensions(new graft.plans.GraftExtensions),
       shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -219,14 +222,6 @@ object Bench {
       val tmp = Scratch.dir("graft-bench-smb")
       left.write.mode("overwrite").parquet(s"$tmp/l")
       right.write.mode("overwrite").parquet(s"$tmp/r")
-      // a FRESH session's in-memory catalog doesn't know a prior run's
-      // tables, but their warehouse dirs persist — DROP alone leaves the
-      // location and saveAsTable fails on it
-      Seq("bench_smb_l", "bench_smb_r").foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val loc = new java.io.File(s"spark-warehouse/$t")
-        if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-      }
       sources.TopicStore.writeBucketedSorted(left, "bench_smb_l",
         Seq("user_id"), Seq("t"), buckets = cpus.toInt)
       sources.TopicStore.writeBucketedSorted(right, "bench_smb_r",

@@ -35,11 +35,16 @@ object GraftSession {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
 
-  /** Local session sized to the machine (tests / bench). */
+  /** Local session sized to the machine (tests / bench). Managed tables
+    * land in a per-JVM scratch warehouse, deleted at exit, so no run
+    * leaves table directories behind in the working directory for the
+    * next run's `saveAsTable` to trip over.
+    */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
     val s = configure(
       SparkSession.builder().appName(appName).master(s"local[$cores]")
+        .config("spark.sql.warehouse.dir", graft.runtime.Scratch.dir("graft-warehouse"))
         .withExtensions(new graft.plans.GraftExtensions),
       shufflePartitions = cores
     ).getOrCreate()

@@ -454,7 +454,7 @@ object SparkEntry {
         horizonUs = 86400000000L)
         .orderBy(col("step_idx"))),
     "q_zorder" -> ((s, d) =>
-      // the multi-dimensional clustering key behind ZOrderStore's layout
+      // the multi-dimensional clustering key behind z-ordered compaction
       // (file-level data skipping) — computed entirely with builtin
       // bitwise column functions, one codegen'd projection over the scan
       Tables.lineitem(s, d)
@@ -464,7 +464,7 @@ object SparkEntry {
         .orderBy(col("zvalue"), col("l_orderkey"), col("l_linenumber"))),
     "q_zorder3" -> ((s, d) =>
       // three-dimensional clustering key (21 bits/dim): a third pruned
-      // predicate for the box-query family — ZOrderStore.writeN's layout
+      // predicate for the box-query family — maintain(zorderCols)'s layout
       Tables.lineitem(s, d)
         .select(col("l_orderkey"),
           col("l_linenumber").cast("long").as("l_linenumber"),
@@ -1320,7 +1320,7 @@ object SparkEntry {
       }
       val probes = Seq(5L, 17L, 250L, 333L)
       val snap = graft.sources.SnapshotStore.state(s, t)
-      val kept = graft.sources.BloomSkip.prunedFrom(
+      val kept = graft.sources.ParquetFooters.prunedFrom(
         s.sessionState.newHadoopConf(),
         snap.live.map(f => new org.apache.hadoop.fs.Path(f.path)),
         "doc_id", probes)

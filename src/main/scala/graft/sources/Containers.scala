@@ -560,7 +560,7 @@ object Containers {
       else snap.live.filter { a =>
         a.strStats.get("bag_file") match {
           case Some((mn, mx)) => removedNames.exists(n =>
-            ZOrderStore.utf8Cmp(n, mn) >= 0 && ZOrderStore.utf8Cmp(n, mx) <= 0)
+            ParquetFooters.utf8Cmp(n, mn) >= 0 && ParquetFooters.utf8Cmp(n, mx) <= 0)
           case None => true // no stats: may hold them — keep conservative
         }
       }.map(_.path)

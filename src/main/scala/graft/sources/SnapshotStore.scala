@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Transactional snapshot tables over plain parquet — the metadata layer
-  * [[ZOrderStore.compactN]]'s scaladoc points at ("a production lakehouse
-  * commits via manifest swap"): an ordered log of immutable commits under
-  * `<table>/_graft_log/` that names exactly which immutable data files
-  * are live, so readers get atomic snapshots, writers get optimistic
-  * concurrency, compaction is a metadata swap instead of a directory
-  * swap, and every historical version stays readable (time travel).
+  * a production lakehouse commits through: an ordered log of immutable
+  * commits under `<table>/_graft_log/` that names exactly which immutable
+  * data files are live, so readers get atomic snapshots, writers get
+  * optimistic concurrency, compaction (plain, range-clustered or
+  * z-ordered) is a metadata swap instead of a directory swap, and every
+  * historical version stays readable (time travel).
   * This is the published Delta/Iceberg design re-expressed minimally;
   * the commit-protocol portability matrix mirrors Delta's public
   * LogStore notes (ATOMIC_RENAME_EXCHANGE docs).
@@ -480,8 +480,7 @@ object SnapshotStore {
         w.option(s"parquet.bloom.filter.enabled#$bc", "true")
       }.parquet(tmp.toString)
     // footer harvest BEFORE the move, ONE footer open per staged file
-    // ([[ZOrderStore.fileFooterStats]] — the four single-leg harvests
-    // each re-parsed every footer, 4N parses per commit): rows always;
+    // ([[ParquetFooters.fileFooterStats]]): rows always;
     // [min,max] for the requested columns — long ranges where the
     // parquet stats are int64, string ranges (capped, Delta-style
     // truncation) where they are Binary/UTF-8; null counts (Delta's
@@ -489,7 +488,7 @@ object SnapshotStore {
     // min/max legs are absent; index-only count(col) and all-null-file
     // pruning feed on it). A column yields whichever range leg its
     // physical type supports; the other is simply absent.
-    val harvested = ZOrderStore.fileFooterStats(spark, tmp.toString, physStats)
+    val harvested = ParquetFooters.fileFooterStats(spark, tmp.toString, physStats)
     val stats = harvested.map { case (f, s) => f -> s.longs.collect {
       case (col, Some(range)) => logicalKey(col) -> range }.toMap }.toMap
     val strStats = harvested.map { case (f, s) => f -> s.strings.collect {
@@ -1297,19 +1296,37 @@ object SnapshotStore {
 
   /** Metadata-swap compaction: rewrite the live set into `targetFiles`
     * files and publish ONE commit that removes the fragments and adds
-    * the rewrite — readers never see a half-compacted table, and time
-    * travel to pre-compaction versions still works (contrast
-    * [[ZOrderStore.compactN]]'s in-place directory swap). No-op below
-    * `targetFiles` live files.
+    * the rewrite — readers never see a half-compacted table (no
+    * directory is ever replaced in place), and time travel to
+    * pre-compaction versions still works. No-op below `targetFiles`
+    * live files. Stats harvest on `statsCols`, or by default on every
+    * column the live files carry stats for (see [[rewriteLive]]).
     */
   def compact(spark: SparkSession, table: String, targetFiles: Int,
               statsCols: Seq[String] = Nil,
               bloomCols: Seq[String] = Nil): Long = {
     val snap = state(spark, table)
-    if (snap.live.size <= targetFiles) return snap.version
-    val df = readLive(spark, snap.meta, snap.live)
-      .repartition(targetFiles)
-    val adds = stageFiles(df, table, statsCols, bloomCols)
+    if (snap.live.size <= targetFiles) snap.version
+    else rewriteLive(spark, table, snap, _.repartition(targetFiles), Nil,
+      statsCols, bloomCols)
+  }
+
+  /** The body every compaction shares: read the live set, apply the
+    * `layout` transform, stage, and swap in ONE commit that re-validates
+    * the removed files are still live with the same deletion vectors.
+    * Stats harvest on `statsCols` when given, else on
+    * [[statedCols]] of the live set plus the `layoutCols` — the rule the
+    * row-level rewrites follow, so a compaction never silently drops the
+    * pruning the original writers paid for.
+    */
+  private def rewriteLive(spark: SparkSession, table: String, snap: Snapshot,
+                          layout: DataFrame => DataFrame, layoutCols: Seq[String],
+                          statsCols: Seq[String], bloomCols: Seq[String]): Long = {
+    val df = layout(readLive(spark, snap.meta, snap.live))
+    val harvest =
+      if (statsCols.nonEmpty) statsCols
+      else (statedCols(snap.live) ++ layoutCols).distinct
+    val adds = stageFiles(df, table, harvest, bloomCols)
     commit(spark, table, adds, removes = snap.live.map(_.path),
       meta = Map("op" -> "compact"), mustBeLive = snap.live.map(_.path),
       expectDv = snap.live.map(a => a.path -> a.dv).toMap)
@@ -1349,14 +1366,16 @@ object SnapshotStore {
         Some(purgeDv(spark, table, ratio))
       else None
     }
-    if (state(spark, table).live.size <= maxLiveFiles) purged
+    val snap = state(spark, table)
+    if (snap.live.size <= maxLiveFiles) purged
     else if (zorderCols.nonEmpty)
       // z-ordered rewrite: size-triggered maintenance RESTORES sharp
       // box pruning too — fragmented appends interleave key ranges, so
       // a plain compaction would leave every file's box spanning the
-      // domain while the z-ordered one re-clusters (stats re-harvested
-      // on the zorder columns; same one-commit metadata swap)
-      Some(compactZOrdered(spark, table, targetFiles, zorderCols))
+      // domain while the z-ordered one re-clusters (same one-commit
+      // metadata swap)
+      Some(rewriteLive(spark, table, snap, zordered(targetFiles, zorderCols),
+        zorderCols, statsCols, bloomCols))
     else if (clusterCols.nonEmpty)
       Some(compactClustered(spark, table, targetFiles, clusterCols, statsCols,
         bloomCols))
@@ -1371,24 +1390,19 @@ object SnapshotStore {
     * [min,max] box spans the whole domain and log-stats pruning dies;
     * Morton [[compactZOrdered]] doesn't apply when the leading key is a
     * STRING. Range clustering restores exactly the layout the original
-    * write produced. Stats harvest on `statsCols` (default: the cluster
-    * columns) so pruning sharpens in the same commit.
+    * write produced. Stats harvest on `statsCols` (default: the live
+    * set's stated columns plus the cluster columns) so pruning sharpens
+    * in the same commit.
     */
   def compactClustered(spark: SparkSession, table: String, targetFiles: Int,
                        clusterCols: Seq[String],
                        statsCols: Seq[String] = Nil,
                        bloomCols: Seq[String] = Nil): Long = {
     require(clusterCols.nonEmpty, "compactClustered needs cluster columns")
-    val snap = state(spark, table)
     val cols = clusterCols.map(col)
-    val df = readLive(spark, snap.meta, snap.live)
-      .repartitionByRange(targetFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
-    val harvest = if (statsCols.nonEmpty) statsCols else clusterCols
-    val adds = stageFiles(df, table, harvest, bloomCols)
-    commit(spark, table, adds, removes = snap.live.map(_.path),
-      meta = Map("op" -> "compact"), mustBeLive = snap.live.map(_.path),
-      expectDv = snap.live.map(a => a.path -> a.dv).toMap)
+    rewriteLive(spark, table, state(spark, table),
+      _.repartitionByRange(targetFiles, cols: _*).sortWithinPartitions(cols: _*),
+      clusterCols, statsCols, bloomCols)
   }
 
   /** Read the table at `asOf` (default: latest). */
@@ -1416,7 +1430,7 @@ object SnapshotStore {
     * (driver-side binary search per file — O(files · log probes), zero
     * data reads); when the probe set is small enough that per-file
     * footer reads pay off, survivors refine through parquet blooms /
-    * complete dictionaries ([[BloomSkip.prunedFrom]]).
+    * complete dictionaries ([[ParquetFooters.prunedFrom]]).
     */
   private def pointsKeptFiles(spark: SparkSession, snap: Snapshot,
                               column: String, sorted: Array[Long],
@@ -1432,7 +1446,7 @@ object SnapshotStore {
     }
     if (sorted.length > bloomMaxValues) boxKept
     else {
-      val kept = BloomSkip.prunedFrom(conf(spark),
+      val kept = ParquetFooters.prunedFrom(conf(spark),
           boxKept.map(a => new Path(a.path)), column, sorted.toSeq)
         .map(_.toString).toSet
       boxKept.filter(a => kept.contains(a.path))
@@ -1520,14 +1534,14 @@ object SnapshotStore {
       a => box.forall { case (c, (lo, hi)) =>
         a.stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
       } && strBox.forall { case (c, (lo, hi)) =>
-        // intersect in UTF-8 BYTE order (ZOrderStore.utf8Cmp) — the
+        // intersect in UTF-8 BYTE order (ParquetFooters.utf8Cmp) — the
         // order the parquet stats were computed in and the order the
         // residual UTF8String filter applies; Java String order would
         // mis-prune on supplementary characters. The stored min may be
         // truncated but a prefix sorts <= the full value in byte order
         // too, so mn <= hi stays conservative.
         a.strStats.get(c).forall { case (mn, mx) =>
-          ZOrderStore.utf8Cmp(mx, lo) >= 0 && ZOrderStore.utf8Cmp(mn, hi) <= 0 }
+          ParquetFooters.utf8Cmp(mx, lo) >= 0 && ParquetFooters.utf8Cmp(mn, hi) <= 0 }
       } && (box.keySet ++ strBox.keySet).forall { c =>
         // null-count leg: a file that is ALL NULL for a box column has
         // no min/max stats (so the range legs can't skip it) yet no row
@@ -1539,8 +1553,10 @@ object SnapshotStore {
     }
   }
 
-  /** [[ZOrderStore.readBox]] against the log's stats: scan only the
-    * files the box can touch, predicate re-applied for exactness.
+  /** Box read against the log's stats: scan only the files the box can
+    * touch, predicate re-applied for exactness (pruning is an
+    * optimization; the filter still guards row-group pruning and exact
+    * semantics).
     */
   def readBox(spark: SparkSession, table: String,
               box: Map[String, (Long, Long)],
@@ -1571,7 +1587,7 @@ object SnapshotStore {
     *     range leg, sharp on clustered layouts (z-order, ranged
     *     appends).
     *  2. BLOOM refine: survivors are probed through their parquet
-    *     blooms / complete dictionaries ([[BloomSkip.prunedFrom]],
+    *     blooms / complete dictionaries ([[ParquetFooters.prunedFrom]],
     *     footer-sized reads for those files only) — the equality leg,
     *     sharp precisely where boxes are blind: a high-cardinality
     *     hash-distributed id whose every file box spans the domain.
@@ -1596,11 +1612,11 @@ object SnapshotStore {
           a.stats.get(column).forall { case (mn, mx) => x >= mn && x <= mx }
         case s: String =>
           a.strStats.get(column).forall { case (mn, mx) =>
-            ZOrderStore.utf8Cmp(s, mn) >= 0 && ZOrderStore.utf8Cmp(s, mx) <= 0 }
+            ParquetFooters.utf8Cmp(s, mn) >= 0 && ParquetFooters.utf8Cmp(s, mx) <= 0 }
         case _ => true // unprobed type: the box stage cannot skip
       }
     }
-    val kept = BloomSkip.prunedFrom(conf(spark),
+    val kept = ParquetFooters.prunedFrom(conf(spark),
       boxKept.map(a => new Path(a.path)), column, values)
       .map(_.toString).toSet
     val base =
@@ -2324,26 +2340,25 @@ object SnapshotStore {
     feeds.reduceOption(_ unionByName _).getOrElse(emptyFeed)
   }
 
-  /** [[compact]] that restores z-clustering while it rewrites — the
-    * transactional twin of [[ZOrderStore.compactN]]: interleaved appends
-    * wreck per-file [min,max] boxes; re-sorting by the Morton code makes
-    * [[prunedLiveFiles]] sharp again, and the swap is one commit instead
-    * of an in-place directory replace. Stats for the cluster columns are
-    * harvested automatically (they are the prune columns).
+  /** [[compact]] that restores z-clustering while it rewrites:
+    * interleaved appends wreck per-file [min,max] boxes; re-sorting by
+    * the Morton code of 2 or 3 columns
+    * ([[graft.functions.ZOrder.zorderCols]]) range-partitions the rows
+    * so files tile the z-curve, each file's box becomes a small 2-D or
+    * 3-D tile, and [[prunedLiveFiles]] is sharp again on EVERY axis. The
+    * swap is one commit. Stats harvest on the live set's stated columns
+    * plus the z-order columns (they are the prune columns).
     */
   def compactZOrdered(spark: SparkSession, table: String, targetFiles: Int,
-                      zorderColumns: Seq[String]): Long = {
-    val snap = state(spark, table)
-    val df = readLive(spark, snap.meta, snap.live)
-      .withColumn("__z", graft.functions.ZOrder.zorderCols(zorderColumns.map(col)))
+                      zorderColumns: Seq[String]): Long =
+    rewriteLive(spark, table, state(spark, table),
+      zordered(targetFiles, zorderColumns), zorderColumns, Nil, Nil)
+
+  private def zordered(targetFiles: Int, cols: Seq[String]): DataFrame => DataFrame =
+    _.withColumn("__z", graft.functions.ZOrder.zorderCols(cols.map(col)))
       .repartitionByRange(targetFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-    val adds = stageFiles(df, table, zorderColumns)
-    commit(spark, table, adds, removes = snap.live.map(_.path),
-      meta = Map("op" -> "compact"), mustBeLive = snap.live.map(_.path),
-      expectDv = snap.live.map(a => a.path -> a.dv).toMap)
-  }
 
   /** Roll the table back to `version` as a NEW commit (history is never
     * rewritten — the bad commits stay inspectable, the restore is just

@@ -481,13 +481,13 @@ class SnapshotRuntimeScan(inner: Scan, live: Seq[graft.sources.SnapshotStore.Add
         } && strSets.forall { case (c, vs) =>
           a.strStats.get(c) match {
             // UTF-8 byte order — the order the stats were computed in
-            // (ZOrderStore.utf8Cmp); the stored min may be a truncated
+            // (ParquetFooters.utf8Cmp); the stored min may be a truncated
             // PREFIX of the true min, which only widens the box (a
             // prefix sorts <= the full value), so containment stays
             // conservative
             case Some((lo, hi)) => vs.exists(v =>
-              graft.sources.ZOrderStore.utf8Cmp(v, lo) >= 0 &&
-              graft.sources.ZOrderStore.utf8Cmp(v, hi) <= 0)
+              graft.sources.ParquetFooters.utf8Cmp(v, lo) >= 0 &&
+              graft.sources.ParquetFooters.utf8Cmp(v, hi) <= 0)
             case None => true
           }
         }

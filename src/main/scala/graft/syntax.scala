@@ -134,9 +134,6 @@ object syntax {
     def unigramScore(reference: DataFrame, idCol: String, textCol: String): DataFrame =
       Ranking.unigramScore(df, reference, idCol, textCol)
 
-    def zorderWrite(colA: String, colB: String, path: String, numFiles: Int): Unit =
-      graft.sources.ZOrderStore.write(df, colA, colB, path, numFiles)
-
     def topKPerGroup(n: Int): DataFrame =
       Analytics.topNPerGroupAgg(df, n)
 
@@ -171,10 +168,6 @@ object syntax {
     def freqRollup(bucketCol: Column, itemCol: Column,
                    maxMapSize: Int = 1024): DataFrame =
       Analytics.freqRollup(df, bucketCol, itemCol, maxMapSize)
-
-    def zorderWriteN(cols: Seq[String], path: String, numFiles: Int,
-                     bloomCols: Seq[String] = Nil): Unit =
-      graft.sources.ZOrderStore.writeN(df, cols, path, numFiles, bloomCols)
 
     def bpeEncodeBroadcastWith(merges: Seq[(String, String)], textCol: String): DataFrame =
       df.withColumn("bpe_tokens", graft.functions.Bpe.encodeBroadcast(

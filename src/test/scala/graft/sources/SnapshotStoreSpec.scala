@@ -171,7 +171,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(boxKept.size === 4 && total === 4,
       s"interleaved ids must defeat box pruning, kept ${boxKept.size}")
     // bloom refine isolates the one file whose residue class holds 42
-    val kept = BloomSkip.prunedFrom(spark.sessionState.newHadoopConf(),
+    val kept = ParquetFooters.prunedFrom(spark.sessionState.newHadoopConf(),
       snap.live.map(f => new org.apache.hadoop.fs.Path(f.path)), "id", Seq(42L))
     assert(kept.size === 1,
       s"the bloom/dictionary leg must isolate one file, kept ${kept.size}")
@@ -279,6 +279,65 @@ class SnapshotStoreSpec extends SparkSpec {
         (j, (j * 37 + i) % 256))).count { case (x, y) => x < 32 && y < 32 })
   }
 
+  test("maintain(zorderCols) over 3 columns prunes an octant box and each single axis") {
+    val t = tempTable("zorder3")
+    // a 32×32×32 cube, every cell once, in 4 appends of 5 round-robin
+    // fragments each — every file's box covers the whole cube
+    val cube = spark.range(32768).select(
+      (col("id") % 32).as("x"),
+      ((col("id") / 32) % 32).cast("long").as("y"),
+      (col("id") / 1024).cast("long").as("z"),
+      col("id").as("payload"))
+    (0 until 4).foreach { i =>
+      SnapshotStore.append(cube.filter(pmod(col("payload"), lit(4)) === i).repartition(5),
+        t, statsCols = Seq("x", "y", "z"))
+    }
+    val box = Map("x" -> (8L, 15L), "y" -> (8L, 15L), "z" -> (8L, 15L))
+    assert(SnapshotStore.prunedLiveFiles(spark, t, box)._1.size === 20,
+      "fragmented appends: the box can prune nothing")
+    assert(SnapshotStore.maintain(spark, t, maxLiveFiles = 16, targetFiles = 16,
+      zorderCols = Seq("x", "y", "z")).nonEmpty)
+    val (kept, total) = SnapshotStore.prunedLiveFiles(spark, t, box)
+    // an octant-of-an-octant box (1/64 of the cube) touches few 3-D
+    // tiles — never a constant fraction of all files. ≤6 not ≤4: the
+    // range partitioner SAMPLES, so tile edges (and one or two extra
+    // grazed files) shift with the ambient partitioning of the input
+    assert(total === 16 && kept.size <= 6, s"3-D layout kept ${kept.size} of $total files")
+    // single-axis ranges prune on x and on y alike
+    val (keptX, _) = SnapshotStore.prunedLiveFiles(spark, t, Map("x" -> (8L, 15L)))
+    val (keptY, _) = SnapshotStore.prunedLiveFiles(spark, t, Map("y" -> (8L, 15L)))
+    assert(keptX.size < 16 && keptY.size < 16,
+      s"z layout should prune both axes: x=${keptX.size} y=${keptY.size}")
+    // pruned read ≡ plain filter, row for row
+    val got = SnapshotStore.readBox(spark, t, box).select("payload").as[Long].collect().toSet
+    val want = cube.filter(col("x").between(8, 15) && col("y").between(8, 15) &&
+      col("z").between(8, 15)).select("payload").as[Long].collect().toSet
+    assert(got === want && got.size === 512)
+  }
+
+  test("maintain(zorderCols, bloomCols) pairs box pruning with point skipping") {
+    val t = tempTable("zbloom")
+    // z-ordered on (x, y) for boxes, bloom on the unrelated id for points
+    val cube = spark.range(16384).select(
+      (col("id") % 128).as("x"), (col("id") / 128).cast("long").as("y"),
+      (col("id") * 2654435761L % 1000003L).as("doc_id"))
+    (0 until 4).foreach { i =>
+      SnapshotStore.append(cube.filter(pmod(col("x"), lit(4)) === i).repartition(5),
+        t, statsCols = Seq("x", "y"))
+    }
+    assert(SnapshotStore.maintain(spark, t, maxLiveFiles = 16, targetFiles = 16,
+      statsCols = Seq("x", "y"), zorderCols = Seq("x", "y"),
+      bloomCols = Seq("doc_id")).nonEmpty)
+    val (boxKept, boxTotal) = SnapshotStore.prunedLiveFiles(spark, t,
+      Map("x" -> (0L, 15L), "y" -> (0L, 15L)))
+    assert(boxTotal === 16 && boxKept.size < boxTotal, "z-order box pruning must still work")
+    val probe = cube.filter(col("id") === 7777L).select("doc_id").as[Long].head()
+    val points = SnapshotStore.readPoints(spark, t, "doc_id", Seq(probe))
+    assert(points.inputFiles.length <= 3,
+      s"the maintained files must carry doc_id blooms: read ${points.inputFiles.length} of 16")
+    assert(points.count() === cube.filter(col("doc_id") === probe).count())
+  }
+
   test("concurrent committers: every append lands in a distinct serial version") {
     val t = tempTable("race")
     val threads = 4; val each = 5
@@ -311,6 +370,13 @@ class SnapshotStoreSpec extends SparkSpec {
     // a column never harvested can't prune — keeps everything
     val (keptAll, totalAll) = SnapshotStore.prunedLiveFiles(spark, t, Map("nope" -> (0L, 1L)))
     assert(keptAll.size === totalAll)
+    // compact without statsCols re-harvests what the live files carried,
+    // so the rewrite keeps the pruning the appends paid for
+    SnapshotStore.compact(spark, t, targetFiles = 1)
+    val compacted = SnapshotStore.state(spark, t).live
+    assert(compacted.size === 1 && compacted.forall(_.stats.get("id").contains((0L, 1099L))),
+      s"compacted files must carry id stats: ${compacted.map(_.stats)}")
+    assert(SnapshotStore.prunedLiveFiles(spark, t, Map("id" -> (5000L, 6000L)))._1.isEmpty)
   }
 
   test("string stats prune lexicographic boxes; truncation stays conservative") {

@@ -47,19 +47,6 @@ class TopicStoreSpec extends SparkSpec
   }
 
   test("bucketed tables join without a shuffle") {
-    // clear catalog entries AND on-disk leftovers from previous JVMs (the
-    // in-memory catalog does not know about a stale warehouse dir)
-    Seq("ts_bucketed_l", "ts_bucketed_r").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
     val l = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "v")
     val r = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
     TopicStore.writeBucketed(l, "ts_bucketed_l", Seq("k"), buckets = 4)
@@ -75,17 +62,6 @@ class TopicStoreSpec extends SparkSpec
   test("SMB layout: as-of join over bucket-sorted tables plans ZERO exchange and ZERO sort") {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    Seq("ts_smb_l", "ts_smb_r").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
     val l = Seq((1L, 10L, "a"), (1L, 25L, "b"), (2L, 10L, "c"), (3L, 7L, "d"))
       .toDF("k", "t", "tag")
     val r = Seq((1L, 5L, 1.0), (1L, 20L, 2.0), (2L, 50L, 9.0))

@@ -17,7 +17,15 @@ cd "$(dirname "$0")/.."
 out=$(mktemp -d)
 trap 'rm -rf "$out"' EXIT
 
+# spark-warehouse/ is .gitignored test output that older trees left in
+# the repo root; sessions now keep managed tables in a scratch warehouse,
+# so a fresh one appearing means some session escaped that setting
+rm -rf spark-warehouse
 sbt -batch compile Test/compile test
+if [ -e spark-warehouse ]; then
+  echo "tier-1: the test run left spark-warehouse/ in the repo root" >&2
+  exit 1
+fi
 for sf in sf0.001 sf0.01; do
   SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
     sbt -batch "runMain graft.Verify $data/$sf $out/$sf"
