@@ -190,14 +190,27 @@ object Dedup {
   private[graft] def bandedSignatures(docs: DataFrame, idCol: String, textCol: String,
                                       numHashes: Int, shingleN: Int, rowsPerBand: Int,
                                       sigPath: Option[String] = None): DataFrame = {
-    require(numHashes > 0 && rowsPerBand > 0 && numHashes % rowsPerBand == 0,
-      s"numHashes ($numHashes) must be a positive multiple of rowsPerBand ($rowsPerBand) — " +
-        "a remainder would silently drop signature slots from banding")
+    requireBanding(numHashes, rowsPerBand)
     // materialized once (ndocs × k longs): the signature table feeds the
     // band explode and is the anti-inlining barrier for the md5 tree —
     // see ngramJaccardPairs
-    val sigs = materialize(
-      minHashSignatures(docs, idCol, textCol, numHashes, shingleN), sigPath)
+    bandsOf(materialize(
+      minHashSignatures(docs, idCol, textCol, numHashes, shingleN), sigPath),
+      idCol, numHashes, rowsPerBand)
+  }
+
+  private[graft] def requireBanding(numHashes: Int, rowsPerBand: Int): Unit =
+    require(numHashes > 0 && rowsPerBand > 0 && numHashes % rowsPerBand == 0,
+      s"numHashes ($numHashes) must be a positive multiple of rowsPerBand ($rowsPerBand) — " +
+        "a remainder would silently drop signature slots from banding")
+
+  /** The band explode of [[bandedSignatures]] over a signature table
+    * ([[minHashSignatures]]' columns): exactly numHashes / rowsPerBand
+    * (id, band, sig) rows per doc, whatever its text.
+    */
+  private[graft] def bandsOf(sigs: DataFrame, idCol: String,
+                             numHashes: Int, rowsPerBand: Int): DataFrame = {
+    requireBanding(numHashes, rowsPerBand)
     val numBands = numHashes / rowsPerBand
     sigs.select(col(idCol),
       explode(array((0 until numBands).map { b =>

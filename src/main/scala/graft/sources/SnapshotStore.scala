@@ -281,12 +281,13 @@ object SnapshotStore {
   def state(spark: SparkSession, table: String,
             asOf: Option[Long] = None): Snapshot = {
     val fs = logDir(table).getFileSystem(conf(spark))
-    val (commits, _) = listLog(fs, table)
+    val listing = listLog(fs, table)
+    val commits = listing._1
     require(commits.nonEmpty, s"snapshot table has no commits: $table")
     val target = asOf.getOrElse(commits.last)
     require(commits.contains(target),
       s"version $target does not exist in $table (have ${commits.mkString(",")})")
-    stateUpTo(spark, table, target)
+    replay(spark, fs, table, listing, target)
   }
 
   /** [[state]] with a relaxed horizon: replay every commit `<= upTo`
@@ -299,7 +300,36 @@ object SnapshotStore {
   private def stateUpTo(spark: SparkSession, table: String,
                         target: Long): Snapshot = {
     val fs = logDir(table).getFileSystem(conf(spark))
-    val (commits, checkpoints) = listLog(fs, table)
+    replay(spark, fs, table, listLog(fs, table), target)
+  }
+
+  /** The latest snapshot, or None when the table has no commit yet —
+    * ONE log listing and one replay, where `latestVersion` followed by
+    * [[state]] lists the log three times. A reader that pins the result
+    * and reads everything through it (the dedup sinks, per batch) sees
+    * one consistent version of the table.
+    */
+  private[graft] def current(spark: SparkSession, table: String): Option[Snapshot] = {
+    val fs = logDir(table).getFileSystem(conf(spark))
+    val listing = listLog(fs, table)
+    listing._1.lastOption.map(replay(spark, fs, table, listing, _))
+  }
+
+  /** [[current]] that answers from `pinned` when the log shows it is
+    * still the latest version — one listing, no replay — so a writer
+    * that pinned a table's snapshot earlier re-reads the log only after
+    * another commit landed.
+    */
+  private def currentVia(spark: SparkSession, table: String,
+                         pinned: Option[Snapshot]): Option[Snapshot] =
+    pinned match {
+      case Some(p) if latestVersion(spark, table) == p.version => Some(p)
+      case _ => current(spark, table)
+    }
+
+  private def replay(spark: SparkSession, fs: FileSystem, table: String,
+                     listing: (Seq[Long], Seq[Long]), target: Long): Snapshot = {
+    val (commits, checkpoints) = listing
     require(commits.nonEmpty, s"snapshot table has no commits: $table")
     val cp = checkpoints.filter(_ <= target).lastOption
     val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
@@ -349,7 +379,8 @@ object SnapshotStore {
                      adds: Seq[AddFile], removes: Seq[String],
                      meta: => Map[String, String],
                      mustBeLive: Seq[String],
-                     expectDv: Map[String, Option[(String, Long)]] = Map.empty): Long = {
+                     expectDv: Map[String, Option[(String, Long)]] = Map.empty,
+                     pinned: Option[Snapshot] = None): Long = {
     val c = conf(spark)
     val dir = logDir(table)
     val fs = dir.getFileSystem(c)
@@ -369,7 +400,7 @@ object SnapshotStore {
       // that feature on the retry, not slide past it (guarded commits
       // replay state anyway, so they re-check unconditionally).
       if (v > 1 && (mustBeLive.nonEmpty || expectDv.nonEmpty || v != checkedAtV)) {
-        protocolCheckWrite(table, state(spark, table).meta)
+        protocolCheckWrite(table, currentVia(spark, table, pinned).fold(Map.empty[String, String])(_.meta))
         checkedAtV = v
       }
       if ((mustBeLive.nonEmpty || expectDv.nonEmpty) && v > 1) {
@@ -437,7 +468,8 @@ object SnapshotStore {
     */
   private def stageFiles(df: DataFrame, table: String,
                          statsCols: Seq[String],
-                         bloomCols: Seq[String] = Nil): Seq[AddFile] = {
+                         bloomCols: Seq[String] = Nil,
+                         pinned: Option[Snapshot] = None): Seq[AddFile] = {
     // stats serialize into the commit TSV as `col=lo:hi;col=lo:hi` —
     // a name carrying one of the format's separators would corrupt the
     // line (and a later decodeAdd). Reject up front, not at replay.
@@ -449,8 +481,7 @@ object SnapshotStore {
     val data = dataDir(table)
     val fs = data.getFileSystem(c)
     val tableMeta: Map[String, String] =
-      if (latestVersion(spark, table) == 0L) Map.empty
-      else state(spark, table).meta
+      currentVia(spark, table, pinned).fold(Map.empty[String, String])(_.meta)
     // CHECK constraints ride the write plan itself — one assert_true
     // filter per active constraint, evaluated on every staged row in
     // the same pass that writes it (no separate validation scan, no
@@ -831,7 +862,16 @@ object SnapshotStore {
     * and conflict retries match [[append]] attempt-for-attempt.
     * Returns the committed version per part, in order.
     */
-  def appendMany(spark: SparkSession, parts: Seq[AppendPart]): Seq[Long] = {
+  def appendMany(spark: SparkSession, parts: Seq[AppendPart]): Seq[Long] =
+    appendManyPinned(spark, parts, Map.empty)
+
+  /** [[appendMany]] whose schema derivation, staging and commit read
+    * each table through the snapshot the caller `pinned` (by table)
+    * while the log shows it is still the latest — a streaming sink that
+    * pinned its tables at batch start replays no log to append.
+    */
+  private[graft] def appendManyPinned(spark: SparkSession, parts: Seq[AppendPart],
+                                      pinned: Map[String, Snapshot]): Seq[Long] = {
     require(parts.nonEmpty, "appendMany needs at least one part")
     require(parts.map(_.table).distinct.size == parts.size,
       s"appendMany parts must target distinct tables: ${parts.map(_.table)}")
@@ -842,17 +882,18 @@ object SnapshotStore {
     // column. Evaluated once per part up front too, so type drift /
     // missing mergeSchema fails BEFORE any staging I/O.
     def recordedOf(p: AppendPart): org.apache.spark.sql.types.StructType =
-      if (latestVersion(spark, p.table) == 0L) p.df.schema
-      else {
-        val m = state(spark, p.table).meta
-        schemaOf(m)
-          .map(evolveSchema(_, p.df.schema, p.mergeSchema, p.table, retiredPhysicals(m)))
-          .getOrElse(p.df.schema)
+      currentVia(spark, p.table, pinned.get(p.table)) match {
+        case None => p.df.schema
+        case Some(snap) =>
+          val m = snap.meta
+          schemaOf(m)
+            .map(evolveSchema(_, p.df.schema, p.mergeSchema, p.table, retiredPhysicals(m)))
+            .getOrElse(p.df.schema)
       }
     parts.foreach(p => { val _ = recordedOf(p) })
     val staged: Seq[Seq[AddFile]] =
       if (parts.size == 1) Seq(stageFiles(parts.head.df, parts.head.table,
-        parts.head.statsCols, parts.head.bloomCols))
+        parts.head.statsCols, parts.head.bloomCols, pinned.get(parts.head.table)))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(parts.size, 4))
@@ -860,7 +901,7 @@ object SnapshotStore {
           scala.concurrent.ExecutionContext.fromExecutorService(pool)
         try {
           val fs = parts.map(p => scala.concurrent.Future(
-            stageFiles(p.df, p.table, p.statsCols, p.bloomCols)))
+            stageFiles(p.df, p.table, p.statsCols, p.bloomCols, pinned.get(p.table))))
           fs.map(f => scala.concurrent.Await.result(
             f, scala.concurrent.duration.Duration.Inf))
         } finally pool.shutdown()
@@ -868,7 +909,7 @@ object SnapshotStore {
     parts.zip(staged).map { case (p, adds) =>
       commit(spark, p.table, adds, removes = Nil,
         meta = p.meta + ("op" -> "append") + ("schema" -> recordedOf(p).json),
-        mustBeLive = Nil)
+        mustBeLive = Nil, pinned = pinned.get(p.table))
     }
   }
 
@@ -1452,6 +1493,15 @@ object SnapshotStore {
       boxKept.filter(a => kept.contains(a.path))
     }
   }
+
+  /** The live files of a pinned snapshot that can hold any of `values`
+    * in `column` — [[scanPoints]]'s pruning without the read, for a
+    * caller that reads the kept files itself.
+    */
+  private[graft] def pointsKept(spark: SparkSession, snap: Snapshot, column: String,
+                                values: Seq[Long], bloomMaxValues: Int = 1024): Seq[AddFile] =
+    if (values.isEmpty || snap.live.isEmpty) Nil
+    else pointsKeptFiles(spark, snap, column, values.distinct.sorted.toArray, bloomMaxValues)
 
   /** Superset scan for a LARGE long-typed probe set — the streaming
     * dedup sinks' shape (thousands of batch keys probing a grown

@@ -638,20 +638,39 @@ object Streaming {
 
   /** Null ids are outside the integral-id contract and cannot be
     * handled consistently: a null-id verdict never matches the
-    * replay-skip / append-idempotence anti-joins (null joins nothing),
+    * replay-skip / append-idempotence probes (null matches nothing),
     * so a crash replay would duplicate its band/sig rows — and
     * silently dropping the rows would discard documents without a
     * verdict. Fail the batch loudly instead, the [[requireIntegralId]]
     * discipline enforced per batch (nullness is data, not schema).
-    * One limit-1 job on the already-checkpointed batch frame.
     */
-  private def requireNoNullIds(once: DataFrame, idCol: String): Unit =
-    if (!once.filter(col(idCol).isNull).isEmpty)
-      throw new IllegalArgumentException(
-        s"dedup sink batch contains null '$idCol' rows — the sinks " +
-          "point-skip on non-null integral ids (a null-id verdict can " +
-          "never be replay-skipped, so a crash replay would duplicate " +
-          "its rows); filter or assign ids upstream of the sink")
+  private def nullIdBatch(idCol: String): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"dedup sink batch contains null '$idCol' rows — the sinks " +
+        "point-skip on non-null integral ids (a null-id verdict can " +
+        "never be replay-skipped, so a crash replay would duplicate " +
+        "its rows); filter or assign ids upstream of the sink")
+
+  /** The batch's ids (one row per id: `once` is post-dropDuplicates)
+    * in ONE bounded collect that also answers the null-id check — up to
+    * `cap` longs, or None past the cap (the full-snapshot fallback
+    * signal). Only an over-cap batch, whose unseen rows the collect
+    * could not check, pays a separate limit-1 null probe.
+    */
+  private def batchIdProbes(once: DataFrame, idCol: String, cap: Int): Option[Seq[Long]] = {
+    val got = once.select(col(idCol).cast("long")).limit(probeLimit(cap)).collect()
+    if (got.exists(_.isNullAt(0))) throw nullIdBatch(idCol)
+    if (got.length > cap) {
+      if (!once.filter(col(idCol).isNull).isEmpty) throw nullIdBatch(idCol)
+      None
+    } else Some(got.map(_.getLong(0)).toSeq)
+  }
+
+  /** `cap + 1` without wrapping: maxProbeKeys = Int.MaxValue is the
+    * sane way to say "cap off", and a negative limit would poison the
+    * stream.
+    */
+  private def probeLimit(cap: Int): Int = if (cap >= Int.MaxValue) Int.MaxValue else cap + 1
 
   /** Bounded driver collect of a probe column: up to `cap` DISTINCT
     * longs, or None past the cap — the signal to degrade the
@@ -661,20 +680,13 @@ object Streaming {
     * the DRIVER whatever it does to the cluster; 1M longs ≈ 8 MB is
     * the family default ([[containmentDedupSink]]'s original cap).
     * Null probes drop (a null key matches nothing in the exact joins
-    * the callers re-apply). Pass `distinctDone = true` when the input
-    * is already unique on `c` (the post-dropDuplicates batch frame) —
-    * the dedup exchange would be a per-batch shuffle bought for
-    * nothing.
+    * the callers re-apply).
     */
-  private def boundedProbes(df: DataFrame, c: String, cap: Int,
-                            distinctDone: Boolean = false): Option[Seq[Long]] = {
-    // cap+1 must not wrap: maxProbeKeys = Int.MaxValue is the sane way
-    // to say "cap off", and a negative limit() would poison the stream
-    val lim = if (cap >= Int.MaxValue) Int.MaxValue else cap + 1
-    val base = df.select(col(c).cast("long").as("__p"))
+  private def boundedProbes(df: DataFrame, c: String, cap: Int): Option[Seq[Long]] = {
+    val arr = df.select(col(c).cast("long").as("__p"))
       .filter(col("__p").isNotNull)
-    val arr = (if (distinctDone) base else base.distinct())
-      .limit(lim).collect().map(_.getLong(0))
+      .distinct()
+      .limit(probeLimit(cap)).collect().map(_.getLong(0))
     if (arr.length > cap) None else Some(arr.toSeq)
   }
 
@@ -691,6 +703,187 @@ object Streaming {
       case Some(vs) => graft.sources.SnapshotStore.scanPoints(spark, table, column, vs)
       case None     => graft.sources.SnapshotStore.snapshot(spark, table)
     }
+
+  /** The checkpoints one sink batch creates, freed together when the
+    * batch ends. `localCheckpoint` truncates lineage, so Spark itself
+    * never drops those blocks (the untracked ones wait for a GC-driven
+    * cleaner pass, the [[graft.runtime.Checkpoints]]-tracked ones for a
+    * `release()` no streaming query ever calls): without the scope a
+    * stream grows the block manager by a table per batch.
+    */
+  private final class BatchScope {
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    /** Take ownership of every checkpoint under `df`. */
+    def own(df: DataFrame): DataFrame = { frames += df; df }
+    def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
+      own(df.localCheckpoint(eager))
+    def free(): Unit = frames.foreach(graft.runtime.Checkpoints.free(_))
+  }
+
+  private def withBatchScope[T](body: BatchScope => T): T = {
+    val scope = new BatchScope
+    try body(scope) finally scope.free()
+  }
+
+  /** The most elements (rows, or corpus ids for the screen) one
+    * [[incrementalDedupSink]] collect handed to the driver since the
+    * last reset — what the specs pin against `maxProbeKeys`.
+    */
+  private[graft] val largestCollect = new java.util.concurrent.atomic.AtomicLong()
+
+  private def noteCollect(n: Long): Unit = {
+    val _ = largestCollect.accumulateAndGet(n, (a, b) => math.max(a, b))
+  }
+
+  /** Every row of `rdd` in ONE job; `perPartition` pre-reduces each
+    * partition on the executor.
+    */
+  private def collectAll[T, U: scala.reflect.ClassTag](rdd: org.apache.spark.rdd.RDD[T])(
+      perPartition: Iterator[T] => Iterator[U]): Array[U] = {
+    val got = rdd.sparkContext.runJob(rdd, (it: Iterator[T]) => perPartition(it).toArray).flatten
+    noteCollect(got.length.toLong)
+    got
+  }
+
+  /** The rows of a sink batch's lazily checkpointed frame in ONE job
+    * that also materializes the checkpoint — the count that picks the
+    * batch's plan before any row reaches the driver. A null `idCol`
+    * fails the batch here, whichever plan would have run.
+    */
+  private def countBatch(raw: DataFrame, idCol: String): Long = {
+    val parts = collectAll(raw.select(col(idCol)).queryExecution.toRdd) { it =>
+      var n = 0L
+      var nulls = false
+      it.foreach { r => n += 1; nulls ||= r.isNullAt(0) }
+      Iterator((n, nulls))
+    }
+    if (parts.exists(_._2)) throw nullIdBatch(idCol)
+    parts.map(_._1).sum
+  }
+
+  /** A bucket of the band index: the band number and its signature,
+    * Spark's 32-hex-digit md5, as two longs — three primitives on the
+    * driver instead of a 32-char String.
+    */
+  private final case class Bucket(band: Int, hi: Long, lo: Long)
+
+  private def bucketOf(band: Int, sig: org.apache.spark.unsafe.types.UTF8String): Bucket = {
+    val s = sig.toString
+    require(s.length == 32, s"band signature is not an md5 hex digest: '$s'")
+    Bucket(band, java.lang.Long.parseUnsignedLong(s, 0, 16, 16),
+      java.lang.Long.parseUnsignedLong(s, 16, 32, 16))
+  }
+
+  /** One (id, band, sig, __bs) row of a batch's band table as the
+    * driver holds it: five primitives, about 56 bytes.
+    */
+  private final case class BandRow(id: Long, band: Int, hi: Long, lo: Long, bs: Long) {
+    def bucket: Bucket = Bucket(band, hi, lo)
+  }
+
+  private def bandRows(fb: DataFrame, idCol: String): Array[BandRow] =
+    collectAll(fb.select(col(idCol).cast("long"), col("band"), col("sig"), col("__bs"))
+      .queryExecution.toRdd)(_.map { r =>
+        val b = bucketOf(r.getInt(1), r.getUTF8String(2))
+        BandRow(r.getLong(0), b.band, b.hi, b.lo, r.getLong(3))
+      })
+
+  /** The batch's ids that a pinned table already holds: the kept files
+    * of a point-pruned read (log boxes + parquet blooms), filtered to
+    * `ids` on the executors. No kept file — the steady state of a
+    * replay skip or an idempotence check — runs no job at all.
+    */
+  private def heldIds(spark: org.apache.spark.sql.SparkSession,
+                      pinned: Option[graft.sources.SnapshotStore.Snapshot],
+                      idCol: String, ids: Seq[Long]): Set[Long] = {
+    import graft.sources.SnapshotStore
+    pinned match {
+      case Some(snap) if ids.nonEmpty =>
+        val kept = SnapshotStore.pointsKept(spark, snap, idCol, ids)
+        if (kept.isEmpty) Set.empty
+        else {
+          val probe = ids.distinct.sorted.toArray
+          collectAll(SnapshotStore.readLive(spark, snap.meta, kept)
+              .select(col(idCol).cast("long")).queryExecution.toRdd) { it =>
+            it.filter(r => !r.isNullAt(0) &&
+                java.util.Arrays.binarySearch(probe, r.getLong(0)) >= 0)
+              .map(_.getLong(0)).toSet.iterator
+          }.toSet
+        }
+      case _ => Set.empty
+    }
+  }
+
+  /** The corpus ids of every probed bucket that screens: index rows
+    * whose `__bs` is in `probeBs`, read from the `__bs`-pruned files of
+    * the pinned band snapshot, minus the batch's own `fresh` ids (a
+    * crash-replayed half-indexed doc must not match itself); buckets
+    * holding more than `maxBucketSize` such rows and tombstoned buckets
+    * drop — [[graft.operators.Dedup.capBuckets]] over the index
+    * without the tombstones, as one collect. A partition keeps at most
+    * maxBucketSize + 1 ids per bucket (which still decides "over the
+    * cap" exactly) in primitive buffers and ships them only while they
+    * fit its even share of `budget`, so the driver receives at most
+    * `budget` ids in total (plus one key per matched bucket). None when
+    * a partition's share overflowed: the caller screens distributed.
+    */
+  private def screenBuckets(spark: org.apache.spark.sql.SparkSession,
+                            bands: graft.sources.SnapshotStore.Snapshot,
+                            capped: Option[graft.sources.SnapshotStore.Snapshot],
+                            idCol: String, probeBs: Seq[Long], fresh: Seq[Long],
+                            maxBucketSize: Int, budget: Int): Option[Map[Bucket, Array[Long]]] = {
+    import graft.sources.SnapshotStore
+    import scala.collection.mutable
+    val kept = SnapshotStore.pointsKept(spark, bands, "__bs", probeBs)
+    if (kept.isEmpty) return Some(Map.empty)
+    val probe = probeBs.distinct.sorted.toArray
+    val own = fresh.distinct.sorted.toArray
+    val lim = probeLimit(maxBucketSize)
+    val rows = SnapshotStore.readLive(spark, bands.meta, kept)
+      .select(col("__bs"), col(idCol).cast("long"), col("band"), col("sig"))
+      .queryExecution.toRdd
+    val share = budget / rows.getNumPartitions
+    if (share == 0) return None
+    val merged = mutable.HashMap.empty[Bucket, Array[Long]]
+    var shipped = 0L
+    var overflow = false
+    spark.sparkContext.runJob(rows, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+      val m = mutable.HashMap.empty[Bucket, mutable.ArrayBuilder.ofLong]
+      var held = 0
+      while (held <= share && it.hasNext) {
+        val r = it.next()
+        if (java.util.Arrays.binarySearch(probe, r.getLong(0)) >= 0 &&
+            java.util.Arrays.binarySearch(own, r.getLong(1)) < 0) {
+          val ids = m.getOrElseUpdate(bucketOf(r.getInt(2), r.getUTF8String(3)),
+            new mutable.ArrayBuilder.ofLong)
+          if (ids.length < lim) { ids += r.getLong(1); held += 1 }
+        }
+      }
+      if (held > share) None
+      else Some(m.iterator.map { case (k, ids) => (k, ids.result()) }.toArray)
+    }, (_: Int, part: Option[Array[(Bucket, Array[Long])]]) => part match {
+      case None => overflow = true
+      case Some(p) => p.foreach { case (k, ids) =>
+        shipped += ids.length
+        if (!overflow) merged(k) = (merged.getOrElse(k, Array.emptyLongArray) ++ ids).take(lim)
+      }
+    })
+    noteCollect(shipped)
+    if (overflow) return None
+    val screening = merged.filter(_._2.length <= maxBucketSize)
+    // tombstones stay excluded even after their rows were compacted away
+    val dead: Set[Bucket] = capped.filter(_ => screening.nonEmpty) match {
+      case Some(c) if c.live.nonEmpty =>
+        collectAll(SnapshotStore.readLive(spark, c.meta, c.live)
+            .select(xxhash64(col("band"), col("sig")), col("band"), col("sig"))
+            .queryExecution.toRdd) { it =>
+          it.filter(r => java.util.Arrays.binarySearch(probe, r.getLong(0)) >= 0)
+            .map(r => bucketOf(r.getInt(1), r.getUTF8String(2)))
+        }.toSet
+      case _ => Set.empty
+    }
+    Some(screening.toMap -- dead)
+  }
 
   /** Streaming INGESTION DEDUP: the [[graft.operators.Dedup.incrementalDedup]]
     * contract as a self-growing store — each micro-batch of documents
@@ -714,12 +907,34 @@ object Streaming {
     * screen reads only band files whose bucket-hash range intersects
     * the batch's buckets (`__bs = xxhash64(band, sig)`, the stored
     * point-skip key; sound because pruning keeps EVERY file a probed
-    * bucket touches, so probed buckets join complete and their cap
-    * sizes count exact), and the replay-skip / append-idempotence
-    * anti-joins point-skip on the batch's ids (log boxes + parquet
-    * blooms).
+    * bucket touches, so probed buckets screen complete and their cap
+    * sizes count exact), and the replay skip / append idempotence
+    * point-skip on the batch's ids (log boxes + parquet blooms). Each
+    * batch pins ONE snapshot per table at its start and reads
+    * everything through it, so it sees one consistent version of each.
     *
-    * COMPACTION: both stores append one file set per micro-batch —
+    * A BATCH COSTS ITS DATA. The batch is checkpointed as it arrives
+    * and counted in one job, which also fails a null-id batch; the
+    * count picks the plan before any row reaches the driver. A batch of
+    * at most `maxProbeKeys` band rows (exactly numHashes / rowsPerBand
+    * per doc) builds its band table (`id, band, sig, __bs`) and
+    * collects it to the driver once: that collect is the batch-id set,
+    * the bucket probe set and the repeated-id test (only a batch that
+    * repeats an id pays a `dropDuplicates`). The replay skip and the
+    * idempotence check collect only the ids the pruned files hold (none
+    * in steady state: no file kept, no job). The screen is one collect
+    * of the probed buckets' corpus ids, at most maxBucketSize + 1 per
+    * bucket, and the bucket cap, tombstones, `n_corpus_dups`,
+    * `nearest_dup` and `keep` are set arithmetic on the driver, row for
+    * row `Dedup.screen ∘ capBuckets`. The writes stage the accepted
+    * bands as a narrow filter of the batch's band checkpoint and the
+    * verdicts as a local frame, one file per table. A steady-state
+    * batch runs five Spark jobs (count, band collect, screen collect,
+    * two staged writes); a replayed id, a tombstone table or a
+    * compaction adds its own. Every checkpoint a batch creates is freed
+    * when the batch ends.
+    *
+    * COMPACTION: both stores append one file per micro-batch —
     * thousands of batches would mean thousands of small files, the
     * classic streaming-lakehouse failure. Past `compactAfterFiles` live
     * files the stores rewrite through atomic snapshot commits (metadata
@@ -746,10 +961,18 @@ object Streaming {
     *
     * CONTRACT: `idCol` must be integral (every point-skip probe hashes
     * long ids) — validated at construction. Per-batch DRIVER state is
-    * capped: each probe collect (batch ids, band buckets) stops at
-    * `maxProbeKeys` distinct longs and past the cap the point-skip
-    * read degrades to the full snapshot — identical verdicts, the
-    * index files just stop pruning for that batch. `retainVersions`
+    * capped by `maxProbeKeys`: the band-row collect holds at most that
+    * many rows of five primitives (about 56 bytes each, ~56 MB at the
+    * default), and the screen collect at most that many corpus ids in
+    * total (8 bytes each, plus one bucket key per matched bucket). A
+    * batch past the band-row cap runs the distributed plan (shuffle
+    * joins) from its checkpoint, and a batch whose probed buckets hold
+    * more corpus ids than the screen budget screens with the same
+    * joins — identical verdicts either way. That plan's probe collects
+    * (batch ids, band buckets) stop at `maxProbeKeys` distinct longs
+    * each and past that degrade the point-skip read to the full
+    * snapshot; the index files just stop pruning for that batch.
+    * `retainVersions`
     * bounds how many superseded store versions maintenance vacuum
     * keeps (default 2 = current + one of slack for a concurrent
     * reader; raise it to time-travel over sink state while
@@ -771,108 +994,252 @@ object Streaming {
     require(maxProbeKeys > 0, s"maxProbeKeys must be positive: $maxProbeKeys")
     require(retainVersions >= 1, s"retainVersions must be >= 1: $retainVersions")
     requireIntegralId(docs, idCol)
+    graft.operators.Dedup.requireBanding(numHashes, rowsPerBand)
     val spark = docs.sparkSession
     import graft.sources.SnapshotStore
-    val bandsTbl = s"$indexPath/bands"
-    val verdictsTbl = s"$indexPath/verdicts"
-    val cappedTbl = s"$indexPath/capped"
+    val tables = MinhashTables(s"$indexPath/bands", s"$indexPath/verdicts", s"$indexPath/capped")
+    val numBands = numHashes / rowsPerBand
+    // the stored band table of a batch: __bs is the point-skip key
+    def banded(df: DataFrame): DataFrame =
+      graft.operators.Dedup.bandsOf(
+          graft.operators.Dedup.minHashSignatures(df, idCol, textCol, numHashes, shingleN),
+          idCol, numHashes, rowsPerBand)
+        .withColumn("__bs", xxhash64(col("band"), col("sig")))
     docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
       // WRITER LEASE: acquired before any staging, released at batch
       // end — a concurrent `CALL graft.dedup_sink_maintain` (or second
       // sink on the same path) is refused deterministically up front
       // instead of one side dying mid-batch on a commit conflict
       graft.sources.SinkLease.withLease(spark, indexPath, "sink") {
-      // rowCount > 0, not just version > 0: the cap-tombstone compaction
-      // can legitimately EMPTY the bands table (every bucket oversized —
-      // an all-boilerplate corpus), and an empty store screens like no
-      // store; reading it would throw instead
-      val haveIndex = SnapshotStore.latestVersion(spark, bandsTbl) > 0L &&
-        SnapshotStore.rowCount(spark, bandsTbl) > 0L
-      // one row per id WITHIN the batch too: an at-least-once source can
-      // repeat an id inside one micro-batch, where the verdict anti-join
-      // can't see it yet — without this, the repeated id's band rows
-      // append twice. Mirrors the replay skip's per-id rule.
-      val once = batch.toDF().dropDuplicates(idCol).localCheckpoint()
-      requireNoNullIds(once, idCol)
-      // the batch's ids drive the point-skip probes below — bounded
-      // driver state (None past the cap → full-snapshot fallback)
-      val batchIds = boundedProbes(once, idCol, maxProbeKeys, distinctDone = true)
-      // ONE job answers both "any rows?" and the probe set: Some(empty)
-      // means an empty batch (null ids threw above) -> skip; None
-      // (over cap) is a full batch that proceeds on the fallback
-      if (batchIds.forall(_.nonEmpty)) {
-        val fresh =
-          if (SnapshotStore.latestVersion(spark, verdictsTbl) > 0L)
-            once.join(scanPointsBounded(spark, verdictsTbl, idCol, batchIds)
-              .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-          else once
-        if (!fresh.isEmpty) {
-          // the band table feeds both the screen and the index append —
-          // one materialization, like every signature table in Dedup;
-          // __bs is the STORED bucket-hash the point-skip prunes on
-          val fb = graft.operators.Dedup.bandedSignatures(
-              fresh, idCol, textCol, numHashes, shingleN, rowsPerBand)
-            .withColumn("__bs", xxhash64(col("band"), col("sig")))
-            .localCheckpoint()
-          val verdicts =
-            if (haveIndex) {
-              // the screen reads ONLY band files whose __bs range can
-              // intersect the batch's buckets; every row of a probed
-              // bucket lives in a kept file (box/bloom stages keep any
-              // file containing a probe), so the join and the cap
-              // counts below are exact on what matters. Bounded like
-              // every sink collect; an all-short-text batch (zero band
-              // rows) probes nothing and reads nothing.
-              val probeBs = boundedProbes(fb, "__bs", maxProbeKeys)
-              val raw = scanPointsBounded(spark, bandsTbl, "__bs", probeBs)
-                // a crash-replayed half-indexed doc must not match itself
-                .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
-              // tombstoned buckets stay excluded even after their rows
-              // were compacted away
-              val index =
-                if (SnapshotStore.latestVersion(spark, cappedTbl) > 0L)
-                  raw.join(SnapshotStore.snapshot(spark, cappedTbl),
-                    Seq("band", "sig"), "left_anti")
-                else raw
-              graft.operators.Dedup.screen(
-                fb, graft.operators.Dedup.capBuckets(index, maxBucketSize, true), idCol)
+        withBatchScope { scope =>
+          // lazily checkpointed: the count materializes it, every later
+          // read of the batch reads it back
+          val raw = scope.checkpoint(batch.toDF(), eager = false)
+          val n = countBatch(raw, idCol)
+          val appended =
+            if (n == 0L) false
+            else if (n * numBands <= maxProbeKeys) {
+              val pins = MinhashPins(SnapshotStore.current(spark, tables.bands),
+                SnapshotStore.current(spark, tables.verdicts),
+                SnapshotStore.current(spark, tables.capped))
+              // lazily checkpointed: the collect materializes it, the
+              // bands write reads it back
+              val fb0 = scope.checkpoint(banded(raw), eager = false)
+              val rows0 = bandRows(fb0, idCol)
+              // every doc yields exactly numBands rows: more means an
+              // at-least-once source repeated an id inside the batch,
+              // where the replay skip can't see it yet — one row per id,
+              // the replay skip's rule
+              val (fb, rows) =
+                if (rows0.length == rows0.map(_.id).distinct.length * numBands) (fb0, rows0)
+                else {
+                  graft.runtime.Checkpoints.free(fb0)
+                  val fb1 = scope.checkpoint(banded(raw.dropDuplicates(idCol)), eager = false)
+                  (fb1, bandRows(fb1, idCol))
+                }
+              boundedDedupBatch(spark, tables, pins, scope, fb, rows, idCol,
+                maxBucketSize, maxProbeKeys)
             } else
-              fb.select(col(idCol)).distinct()
-                .withColumn("n_corpus_dups", lit(0L))
-                .withColumn("nearest_dup", lit(null).cast("long"))
-                .withColumn("keep", lit(true))
-          val v = verdicts.localCheckpoint() // read twice: store + accept filter
-          // BANDS first, verdicts second — see the scaladoc's crash
-          // contract; the idempotence anti-join point-skips to the
-          // batch's own ids
-          val acceptedBands = fb.join(
-            v.filter(col("keep")).select(col(idCol)), Seq(idCol), "left_semi")
-          val acceptedNew =
-            if (haveIndex)
-              acceptedBands.join(
-                scanPointsBounded(spark, bandsTbl, idCol, batchIds)
-                  .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-            else acceptedBands
-          // ONE coalesced publish: both stores stage concurrently
-          // (overlapping the ~150 ms fixed staging latency each commit
-          // pays) and the logs land in order — bands BEFORE verdicts,
-          // the crash contract unchanged
-          SnapshotStore.appendMany(spark,
-            (if (!acceptedNew.isEmpty)
-              Seq(SnapshotStore.AppendPart(acceptedNew, bandsTbl,
-                statsCols = Seq("__bs", idCol), bloomCols = Seq(idCol, "__bs")))
-            else Nil) :+
-            SnapshotStore.AppendPart(v, verdictsTbl,
-              statsCols = Seq(idCol), bloomCols = Seq(idCol)))
-          maybeCompactIndex(spark, indexPath, idCol, maxBucketSize,
-            compactAfterFiles, retainVersions)
-          ()
+              distributedDedupBatch(spark, tables, scope, raw, idCol, textCol,
+                numHashes, shingleN, rowsPerBand, maxBucketSize, maxProbeKeys)
+          if (appended)
+            maybeCompactIndex(spark, tables, idCol, maxBucketSize,
+              compactAfterFiles, retainVersions)
         }
-      }
-      ()
       } // lease released
       ()
     }
+  }
+
+  private final case class MinhashTables(bands: String, verdicts: String, capped: String)
+  private final case class MinhashPins(bands: Option[graft.sources.SnapshotStore.Snapshot],
+                                       verdicts: Option[graft.sources.SnapshotStore.Snapshot],
+                                       capped: Option[graft.sources.SnapshotStore.Snapshot])
+
+  /** [[incrementalDedupSink]]'s batch on the driver-held band rows — see
+    * its scaladoc for the job budget and the bounds. True when the batch
+    * committed verdicts (false: every id was replay-skipped).
+    */
+  private def boundedDedupBatch(spark: org.apache.spark.sql.SparkSession,
+                                tables: MinhashTables, pins: MinhashPins,
+                                scope: BatchScope, fb: DataFrame, rows: Array[BandRow],
+                                idCol: String, maxBucketSize: Int,
+                                maxProbeKeys: Int): Boolean = {
+    import graft.sources.SnapshotStore
+    import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+    val batchIds = rows.map(_.id).distinct.toSeq
+    val verdicted = heldIds(spark, pins.verdicts, idCol, batchIds)
+    val fresh = batchIds.filterNot(verdicted)
+    if (fresh.isEmpty) return false
+    val freshRows = if (verdicted.isEmpty) rows.toSeq
+      else rows.toSeq.filterNot(r => verdicted(r.id))
+    // an EMPTIED band store (every bucket tombstoned) screens like no store
+    val haveIndex = pins.bands.exists(_.live.exists(_.visibleRows > 0L))
+    val screened =
+      if (haveIndex)
+        screenBuckets(spark, pins.bands.get, pins.capped, idCol,
+          freshRows.map(_.bs), fresh, maxBucketSize, maxProbeKeys)
+      else Some(Map.empty[Bucket, Array[Long]])
+    val corpus = screened match {
+      case Some(c) => c
+      case None =>
+        // the probed buckets hold more corpus ids than the driver may:
+        // the distributed screen over the fresh docs' band rows
+        val fbFresh = if (verdicted.isEmpty) fb
+          else fb.filter(col(idCol).cast("long").isInCollection(fresh))
+        return distributedScreenAppend(spark, tables, scope, fbFresh, Some(batchIds),
+          haveIndex, idCol, maxBucketSize, maxProbeKeys)
+    }
+    // Dedup.screen: per doc, the distinct corpus ids sharing any band
+    val verdicts = freshRows.groupBy(_.id).toSeq.sortBy(_._1).map { case (id, rs) =>
+      val dups = rs.flatMap(r => corpus.getOrElse(r.bucket, Array.emptyLongArray)).distinct
+      (id, dups.size.toLong, if (dups.isEmpty) None else Some(dups.min))
+    }
+    val accepted = verdicts.collect { case (id, 0L, _) => id }
+    // idempotence: a crash-replayed doc's bands may already be indexed
+    val acceptedNew =
+      if (haveIndex) { val held = heldIds(spark, pins.bands, idCol, accepted); accepted.filterNot(held) }
+      else accepted
+    val idType = fb.schema(idCol).dataType
+    // the verdict table's columns as the distributed plan writes them:
+    // with an index nearest_dup is min over corpus ids (the id's type)
+    val vSchema = StructType(Seq(StructField(idCol, LongType, nullable = false),
+      StructField("n_corpus_dups", LongType, nullable = false),
+      StructField("nearest_dup", LongType, nullable = true),
+      StructField("keep", BooleanType, nullable = false)))
+    val verdictFrame = spark.createDataFrame(
+        java.util.Arrays.asList(verdicts.map { case (id, n, nearest) =>
+          org.apache.spark.sql.Row(id, n, nearest.map(Long.box).orNull, n == 0L) }: _*), vSchema)
+      .select(col(idCol).cast(idType).as(idCol), col("n_corpus_dups"),
+        (if (haveIndex) col("nearest_dup").cast(idType) else col("nearest_dup")).as("nearest_dup"),
+        col("keep"))
+      .coalesce(1)
+    // the narrow filter names the smaller of the two id sets
+    val acceptedSet = acceptedNew.toSet
+    val dropped = batchIds.filterNot(acceptedSet)
+    val idL = col(idCol).cast("long")
+    val acceptedBands = fb.filter(
+        if (acceptedNew.size <= dropped.size) idL.isInCollection(acceptedNew)
+        else !idL.isInCollection(dropped))
+      .coalesce(1)
+    // ONE coalesced publish: both stores stage concurrently and the
+    // logs land in order — bands BEFORE verdicts, the crash contract;
+    // the pins stand in for the log replays while no other commit landed
+    SnapshotStore.appendManyPinned(spark,
+      (if (acceptedNew.nonEmpty)
+        Seq(SnapshotStore.AppendPart(acceptedBands, tables.bands,
+          statsCols = Seq("__bs", idCol), bloomCols = Seq(idCol, "__bs")))
+      else Nil) :+
+      SnapshotStore.AppendPart(verdictFrame, tables.verdicts,
+        statsCols = Seq(idCol), bloomCols = Seq(idCol)),
+      (pins.bands.map(tables.bands -> _) ++ pins.verdicts.map(tables.verdicts -> _)).toMap)
+    true
+  }
+
+  /** [[incrementalDedupSink]]'s batch past `maxProbeKeys` band rows: the
+    * distributed plan (shuffle joins, full-snapshot reads past the
+    * probe caps) from the batch's checkpoint `raw`, with the verdicts of
+    * the driver-side path. True when the batch committed verdicts.
+    */
+  private def distributedDedupBatch(spark: org.apache.spark.sql.SparkSession,
+                                    tables: MinhashTables, scope: BatchScope,
+                                    raw: DataFrame, idCol: String, textCol: String,
+                                    numHashes: Int, shingleN: Int, rowsPerBand: Int,
+                                    maxBucketSize: Int, maxProbeKeys: Int): Boolean = {
+    import graft.sources.SnapshotStore
+    // rowCount > 0, not just version > 0: the cap-tombstone compaction
+    // can legitimately EMPTY the bands table (every bucket oversized —
+    // an all-boilerplate corpus), and an empty store screens like no
+    // store; reading it would throw instead
+    val haveIndex = SnapshotStore.latestVersion(spark, tables.bands) > 0L &&
+      SnapshotStore.rowCount(spark, tables.bands) > 0L
+    // one row per id WITHIN the batch too: an at-least-once source can
+    // repeat an id inside one micro-batch, where the verdict anti-join
+    // can't see it yet — without this, the repeated id's band rows
+    // append twice. Mirrors the replay skip's per-id rule.
+    val once = scope.checkpoint(raw.dropDuplicates(idCol))
+    graft.runtime.Checkpoints.free(raw) // `once` holds the batch now
+    // the batch's ids drive the point-skip probes below — bounded
+    // driver state (None past the cap → full-snapshot fallback)
+    val batchIds = batchIdProbes(once, idCol, maxProbeKeys)
+    // Some(empty) means an empty batch -> skip; None (over cap) is a
+    // full batch that proceeds on the fallback
+    batchIds.forall(_.nonEmpty) && {
+      val fresh =
+        if (SnapshotStore.latestVersion(spark, tables.verdicts) > 0L)
+          once.join(scanPointsBounded(spark, tables.verdicts, idCol, batchIds)
+            .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+        else once
+      !fresh.isEmpty && {
+        // the band table feeds both the screen and the index append —
+        // one materialization, like every signature table in Dedup;
+        // __bs is the STORED bucket-hash the point-skip prunes on
+        val fb = scope.checkpoint(scope.own(graft.operators.Dedup.bandedSignatures(
+            fresh, idCol, textCol, numHashes, shingleN, rowsPerBand))
+          .withColumn("__bs", xxhash64(col("band"), col("sig"))))
+        distributedScreenAppend(spark, tables, scope, fb, batchIds, haveIndex,
+          idCol, maxBucketSize, maxProbeKeys)
+      }
+    }
+  }
+
+  /** The screen and the append of [[distributedDedupBatch]] as shuffle
+    * joins, over `fb`, the band rows of the batch's fresh (not yet
+    * verdicted) docs; `batchIds` are the batch's ids when collectable.
+    * Also the driver-side path's screen when its probed buckets hold
+    * more corpus ids than the driver budget. Returns true.
+    */
+  private def distributedScreenAppend(spark: org.apache.spark.sql.SparkSession,
+                                      tables: MinhashTables, scope: BatchScope,
+                                      fb: DataFrame, batchIds: Option[Seq[Long]],
+                                      haveIndex: Boolean, idCol: String,
+                                      maxBucketSize: Int, maxProbeKeys: Int): Boolean = {
+    import graft.sources.SnapshotStore
+    val MinhashTables(bandsTbl, verdictsTbl, cappedTbl) = tables
+    val verdicts =
+      if (haveIndex) {
+        // the screen reads ONLY band files whose __bs range can
+        // intersect the batch's buckets; every row of a probed
+        // bucket lives in a kept file (box/bloom stages keep any
+        // file containing a probe), so the join and the cap
+        // counts below are exact on what matters
+        val probeBs = boundedProbes(fb, "__bs", maxProbeKeys)
+        val raw = scanPointsBounded(spark, bandsTbl, "__bs", probeBs)
+          // a crash-replayed half-indexed doc must not match itself
+          .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
+        // tombstoned buckets stay excluded even after their rows
+        // were compacted away
+        val index =
+          if (SnapshotStore.latestVersion(spark, cappedTbl) > 0L)
+            raw.join(SnapshotStore.snapshot(spark, cappedTbl),
+              Seq("band", "sig"), "left_anti")
+          else raw
+        graft.operators.Dedup.screen(
+          fb, graft.operators.Dedup.capBuckets(index, maxBucketSize, true), idCol)
+      } else
+        fb.select(col(idCol)).distinct()
+          .withColumn("n_corpus_dups", lit(0L))
+          .withColumn("nearest_dup", lit(null).cast("long"))
+          .withColumn("keep", lit(true))
+    val v = scope.checkpoint(verdicts) // read twice: store + accept filter
+    // BANDS first, verdicts second — see the sink's crash contract;
+    // the idempotence anti-join point-skips to the batch's own ids
+    val acceptedBands = fb.join(
+      v.filter(col("keep")).select(col(idCol)), Seq(idCol), "left_semi")
+    val acceptedNew =
+      if (haveIndex)
+        acceptedBands.join(
+          scanPointsBounded(spark, bandsTbl, idCol, batchIds)
+            .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+      else acceptedBands
+    SnapshotStore.appendMany(spark,
+      (if (!acceptedNew.isEmpty)
+        Seq(SnapshotStore.AppendPart(acceptedNew, bandsTbl,
+          statsCols = Seq("__bs", idCol), bloomCols = Seq(idCol, "__bs")))
+      else Nil) :+
+      SnapshotStore.AppendPart(v, verdictsTbl,
+        statsCols = Seq(idCol), bloomCols = Seq(idCol)))
+    true
   }
 
   /** Size-triggered maintenance + DISK-BOUNDING vacuum for one sink
@@ -911,14 +1278,12 @@ object Streaming {
     * start), so a concurrent `dedup_sink_maintain` can never interleave.
     */
   private def maybeCompactIndex(spark: org.apache.spark.sql.SparkSession,
-                                indexPath: String, idCol: String,
+                                tables: MinhashTables, idCol: String,
                                 maxBucketSize: Int,
                                 compactAfterFiles: Int,
-                                retainVersions: Int = 2): Unit = {
+                                retainVersions: Int): Unit = {
     import graft.sources.SnapshotStore
-    val bandsTbl = s"$indexPath/bands"
-    val verdictsTbl = s"$indexPath/verdicts"
-    val cappedTbl = s"$indexPath/capped"
+    val MinhashTables(bandsTbl, verdictsTbl, cappedTbl) = tables
     val targetFiles = math.max(1, compactAfterFiles / 8)
 
     if (SnapshotStore.state(spark, bandsTbl).live.size > compactAfterFiles) {
@@ -955,7 +1320,8 @@ object Streaming {
       SnapshotStore.vacuum(spark, bandsTbl, retainVersions = retainVersions)
       if (SnapshotStore.latestVersion(spark, cappedTbl) > 0L)
         SnapshotStore.vacuum(spark, cappedTbl, retainVersions = retainVersions)
-      ()
+      // both overwrites committed: the rewrite's scratch blocks are dead
+      Seq(allCapped, compacted).foreach(graft.runtime.Checkpoints.free(_))
     }
     maintainStore(spark, verdictsTbl, compactAfterFiles,
       statsCols = Seq(idCol), clusterCols = Seq(idCol), bloomCols = Seq(idCol),
@@ -1058,6 +1424,7 @@ object Streaming {
       // writer lease: see incrementalDedupSink — refuse concurrent
       // maintenance BEFORE staging, release at batch end
       graft.sources.SinkLease.withLease(spark, indexPath, "sink") {
+      withBatchScope { scope =>
       val haveIndex = SnapshotStore.latestVersion(spark, vecsTbl) > 0L
       // one row per id WITHIN the batch too: an at-least-once source can
       // repeat an id inside a single micro-batch, where the verdict
@@ -1065,16 +1432,15 @@ object Streaming {
       // a.id < b.id pair screen excludes equal ids — both copies would
       // index and verdict. dropDuplicates mirrors the replay skip's
       // per-id rule.
-      val once = batch.toDF().dropDuplicates(idCol).localCheckpoint()
-      requireNoNullIds(once, idCol)
+      val once = scope.checkpoint(batch.toDF().dropDuplicates(idCol))
       // the batch's ids drive every point-skip probe below (replay
       // skip, append idempotence) — bounded driver state (None past
       // the cap → full-snapshot fallback), the price of reading
       // matching index files instead of the index
-      val batchIds = boundedProbes(once, idCol, maxProbeKeys, distinctDone = true)
-      // ONE job answers both "any rows?" and the probe set: Some(empty)
-      // means an empty batch (null ids threw above) -> skip; None
-      // (over cap) is a full batch that proceeds on the fallback
+      val batchIds = batchIdProbes(once, idCol, maxProbeKeys)
+      // ONE job answers "any rows?", "any null id?" and the probe set:
+      // Some(empty) means an empty batch -> skip; None (over cap) is a
+      // full batch that proceeds on the fallback
       if (batchIds.forall(_.nonEmpty)) {
         val fresh =
           if (SnapshotStore.latestVersion(spark, verdictsTbl) > 0L)
@@ -1086,9 +1452,8 @@ object Streaming {
           // all read this checkpoint (never the input lineage); the bucket
           // column is recomputed per read — bits·dim fused multiply-adds
           // over a batch, cheaper than a second materialization
-          val fb0 = fresh.select(col(idCol),
-              col(vecCol).cast("array<float>").as("__v"))
-            .localCheckpoint()
+          val fb0 = scope.checkpoint(fresh.select(col(idCol),
+              col(vecCol).cast("array<float>").as("__v")))
           val recorded: Option[String] =
             if (haveIndex) SnapshotStore.state(spark, vecsTbl).meta.get(policyKey)
             else None
@@ -1178,10 +1543,10 @@ object Streaming {
             .select(col(s"b.$idCol").as(idCol))
           val dups = dupVsIndex.union(dupInBatch).distinct()
             .withColumn("__dup", lit(true))
-          val verdicts = fb.select(col(idCol))
+          val verdicts = scope.checkpoint(fb.select(col(idCol))
             .join(dups, Seq(idCol), "left_outer")
-            .select(col(idCol), coalesce(!col("__dup"), lit(true)).as("keep"))
-            .localCheckpoint() // read twice: index append + store
+            .select(col(idCol), coalesce(!col("__dup"), lit(true)).as("keep")))
+            // read twice: index append + store
           // INDEX FIRST, verdicts second: the verdict store is the replay
           // skip, so a crash between the two commits must leave the id
           // UN-verdicted (it re-screens next run — wasted work, never a
@@ -1223,7 +1588,7 @@ object Streaming {
           ()
         }
       }
-      ()
+      } // checkpoints freed
       } // lease released
       ()
     }
@@ -1315,12 +1680,12 @@ object Streaming {
       // writer lease: see incrementalDedupSink — refuse concurrent
       // maintenance BEFORE staging, release at batch end
       graft.sources.SinkLease.withLease(spark, indexPath, "sink") {
-      val once = batch.toDF().dropDuplicates(idCol).localCheckpoint()
-      requireNoNullIds(once, idCol)
-      val batchIds = boundedProbes(once, idCol, maxProbeKeys, distinctDone = true)
-      // ONE job answers both "any rows?" and the probe set: Some(empty)
-      // means an empty batch (null ids threw above) -> skip; None
-      // (over cap) is a full batch that proceeds on the fallback
+      withBatchScope { scope =>
+      val once = scope.checkpoint(batch.toDF().dropDuplicates(idCol))
+      val batchIds = batchIdProbes(once, idCol, maxProbeKeys)
+      // ONE job answers "any rows?", "any null id?" and the probe set:
+      // Some(empty) means an empty batch -> skip; None (over cap) is a
+      // full batch that proceeds on the fallback
       if (batchIds.forall(_.nonEmpty)) {
         val fresh =
           if (SnapshotStore.latestVersion(spark, verdictsTbl) > 0L)
@@ -1330,12 +1695,10 @@ object Streaming {
         if (!fresh.isEmpty) {
           // (id, hs, n_sh): the SAME sorted-shingle-hash signatures the
           // batch operator verifies with (prefix_len unused here)
-          val fb = graft.operators.Dedup
+          val fb = scope.checkpoint(graft.operators.Dedup
             .hashSignatures(fresh, idCol, textCol, shingleN, minContainment)
-            .select(col(idCol), col("hs"), col("n_sh"))
-            .localCheckpoint()
-          val bpost = fb.select(col(idCol), explode(col("hs")).as("h"))
-            .localCheckpoint()
+            .select(col(idCol), col("hs"), col("n_sh")))
+          val bpost = scope.checkpoint(fb.select(col(idCol), explode(col("hs")).as("h")))
           val haveSigs = SnapshotStore.latestVersion(spark, sigsTbl) > 0L
           // postings may trail sigs by one crash (sigs commit first,
           // below) — gate the probe on the POSTINGS table itself
@@ -1347,15 +1710,14 @@ object Streaming {
           // re-applied either way — minus the batch's own ids (a
           // crash-replayed half-indexed doc must not double-count its
           // shingles' df or pair with itself)
-          val iMatched = (
+          val iMatched = scope.checkpoint((
             if (havePost) {
               val probeHs = boundedProbes(bpost, "h", maxProbeKeys)
               scanPointsBounded(spark, postTbl, "h", probeHs)
                 .join(bpost.select(col("h")).distinct(), Seq("h"), "left_semi")
                 .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
             } else bpost.limit(0))
-            .select(col("h"), col(idCol).as("__iid"))
-            .localCheckpoint()
+            .select(col("h"), col(idCol).as("__iid")))
           // running document frequency per batch shingle = batch + index
           val rare = bpost.groupBy(col("h")).agg(count(lit(1)).as("__dfb"))
             .join(iMatched.groupBy(col("h")).agg(count(lit(1)).as("__dfi")),
@@ -1364,10 +1726,9 @@ object Streaming {
             .filter(col("__df") >= 2 && col("__df") <= dfCap)
             .select(col("h"))
           val bp = bpost.join(rare, Seq("h"), "left_semi")
-          val candI = bp.join(iMatched, Seq("h"))
+          val candI = scope.checkpoint(bp.join(iMatched, Seq("h"))
             .select(col("__iid").as("doc_a"), col(idCol).as("doc_b"))
-            .distinct()
-            .localCheckpoint() // read twice: the verify join + the keeper probe
+            .distinct()) // read twice: the verify join + the keeper probe
           val candB = bp.select(col("h"), col(idCol).as("doc_a"))
             .join(bp.select(col("h"), col(idCol).as("doc_b")), Seq("h"))
             .filter(col("doc_a") < col("doc_b"))
@@ -1381,13 +1742,12 @@ object Streaming {
           // sigs read is blooms-deep, not a scan; zero candidates read
           // zero files
           val keeperIds = boundedProbes(candI, "doc_a", maxProbeKeys)
-          val aSigs = (
+          val aSigs = scope.checkpoint((
             if (haveSigs)
               scanPointsBounded(spark, sigsTbl, idCol, keeperIds)
                 .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
                 .unionByName(fb)
-            else fb)
-            .localCheckpoint() // measured twice: bytes + the join build
+            else fb)) // measured twice: bytes + the join build
           // verify-join strategy from MEASURED signature bytes — the
           // static-estimate broadcast cliff (and its AQE driver-OOM
           // class) is the same one Dedup.verifySideHint closed for the
@@ -1407,10 +1767,9 @@ object Streaming {
               round(col("n_inter") / col("n_b"), 6)) >= minContainment)
             .select(col("doc_b").as(idCol)).distinct()
             .withColumn("__dup", lit(true))
-          val verdicts = fb.select(col(idCol))
+          val verdicts = scope.checkpoint(fb.select(col(idCol))
             .join(dups, Seq(idCol), "left_outer")
-            .select(col(idCol), coalesce(!col("__dup"), lit(true)).as("keep"))
-            .localCheckpoint()
+            .select(col(idCol), coalesce(!col("__dup"), lit(true)).as("keep")))
           val accepted = fb.join(verdicts.filter(col("keep")).select(col(idCol)),
             Seq(idCol), "left_semi")
           // SIGS first (future verification needs them), POSTINGS second
@@ -1462,7 +1821,7 @@ object Streaming {
           ()
         }
       }
-      ()
+      } // checkpoints freed
       } // lease released
       ()
     }

@@ -1369,6 +1369,209 @@ class StreamingSpec extends SparkSpec
     assert(embDefault == embCapped,
       s"embedding fallback diverged: $embDefault vs $embCapped")
     assert(!embDefault(10L) && embDefault(11L))
+
+    // the driver-side screen (default cap), the over-cap distributed plan
+    // (cap 1) and the batch operator over the same corpus must agree row
+    // for row with an oversized live bucket, a committed tombstone table
+    // and replayed ids in the feed
+    val boiler = "the same boilerplate footer text appears on every single page"
+    val footer = "another repeated legal notice that many pages carry verbatim"
+    val docA = "alpha document about sort merge joins and exchange reuse"
+    val docB = "bravo document about broadcast hash joins and build sides"
+    val docC = "charlie document about range partitioning and sampling bounds"
+    val docD = "delta document about parquet footers and bloom filter pruning"
+    val capWaves = Seq(
+      Seq(1L -> boiler, 2L -> boiler, 3L -> boiler, 4L -> boiler, 5L -> docA),
+      Seq(6L -> docB, 7L -> docC),
+      // boiler's buckets hold 4 rows > 2 (live, not yet tombstoned) and
+      // 24 duplicates an indexed doc; the third band file triggers the
+      // compaction that tombstones boiler's and footer's buckets
+      Seq(20L -> footer, 21L -> footer, 22L -> footer, 23L -> boiler, 24L -> docA),
+      // against the tombstones: a tombstoned-bucket doc, a dup of 6, a
+      // novel doc, and two replayed ids
+      Seq(30L -> footer, 31L -> docB, 32L -> docD, 5L -> docA, 24L -> docA),
+      // the whole batch again: every id is replay-skipped
+      Seq(30L -> footer, 31L -> docB, 32L -> docD, 5L -> docA, 24L -> docA))
+    type VRow = (Long, Long, Option[Long], Boolean)
+    def verdictRows(df: org.apache.spark.sql.DataFrame): Set[VRow] =
+      df.select("doc_id", "n_corpus_dups", "nearest_dup", "keep").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getBoolean(3))).toSet
+    def runCapped(d: String, cap: Int): Set[VRow] = {
+      val mem = MemoryStream[(Long, String)]
+      val q = Streaming.incrementalDedupSink(mem.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", d, maxBucketSize = 2, compactAfterFiles = 2,
+        maxProbeKeys = cap).start()
+      try {
+        capWaves.foreach { w => mem.addData(w: _*); q.processAllAvailable() }
+      } finally q.stop()
+      assert(SnapshotStore.rowCount(spark, s"$d/capped") > 0,
+        s"premise: compaction must have committed tombstones (cap $cap)")
+      verdictRows(SnapshotStore.snapshot(spark, s"$d/verdicts"))
+    }
+    // the batch operator, wave by wave: the corpus is every doc accepted
+    // before the wave, the batch is the wave's not-yet-verdicted ids
+    var corpus = Seq.empty[(Long, String)]
+    var seen = Set.empty[Long]
+    val expected: Set[VRow] = capWaves.flatMap { w =>
+      val fresh = w.filterNot(x => seen(x._1))
+      val rows =
+        if (fresh.isEmpty) Set.empty[VRow]
+        else verdictRows(graft.operators.Dedup.incrementalDedup(
+          corpus.toDF("doc_id", "text"), fresh.toDF("doc_id", "text"),
+          "doc_id", "text", maxBucketSize = 2))
+      seen ++= fresh.map(_._1)
+      corpus ++= fresh.filter(x => rows.exists(r => r._1 == x._1 && r._4))
+      rows
+    }.toSet
+    val bounded = runCapped(dir("eq-d"), 1 << 20)
+    val overCap = runCapped(dir("eq-1"), 1)
+    assert(bounded == overCap, s"driver screen vs over-cap plan: $bounded vs $overCap")
+    assert(bounded == expected, s"driver screen vs incrementalDedup: $bounded vs $expected")
+    assert(bounded.size == 15, s"replayed ids must not re-verdict: $bounded")
+    Seq[VRow]((23L, 0L, None, true), (24L, 1L, Some(5L), false),
+      (30L, 0L, None, true), (31L, 1L, Some(6L), false), (32L, 0L, None, true))
+      .foreach(r => assert(bounded.contains(r), s"missing $r in $bounded"))
+  }
+
+  /** A deterministic ~12-word document of random letter words. */
+  private def randomDoc(seed: Long): String = {
+    val r = new scala.util.Random(seed)
+    Seq.fill(12)(Seq.fill(3 + r.nextInt(5))(('a' + r.nextInt(26)).toChar).mkString)
+      .mkString(" ")
+  }
+
+  test("a steady-state incrementalDedupSink batch runs at most 10 Spark jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sources.SnapshotStore
+    // the third batch of a stream: the index exists and two docs of the
+    // batch duplicate indexed docs, so the screen has real matches
+    val waves = Seq(
+      (1L to 40L).map(i => i -> randomDoc(i)),
+      (41L to 80L).map(i => i -> randomDoc(i)) :+ (81L -> randomDoc(3L)),
+      (101L to 140L).map(i => i -> randomDoc(i)) ++
+        Seq(141L -> randomDoc(45L), 142L -> randomDoc(7L)))
+    def lastWaveJobs(docs: org.apache.spark.sql.DataFrame,
+                     add: Seq[(Long, String)] => Unit): (Int, Map[Long, Boolean]) = {
+      val d = "file:" + java.nio.file.Files.createTempDirectory("graft-jobbudget").toString
+      val q = Streaming.incrementalDedupSink(docs, "doc_id", "text", d).start()
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(js.properties).exists(
+              _.getProperty("spark.jobGroup.id") == q.runId.toString))
+            jobs.incrementAndGet()
+      }
+      try {
+        waves.init.foreach { w => add(w); q.processAllAvailable() }
+        org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
+        spark.sparkContext.addSparkListener(listener)
+        try {
+          add(waves.last); q.processAllAvailable()
+          org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
+        } finally spark.sparkContext.removeSparkListener(listener)
+      } finally q.stop()
+      // one file per table per batch: the store's bytes stay put
+      Seq("bands", "verdicts").foreach { t =>
+        assert(SnapshotStore.state(spark, s"$d/$t").live.size == waves.size,
+          s"$t: ${SnapshotStore.state(spark, s"$d/$t").live.size} files after ${waves.size} batches")
+      }
+      (jobs.get, SnapshotStore.snapshot(spark, s"$d/verdicts").collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("keep")).toMap)
+    }
+    val mem = MemoryStream[(Long, String)]
+    val (jobs, verdicts) = lastWaveJobs(mem.toDF().toDF("doc_id", "text"),
+      w => { mem.addData(w); () })
+    assert(verdicts.size == 123 && !verdicts(81L) && !verdicts(141L) &&
+      !verdicts(142L) && verdicts(140L), s"premise: real matches: $verdicts")
+    info(s"steady-state batch: $jobs Spark jobs")
+    assert(jobs > 0 && jobs <= 10, s"steady-state batch ran $jobs Spark jobs")
+    // a nullable id column with no nulls: the null check rides the same
+    // collect instead of costing a job of its own
+    val memN = MemoryStream[(Option[Long], String)]
+    val (jobsN, verdictsN) = lastWaveJobs(memN.toDF().toDF("doc_id", "text"),
+      w => { memN.addData(w.map { case (i, t) => (Option(i), t) }); () })
+    assert(verdictsN == verdicts)
+    assert(jobsN > 0 && jobsN <= 10, s"nullable-id steady-state batch ran $jobsN Spark jobs")
+  }
+
+  test("incrementalDedupSink collects stay within maxProbeKeys on the driver") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sources.SnapshotStore
+    val cap = 40 // band rows: 10 docs of 4 bands
+    val twin = randomDoc(7L)
+    // a batch per wave, one partition per inner Seq (one addData each)
+    val waves: Seq[Seq[Seq[(Long, String)]]] = Seq(
+      // 12 batch-internal twins all enter the index: 12 ids in each of
+      // their buckets
+      Seq((1L to 12L).map(_ -> twin) ++ (13L to 20L).map(i => i -> randomDoc(i))),
+      // four partitions of 11 docs, each past the cap on its own
+      (0 until 4).map(p => (1L to 11L).map(i => 100L + 20 * p + i).map(i => i -> randomDoc(i))),
+      // 40 band rows, at the cap: a twin whose buckets hold 48 corpus
+      // ids, past the screen's driver budget
+      Seq((300L -> twin) +: (301L to 309L).map(i => i -> randomDoc(i))),
+      // under both caps: one duplicate of a wave-2 doc
+      Seq((400L -> randomDoc(101L)) +: (401L to 409L).map(i => i -> randomDoc(i))))
+    def run(maxProbeKeys: Int): Map[Long, (Long, Option[Long])] = {
+      val d = "file:" + java.nio.file.Files.createTempDirectory("graft-collectcap").toString
+      val mem = MemoryStream[(Long, String)]
+      val q = Streaming.incrementalDedupSink(mem.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", d, maxProbeKeys = maxProbeKeys).start()
+      try waves.foreach { parts => parts.foreach(p => mem.addData(p)); q.processAllAvailable() }
+      finally q.stop()
+      SnapshotStore.snapshot(spark, s"$d/verdicts")
+        .select("doc_id", "n_corpus_dups", "nearest_dup").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
+        .toMap
+    }
+    Streaming.largestCollect.set(0L)
+    val capped = run(cap)
+    assert(Streaming.largestCollect.get <= cap,
+      s"one collect handed ${Streaming.largestCollect.get} rows to the driver, cap $cap")
+    assert(capped == run(1 << 20), "the capped plans must verdict like the driver screen")
+    assert(capped.size == 84)
+    assert(capped(300L) == ((12L, Some(1L))) && capped(400L) == ((1L, Some(101L))),
+      s"premise: real matches: ${capped(300L)} ${capped(400L)}")
+  }
+
+  test("dedup sinks free every checkpoint a batch created") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.runtime.Checkpoints
+    def dir(tag: String) = "file:" +
+      java.nio.file.Files.createTempDirectory(s"graft-ckfree-$tag").toString
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // after EVERY batch the registry and the block manager are back at
+    // their pre-stream state: nothing a batch materialized outlives it
+    def flat(q: org.apache.spark.sql.streaming.StreamingQuery)(feeds: Seq[() => Unit]): Unit =
+      try {
+        val tracked0 = Checkpoints.trackedCount
+        val rdds0 = persisted
+        feeds.zipWithIndex.foreach { case (feed, i) =>
+          feed(); q.processAllAvailable()
+          assert(Checkpoints.trackedCount == tracked0,
+            s"batch $i left ${Checkpoints.trackedCount - tracked0} tracked checkpoint(s)")
+          assert((persisted -- rdds0).isEmpty,
+            s"batch $i left persisted RDDs ${persisted -- rdds0}")
+        }
+      } finally q.stop()
+    val texts = (0 until 5).map(b => (1 to 6).map { i =>
+      val id = b * 10L + i
+      // every batch after the first repeats one earlier doc: a real match
+      id -> (if (i == 1 && b > 0) randomDoc(2L) else randomDoc(id))
+    })
+    val mh = MemoryStream[(Long, String)]
+    flat(Streaming.incrementalDedupSink(mh.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", dir("mh")).start())(texts.map(t => () => { mh.addData(t); () }))
+    val ct = MemoryStream[(Long, String)]
+    flat(Streaming.containmentDedupSink(ct.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", dir("ct")).start())(texts.map(t => () => { ct.addData(t); () }))
+    val em = MemoryStream[(Long, Seq[Float])]
+    flat(Streaming.embeddingDedupSink(em.toDF().toDF("vec_id", "embedding"),
+      "vec_id", "embedding", dir("em"), bucketBits = Some(2)).start())(
+      (0 until 5).map(b => () => {
+        em.addData((1 to 4).map(i => (b * 10L + i, Seq(i.toFloat, b.toFloat, 1f))))
+        ()
+      }))
   }
 
   test("dedup sinks reject a non-integral id column at construction, not mid-batch") {

@@ -2,8 +2,11 @@
 # The tier-1 gate in one command: a clean compile of both source sets,
 # the full test suite, and the DuckDB oracle compare (Verify, then
 # tools/check.py) at sf0.001 and sf0.01. check.py fails on any key that
-# does not match its oracle or has no output, so a zero exit means every
-# oracle key passed at both scale factors and every test is green.
+# does not match its oracle or has no output. Last comes a perfbench
+# smoke: the checker self-test and a 4-second dedup_stream run, which
+# must report "correct": true with 0 failed steps. A zero exit means
+# every oracle key passed at both scale factors, every test is green and
+# the benchmarked sink path verdicts correctly.
 #
 # Usage: tools/tier1.sh <testdata dir holding sf0.001/ and sf0.01/>
 # Verify runs with $SPARK_GRAFT_CPUS threads (default 8).
@@ -32,4 +35,15 @@ for sf in sf0.001 sf0.01; do
   echo "== oracle $sf"
   python3 tools/check.py "$data/$sf" "$out/$sf" | grep -v ' PASS '
 done
+# the benchmarked streaming sink through the public API: the checkers
+# must reject corrupted results, then a short dedup_stream run must
+# verdict every batch correctly
+echo "== perfbench smoke"
+python3 perfbench/run.py --self-test
+last=$(python3 perfbench/run.py --workload dedup_stream --seconds 4 --trace 0 | tail -n 1)
+echo "$last"
+if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$last"; then
+  echo "tier-1: perfbench dedup_stream smoke is not correct with 0 failed steps" >&2
+  exit 1
+fi
 echo "tier-1 green"
