@@ -134,6 +134,19 @@ object AsOfJoin {
         (col("__m.__t").as(rightTime) +: valueCols.map(v => col(s"__m.$v").as(v))): _*)
   }
 
+  /** Whether `right`'s estimated size (Catalyst's
+    * `optimizedPlan.stats.sizeInBytes`) fits the broadcast threshold:
+    * `overrideBytes` when >= 0, else the session's parsed
+    * `spark.sql.autoBroadcastJoinThreshold` (any unit Spark accepts;
+    * -1 disables broadcasting).
+    */
+  private def fitsBroadcast(left: DataFrame, right: DataFrame, overrideBytes: Long): Boolean = {
+    val threshold =
+      if (overrideBytes >= 0) overrideBytes
+      else left.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold > 0 && right.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold)
+  }
+
   /** STATISTICS-DRIVEN as-of: pick [[asOfBroadcast]] when the right
     * side's estimated size fits the session's broadcast threshold
     * (`spark.sql.autoBroadcastJoinThreshold`, or an explicit override),
@@ -145,22 +158,11 @@ object AsOfJoin {
     */
   def asOfAuto(left: DataFrame, right: DataFrame, keys: Seq[String],
                leftTime: String, rightTime: String, valueCols: Seq[String],
-               broadcastThresholdBytes: Long = -1L): DataFrame = {
-    val threshold =
-      if (broadcastThresholdBytes >= 0) BigInt(broadcastThresholdBytes)
-      else BigInt(left.sparkSession.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", "10485760").stripSuffix("b").trim match {
-        case s if s.toLowerCase.endsWith("k") => (s.dropRight(1).toDouble * 1024).toLong
-        case s if s.toLowerCase.endsWith("m") => (s.dropRight(1).toDouble * 1024 * 1024).toLong
-        case s if s.toLowerCase.endsWith("g") => (s.dropRight(1).toDouble * 1024 * 1024 * 1024).toLong
-        case s => s.toLong
-      })
-    val rightSize = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (threshold > 0 && rightSize <= threshold)
+               broadcastThresholdBytes: Long = -1L): DataFrame =
+    if (fitsBroadcast(left, right, broadcastThresholdBytes))
       asOfBroadcast(left, right, keys, leftTime, rightTime, valueCols)
     else
       asOfNative(left, right, keys, leftTime, rightTime, valueCols)
-  }
 
   /** Statistics-driven variant selection for the BAND join, mirroring
     * [[asOfAuto]]: a dimension-sized right side takes the zero-shuffle
@@ -173,22 +175,11 @@ object AsOfJoin {
   def rangeJoinAuto(left: DataFrame, right: DataFrame, keys: Seq[String],
                     leftTime: String, rightTime: String, valueCols: Seq[String],
                     lowerUs: Long, upperUs: Long,
-                    broadcastThresholdBytes: Long = -1L): DataFrame = {
-    val threshold =
-      if (broadcastThresholdBytes >= 0) BigInt(broadcastThresholdBytes)
-      else BigInt(left.sparkSession.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", "10485760").stripSuffix("b").trim match {
-        case s if s.toLowerCase.endsWith("k") => (s.dropRight(1).toDouble * 1024).toLong
-        case s if s.toLowerCase.endsWith("m") => (s.dropRight(1).toDouble * 1024 * 1024).toLong
-        case s if s.toLowerCase.endsWith("g") => (s.dropRight(1).toDouble * 1024 * 1024 * 1024).toLong
-        case s => s.toLong
-      })
-    val rightSize = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (threshold > 0 && rightSize <= threshold)
+                    broadcastThresholdBytes: Long = -1L): DataFrame =
+    if (fitsBroadcast(left, right, broadcastThresholdBytes))
       rangeJoinBroadcast(left, right, keys, leftTime, rightTime, valueCols, lowerUs, upperUs)
     else
       rangeJoinNative(left, right, keys, leftTime, rightTime, valueCols, lowerUs, upperUs)
-  }
 
   /** As-of join with a TOLERANCE (max staleness): like [[asOf]], but a
     * match only holds while the signal is at most `toleranceUs` old —

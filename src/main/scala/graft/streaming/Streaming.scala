@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+
+import graft.sources.SnapshotStore
 
 /** Structured-streaming twins of the batch operators: the reference's
   * pipeline is batch-triggered per S3 upload (infrastructure/emr_trigger),
@@ -13,26 +15,26 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, 
   */
 object Streaming {
 
-  /** Durable MARKER I/O for [[upsertSink]]/[[smbSink]], through the
-    * Hadoop FileSystem API: marker paths live WHEREVER the snapshot
-    * data lives (HDFS, S3A, file:) — `java.nio`/`java.io` would
-    * silently resolve against the driver's local disk on a cluster and
-    * the sinks' replay safety would evaporate. The marker commit is
-    * write-temp + atomic rename (FileContext.rename OVERWRITE — atomic
-    * on HDFS; on S3A the rename is copy+delete but the marker is a
-    * single small object, so a reader sees either the old or the new
-    * content, never a torn write). The DEDUP sinks no longer route
-    * through here — their state lives in [[graft.sources.SnapshotStore]]
-    * tables whose commit log subsumes every marker.
+  /** Durable MARKER I/O for [[smbSink]], through the Hadoop FileSystem
+    * API: the marker lives WHEREVER the table data lives (HDFS, S3A,
+    * file:) — `java.nio`/`java.io` would silently resolve against the
+    * driver's local disk on a cluster and the sink's replay safety
+    * would evaporate. The marker commit is write-temp + atomic rename
+    * (FileContext.rename OVERWRITE — atomic on HDFS; on S3A the rename
+    * is copy+delete but the marker is a single small object, so a
+    * reader sees either the old or the new content, never a torn
+    * write). The other sinks keep their state in
+    * [[graft.sources.SnapshotStore]] tables, whose commit log subsumes
+    * every marker.
     */
   private object StateFs {
     import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
-    private def conf(spark: org.apache.spark.sql.SparkSession) =
+    private def conf(spark: SparkSession) =
       spark.sessionState.newHadoopConf()
 
     /** Read a small text file fully; None if absent. */
-    def readString(spark: org.apache.spark.sql.SparkSession, path: String): Option[String] = {
+    def readString(spark: SparkSession, path: String): Option[String] = {
       val p = new Path(path)
       val fs = p.getFileSystem(conf(spark))
       if (!fs.exists(p)) None
@@ -51,7 +53,7 @@ object Streaming {
     /** Commit a small text file atomically: write `<path>.tmp`, rename
       * over `path` (REPLACE semantics via FileContext).
       */
-    def writeString(spark: org.apache.spark.sql.SparkSession, path: String,
+    def writeString(spark: SparkSession, path: String,
                     value: String): Unit = {
       val c = conf(spark)
       val p = new Path(path)
@@ -152,23 +154,9 @@ object Streaming {
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[EventRow], state: GroupState[SessionState]) =>
-          // events within a micro-batch arrive unordered: sort the batch
-          val sorted = rows.toSeq.sortBy(e => (e.ts_us))
-          var cur = state.getOption
-          val closed = Seq.newBuilder[SessionOut]
-          sorted.foreach { e =>
-            cur match {
-              case Some(s) if e.ts_us - s.last > gapUs =>
-                closed += SessionOut(userId, s.start, s.last, s.n, s.sumValue)
-                cur = Some(SessionState(e.ts_us, e.ts_us, 1, e.value))
-              case Some(s) =>
-                cur = Some(SessionState(s.start, e.ts_us, s.n + 1, s.sumValue + e.value))
-              case None =>
-                cur = Some(SessionState(e.ts_us, e.ts_us, 1, e.value))
-            }
-          }
+          val (closed, cur) = sessionFold(userId, rows, state.getOption, gapUs)
           cur.foreach(state.update)
-          closed.result().iterator
+          closed.iterator
       }
   }
 
@@ -193,28 +181,37 @@ object Streaming {
             state.remove()
             Iterator.single(SessionOut(userId, s.start, s.last, s.n, s.sumValue))
           } else {
-            val sorted = rows.toSeq.sortBy(_.ts_us)
-            var cur = state.getOption
-            val closed = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.ts_us - s.last > gapUs =>
-                  closed += SessionOut(userId, s.start, s.last, s.n, s.sumValue)
-                  cur = Some(SessionState(e.ts_us, e.ts_us, 1, e.value))
-                case Some(s) =>
-                  cur = Some(SessionState(s.start, e.ts_us, s.n + 1, s.sumValue + e.value))
-                case None =>
-                  cur = Some(SessionState(e.ts_us, e.ts_us, 1, e.value))
-              }
-            }
+            val (closed, cur) = sessionFold(userId, rows, state.getOption, gapUs)
             cur.foreach { s =>
               state.update(s)
               // close when the event-time watermark passes last + gap
               state.setTimeoutTimestamp((s.last + gapUs) / 1000 + 1)
             }
-            closed.result().iterator
+            closed.iterator
           }
       }
+  }
+
+  /** One key's micro-batch of [[sessionize]]: the events in time order
+    * (a batch arrives unordered) against the key's `open` session.
+    * Returns the sessions the gaps closed and the one left open.
+    */
+  private def sessionFold(userId: Long, rows: Iterator[EventRow], open: Option[SessionState],
+                          gapUs: Long): (Seq[SessionOut], Option[SessionState]) = {
+    var cur = open
+    val closed = Seq.newBuilder[SessionOut]
+    rows.toSeq.sortBy(_.ts_us).foreach { e =>
+      cur match {
+        case Some(s) if e.ts_us - s.last > gapUs =>
+          closed += SessionOut(userId, s.start, s.last, s.n, s.sumValue)
+          cur = Some(SessionState(e.ts_us, e.ts_us, 1, e.value))
+        case Some(s) =>
+          cur = Some(SessionState(s.start, e.ts_us, s.n + 1, s.sumValue + e.value))
+        case None =>
+          cur = Some(SessionState(e.ts_us, e.ts_us, 1, e.value))
+      }
+    }
+    (closed.result(), cur)
   }
 
   /** Streaming scene detection: the zero-crossing state machine of
@@ -358,39 +355,11 @@ object Streaming {
       .flatMapGroupsWithState[GridState, GridOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[EventRow], state: GroupState[GridState]) =>
-          val sorted = rows.toSeq.sortBy(_.ts_us)
-          val out = Seq.newBuilder[GridOut]
-          var cur = state.getOption
-          sorted.foreach { e =>
-            cur match {
-              case None =>
-                // first event: next tick is the first multiple >= ts
-                val tick = ((e.ts_us + stepUs - 1) / stepUs) * stepUs
-                // a tick exactly at the event emits with this value once a
-                // later event proves it final — keep it pending
-                cur = Some(GridState(e.value, tick, e.ts_us))
-              case Some(s) if e.ts_us < s.lastTs =>
-                // cross-batch out-of-order event older than the frontier:
-                // the pending tick (nextTick >= lastTs) takes the LATEST
-                // value at-or-before it, which this event is not — merging
-                // it would regress lastVal. Ticks already emitted cannot
-                // be revised in Append mode (same caveat as asOfStream).
-                ()
-              case Some(s) =>
-                var st = s
-                while (st.nextTick < e.ts_us) {
-                  out += GridOut(userId, st.nextTick, st.lastVal)
-                  st = GridState(st.lastVal, st.nextTick + stepUs, st.lastTs)
-                }
-                cur = Some(GridState(e.value, st.nextTick, e.ts_us))
-            }
-          }
+          val (out, cur) = gridFold(userId, rows, state.getOption, stepUs)
           cur.foreach(state.update)
-          out.result().iterator
+          out.iterator
       }
   }
-
-  case class GridTState(lastVal: Double, nextTick: Long, lastTs: Long)
 
   /** [[gridFill]] + EVENT-TIME TIMEOUT finality: a pending tick also
     * emits once the watermark passes it — so an idle key's trailing
@@ -415,52 +384,67 @@ object Streaming {
       .withWatermark("event_time", watermarkDelay)
       .as[EventRow]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[GridTState, GridOut](
+      .flatMapGroupsWithState[GridState, GridOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[EventRow], state: GroupState[GridTState]) =>
-          val out = Seq.newBuilder[GridOut]
+        (userId: Long, rows: Iterator[EventRow], state: GroupState[GridState]) =>
           val wmMs = state.getCurrentWatermarkMs()
           // re-arm only while ticks are pending; timeout must sit strictly
           // beyond the current watermark or the update is rejected
-          def arm(s: GridTState): Unit =
+          def arm(s: GridState): Unit =
             if (s.nextTick <= s.lastTs)
               state.setTimeoutTimestamp(math.max(s.nextTick / 1000 + 1, wmMs + 1))
           if (state.hasTimedOut) {
+            val out = Seq.newBuilder[GridOut]
             var st = state.get
             val wmUs = wmMs * 1000
             while (st.nextTick < wmUs && st.nextTick <= st.lastTs) {
               out += GridOut(userId, st.nextTick, st.lastVal)
-              st = GridTState(st.lastVal, st.nextTick + stepUs, st.lastTs)
+              st = st.copy(nextTick = st.nextTick + stepUs)
             }
             state.update(st)
             arm(st)
+            out.result().iterator
           } else {
-            val sorted = rows.toSeq.sortBy(_.ts_us)
-            var cur = state.getOption
-            sorted.foreach { e =>
-              cur match {
-                case None =>
-                  val tick = ((e.ts_us + stepUs - 1) / stepUs) * stepUs
-                  cur = Some(GridTState(e.value, tick, e.ts_us))
-                case Some(s) if e.ts_us < s.lastTs =>
-                  // out-of-order event below the frontier: cannot be the
-                  // latest value for any pending tick (nextTick >= lastTs)
-                  // — merging it would regress lastVal AND disarm the
-                  // pending tick's timeout via the shrunk lastTs
-                  ()
-                case Some(s) =>
-                  var st = s
-                  while (st.nextTick < e.ts_us) {
-                    out += GridOut(userId, st.nextTick, st.lastVal)
-                    st = GridTState(st.lastVal, st.nextTick + stepUs, st.lastTs)
-                  }
-                  cur = Some(GridTState(e.value, st.nextTick, e.ts_us))
-              }
-            }
+            val (out, cur) = gridFold(userId, rows, state.getOption, stepUs)
             cur.foreach { s => state.update(s); arm(s) }
+            out.iterator
           }
-          out.result().iterator
       }
+  }
+
+  /** One key's micro-batch of [[gridFill]]: the events in time order
+    * against the key's grid `cursor`. Returns the ticks the batch
+    * proved final and the cursor it leaves.
+    */
+  private def gridFold(userId: Long, rows: Iterator[EventRow], cursor: Option[GridState],
+                       stepUs: Long): (Seq[GridOut], Option[GridState]) = {
+    val out = Seq.newBuilder[GridOut]
+    var cur = cursor
+    rows.toSeq.sortBy(_.ts_us).foreach { e =>
+      cur match {
+        case None =>
+          // first event: next tick is the first multiple >= ts; a tick
+          // exactly at the event emits with this value once a later
+          // event proves it final — keep it pending
+          cur = Some(GridState(e.value, ((e.ts_us + stepUs - 1) / stepUs) * stepUs, e.ts_us))
+        case Some(s) if e.ts_us < s.lastTs =>
+          // cross-batch out-of-order event older than the frontier: the
+          // pending tick (nextTick >= lastTs) takes the LATEST value
+          // at-or-before it, which this event is not — merging it would
+          // regress lastVal (and, under a timeout, disarm the pending
+          // tick via the shrunk lastTs). Ticks already emitted cannot be
+          // revised in Append mode (same caveat as asOfStream).
+          ()
+        case Some(s) =>
+          var tick = s.nextTick
+          while (tick < e.ts_us) {
+            out += GridOut(userId, tick, s.lastVal)
+            tick += stepUs
+          }
+          cur = Some(GridState(e.value, tick, e.ts_us))
+      }
+    }
+    (out.result(), cur)
   }
 
   case class TaggedRow(key: Long, ts_us: Long, isLeft: Boolean, value: Double)
@@ -552,29 +536,28 @@ object Streaming {
     stream.join(broadcast(dim), keys, "left")
 
   /** Latest-wins streaming UPSERT sink: each micro-batch merges into a
-    * parquet snapshot via `foreachBatch` + [[graft.sources.TopicStore.upsert]]
-    * — the reference's per-message DynamoDB `put_item` overwrite
-    * (service/app/main.py:61) as a lakehouse table a batch job can read
-    * back. Writes A/B snapshot directories and repoints an atomic
-    * marker, so a concurrent reader always sees one complete snapshot;
-    * exactly-once per key comes from upsert's latest-wins determinism
-    * (a replayed micro-batch re-merges to the same result).
+    * [[graft.sources.SnapshotStore]] table at `path` via `foreachBatch` +
+    * [[graft.sources.TopicStore.upsert]] — the reference's per-message
+    * DynamoDB `put_item` overwrite (service/app/main.py:61) as a
+    * lakehouse table a batch job reads back with
+    * [[graft.sources.SnapshotStore.snapshot]]. A batch reads the current
+    * snapshot, merges, and commits the result with one atomic
+    * `overwrite`, so a concurrent reader always sees one complete
+    * version. A replayed batch re-merges to the same result (upsert's
+    * latest-wins determinism) and never writes over what it reads: the
+    * files of a committed version stay until vacuum. Vacuum keeps the
+    * new version and the one it read (`retainVersions = 2`), so disk
+    * holds two copies once the vacuum grace has passed.
     */
   def upsertSink(updates: DataFrame, keys: Seq[String], orderCols: Seq[String],
-                 path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                 path: String): DataStreamWriter[Row] = {
     val spark = updates.sparkSession
-    updates.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val currentDir = StateFs.readString(spark, s"$path/_current").getOrElse("")
-      val current =
-        if (currentDir.nonEmpty) spark.read.parquet(s"$path/$currentDir")
-        else batch.limit(0).toDF()
-      // alternate on the CURRENT marker, never on batchId: a replayed
-      // batch with the same parity would otherwise overwrite the very
-      // snapshot it is lazily reading from
-      val next = if (currentDir == "snap_a") "snap_b" else "snap_a"
-      graft.sources.TopicStore.upsert(current, batch.toDF(), keys, orderCols)
-        .write.mode("overwrite").parquet(s"$path/$next")
-      StateFs.writeString(spark, s"$path/_current", next)
+    updates.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
+      val current = SnapshotStore.current(spark, path).filter(_.live.nonEmpty)
+        .fold(batch.limit(0).toDF())(s => SnapshotStore.readLive(spark, s.meta, s.live))
+      SnapshotStore.overwrite(
+        graft.sources.TopicStore.upsert(current, batch.toDF(), keys, orderCols), path)
+      SnapshotStore.vacuum(spark, path, retainVersions = 2)
       ()
     }
   }
@@ -600,12 +583,12 @@ object Streaming {
   def smbSink(rows: DataFrame, table: String, keys: Seq[String],
               sortCols: Seq[String], buckets: Int, markerPath: String,
               compactAfterFilesPerBucket: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     require(compactAfterFilesPerBucket > 0,
       s"compactAfterFilesPerBucket must be positive: $compactAfterFilesPerBucket")
     val spark = rows.sparkSession
     import graft.sources.TopicStore
-    rows.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    rows.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
       TopicStore.recoverBucketedSorted(spark, table)
       val committed = StateFs.readString(spark, markerPath).map(_.toLong)
       if (committed.forall(batchId > _)) {
@@ -651,58 +634,30 @@ object Streaming {
         "never be replay-skipped, so a crash replay would duplicate " +
         "its rows); filter or assign ids upstream of the sink")
 
-  /** The batch's ids (one row per id: `once` is post-dropDuplicates)
-    * in ONE bounded collect that also answers the null-id check — up to
-    * `cap` longs, or None past the cap (the full-snapshot fallback
-    * signal). Only an over-cap batch, whose unseen rows the collect
-    * could not check, pays a separate limit-1 null probe.
-    */
-  private def batchIdProbes(once: DataFrame, idCol: String, cap: Int): Option[Seq[Long]] = {
-    val got = once.select(col(idCol).cast("long")).limit(probeLimit(cap)).collect()
-    if (got.exists(_.isNullAt(0))) throw nullIdBatch(idCol)
-    if (got.length > cap) {
-      if (!once.filter(col(idCol).isNull).isEmpty) throw nullIdBatch(idCol)
-      None
-    } else Some(got.map(_.getLong(0)).toSeq)
-  }
-
-  /** `cap + 1` without wrapping: maxProbeKeys = Int.MaxValue is the
-    * sane way to say "cap off", and a negative limit would poison the
-    * stream.
-    */
-  private def probeLimit(cap: Int): Int = if (cap >= Int.MaxValue) Int.MaxValue else cap + 1
-
-  /** Bounded driver collect of a probe column: up to `cap` DISTINCT
-    * longs, or None past the cap — the signal to degrade the
+  /** Bounded driver collect of a probe column: its DISTINCT longs in
+    * ONE job, each partition shipping its set only while it fits its
+    * even share of `cap` — or None past that, the signal to degrade the
     * point-skip read to the full snapshot. Every probe the sinks
     * collect is batch-scoped, never corpus-scoped, but a pathological
     * micro-batch (10M docs × ~9 bands ≈ 720 MB of longs) must bound
     * the DRIVER whatever it does to the cluster; 1M longs ≈ 8 MB is
-    * the family default ([[containmentDedupSink]]'s original cap).
-    * Null probes drop (a null key matches nothing in the exact joins
-    * the callers re-apply).
+    * the family default. Null probes drop (a null key matches nothing
+    * in the exact joins the callers re-apply).
     */
   private def boundedProbes(df: DataFrame, c: String, cap: Int): Option[Seq[Long]] = {
-    val arr = df.select(col(c).cast("long").as("__p"))
-      .filter(col("__p").isNotNull)
-      .distinct()
-      .limit(probeLimit(cap)).collect().map(_.getLong(0))
-    if (arr.length > cap) None else Some(arr.toSeq)
+    val rdd = df.select(col(c).cast("long")).queryExecution.toRdd
+    val share = cap / math.max(1, rdd.getNumPartitions)
+    val parts = rdd.sparkContext.runJob(rdd, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+      val seen = scala.collection.mutable.HashSet.empty[Long]
+      while (seen.size <= share && it.hasNext) {
+        val r = it.next()
+        if (!r.isNullAt(0)) seen += r.getLong(0)
+      }
+      if (seen.size > share) None else Some(seen.toArray)
+    })
+    noteCollect(parts.flatten.map(_.length.toLong).sum)
+    if (parts.exists(_.isEmpty)) None else Some(parts.flatten.flatten.distinct.toSeq)
   }
-
-  /** [[graft.sources.SnapshotStore.scanPoints]] with the cap+fallback
-    * discipline: a collectable probe set point-skips (empty set reads
-    * nothing); an over-cap set (None) falls back to the FULL snapshot
-    * — one projection, still exact, because every caller re-applies
-    * its own join on what pruning returns.
-    */
-  private def scanPointsBounded(spark: org.apache.spark.sql.SparkSession,
-                                table: String, column: String,
-                                probes: Option[Seq[Long]]): DataFrame =
-    probes match {
-      case Some(vs) => graft.sources.SnapshotStore.scanPoints(spark, table, column, vs)
-      case None     => graft.sources.SnapshotStore.snapshot(spark, table)
-    }
 
   /** The checkpoints one sink batch creates, freed together when the
     * batch ends. `localCheckpoint` truncates lineage, so Spark itself
@@ -713,10 +668,11 @@ object Streaming {
     */
   private final class BatchScope {
     private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    /** Take ownership of every checkpoint under `df`. */
-    def own(df: DataFrame): DataFrame = { frames += df; df }
-    def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
-      own(df.localCheckpoint(eager))
+    def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
+      val c = df.localCheckpoint(eager)
+      frames += c
+      c
+    }
     def free(): Unit = frames.foreach(graft.runtime.Checkpoints.free(_))
   }
 
@@ -725,9 +681,9 @@ object Streaming {
     try body(scope) finally scope.free()
   }
 
-  /** The most elements (rows, or corpus ids for the screen) one
-    * [[incrementalDedupSink]] collect handed to the driver since the
-    * last reset — what the specs pin against `maxProbeKeys`.
+  /** The most elements (rows, or corpus ids for the screen) one dedup
+    * sink collect handed to the driver since the last reset — what the
+    * specs pin against `maxProbeKeys`.
     */
   private[graft] val largestCollect = new java.util.concurrent.atomic.AtomicLong()
 
@@ -745,20 +701,32 @@ object Streaming {
     got
   }
 
-  /** The rows of a sink batch's lazily checkpointed frame in ONE job
-    * that also materializes the checkpoint — the count that picks the
-    * batch's plan before any row reaches the driver. A null `idCol`
-    * fails the batch here, whichever plan would have run.
+  /** The row count of a sink batch's lazily checkpointed frame in ONE
+    * job that also materializes the checkpoint, fails a null-`idCol`
+    * batch and collects the batch's ids (repeats included) — while each
+    * partition's ids fit its even share of `cap`, so the driver receives
+    * at most `cap` of them. None past that share: the full-snapshot
+    * fallback signal.
     */
-  private def countBatch(raw: DataFrame, idCol: String): Long = {
-    val parts = collectAll(raw.select(col(idCol)).queryExecution.toRdd) { it =>
+  private def countBatch(raw: DataFrame, idCol: String,
+                         cap: Int): (Long, Option[Array[Long]]) = {
+    val rdd = raw.select(col(idCol).cast("long")).queryExecution.toRdd
+    val share = cap / math.max(1, rdd.getNumPartitions)
+    val parts = rdd.sparkContext.runJob(rdd, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+      val ids = new scala.collection.mutable.ArrayBuilder.ofLong
       var n = 0L
       var nulls = false
-      it.foreach { r => n += 1; nulls ||= r.isNullAt(0) }
-      Iterator((n, nulls))
-    }
+      it.foreach { r =>
+        n += 1
+        if (r.isNullAt(0)) nulls = true
+        else if (n <= share) ids += r.getLong(0)
+      }
+      (n, nulls, if (n <= share) Some(ids.result()) else None)
+    })
     if (parts.exists(_._2)) throw nullIdBatch(idCol)
-    parts.map(_._1).sum
+    val ids = parts.flatMap(_._3)
+    noteCollect(ids.map(_.length.toLong).sum)
+    (parts.map(_._1).sum, if (ids.length == parts.length) Some(ids.flatten) else None)
   }
 
   /** A bucket of the band index: the band number and its signature,
@@ -793,10 +761,9 @@ object Streaming {
     * `ids` on the executors. No kept file — the steady state of a
     * replay skip or an idempotence check — runs no job at all.
     */
-  private def heldIds(spark: org.apache.spark.sql.SparkSession,
-                      pinned: Option[graft.sources.SnapshotStore.Snapshot],
+  private def heldIds(spark: SparkSession,
+                      pinned: Option[SnapshotStore.Snapshot],
                       idCol: String, ids: Seq[Long]): Set[Long] = {
-    import graft.sources.SnapshotStore
     pinned match {
       case Some(snap) if ids.nonEmpty =>
         val kept = SnapshotStore.pointsKept(spark, snap, idCol, ids)
@@ -827,18 +794,18 @@ object Streaming {
     * `budget` ids in total (plus one key per matched bucket). None when
     * a partition's share overflowed: the caller screens distributed.
     */
-  private def screenBuckets(spark: org.apache.spark.sql.SparkSession,
-                            bands: graft.sources.SnapshotStore.Snapshot,
-                            capped: Option[graft.sources.SnapshotStore.Snapshot],
+  private def screenBuckets(spark: SparkSession,
+                            bands: SnapshotStore.Snapshot,
+                            capped: Option[SnapshotStore.Snapshot],
                             idCol: String, probeBs: Seq[Long], fresh: Seq[Long],
                             maxBucketSize: Int, budget: Int): Option[Map[Bucket, Array[Long]]] = {
-    import graft.sources.SnapshotStore
     import scala.collection.mutable
     val kept = SnapshotStore.pointsKept(spark, bands, "__bs", probeBs)
     if (kept.isEmpty) return Some(Map.empty)
     val probe = probeBs.distinct.sorted.toArray
     val own = fresh.distinct.sorted.toArray
-    val lim = probeLimit(maxBucketSize)
+    // maxBucketSize + 1 without wrapping: Int.MaxValue means "no cap"
+    val lim = if (maxBucketSize >= Int.MaxValue) Int.MaxValue else maxBucketSize + 1
     val rows = SnapshotStore.readLive(spark, bands.meta, kept)
       .select(col("__bs"), col(idCol).cast("long"), col("band"), col("sig"))
       .queryExecution.toRdd
@@ -885,102 +852,261 @@ object Streaming {
     Some(screening.toMap -- dead)
   }
 
+  /** What a dedup sink's screen hands [[dedupSink]]: the verdict rows
+    * of the batch's fresh docs (`idCol`, …, `keep`), their accepted ids
+    * when the screen already holds them on the driver, and the fresh
+    * docs' rows for each index table, in commit order. `rowless` names
+    * accepted ids that have no rows in a table.
+    */
+  private final case class Screened(verdicts: DataFrame, accepted: Option[Seq[Long]],
+                                    index: Seq[SnapshotStore.AppendPart],
+                                    rowless: Map[String, Set[Long]] = Map.empty)
+
+  /** The narrow filter of `all`'s ids down to `keep`, naming the
+    * smaller of the two sets.
+    */
+  private def idIn(idCol: String, keep: Seq[Long], all: Seq[Long]): Column = {
+    val kept = keep.toSet
+    val dropped = all.filterNot(kept)
+    val id = col(idCol).cast("long")
+    if (keep.size <= dropped.size) id.isInCollection(keep) else !id.isInCollection(dropped)
+  }
+
+  /** One micro-batch of a dedup sink, as [[dedupSink]] opens it: the
+    * batch `raw` (checkpointed and counted), its collected ids `ids`
+    * (None past `maxProbeKeys`) and one pinned snapshot per sink table.
+    * A screen reads every table through [[read]]/[[probe]], so it sees
+    * the pinned version of each.
+    */
+  private final class SinkBatch(val spark: SparkSession, val scope: BatchScope,
+                                val idCol: String, verdictsTbl: String,
+                                private var pins: Map[String, Option[SnapshotStore.Snapshot]],
+                                raw: DataFrame, ids: Option[Array[Long]]) {
+    private val batchIds: Option[Seq[Long]] = ids.map(_.distinct.toSeq)
+    // one row per id: an at-least-once source can repeat an id inside a
+    // batch, where the replay skip can't see it yet (no verdict written)
+    private val once: DataFrame =
+      if (batchIds.exists(_.size == ids.get.length)) raw
+      else {
+        val o = scope.checkpoint(raw.dropDuplicates(idCol), eager = batchIds.isEmpty)
+        if (batchIds.isEmpty) graft.runtime.Checkpoints.free(raw) // `o` holds the batch now
+        o
+      }
+    private val verdicted: Set[Long] =
+      batchIds.fold(Set.empty[Long])(heldIds(spark, pins(verdictsTbl), idCol, _))
+    /** The ids of [[fresh]], when the batch's ids fit `maxProbeKeys`. */
+    val freshIds: Option[Seq[Long]] = batchIds.map(_.filterNot(verdicted))
+    /** The batch's rows whose id has no verdict yet, one per id. */
+    val fresh: DataFrame = freshIds match {
+      case Some(f) => if (verdicted.isEmpty) once else once.filter(idIn(idCol, f, batchIds.get))
+      case None => unheld(verdictsTbl, once)
+    }
+    private val heldBy = scala.collection.mutable.Map.empty[String, Set[Long]]
+
+    /** False when every id of the batch already has a verdict. */
+    def nonEmpty: Boolean = freshIds.fold(!fresh.isEmpty)(_.nonEmpty)
+
+    def pin(table: String): Option[SnapshotStore.Snapshot] = pins(table)
+
+    /** The pinned table's visible rows, from its log entries alone. */
+    def rows(table: String): Long = pins(table).fold(0L)(_.live.map(_.visibleRows).sum)
+
+    /** Whether the pinned table holds a row: a store emptied by
+      * tombstone compaction screens like no store.
+      */
+    def has(table: String): Boolean = rows(table) > 0L
+
+    /** The whole pinned table. */
+    def read(table: String): DataFrame = {
+      val s = pins(table).get
+      SnapshotStore.readLive(spark, s.meta, s.live)
+    }
+
+    /** The pinned table's files that can hold one of `values` in
+      * `column` (log boxes + parquet blooms; no value reads nothing),
+      * or the whole table past the probe cap (None). Every caller
+      * re-applies its exact join on what pruning leaves.
+      */
+    def probe(table: String, column: String, values: Option[Seq[Long]]): DataFrame =
+      values match {
+        case Some(vs) =>
+          val s = pins(table).get
+          val kept = SnapshotStore.pointsKept(spark, s, column, vs)
+          if (kept.isEmpty) read(table).limit(0) else SnapshotStore.readLive(spark, s.meta, kept)
+        case None => read(table)
+      }
+
+    /** Pin `table` again after the screen itself committed to it. */
+    def repin(table: String): Unit = pins += table -> SnapshotStore.current(spark, table)
+
+    /** The fresh ids the pinned table already holds: a crash replay's
+      * half-published docs.
+      */
+    private def held(table: String): Set[Long] =
+      heldBy.getOrElseUpdate(table, heldIds(spark, pins(table), idCol, freshIds.get))
+
+    /** `df`'s rows whose id the pinned table does not hold: the
+      * anti-join over the full snapshot, for batches past the cap.
+      */
+    private def unheld(table: String, df: DataFrame): DataFrame =
+      if (has(table))
+        df.join(read(table).select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+      else df
+
+    /** How many fresh ids the pinned table already holds. */
+    def heldCount(table: String): Long = freshIds match {
+      case Some(_) => held(table).size.toLong
+      case None => fresh.count() - unheld(table, fresh.select(col(idCol))).count()
+    }
+
+    /** The ordered publish: each index table's rows of the accepted
+      * docs it does not hold yet, then the verdicts, in one
+      * `appendManyPinned` through the pins.
+      */
+    def publish(s: Screened): Unit = {
+      val v = if (s.accepted.isDefined) s.verdicts
+        else scope.checkpoint(s.verdicts, eager = false)
+      val index = freshIds match {
+        case Some(all) =>
+          // one job materializes the verdicts and hands the accepted ids
+          // to the driver (at most maxProbeKeys: they are fresh ids)
+          val accepted = s.accepted.getOrElse(collectAll(
+            v.select(col(idCol).cast("long"), col("keep")).queryExecution.toRdd)(
+            _.filter(_.getBoolean(1)).map(_.getLong(0))).toSeq)
+          s.index.flatMap { p =>
+            val skip = held(p.table) ++ s.rowless.getOrElse(p.table, Set.empty)
+            val keep = accepted.filterNot(skip)
+            if (keep.isEmpty) None else Some(p.copy(df = p.df.filter(idIn(idCol, keep, all))))
+          }
+        case None =>
+          val keep = v.filter(col("keep")).select(col(idCol))
+          s.index.flatMap { p =>
+            val rows = unheld(p.table, p.df.join(keep, Seq(idCol), "left_semi"))
+            if (rows.isEmpty) None else Some(p.copy(df = rows))
+          }
+      }
+      SnapshotStore.appendManyPinned(spark,
+        index :+ SnapshotStore.AppendPart(v, verdictsTbl,
+          statsCols = Seq(idCol), bloomCols = Seq(idCol)),
+        pins.collect { case (t, Some(p)) => t -> p })
+      ()
+    }
+  }
+
+  /** THE BATCH FRAME of the three dedup sinks ([[incrementalDedupSink]],
+    * [[embeddingDedupSink]], [[containmentDedupSink]]). Each sink keeps
+    * its state in [[graft.sources.SnapshotStore]] tables under
+    * `indexPath` — its index `tables` plus `indexPath/verdicts` — and
+    * supplies only its `screen` and its `maintain`; the frame owns the
+    * contract they share:
+    *
+    *  - WRITER LEASE: every batch runs under a
+    *    [[graft.sources.SinkLease]] on `indexPath`, taken before any
+    *    staging and released at batch end, so a concurrent
+    *    `CALL graft.dedup_sink_maintain` (or a second sink on the same
+    *    path) is refused up front instead of dying mid-batch on a commit
+    *    conflict.
+    *  - ONE JOB to start: the batch is checkpointed as it arrives and
+    *    counted in one job that also fails a null-id batch (a null id
+    *    never matches a replay skip, so a crash replay would duplicate
+    *    its rows) and collects the batch's ids, at most `maxProbeKeys`.
+    *  - PINS: one snapshot per table, pinned at batch start; every read
+    *    and the publish go through it, so a batch sees one version of
+    *    each table. A screen that commits to its own table mid-batch
+    *    (the embedding re-bucket) pins it again.
+    *  - REPLAY SKIP: ids that already have a verdict drop before the
+    *    screen, so a re-delivered batch appends nothing twice (a
+    *    replayed rejected doc is suppressed too), and an id repeated
+    *    inside the batch keeps one row.
+    *  - IDEMPOTENCE: an accepted doc's index rows append only where the
+    *    pinned table does not hold its id yet, so the replay of a crash
+    *    between the index and verdict commits duplicates nothing.
+    *  - Both are set arithmetic on the driver: the ids that the
+    *    point-pruned files of a pin hold ([[heldIds]]; no kept file, no
+    *    job). A batch whose ids overflow `maxProbeKeys` runs them as
+    *    anti-joins over the full snapshot instead, with identical
+    *    results.
+    *  - COMMIT ORDER: one `appendManyPinned` stages every table
+    *    concurrently and lands the logs in order, INDEX TABLES BEFORE
+    *    VERDICTS. A crash between the commits leaves the id
+    *    un-verdicted, so it re-screens (wasted work, never a lost index
+    *    entry); every screen excludes the batch's own ids from the index
+    *    side, so a half-indexed doc never matches itself. Maintenance
+    *    runs after the publish, under the same lease.
+    *  - INTEGRAL IDS: every point-skip probes long ids, so each sink
+    *    rejects a non-integral `idCol` at construction.
+    *  - DRIVER BOUNDS: every collect is batch-scoped and stops at
+    *    `maxProbeKeys` elements (ids, probes, accepted ids); past it the
+    *    batch loses pruning, never rows.
+    *  - Every checkpoint a batch creates is freed when the batch ends.
+    */
+  private def dedupSink(docs: DataFrame, idCol: String, indexPath: String,
+                        tables: Seq[String], maxProbeKeys: Int)(
+      screen: SinkBatch => Screened)(maintain: () => Unit): DataStreamWriter[Row] = {
+    val spark = docs.sparkSession
+    val verdictsTbl = s"$indexPath/verdicts"
+    docs.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
+      graft.sources.SinkLease.withLease(spark, indexPath, "sink") {
+        withBatchScope { scope =>
+          // lazily checkpointed: the count materializes it
+          val raw = scope.checkpoint(batch.toDF(), eager = false)
+          val (n, ids) = countBatch(raw, idCol, maxProbeKeys)
+          if (n > 0L) {
+            val pins = (verdictsTbl +: tables).map(t => t -> SnapshotStore.current(spark, t)).toMap
+            val b = new SinkBatch(spark, scope, idCol, verdictsTbl, pins, raw, ids)
+            if (b.nonEmpty) {
+              b.publish(screen(b))
+              maintain()
+            }
+          }
+        }
+      }
+      ()
+    }
+  }
+
   /** Streaming INGESTION DEDUP: the [[graft.operators.Dedup.incrementalDedup]]
-    * contract as a self-growing store — each micro-batch of documents
-    * screens against the persisted corpus band index, the verdicts
-    * append to `indexPath/verdicts`, and ACCEPTED docs' bands append to
-    * `indexPath/bands`, so later batches automatically dedup against
-    * everything accepted before them. This is the steady-state ingestion
-    * loop of a production curation pipeline, with the band index as the
-    * durable state (no in-executor streaming state at all).
+    * contract as a self-growing store, on the [[dedupSink]] frame. Each
+    * micro-batch's fresh docs screen against the persisted corpus band
+    * index; the verdicts (`n_corpus_dups`, `nearest_dup`, `keep`) go to
+    * `indexPath/verdicts` and the ACCEPTED docs' bands to
+    * `indexPath/bands`, so later batches dedup against everything
+    * accepted before them. Batch-internal duplicates follow the
+    * incrementalDedup contract (screened against the corpus only, not
+    * each other).
     *
-    * Replay-safe: docs whose ids already have a VERDICT are dropped
-    * before screening, so a re-delivered micro-batch appends nothing
-    * twice — keyed on the verdicts table, not the band index, so a
-    * replayed REJECTED doc (which never entered the index) is also
-    * suppressed. Batch-INTERNAL duplicates follow the incrementalDedup
-    * contract (screened against the corpus only, not each other).
-    *
-    * STATE IS SNAPSHOT TABLES ([[graft.sources.SnapshotStore]]): bands,
-    * verdicts and the `capped` tombstones live as transactional tables,
-    * so per-batch reads PRUNE instead of scanning the index — the
-    * screen reads only band files whose bucket-hash range intersects
-    * the batch's buckets (`__bs = xxhash64(band, sig)`, the stored
-    * point-skip key; sound because pruning keeps EVERY file a probed
-    * bucket touches, so probed buckets screen complete and their cap
-    * sizes count exact), and the replay skip / append idempotence
-    * point-skip on the batch's ids (log boxes + parquet blooms). Each
-    * batch pins ONE snapshot per table at its start and reads
-    * everything through it, so it sees one consistent version of each.
-    *
-    * A BATCH COSTS ITS DATA. The batch is checkpointed as it arrives
-    * and counted in one job, which also fails a null-id batch; the
-    * count picks the plan before any row reaches the driver. A batch of
-    * at most `maxProbeKeys` band rows (exactly numHashes / rowsPerBand
-    * per doc) builds its band table (`id, band, sig, __bs`) and
-    * collects it to the driver once: that collect is the batch-id set,
-    * the bucket probe set and the repeated-id test (only a batch that
-    * repeats an id pays a `dropDuplicates`). The replay skip and the
-    * idempotence check collect only the ids the pruned files hold (none
-    * in steady state: no file kept, no job). The screen is one collect
-    * of the probed buckets' corpus ids, at most maxBucketSize + 1 per
-    * bucket, and the bucket cap, tombstones, `n_corpus_dups`,
+    * THE SCREEN: the band table's point-skip key is
+    * `__bs = xxhash64(band, sig)`; the screen reads only band files
+    * whose `__bs` range meets the batch's buckets (sound: pruning keeps
+    * every file a probed bucket touches, so probed buckets screen
+    * complete and their cap sizes count exact). Fresh docs of at most
+    * `maxProbeKeys` band rows (numHashes / rowsPerBand per doc) collect
+    * their band table (`id, band, sig, __bs`; five primitives, ~56 bytes
+    * a row) once; the screen is one collect of the probed buckets'
+    * corpus ids (at most maxBucketSize + 1 per bucket, `maxProbeKeys` in
+    * total), and the bucket cap, tombstones, `n_corpus_dups`,
     * `nearest_dup` and `keep` are set arithmetic on the driver, row for
-    * row `Dedup.screen ∘ capBuckets`. The writes stage the accepted
-    * bands as a narrow filter of the batch's band checkpoint and the
-    * verdicts as a local frame, one file per table. A steady-state
-    * batch runs five Spark jobs (count, band collect, screen collect,
-    * two staged writes); a replayed id, a tombstone table or a
-    * compaction adds its own. Every checkpoint a batch creates is freed
-    * when the batch ends.
+    * row `Dedup.screen ∘ capBuckets`. Larger batches, or probed buckets
+    * holding more corpus ids than that budget, screen with those shuffle
+    * joins instead — identical verdicts. A steady-state batch runs five
+    * Spark jobs (count, band collect, screen collect, two staged
+    * writes); a replayed id, a tombstone table or a compaction adds its
+    * own.
     *
-    * COMPACTION: both stores append one file per micro-batch —
-    * thousands of batches would mean thousands of small files, the
-    * classic streaming-lakehouse failure. Past `compactAfterFiles` live
-    * files the stores rewrite through atomic snapshot commits (metadata
-    * swap — no delete→rename window to die inside of). Band compaction
-    * also applies the bucket cap: rows of oversized buckets are DROPPED
-    * and their (band, sig) recorded in `indexPath/capped` as tombstones
-    * that screening excludes permanently. Because the store is
-    * append-only, a bucket's size only grows — once over the cap it can
-    * never come back under it — so tombstoning preserves verdicts
-    * EXACTLY: every later batch gets the same verdict it would have
-    * gotten against the never-compacted store, while the dead bucket
-    * rows (boilerplate text, by construction) stop occupying the index.
-    * The tombstones commit BEFORE the rows they cover vanish; a crash
-    * between the two commits only defers the row drop to the next
-    * trigger.
-    *
-    * Commit order per batch: BANDS first, verdicts second (the other
-    * sinks' rule — a crash between the two leaves the id un-verdicted
-    * and it re-screens; the pre-r18 verdict-first order silently
-    * dropped the accepted doc from the index forever, because the
-    * replay skip suppressed the re-screen that would have re-indexed
-    * it). The index side of the screen excludes the batch's own ids, so
-    * a crash-replayed half-indexed doc never matches itself.
-    *
-    * CONTRACT: `idCol` must be integral (every point-skip probe hashes
-    * long ids) — validated at construction. Per-batch DRIVER state is
-    * capped by `maxProbeKeys`: the band-row collect holds at most that
-    * many rows of five primitives (about 56 bytes each, ~56 MB at the
-    * default), and the screen collect at most that many corpus ids in
-    * total (8 bytes each, plus one bucket key per matched bucket). A
-    * batch past the band-row cap runs the distributed plan (shuffle
-    * joins) from its checkpoint, and a batch whose probed buckets hold
-    * more corpus ids than the screen budget screens with the same
-    * joins — identical verdicts either way. That plan's probe collects
-    * (batch ids, band buckets) stop at `maxProbeKeys` distinct longs
-    * each and past that degrade the point-skip read to the full
-    * snapshot; the index files just stop pruning for that batch.
-    * `retainVersions`
-    * bounds how many superseded store versions maintenance vacuum
-    * keeps (default 2 = current + one of slack for a concurrent
-    * reader; raise it to time-travel over sink state while
-    * debugging). Verdicts are an ordinary snapshot table — read them
-    * with [[graft.sources.SnapshotStore.snapshot]] at
-    * `indexPath/verdicts`, through SQL via `graft_sink_verdicts`, or
-    * follow them live by pointing a [[graft.sources.v2.SnapshotStreamSource]]
-    * `readStream` at the same path.
+    * THE TABLES: bands, verdicts and the `capped` tombstones. Past
+    * `compactAfterFiles` live files the stores compact through atomic
+    * snapshot commits. Band compaction also applies the bucket cap: rows
+    * of oversized buckets DROP and their (band, sig) land in
+    * `indexPath/capped` as tombstones the screen excludes for good. The
+    * store is append-only, so a bucket over the cap never comes back
+    * under it: tombstoning keeps every later verdict EXACTLY what the
+    * never-compacted store would give. The tombstones commit BEFORE the
+    * rows they cover vanish. `retainVersions` bounds how many superseded
+    * versions maintenance vacuum keeps (default 2; raise it to
+    * time-travel over sink state). Read verdicts with
+    * [[graft.sources.SnapshotStore.snapshot]] at `indexPath/verdicts`,
+    * through SQL via `graft_sink_verdicts`, or live with a
+    * [[graft.sources.v2.SnapshotStreamSource]] `readStream`.
     */
   def incrementalDedupSink(docs: DataFrame, idCol: String, textCol: String,
                            indexPath: String,
@@ -988,231 +1114,103 @@ object Streaming {
                            rowsPerBand: Int = 2, maxBucketSize: Int = 64,
                            compactAfterFiles: Int = 64,
                            maxProbeKeys: Int = 1 << 20,
-                           retainVersions: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                           retainVersions: Int = 2): DataStreamWriter[Row] = {
     require(compactAfterFiles > 0, s"compactAfterFiles must be positive: $compactAfterFiles")
     require(maxProbeKeys > 0, s"maxProbeKeys must be positive: $maxProbeKeys")
     require(retainVersions >= 1, s"retainVersions must be >= 1: $retainVersions")
     requireIntegralId(docs, idCol)
     graft.operators.Dedup.requireBanding(numHashes, rowsPerBand)
     val spark = docs.sparkSession
-    import graft.sources.SnapshotStore
     val tables = MinhashTables(s"$indexPath/bands", s"$indexPath/verdicts", s"$indexPath/capped")
     val numBands = numHashes / rowsPerBand
-    // the stored band table of a batch: __bs is the point-skip key
-    def banded(df: DataFrame): DataFrame =
-      graft.operators.Dedup.bandsOf(
-          graft.operators.Dedup.minHashSignatures(df, idCol, textCol, numHashes, shingleN),
+    dedupSink(docs, idCol, indexPath, Seq(tables.bands, tables.capped), maxProbeKeys) { b =>
+      // the stored band table of the fresh docs: __bs is the point-skip
+      // key; lazily checkpointed, its first read materializes it
+      val fb = b.scope.checkpoint(graft.operators.Dedup.bandsOf(
+          graft.operators.Dedup.minHashSignatures(b.fresh, idCol, textCol, numHashes, shingleN),
           idCol, numHashes, rowsPerBand)
-        .withColumn("__bs", xxhash64(col("band"), col("sig")))
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-      // WRITER LEASE: acquired before any staging, released at batch
-      // end — a concurrent `CALL graft.dedup_sink_maintain` (or second
-      // sink on the same path) is refused deterministically up front
-      // instead of one side dying mid-batch on a commit conflict
-      graft.sources.SinkLease.withLease(spark, indexPath, "sink") {
-        withBatchScope { scope =>
-          // lazily checkpointed: the count materializes it, every later
-          // read of the batch reads it back
-          val raw = scope.checkpoint(batch.toDF(), eager = false)
-          val n = countBatch(raw, idCol)
-          val appended =
-            if (n == 0L) false
-            else if (n * numBands <= maxProbeKeys) {
-              val pins = MinhashPins(SnapshotStore.current(spark, tables.bands),
-                SnapshotStore.current(spark, tables.verdicts),
-                SnapshotStore.current(spark, tables.capped))
-              // lazily checkpointed: the collect materializes it, the
-              // bands write reads it back
-              val fb0 = scope.checkpoint(banded(raw), eager = false)
-              val rows0 = bandRows(fb0, idCol)
-              // every doc yields exactly numBands rows: more means an
-              // at-least-once source repeated an id inside the batch,
-              // where the replay skip can't see it yet — one row per id,
-              // the replay skip's rule
-              val (fb, rows) =
-                if (rows0.length == rows0.map(_.id).distinct.length * numBands) (fb0, rows0)
-                else {
-                  graft.runtime.Checkpoints.free(fb0)
-                  val fb1 = scope.checkpoint(banded(raw.dropDuplicates(idCol)), eager = false)
-                  (fb1, bandRows(fb1, idCol))
-                }
-              boundedDedupBatch(spark, tables, pins, scope, fb, rows, idCol,
-                maxBucketSize, maxProbeKeys)
-            } else
-              distributedDedupBatch(spark, tables, scope, raw, idCol, textCol,
-                numHashes, shingleN, rowsPerBand, maxBucketSize, maxProbeKeys)
-          if (appended)
-            maybeCompactIndex(spark, tables, idCol, maxBucketSize,
-              compactAfterFiles, retainVersions)
-        }
-      } // lease released
-      ()
+        .withColumn("__bs", xxhash64(col("band"), col("sig"))), eager = false)
+      b.freshIds match {
+        case Some(fresh) if fresh.size.toLong * numBands <= maxProbeKeys =>
+          boundedScreen(b, tables, fb, fresh, maxBucketSize, maxProbeKeys)
+        case _ => distributedScreen(b, tables, fb, maxBucketSize, maxProbeKeys)
+      }
+    } { () =>
+      maybeCompactIndex(spark, tables, idCol, maxBucketSize, compactAfterFiles, retainVersions)
     }
   }
 
   private final case class MinhashTables(bands: String, verdicts: String, capped: String)
-  private final case class MinhashPins(bands: Option[graft.sources.SnapshotStore.Snapshot],
-                                       verdicts: Option[graft.sources.SnapshotStore.Snapshot],
-                                       capped: Option[graft.sources.SnapshotStore.Snapshot])
 
-  /** [[incrementalDedupSink]]'s batch on the driver-held band rows — see
-    * its scaladoc for the job budget and the bounds. True when the batch
-    * committed verdicts (false: every id was replay-skipped).
+  /** [[incrementalDedupSink]]'s screen on the driver-held band rows of
+    * the fresh docs — see its scaladoc for the job budget and bounds.
     */
-  private def boundedDedupBatch(spark: org.apache.spark.sql.SparkSession,
-                                tables: MinhashTables, pins: MinhashPins,
-                                scope: BatchScope, fb: DataFrame, rows: Array[BandRow],
-                                idCol: String, maxBucketSize: Int,
-                                maxProbeKeys: Int): Boolean = {
-    import graft.sources.SnapshotStore
+  private def boundedScreen(b: SinkBatch, tables: MinhashTables, fb: DataFrame,
+                            fresh: Seq[Long], maxBucketSize: Int,
+                            maxProbeKeys: Int): Screened = {
     import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
-    val batchIds = rows.map(_.id).distinct.toSeq
-    val verdicted = heldIds(spark, pins.verdicts, idCol, batchIds)
-    val fresh = batchIds.filterNot(verdicted)
-    if (fresh.isEmpty) return false
-    val freshRows = if (verdicted.isEmpty) rows.toSeq
-      else rows.toSeq.filterNot(r => verdicted(r.id))
-    // an EMPTIED band store (every bucket tombstoned) screens like no store
-    val haveIndex = pins.bands.exists(_.live.exists(_.visibleRows > 0L))
+    val idCol = b.idCol
+    val rows = bandRows(fb, idCol)
+    val haveIndex = b.has(tables.bands)
     val screened =
       if (haveIndex)
-        screenBuckets(spark, pins.bands.get, pins.capped, idCol,
-          freshRows.map(_.bs), fresh, maxBucketSize, maxProbeKeys)
+        screenBuckets(b.spark, b.pin(tables.bands).get, b.pin(tables.capped), idCol,
+          rows.map(_.bs).toSeq, fresh, maxBucketSize, maxProbeKeys)
       else Some(Map.empty[Bucket, Array[Long]])
-    val corpus = screened match {
-      case Some(c) => c
-      case None =>
-        // the probed buckets hold more corpus ids than the driver may:
-        // the distributed screen over the fresh docs' band rows
-        val fbFresh = if (verdicted.isEmpty) fb
-          else fb.filter(col(idCol).cast("long").isInCollection(fresh))
-        return distributedScreenAppend(spark, tables, scope, fbFresh, Some(batchIds),
-          haveIndex, idCol, maxBucketSize, maxProbeKeys)
-    }
-    // Dedup.screen: per doc, the distinct corpus ids sharing any band
-    val verdicts = freshRows.groupBy(_.id).toSeq.sortBy(_._1).map { case (id, rs) =>
-      val dups = rs.flatMap(r => corpus.getOrElse(r.bucket, Array.emptyLongArray)).distinct
-      (id, dups.size.toLong, if (dups.isEmpty) None else Some(dups.min))
-    }
-    val accepted = verdicts.collect { case (id, 0L, _) => id }
-    // idempotence: a crash-replayed doc's bands may already be indexed
-    val acceptedNew =
-      if (haveIndex) { val held = heldIds(spark, pins.bands, idCol, accepted); accepted.filterNot(held) }
-      else accepted
-    val idType = fb.schema(idCol).dataType
-    // the verdict table's columns as the distributed plan writes them:
-    // with an index nearest_dup is min over corpus ids (the id's type)
-    val vSchema = StructType(Seq(StructField(idCol, LongType, nullable = false),
-      StructField("n_corpus_dups", LongType, nullable = false),
-      StructField("nearest_dup", LongType, nullable = true),
-      StructField("keep", BooleanType, nullable = false)))
-    val verdictFrame = spark.createDataFrame(
-        java.util.Arrays.asList(verdicts.map { case (id, n, nearest) =>
-          org.apache.spark.sql.Row(id, n, nearest.map(Long.box).orNull, n == 0L) }: _*), vSchema)
-      .select(col(idCol).cast(idType).as(idCol), col("n_corpus_dups"),
-        (if (haveIndex) col("nearest_dup").cast(idType) else col("nearest_dup")).as("nearest_dup"),
-        col("keep"))
-      .coalesce(1)
-    // the narrow filter names the smaller of the two id sets
-    val acceptedSet = acceptedNew.toSet
-    val dropped = batchIds.filterNot(acceptedSet)
-    val idL = col(idCol).cast("long")
-    val acceptedBands = fb.filter(
-        if (acceptedNew.size <= dropped.size) idL.isInCollection(acceptedNew)
-        else !idL.isInCollection(dropped))
-      .coalesce(1)
-    // ONE coalesced publish: both stores stage concurrently and the
-    // logs land in order — bands BEFORE verdicts, the crash contract;
-    // the pins stand in for the log replays while no other commit landed
-    SnapshotStore.appendManyPinned(spark,
-      (if (acceptedNew.nonEmpty)
-        Seq(SnapshotStore.AppendPart(acceptedBands, tables.bands,
-          statsCols = Seq("__bs", idCol), bloomCols = Seq(idCol, "__bs")))
-      else Nil) :+
-      SnapshotStore.AppendPart(verdictFrame, tables.verdicts,
-        statsCols = Seq(idCol), bloomCols = Seq(idCol)),
-      (pins.bands.map(tables.bands -> _) ++ pins.verdicts.map(tables.verdicts -> _)).toMap)
-    true
-  }
-
-  /** [[incrementalDedupSink]]'s batch past `maxProbeKeys` band rows: the
-    * distributed plan (shuffle joins, full-snapshot reads past the
-    * probe caps) from the batch's checkpoint `raw`, with the verdicts of
-    * the driver-side path. True when the batch committed verdicts.
-    */
-  private def distributedDedupBatch(spark: org.apache.spark.sql.SparkSession,
-                                    tables: MinhashTables, scope: BatchScope,
-                                    raw: DataFrame, idCol: String, textCol: String,
-                                    numHashes: Int, shingleN: Int, rowsPerBand: Int,
-                                    maxBucketSize: Int, maxProbeKeys: Int): Boolean = {
-    import graft.sources.SnapshotStore
-    // rowCount > 0, not just version > 0: the cap-tombstone compaction
-    // can legitimately EMPTY the bands table (every bucket oversized —
-    // an all-boilerplate corpus), and an empty store screens like no
-    // store; reading it would throw instead
-    val haveIndex = SnapshotStore.latestVersion(spark, tables.bands) > 0L &&
-      SnapshotStore.rowCount(spark, tables.bands) > 0L
-    // one row per id WITHIN the batch too: an at-least-once source can
-    // repeat an id inside one micro-batch, where the verdict anti-join
-    // can't see it yet — without this, the repeated id's band rows
-    // append twice. Mirrors the replay skip's per-id rule.
-    val once = scope.checkpoint(raw.dropDuplicates(idCol))
-    graft.runtime.Checkpoints.free(raw) // `once` holds the batch now
-    // the batch's ids drive the point-skip probes below — bounded
-    // driver state (None past the cap → full-snapshot fallback)
-    val batchIds = batchIdProbes(once, idCol, maxProbeKeys)
-    // Some(empty) means an empty batch -> skip; None (over cap) is a
-    // full batch that proceeds on the fallback
-    batchIds.forall(_.nonEmpty) && {
-      val fresh =
-        if (SnapshotStore.latestVersion(spark, tables.verdicts) > 0L)
-          once.join(scanPointsBounded(spark, tables.verdicts, idCol, batchIds)
-            .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-        else once
-      !fresh.isEmpty && {
-        // the band table feeds both the screen and the index append —
-        // one materialization, like every signature table in Dedup;
-        // __bs is the STORED bucket-hash the point-skip prunes on
-        val fb = scope.checkpoint(scope.own(graft.operators.Dedup.bandedSignatures(
-            fresh, idCol, textCol, numHashes, shingleN, rowsPerBand))
-          .withColumn("__bs", xxhash64(col("band"), col("sig"))))
-        distributedScreenAppend(spark, tables, scope, fb, batchIds, haveIndex,
-          idCol, maxBucketSize, maxProbeKeys)
-      }
+    screened match {
+      // the probed buckets hold more corpus ids than the driver may
+      case None => distributedScreen(b, tables, fb, maxBucketSize, maxProbeKeys)
+      case Some(corpus) =>
+        // Dedup.screen: per doc, the distinct corpus ids sharing any band
+        val verdicts = rows.toSeq.groupBy(_.id).toSeq.sortBy(_._1).map { case (id, rs) =>
+          val dups = rs.flatMap(r => corpus.getOrElse(r.bucket, Array.emptyLongArray)).distinct
+          (id, dups.size.toLong, if (dups.isEmpty) None else Some(dups.min))
+        }
+        val idType = fb.schema(idCol).dataType
+        // the verdict table's columns as the distributed screen writes
+        // them: with an index nearest_dup is min over corpus ids (the
+        // id's type)
+        val vSchema = StructType(Seq(StructField(idCol, LongType, nullable = false),
+          StructField("n_corpus_dups", LongType, nullable = false),
+          StructField("nearest_dup", LongType, nullable = true),
+          StructField("keep", BooleanType, nullable = false)))
+        val verdictFrame = b.spark.createDataFrame(
+            java.util.Arrays.asList(verdicts.map { case (id, n, nearest) =>
+              Row(id, n, nearest.map(Long.box).orNull, n == 0L) }: _*), vSchema)
+          .select(col(idCol).cast(idType).as(idCol), col("n_corpus_dups"),
+            (if (haveIndex) col("nearest_dup").cast(idType) else col("nearest_dup")).as("nearest_dup"),
+            col("keep"))
+          .coalesce(1)
+        Screened(verdictFrame, Some(verdicts.collect { case (id, 0L, _) => id }),
+          Seq(bandsPart(tables, fb.coalesce(1), idCol)))
     }
   }
 
-  /** The screen and the append of [[distributedDedupBatch]] as shuffle
-    * joins, over `fb`, the band rows of the batch's fresh (not yet
-    * verdicted) docs; `batchIds` are the batch's ids when collectable.
-    * Also the driver-side path's screen when its probed buckets hold
-    * more corpus ids than the driver budget. Returns true.
+  private def bandsPart(tables: MinhashTables, rows: DataFrame,
+                        idCol: String): SnapshotStore.AppendPart =
+    SnapshotStore.AppendPart(rows, tables.bands,
+      statsCols = Seq("__bs", idCol), bloomCols = Seq(idCol, "__bs"))
+
+  /** [[incrementalDedupSink]]'s screen as shuffle joins over `fb`, the
+    * band rows of the fresh docs: batches past `maxProbeKeys` band rows,
+    * and batches whose probed buckets hold more corpus ids than the
+    * driver budget.
     */
-  private def distributedScreenAppend(spark: org.apache.spark.sql.SparkSession,
-                                      tables: MinhashTables, scope: BatchScope,
-                                      fb: DataFrame, batchIds: Option[Seq[Long]],
-                                      haveIndex: Boolean, idCol: String,
-                                      maxBucketSize: Int, maxProbeKeys: Int): Boolean = {
-    import graft.sources.SnapshotStore
-    val MinhashTables(bandsTbl, verdictsTbl, cappedTbl) = tables
+  private def distributedScreen(b: SinkBatch, tables: MinhashTables, fb: DataFrame,
+                                maxBucketSize: Int, maxProbeKeys: Int): Screened = {
+    val idCol = b.idCol
     val verdicts =
-      if (haveIndex) {
-        // the screen reads ONLY band files whose __bs range can
-        // intersect the batch's buckets; every row of a probed
-        // bucket lives in a kept file (box/bloom stages keep any
-        // file containing a probe), so the join and the cap
-        // counts below are exact on what matters
+      if (b.has(tables.bands)) {
+        // every row of a probed bucket lives in a kept file, so the join
+        // and the cap counts below are exact on what matters
         val probeBs = boundedProbes(fb, "__bs", maxProbeKeys)
-        val raw = scanPointsBounded(spark, bandsTbl, "__bs", probeBs)
+        val raw = b.probe(tables.bands, "__bs", probeBs)
           // a crash-replayed half-indexed doc must not match itself
           .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
-        // tombstoned buckets stay excluded even after their rows
-        // were compacted away
+        // tombstoned buckets stay excluded after their rows were
+        // compacted away
         val index =
-          if (SnapshotStore.latestVersion(spark, cappedTbl) > 0L)
-            raw.join(SnapshotStore.snapshot(spark, cappedTbl),
-              Seq("band", "sig"), "left_anti")
+          if (b.has(tables.capped)) raw.join(b.read(tables.capped), Seq("band", "sig"), "left_anti")
           else raw
         graft.operators.Dedup.screen(
           fb, graft.operators.Dedup.capBuckets(index, maxBucketSize, true), idCol)
@@ -1221,25 +1219,7 @@ object Streaming {
           .withColumn("n_corpus_dups", lit(0L))
           .withColumn("nearest_dup", lit(null).cast("long"))
           .withColumn("keep", lit(true))
-    val v = scope.checkpoint(verdicts) // read twice: store + accept filter
-    // BANDS first, verdicts second — see the sink's crash contract;
-    // the idempotence anti-join point-skips to the batch's own ids
-    val acceptedBands = fb.join(
-      v.filter(col("keep")).select(col(idCol)), Seq(idCol), "left_semi")
-    val acceptedNew =
-      if (haveIndex)
-        acceptedBands.join(
-          scanPointsBounded(spark, bandsTbl, idCol, batchIds)
-            .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-      else acceptedBands
-    SnapshotStore.appendMany(spark,
-      (if (!acceptedNew.isEmpty)
-        Seq(SnapshotStore.AppendPart(acceptedNew, bandsTbl,
-          statsCols = Seq("__bs", idCol), bloomCols = Seq(idCol, "__bs")))
-      else Nil) :+
-      SnapshotStore.AppendPart(v, verdictsTbl,
-        statsCols = Seq(idCol), bloomCols = Seq(idCol)))
-    true
+    Screened(verdicts, None, Seq(bandsPart(tables, fb, idCol)))
   }
 
   /** Size-triggered maintenance + DISK-BOUNDING vacuum for one sink
@@ -1254,16 +1234,16 @@ object Streaming {
     * disk to live + one version + ~20 minutes of churn. Vacuum's
     * data-dir listing cost is paid only when a compaction happened.
     */
-  private def maintainStore(spark: org.apache.spark.sql.SparkSession,
+  private def maintainStore(spark: SparkSession,
                             table: String, maxLiveFiles: Int,
                             statsCols: Seq[String], clusterCols: Seq[String],
                             bloomCols: Seq[String],
                             retainVersions: Int = 2): Unit =
-    graft.sources.SnapshotStore.maintain(spark, table, maxLiveFiles,
+    SnapshotStore.maintain(spark, table, maxLiveFiles,
       math.max(1, maxLiveFiles / 8), statsCols = statsCols,
       clusterCols = clusterCols, bloomCols = bloomCols)
       .foreach { _ =>
-        graft.sources.SnapshotStore.vacuum(spark, table, retainVersions = retainVersions)
+        SnapshotStore.vacuum(spark, table, retainVersions = retainVersions)
         ()
       }
 
@@ -1277,12 +1257,11 @@ object Streaming {
     * writer lease ([[graft.sources.SinkLease]] — acquired at batch
     * start), so a concurrent `dedup_sink_maintain` can never interleave.
     */
-  private def maybeCompactIndex(spark: org.apache.spark.sql.SparkSession,
+  private def maybeCompactIndex(spark: SparkSession,
                                 tables: MinhashTables, idCol: String,
                                 maxBucketSize: Int,
                                 compactAfterFiles: Int,
                                 retainVersions: Int): Unit = {
-    import graft.sources.SnapshotStore
     val MinhashTables(bandsTbl, verdictsTbl, cappedTbl) = tables
     val targetFiles = math.max(1, compactAfterFiles / 8)
 
@@ -1329,75 +1308,40 @@ object Streaming {
   }
 
   /** Streaming EMBEDDING near-dedup against a durable LSH-bucketed
-    * vector index — [[incrementalDedupSink]]'s semantic twin with
-    * cosine instead of MinHash, and the streaming form of
-    * `Similarity.cosinePairsScaled`'s bucket-bounded screen: each
-    * micro-batch's vectors are compared ONLY to indexed (and in-batch)
-    * vectors in their LSH bucket — never index × batch. A vector is a
+    * vector index on the [[dedupSink]] frame — [[incrementalDedupSink]]'s
+    * semantic twin with cosine instead of MinHash, and the streaming
+    * form of `Similarity.cosinePairsScaled`'s bucket-bounded screen.
+    *
+    * THE SCREEN: each fresh vector is compared ONLY to indexed (and
+    * in-batch) vectors in its LSH bucket — never index × batch. It is a
     * duplicate when any indexed vector, or any lower-id batch-mate, in
     * its bucket matches at >= `minCosine` (keep-lowest, the batch
-    * operators' rule); novel vectors append to `indexPath/vectors`,
-    * verdicts land append-only in `indexPath/verdicts` and double as
-    * the replay skip (an id with a verdict never re-screens —
-    * restart-safe like the MinHash sink). State is the index itself —
-    * no in-memory streaming state, so the index survives restarts and
-    * serves batch probes too.
+    * operators' rule). The index read keeps only files whose `__bucket`
+    * range meets the batch's buckets (at most `maxProbeKeys` of them;
+    * past that, the whole index).
     *
     * BUCKET WIDTH IS CORPUS-SCALED by default (`bucketBits = None`):
     * each batch derives bits = [[graft.operators.Similarity.scaledBucketBits]]
-    * over (index rows + fresh batch rows), exactly the batch screen's
-    * policy — a FIXED width over a self-growing index makes the
-    * per-batch screen cost grow linearly with everything accepted so
-    * far (quadratic cumulative). When the derived width changes (a
-    * doubling boundary — O(log n) times over the index's whole life)
-    * the index is RE-BUCKETED in place: buckets are a pure function of
-    * the stored vector ([[graft.operators.Similarity.hyperplaneBucket]]
-    * at the new width), so the re-bucket is an index rewrite, not a
-    * semantics change — exact duplicates agree on every plane at ANY
-    * width, so a twin of a vector indexed under a narrower width is
-    * still caught after the rewrite. The width/dim the index is
-    * currently written at persists in `indexPath/_bucketing`; the
-    * rewrite is one atomic `overwrite` commit. Pass `bucketBits =
-    * Some(b)` to pin a fixed [[graft.operators.Similarity.signBucket]]
-    * width instead (misses are the same accepted LSH trade the batch
-    * screen makes). A store must stay on the policy it was created
-    * with — the two bucketers' values are incompatible; the policy is
-    * RECORDED in the table's commit meta and a mismatched reopen fails
-    * fast instead of silently matching nothing.
+    * over (index rows + fresh batch rows, less the batch ids a crash
+    * left indexed), the batch screen's policy, with the index size read
+    * from the pinned log — a FIXED width over a self-growing index
+    * makes the per-batch screen cost grow with everything accepted so
+    * far. When the derived width changes (O(log n) times over the
+    * index's life) the index is RE-BUCKETED in place by one atomic
+    * `overwrite` that also records the new width: buckets are a pure
+    * function of the stored vector
+    * ([[graft.operators.Similarity.hyperplaneBucket]]), so exact
+    * duplicates agree at ANY width. `bucketBits = Some(b)` pins a fixed
+    * [[graft.operators.Similarity.signBucket]] width instead. A store
+    * stays on the policy it was created with: the policy is RECORDED in
+    * the vectors table's commit meta (`sink.bucketing`) and a mismatched
+    * reopen fails fast instead of silently matching nothing.
     *
-    * STATE IS SNAPSHOT TABLES, not raw parquet dirs: vectors and
-    * verdicts are [[graft.sources.SnapshotStore]] tables, which buys
-    * the sink the lakehouse layer it was hand-rolling —
-    *
-    *  - per-batch reads PRUNE instead of scanning the index: the
-    *    replay skip and append-idempotence probes point-skip on the
-    *    batch's ids (log-stats boxes + parquet blooms), and the screen
-    *    reads only files whose `__bucket` range intersects the batch's
-    *    buckets ([[graft.sources.SnapshotStore.scanPoints]]) — bounded
-    *    by the BATCH, not the corpus, once maintenance clusters the
-    *    layout;
-    *  - the corpus-scaled width derives from COMMIT-LOG row counts
-    *    ([[graft.sources.SnapshotStore.rowCount]], zero data reads)
-    *    instead of a per-batch full `count()`;
-    *  - the re-bucket and the bucketing policy land in ONE atomic
-    *    commit (`overwrite` + meta), so no crash point can leave the
-    *    marker and the stored widths disagreeing — the r17 marker-file
-    *    design had a window on both sides of its dir swap;
-    *  - compaction is [[graft.sources.SnapshotStore.maintain]]'s
-    *    metadata swap — small files re-cluster by `__bucket` with no
-    *    delete→rename window to die inside of.
-    *
-    * CONTRACT: `idCol` must be integral (the point-skip probes hash
-    * long ids) — validated at construction. Per-batch DRIVER state is
-    * capped at `maxProbeKeys` distinct longs per probe collect (ids,
-    * buckets); past the cap the point-skip read degrades to the full
-    * snapshot — identical verdicts, no pruning for that batch.
-    * `retainVersions` bounds maintenance vacuum's retained versions
-    * (default 2; raise it to time-travel over sink state). Verdicts
-    * are an ordinary snapshot table at `indexPath/verdicts` —
-    * `graft_sink_verdicts` in SQL, or a
-    * [[graft.sources.v2.SnapshotStreamSource]] `readStream` to follow
-    * them live.
+    * THE TABLES: `indexPath/vectors` (`idCol, __v, __bucket`) and
+    * `indexPath/verdicts` (`idCol, keep`). Past `maxLiveFiles` live files
+    * maintenance re-clusters vectors by `__bucket` and verdicts by id,
+    * then vacuums to `retainVersions` (default 2; raise it to
+    * time-travel over sink state).
     */
   def embeddingDedupSink(vecs: DataFrame, idCol: String, vecCol: String,
                          indexPath: String, bucketBits: Option[Int] = None,
@@ -1405,8 +1349,7 @@ object Streaming {
                          targetBucketRows: Long = 256,
                          maxLiveFiles: Int = 64,
                          maxProbeKeys: Int = 1 << 20,
-                         retainVersions: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                         retainVersions: Int = 2): DataStreamWriter[Row] = {
     require(targetBucketRows > 0,
       s"targetBucketRows must be positive, got $targetBucketRows")
     require(maxLiveFiles > 0, s"maxLiveFiles must be positive, got $maxLiveFiles")
@@ -1415,255 +1358,136 @@ object Streaming {
     requireIntegralId(vecs, idCol)
     val spark = vecs.sparkSession
     graft.plans.GraftExtensions.register(spark)
-    import graft.sources.SnapshotStore
+    import graft.operators.Similarity.{cosineNative, signBucket, hyperplaneBucket, scaledBucketBits}
     val vecsTbl = s"$indexPath/vectors"
-    val verdictsTbl = s"$indexPath/verdicts"
     val policyKey = "sink.bucketing"
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-      import graft.operators.Similarity.{cosineNative, signBucket, hyperplaneBucket, scaledBucketBits}
-      // writer lease: see incrementalDedupSink — refuse concurrent
-      // maintenance BEFORE staging, release at batch end
-      graft.sources.SinkLease.withLease(spark, indexPath, "sink") {
-      withBatchScope { scope =>
-      val haveIndex = SnapshotStore.latestVersion(spark, vecsTbl) > 0L
-      // one row per id WITHIN the batch too: an at-least-once source can
-      // repeat an id inside a single micro-batch, where the verdict
-      // anti-join can't see it (verdicts not yet written) and the
-      // a.id < b.id pair screen excludes equal ids — both copies would
-      // index and verdict. dropDuplicates mirrors the replay skip's
-      // per-id rule.
-      val once = scope.checkpoint(batch.toDF().dropDuplicates(idCol))
-      // the batch's ids drive every point-skip probe below (replay
-      // skip, append idempotence) — bounded driver state (None past
-      // the cap → full-snapshot fallback), the price of reading
-      // matching index files instead of the index
-      val batchIds = batchIdProbes(once, idCol, maxProbeKeys)
-      // ONE job answers "any rows?", "any null id?" and the probe set:
-      // Some(empty) means an empty batch -> skip; None (over cap) is a
-      // full batch that proceeds on the fallback
-      if (batchIds.forall(_.nonEmpty)) {
-        val fresh =
-          if (SnapshotStore.latestVersion(spark, verdictsTbl) > 0L)
-            once.join(scanPointsBounded(spark, verdictsTbl, idCol, batchIds)
-              .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-          else once
-        if (!fresh.isEmpty) {
-          // one materialization: width derivation + screen + index append
-          // all read this checkpoint (never the input lineage); the bucket
-          // column is recomputed per read — bits·dim fused multiply-adds
-          // over a batch, cheaper than a second materialization
-          val fb0 = scope.checkpoint(fresh.select(col(idCol),
-              col(vecCol).cast("array<float>").as("__v")))
-          val recorded: Option[String] =
-            if (haveIndex) SnapshotStore.state(spark, vecsTbl).meta.get(policyKey)
-            else None
-          // the policy the index is CURRENTLY written at — every commit
-          // (first append, re-bucket overwrite) carries it atomically
-          // with the data, so it can never lie about the stored widths
-          val (policy, bucketOf): (String, Column => Column) = bucketBits match {
-            case Some(b) =>
-              val want = s"fixed|$b"
-              recorded.filter(_ != want).foreach { r =>
-                throw new IllegalArgumentException(
-                  s"index at $vecsTbl is bucketed '$r'; reopening with " +
-                    s"'$want' would probe against incompatible stored buckets")
-              }
-              (want, v => signBucket(v, b))
-            case None =>
-              recorded.filter(_.startsWith("fixed|")).foreach { r =>
-                throw new IllegalArgumentException(
-                  s"index at $vecsTbl is pinned '$r'; reopening corpus-scaled " +
-                    "would probe against incompatible stored buckets")
-              }
-              val st = fb0.agg(count(lit(1)).as("n"),
-                max(size(col("__v"))).as("d")).head
-              val batchDim = st.getInt(1)
-              val rec = recorded.map { s =>
-                val Array(_, b, d) = s.split('|'); (b.toInt, d.toInt)
-              }
-              val dim = rec.map(_._2).getOrElse(batchDim)
-              require(batchDim == dim,
-                s"index at $indexPath was bucketed for dim=$dim vectors; batch has dim=$batchDim")
-              val indexN = if (haveIndex) SnapshotStore.rowCount(spark, vecsTbl) else 0L
-              // a crash between the index append and the verdict append
-              // replays the batch with its rows ALREADY in rowCount —
-              // adding the batch size again would double-count them and
-              // could derive different bits than recorded, triggering a
-              // spurious full re-bucket. Subtract the batch ids already
-              // indexed (point-skipped: zero files on the normal path).
-              val replayed =
-                if (haveIndex)
-                  scanPointsBounded(spark, vecsTbl, idCol, batchIds)
-                    .join(fb0.select(col(idCol)), Seq(idCol), "left_semi")
-                    .count()
-                else 0L
-              val bits = scaledBucketBits(
-                indexN + st.getLong(0) - replayed, targetBucketRows)
-              if (haveIndex && !rec.map(_._1).contains(bits)) {
-                // RE-BUCKET: rewrite every stored bucket at the new width
-                // from the vector itself (pure function) — ONE overwrite
-                // commit carrying the new policy meta, so the data and
-                // the recorded width change together or not at all
-                SnapshotStore.overwrite(
-                  SnapshotStore.snapshot(spark, vecsTbl)
-                    .select(col(idCol), col("__v"),
-                      hyperplaneBucket(col("__v"), bits, dim).as("__bucket")),
-                  vecsTbl, statsCols = Seq("__bucket", idCol),
-                  meta = Map(policyKey -> s"scaled|$bits|$dim"),
-                  bloomCols = Seq(idCol))
-              }
-              (s"scaled|$bits|$dim", v => hyperplaneBucket(v, bits, dim))
+    dedupSink(vecs, idCol, indexPath, Seq(vecsTbl), maxProbeKeys) { b =>
+      // every read projects the batch checkpoint; the cast and the
+      // bucket are recomputed per read (bits·dim multiply-adds, cheaper
+      // than a second materialization)
+      val fb0 = b.fresh.select(col(idCol), col(vecCol).cast("array<float>").as("__v"))
+      // the policy the index is CURRENTLY written at — every commit
+      // (append, re-bucket overwrite) carries it atomically with the data
+      val recorded = b.pin(vecsTbl).flatMap(_.meta.get(policyKey))
+      val (policy, bucketOf): (String, Column => Column) = bucketBits match {
+        case Some(bb) =>
+          val want = s"fixed|$bb"
+          recorded.filter(_ != want).foreach { r =>
+            throw new IllegalArgumentException(
+              s"index at $vecsTbl is bucketed '$r'; reopening with " +
+                s"'$want' would probe against incompatible stored buckets")
           }
-          val fb = fb0.select(col(idCol), col("__v"),
-            bucketOf(col("__v")).as("__bucket"))
-          val dupVsIndex =
-            if (haveIndex) {
-              // the screen reads ONLY index files whose __bucket range
-              // can intersect the batch's buckets — the probe set is
-              // batch-bounded AND capped (full-snapshot fallback past
-              // maxProbeKeys); after maintenance clusters by __bucket,
-              // so is the index I/O
-              val probeBuckets = boundedProbes(
-                fb0.select(bucketOf(col("__v")).as("__b")), "__b", maxProbeKeys)
-              // exclude an index row with the PROBE'S OWN id: after a
-              // crash between the index and verdict appends (below), the
-              // replayed vector would otherwise match itself at cos = 1
-              // and be verdicted a duplicate of itself
-              fb.join(scanPointsBounded(spark, vecsTbl, "__bucket", probeBuckets)
-                  .select(col(idCol).as("__iid"), col("__bucket"),
-                    col("__v").as("__iv")), Seq("__bucket"))
-                .filter(col("__iid") =!= col(idCol))
-                .filter(round(cosineNative(col("__v"), col("__iv")), 6) >= minCosine)
-                .select(col(idCol))
-            } else fb.select(col(idCol)).limit(0)
-          val dupInBatch = fb.as("a").join(fb.as("b"),
-              col("a.__bucket") === col("b.__bucket") &&
-                col(s"a.$idCol") < col(s"b.$idCol"))
-            .filter(round(cosineNative(col("a.__v"), col("b.__v")), 6) >= minCosine)
-            .select(col(s"b.$idCol").as(idCol))
-          val dups = dupVsIndex.union(dupInBatch).distinct()
-            .withColumn("__dup", lit(true))
-          val verdicts = scope.checkpoint(fb.select(col(idCol))
-            .join(dups, Seq(idCol), "left_outer")
-            .select(col(idCol), coalesce(!col("__dup"), lit(true)).as("keep")))
-            // read twice: index append + store
-          // INDEX FIRST, verdicts second: the verdict store is the replay
-          // skip, so a crash between the two commits must leave the id
-          // UN-verdicted (it re-screens next run — wasted work, never a
-          // lost index entry; the reverse order would skip the replay and
-          // silently drop the vector from the index forever). The anti-
-          // join on the index's own ids (point-skipped to the batch's)
-          // makes the replayed append idempotent.
-          val accepted = fb.join(verdicts.filter(col("keep")).select(col(idCol)),
-            Seq(idCol), "left_semi")
-          val acceptedNew =
-            if (haveIndex)
-              accepted.join(
-                scanPointsBounded(spark, vecsTbl, idCol, batchIds)
-                  .select(col(idCol)), Seq(idCol), "left_anti")
-            else accepted
-          // coalesced publish: concurrent staging, ordered logs (index
-          // BEFORE verdicts — the crash contract unchanged)
-          SnapshotStore.appendMany(spark,
-            (if (!acceptedNew.isEmpty)
-              Seq(SnapshotStore.AppendPart(acceptedNew, vecsTbl,
-                statsCols = Seq("__bucket", idCol),
-                meta = Map(policyKey -> policy), bloomCols = Seq(idCol)))
-            else Nil) :+
-            SnapshotStore.AppendPart(verdicts, verdictsTbl,
-              statsCols = Seq(idCol), bloomCols = Seq(idCol)))
-          // size-triggered maintenance: metadata-swap compaction that
-          // re-CLUSTERS vectors by __bucket (the screen's pruning key)
-          // and verdicts by id (the replay skip's) — no crash window,
-          // the point-skip stays sharp as batches accumulate, and the
-          // post-compaction vacuum bounds DISK (see maintainStore)
-          maintainStore(spark, vecsTbl, maxLiveFiles,
-            statsCols = Seq("__bucket", idCol),
-            clusterCols = Seq("__bucket"), bloomCols = Seq(idCol),
-            retainVersions = retainVersions)
-          maintainStore(spark, verdictsTbl, maxLiveFiles,
-            statsCols = Seq(idCol),
-            clusterCols = Seq(idCol), bloomCols = Seq(idCol),
-            retainVersions = retainVersions)
-          ()
-        }
+          (want, v => signBucket(v, bb))
+        case None =>
+          recorded.filter(_.startsWith("fixed|")).foreach { r =>
+            throw new IllegalArgumentException(
+              s"index at $vecsTbl is pinned '$r'; reopening corpus-scaled " +
+                "would probe against incompatible stored buckets")
+          }
+          val st = fb0.agg(count(lit(1)).as("n"), max(size(col("__v"))).as("d")).head
+          val batchDim = st.getInt(1)
+          val rec = recorded.map { s =>
+            val Array(_, bits, d) = s.split('|'); (bits.toInt, d.toInt)
+          }
+          val dim = rec.map(_._2).getOrElse(batchDim)
+          require(batchDim == dim,
+            s"index at $indexPath was bucketed for dim=$dim vectors; batch has dim=$batchDim")
+          // a crash between the index and verdict commits replays the
+          // batch with its rows ALREADY indexed: counting them twice could
+          // derive other bits than recorded and re-bucket for nothing
+          val bits = scaledBucketBits(
+            b.rows(vecsTbl) + st.getLong(0) - b.heldCount(vecsTbl), targetBucketRows)
+          if (b.has(vecsTbl) && !rec.map(_._1).contains(bits)) {
+            // RE-BUCKET: one overwrite commit carrying the new policy, so
+            // the data and the recorded width change together or not at all
+            SnapshotStore.overwrite(
+              b.read(vecsTbl).select(col(idCol), col("__v"),
+                hyperplaneBucket(col("__v"), bits, dim).as("__bucket")),
+              vecsTbl, statsCols = Seq("__bucket", idCol),
+              meta = Map(policyKey -> s"scaled|$bits|$dim"),
+              bloomCols = Seq(idCol))
+            b.repin(vecsTbl)
+          }
+          (s"scaled|$bits|$dim", v => hyperplaneBucket(v, bits, dim))
       }
-      } // checkpoints freed
-      } // lease released
-      ()
+      val fb = fb0.select(col(idCol), col("__v"), bucketOf(col("__v")).as("__bucket"))
+      val dupVsIndex =
+        if (b.has(vecsTbl)) {
+          val probeBuckets = boundedProbes(fb, "__bucket", maxProbeKeys)
+          // exclude an index row with the PROBE'S OWN id: a crash-replayed
+          // vector would otherwise match itself at cos = 1
+          fb.join(b.probe(vecsTbl, "__bucket", probeBuckets)
+              .select(col(idCol).as("__iid"), col("__bucket"), col("__v").as("__iv")),
+              Seq("__bucket"))
+            .filter(col("__iid") =!= col(idCol))
+            .filter(round(cosineNative(col("__v"), col("__iv")), 6) >= minCosine)
+            .select(col(idCol))
+        } else fb.select(col(idCol)).limit(0)
+      val dupInBatch = fb.as("a").join(fb.as("b"),
+          col("a.__bucket") === col("b.__bucket") &&
+            col(s"a.$idCol") < col(s"b.$idCol"))
+        .filter(round(cosineNative(col("a.__v"), col("b.__v")), 6) >= minCosine)
+        .select(col(s"b.$idCol").as(idCol))
+      val dups = dupVsIndex.union(dupInBatch).distinct().withColumn("__dup", lit(true))
+      Screened(
+        fb.select(col(idCol)).join(dups, Seq(idCol), "left_outer")
+          .select(col(idCol), coalesce(!col("__dup"), lit(true)).as("keep")),
+        None,
+        Seq(SnapshotStore.AppendPart(fb, vecsTbl, statsCols = Seq("__bucket", idCol),
+          meta = Map(policyKey -> policy), bloomCols = Seq(idCol))))
+    } { () =>
+      // metadata-swap compaction re-CLUSTERS vectors by __bucket (the
+      // screen's pruning key) and verdicts by id (the replay skip's)
+      maintainStore(spark, vecsTbl, maxLiveFiles,
+        statsCols = Seq("__bucket", idCol),
+        clusterCols = Seq("__bucket"), bloomCols = Seq(idCol),
+        retainVersions = retainVersions)
+      maintainStore(spark, s"$indexPath/verdicts", maxLiveFiles,
+        statsCols = Seq(idCol),
+        clusterCols = Seq(idCol), bloomCols = Seq(idCol),
+        retainVersions = retainVersions)
     }
   }
 
   /** Streaming CONTAINMENT dedup against a durable shingle-postings
-    * index — the streaming twin of
+    * index on the [[dedupSink]] frame — the streaming twin of
     * [[graft.operators.Dedup.containmentPairs]]'s rare-shingle blocker,
     * completing the sink family (MinHash bands / cosine LSH /
-    * containment postings). Each micro-batch screens BATCH-VS-INDEX
-    * only: the batch's shingle hashes probe the accepted docs' postings
-    * (never index × index); a shared shingle whose document frequency
-    * over index + batch lies in [2, `dfCap`] makes a candidate pair
-    * (the batch blocker's rarity rule, evaluated on the corpus seen so
-    * far — running df only grows, so the sink screens at least the
-    * candidates the batch blocker would), and candidates verify with
-    * the EXACT sorted-intersect containment, so every flag is sound. A
-    * doc is a duplicate when contained in (or containing) any ACCEPTED
-    * doc at >= `minContainment`, or any lower-id batch-mate
-    * (keep-lowest). Novel docs append their signatures AND postings;
-    * verdicts land append-only and double as the replay skip —
-    * restart-safe like the other sinks, with the same crash story:
-    * index appends land BEFORE the verdict (an unverdicted id
-    * re-screens; the anti-joins make replayed appends idempotent and
-    * the df count excludes the batch's own ids from the index side, so
-    * a half-indexed doc never double-counts or matches itself).
+    * containment postings).
     *
-    * Scale shape — STATE IS SNAPSHOT TABLES
-    * ([[graft.sources.SnapshotStore]]), so the per-batch index I/O is
-    * PRUNED, not a full-store scan:
+    * THE SCREEN: BATCH-VS-INDEX only. The fresh docs' shingle hashes
+    * probe the accepted docs' postings (never index × index), reading
+    * only postings files whose `h` range meets the batch's shingle set.
+    * A shared shingle whose document frequency over index + batch lies
+    * in [2, `dfCap`] makes a candidate pair (the batch blocker's rarity
+    * rule over the corpus seen so far — running df only grows, so the
+    * sink screens at least the candidates the batch blocker would), and
+    * candidates verify with the EXACT sorted-intersect containment, so
+    * every flag is sound. A doc is a duplicate when contained in (or
+    * containing) any ACCEPTED doc at >= `minContainment`, or any
+    * lower-id batch-mate (keep-lowest). The keeper join-back reads only
+    * the sigs files that can hold the candidate ids, and the verify
+    * join picks its strategy from the MEASURED bytes of that side
+    * ([[graft.operators.Dedup]]'s verifySideHint). Per-batch compare
+    * cost tracks batch size × shingle df, and read cost the batch's
+    * probe footprint — not the index. A batch whose docs yield ZERO
+    * shingles (null texts) probes nothing and verdicts every doc
+    * keep=true: it must never wedge the stream.
     *
-    *  - the postings probe reads only files whose `h` range intersects
-    *    the batch's shingle set ([[graft.sources.SnapshotStore.scanPoints]]
-    *    — sharp once maintenance clusters the store by `h`), with the
-    *    exact semi-join re-applied on what pruning leaves;
-    *  - the keeper join-back point-skips the sigs store to the
-    *    CANDIDATE doc ids (log boxes + parquet blooms on id) instead of
-    *    reading every accepted signature, and the verify join picks its
-    *    strategy from the MEASURED bytes of that bounded side
-    *    ([[graft.operators.Dedup]]'s verifySideHint — the same
-    *    static-estimate cliff and AQE array-bytes OOM class the batch
-    *    operators closed in r17 was reachable from this join);
-    *  - the replay skip and append-idempotence anti-joins point-skip on
-    *    the batch's ids;
-    *  - compaction is [[graft.sources.SnapshotStore.maintain]]'s
-    *    metadata swap (postings re-cluster by `h`, sigs/verdicts by id)
-    *    — no delete→rename window to die inside of.
-    *
-    * Nothing compares index docs to each other, so per-batch COMPARE
-    * cost tracks batch size × shingle df, and per-batch READ cost
-    * tracks the batch's probe footprint — not the index.
-    *
-    * CONTRACT: `idCol` must be integral (the point-skip probes hash
-    * long ids) — validated at construction. Per-batch DRIVER state is
-    * capped at `maxProbeKeys` distinct longs per probe collect (ids,
-    * shingle hashes, candidate keepers); past the cap the point-skip
-    * read degrades to the full snapshot — identical verdicts, no
-    * pruning for that batch. A batch whose docs yield ZERO shingles
-    * (all texts shorter than `shingleN` tokens) probes nothing, reads
-    * nothing, and verdicts every doc keep=true — it must never wedge
-    * the stream (the failure would precede the verdict commit, so the
-    * poison batch would replay forever). `retainVersions` bounds
-    * maintenance vacuum's retained versions (default 2; raise to
-    * time-travel over sink state). Verdicts are an ordinary snapshot
-    * table at `indexPath/verdicts` — `graft_sink_verdicts` in SQL, or
-    * a [[graft.sources.v2.SnapshotStreamSource]] `readStream` follows
-    * them live.
+    * THE TABLES, in commit order: `indexPath/sigs` (`idCol, hs, n_sh`;
+    * future verification needs them), `indexPath/postings` (`idCol, h`;
+    * candidates come from postings, so a sig without postings is
+    * invisible, never wrong) and `indexPath/verdicts`. Past
+    * `compactAfterFiles` live files maintenance re-clusters postings by
+    * `h` and sigs and verdicts by id, then vacuums to `retainVersions`
+    * (default 2; raise it to time-travel over sink state).
     */
   def containmentDedupSink(docs: DataFrame, idCol: String, textCol: String,
                            indexPath: String, shingleN: Int = 3,
                            minContainment: Double = 0.8, dfCap: Int = 10,
                            compactAfterFiles: Int = 64,
                            maxProbeKeys: Int = 1 << 20,
-                           retainVersions: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                           retainVersions: Int = 2): DataStreamWriter[Row] = {
     require(dfCap >= 2, s"dfCap must be >= 2 to pair anything, got $dfCap")
     require(compactAfterFiles > 0,
       s"compactAfterFiles must be positive: $compactAfterFiles")
@@ -1672,166 +1496,93 @@ object Streaming {
     requireIntegralId(docs, idCol)
     val spark = docs.sparkSession
     graft.plans.GraftExtensions.register(spark)
-    import graft.sources.SnapshotStore
     val sigsTbl = s"$indexPath/sigs"
     val postTbl = s"$indexPath/postings"
-    val verdictsTbl = s"$indexPath/verdicts"
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-      // writer lease: see incrementalDedupSink — refuse concurrent
-      // maintenance BEFORE staging, release at batch end
-      graft.sources.SinkLease.withLease(spark, indexPath, "sink") {
-      withBatchScope { scope =>
-      val once = scope.checkpoint(batch.toDF().dropDuplicates(idCol))
-      val batchIds = batchIdProbes(once, idCol, maxProbeKeys)
-      // ONE job answers "any rows?", "any null id?" and the probe set:
-      // Some(empty) means an empty batch -> skip; None (over cap) is a
-      // full batch that proceeds on the fallback
-      if (batchIds.forall(_.nonEmpty)) {
-        val fresh =
-          if (SnapshotStore.latestVersion(spark, verdictsTbl) > 0L)
-            once.join(scanPointsBounded(spark, verdictsTbl, idCol, batchIds)
-              .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-          else once
-        if (!fresh.isEmpty) {
-          // (id, hs, n_sh): the SAME sorted-shingle-hash signatures the
-          // batch operator verifies with (prefix_len unused here)
-          val fb = scope.checkpoint(graft.operators.Dedup
-            .hashSignatures(fresh, idCol, textCol, shingleN, minContainment)
-            .select(col(idCol), col("hs"), col("n_sh")))
-          val bpost = scope.checkpoint(fb.select(col(idCol), explode(col("hs")).as("h")))
-          val haveSigs = SnapshotStore.latestVersion(spark, sigsTbl) > 0L
-          // postings may trail sigs by one crash (sigs commit first,
-          // below) — gate the probe on the POSTINGS table itself
-          val havePost = SnapshotStore.latestVersion(spark, postTbl) > 0L
-          // index postings matched to the batch's shingles — file-pruned
-          // to the batch's probe set when it is driver-collectable
-          // (bounded; full snapshot past the cap, nothing read for an
-          // all-short-text batch with zero shingles), exact semi-join
-          // re-applied either way — minus the batch's own ids (a
-          // crash-replayed half-indexed doc must not double-count its
-          // shingles' df or pair with itself)
-          val iMatched = scope.checkpoint((
-            if (havePost) {
-              val probeHs = boundedProbes(bpost, "h", maxProbeKeys)
-              scanPointsBounded(spark, postTbl, "h", probeHs)
-                .join(bpost.select(col("h")).distinct(), Seq("h"), "left_semi")
-                .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
-            } else bpost.limit(0))
-            .select(col("h"), col(idCol).as("__iid")))
-          // running document frequency per batch shingle = batch + index
-          val rare = bpost.groupBy(col("h")).agg(count(lit(1)).as("__dfb"))
-            .join(iMatched.groupBy(col("h")).agg(count(lit(1)).as("__dfi")),
-              Seq("h"), "left")
-            .select(col("h"), (col("__dfb") + coalesce(col("__dfi"), lit(0L))).as("__df"))
-            .filter(col("__df") >= 2 && col("__df") <= dfCap)
-            .select(col("h"))
-          val bp = bpost.join(rare, Seq("h"), "left_semi")
-          val candI = scope.checkpoint(bp.join(iMatched, Seq("h"))
-            .select(col("__iid").as("doc_a"), col(idCol).as("doc_b"))
-            .distinct()) // read twice: the verify join + the keeper probe
-          val candB = bp.select(col("h"), col(idCol).as("doc_a"))
-            .join(bp.select(col("h"), col(idCol).as("doc_b")), Seq("h"))
-            .filter(col("doc_a") < col("doc_b"))
-            .select(col("doc_a"), col("doc_b"))
-            .distinct()
-          // doc_a resolves from the index OR the batch (an in-batch
-          // pair's keeper is a batch doc); the INDEX side point-skips to
-          // the candidate keepers — candidate count is bounded by the
-          // batch's rare postings × dfCap, so the collect is
-          // batch-shaped (and capped like every sink collect), and the
-          // sigs read is blooms-deep, not a scan; zero candidates read
-          // zero files
-          val keeperIds = boundedProbes(candI, "doc_a", maxProbeKeys)
-          val aSigs = scope.checkpoint((
-            if (haveSigs)
-              scanPointsBounded(spark, sigsTbl, idCol, keeperIds)
-                .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
-                .unionByName(fb)
-            else fb)) // measured twice: bytes + the join build
-          // verify-join strategy from MEASURED signature bytes — the
-          // static-estimate broadcast cliff (and its AQE driver-OOM
-          // class) is the same one Dedup.verifySideHint closed for the
-          // batch operators
-          val hint = graft.operators.Dedup.verifySideHint(aSigs)
-          val aSets = hint(aSigs.select(col(idCol).as("doc_a"),
-            col("hs").as("hs_a"), col("n_sh").cast("long").as("n_a")))
-          val dups = candI.union(candB)
-            .join(aSets, Seq("doc_a"))
-            .join(fb.select(col(idCol).as("doc_b"), col("hs").as("hs_b"),
-              col("n_sh").cast("long").as("n_b")), Seq("doc_b"))
-            .select(col("doc_b"),
-              call_function("sorted_intersect_count", col("hs_a"), col("hs_b"))
-                .as("n_inter"),
-              col("n_a"), col("n_b"))
-            .filter(greatest(round(col("n_inter") / col("n_a"), 6),
-              round(col("n_inter") / col("n_b"), 6)) >= minContainment)
-            .select(col("doc_b").as(idCol)).distinct()
-            .withColumn("__dup", lit(true))
-          val verdicts = scope.checkpoint(fb.select(col(idCol))
-            .join(dups, Seq(idCol), "left_outer")
-            .select(col(idCol), coalesce(!col("__dup"), lit(true)).as("keep")))
-          val accepted = fb.join(verdicts.filter(col("keep")).select(col(idCol)),
-            Seq(idCol), "left_semi")
-          // SIGS first (future verification needs them), POSTINGS second
-          // (candidates come from postings, so a sig without postings is
-          // invisible, never wrong), VERDICTS last (the replay skip) — a
-          // crash anywhere re-screens, never loses an accepted doc; the
-          // idempotence anti-joins point-skip to the batch's own ids
-          val acceptedSigs =
-            if (haveSigs)
-              accepted.join(scanPointsBounded(spark, sigsTbl, idCol, batchIds)
-                .select(col(idCol)), Seq(idCol), "left_anti")
-            else accepted
-          val acceptedPost = accepted.select(col(idCol), explode(col("hs")).as("h"))
-          val acceptedPostNew =
-            if (havePost)
-              acceptedPost.join(
-                scanPointsBounded(spark, postTbl, idCol, batchIds)
-                  .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-            else acceptedPost
-          // coalesced publish: all three stores stage concurrently, the
-          // logs land in the contract's order (sigs -> postings ->
-          // verdicts) — the batch previously paid the ~150 ms fixed
-          // staging latency three times serially
-          SnapshotStore.appendMany(spark,
-            (if (!acceptedSigs.isEmpty)
-              Seq(SnapshotStore.AppendPart(acceptedSigs, sigsTbl,
-                statsCols = Seq(idCol), bloomCols = Seq(idCol)))
-            else Nil) ++
-            (if (!acceptedPostNew.isEmpty)
-              Seq(SnapshotStore.AppendPart(acceptedPostNew, postTbl,
-                statsCols = Seq("h", idCol), bloomCols = Seq(idCol, "h")))
-            else Nil) :+
-            SnapshotStore.AppendPart(verdicts, verdictsTbl,
-              statsCols = Seq(idCol), bloomCols = Seq(idCol)))
-          // metadata-swap maintenance: postings re-cluster by `h` (the
-          // probe's pruning key), sigs and verdicts by id (the bloom
-          // point-skips') — per-batch appends stop accumulating small
-          // files, the pruning stays sharp as the index grows, and the
-          // post-compaction vacuum bounds DISK (see maintainStore)
-          maintainStore(spark, sigsTbl, compactAfterFiles,
-            statsCols = Seq(idCol), clusterCols = Seq(idCol),
-            bloomCols = Seq(idCol), retainVersions = retainVersions)
-          maintainStore(spark, postTbl, compactAfterFiles,
-            statsCols = Seq("h", idCol), clusterCols = Seq("h"),
-            bloomCols = Seq(idCol, "h"), retainVersions = retainVersions)
-          maintainStore(spark, verdictsTbl, compactAfterFiles,
-            statsCols = Seq(idCol), clusterCols = Seq(idCol),
-            bloomCols = Seq(idCol), retainVersions = retainVersions)
-          ()
-        }
-      }
-      } // checkpoints freed
-      } // lease released
-      ()
+    dedupSink(docs, idCol, indexPath, Seq(sigsTbl, postTbl), maxProbeKeys) { b =>
+      // (id, hs, n_sh): the SAME sorted-shingle-hash signatures the batch
+      // operator verifies with
+      val fb = b.scope.checkpoint(graft.operators.Dedup
+        .hashSignatures(b.fresh, idCol, textCol, shingleN, minContainment)
+        .select(col(idCol), col("hs"), col("n_sh")), eager = b.freshIds.isEmpty)
+      // with the fresh ids on the driver, one job materializes the
+      // signatures and names the docs without a shingle: accepted, they
+      // have no postings rows to append
+      val shingleless: Set[Long] =
+        if (b.freshIds.isEmpty) Set.empty
+        else collectAll(fb.select(col(idCol).cast("long"), coalesce(col("n_sh"), lit(0)) <= 0)
+          .queryExecution.toRdd)(_.filter(_.getBoolean(1)).map(_.getLong(0))).toSet
+      val bpost = b.scope.checkpoint(fb.select(col(idCol), explode(col("hs")).as("h")), eager = false)
+      // index postings matched to the batch's shingles — minus the
+      // batch's own ids (a crash-replayed half-indexed doc must not
+      // double-count its shingles' df or pair with itself)
+      val iMatched = b.scope.checkpoint((
+        if (b.has(postTbl))
+          b.probe(postTbl, "h", boundedProbes(bpost, "h", maxProbeKeys))
+            .join(bpost.select(col("h")).distinct(), Seq("h"), "left_semi")
+            .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
+        else bpost.limit(0))
+        .select(col("h"), col(idCol).as("__iid")))
+      // running document frequency per batch shingle = batch + index
+      val rare = bpost.groupBy(col("h")).agg(count(lit(1)).as("__dfb"))
+        .join(iMatched.groupBy(col("h")).agg(count(lit(1)).as("__dfi")),
+          Seq("h"), "left")
+        .select(col("h"), (col("__dfb") + coalesce(col("__dfi"), lit(0L))).as("__df"))
+        .filter(col("__df") >= 2 && col("__df") <= dfCap)
+        .select(col("h"))
+      val bp = bpost.join(rare, Seq("h"), "left_semi")
+      val candI = b.scope.checkpoint(bp.join(iMatched, Seq("h"))
+        .select(col("__iid").as("doc_a"), col(idCol).as("doc_b"))
+        .distinct()) // read twice: the verify join + the keeper probe
+      val candB = bp.select(col("h"), col(idCol).as("doc_a"))
+        .join(bp.select(col("h"), col(idCol).as("doc_b")), Seq("h"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select(col("doc_a"), col("doc_b"))
+        .distinct()
+      // doc_a resolves from the index OR the batch (an in-batch pair's
+      // keeper is a batch doc); the index side reads only the sigs files
+      // that can hold a candidate keeper — zero candidates read nothing
+      val aSigs = b.scope.checkpoint(
+        if (b.has(sigsTbl))
+          b.probe(sigsTbl, idCol, boundedProbes(candI, "doc_a", maxProbeKeys))
+            .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
+            .unionByName(fb)
+        else fb) // measured twice: bytes + the join build
+      val hint = graft.operators.Dedup.verifySideHint(aSigs)
+      val aSets = hint(aSigs.select(col(idCol).as("doc_a"),
+        col("hs").as("hs_a"), col("n_sh").cast("long").as("n_a")))
+      val dups = candI.union(candB)
+        .join(aSets, Seq("doc_a"))
+        .join(fb.select(col(idCol).as("doc_b"), col("hs").as("hs_b"),
+          col("n_sh").cast("long").as("n_b")), Seq("doc_b"))
+        .select(col("doc_b"),
+          call_function("sorted_intersect_count", col("hs_a"), col("hs_b"))
+            .as("n_inter"),
+          col("n_a"), col("n_b"))
+        .filter(greatest(round(col("n_inter") / col("n_a"), 6),
+          round(col("n_inter") / col("n_b"), 6)) >= minContainment)
+        .select(col("doc_b").as(idCol)).distinct()
+        .withColumn("__dup", lit(true))
+      Screened(
+        fb.select(col(idCol)).join(dups, Seq(idCol), "left_outer")
+          .select(col(idCol), coalesce(!col("__dup"), lit(true)).as("keep")),
+        None,
+        Seq(SnapshotStore.AppendPart(fb, sigsTbl, statsCols = Seq(idCol), bloomCols = Seq(idCol)),
+          SnapshotStore.AppendPart(bpost, postTbl,
+            statsCols = Seq("h", idCol), bloomCols = Seq(idCol, "h"))),
+        rowless = Map(postTbl -> shingleless))
+    } { () =>
+      // metadata-swap maintenance: postings re-cluster by `h` (the
+      // probe's pruning key), sigs and verdicts by id (the point-skips')
+      maintainStore(spark, sigsTbl, compactAfterFiles,
+        statsCols = Seq(idCol), clusterCols = Seq(idCol),
+        bloomCols = Seq(idCol), retainVersions = retainVersions)
+      maintainStore(spark, postTbl, compactAfterFiles,
+        statsCols = Seq("h", idCol), clusterCols = Seq("h"),
+        bloomCols = Seq(idCol, "h"), retainVersions = retainVersions)
+      maintainStore(spark, s"$indexPath/verdicts", compactAfterFiles,
+        statsCols = Seq(idCol), clusterCols = Seq(idCol),
+        bloomCols = Seq(idCol), retainVersions = retainVersions)
     }
-  }
-
-  /** Read the current snapshot of an [[upsertSink]] store. */
-  def readUpsertStore(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val cur = StateFs.readString(spark, s"$path/_current").getOrElse(
-      throw new IllegalArgumentException(s"no snapshot marker at $path/_current"))
-    spark.read.parquet(s"$path/$cur")
   }
 
   /** Streaming exact dedup on content fingerprint, state bounded by the

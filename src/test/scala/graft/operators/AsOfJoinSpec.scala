@@ -491,6 +491,13 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       forced.queryExecution.executedPlan.toString.take(2000))
     // both forms agree, column for column
     assert(auto.exceptAll(forced).union(forced.exceptAll(auto)).isEmpty)
+    // the session threshold in Spark's own upper-case unit format
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    try {
+      val mb = AsOfJoin.asOfAuto(left, right, Seq("k"), "t", "rt", Seq("v"))
+      assert(mb.queryExecution.executedPlan.toString.contains("sorted_asof_lookup"),
+        "a 10MB threshold must fit the tiny right side")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("rangeJoinAuto selects by right-side statistics: broadcast small, merge large") {
@@ -504,6 +511,12 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(forced.queryExecution.executedPlan.toString.contains("RangeJoin"),
       forced.queryExecution.executedPlan.toString.take(2000))
     assert(auto.exceptAll(forced).union(forced.exceptAll(auto)).isEmpty)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    try {
+      val mb = AsOfJoin.rangeJoinAuto(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L)
+      assert(mb.queryExecution.executedPlan.toString.contains("sorted_band_slice"),
+        "a 10MB threshold must fit the tiny right side")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("rangeJoinNative ≡ composed rangeJoin on real data, asymmetric bounds") {

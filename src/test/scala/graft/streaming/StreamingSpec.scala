@@ -11,6 +11,11 @@ class StreamingSpec extends SparkSpec
   import spark.implicits._
 
   private val HourUs = 3600000000L
+  // the most Spark jobs a steady-state batch of these sinks may run in
+  // the job-budget spec's shape (the screens' own joins, plus the
+  // batch frame's count, verdict collect and staged writes)
+  private val CtJobs = 39
+  private val EmJobs = 13
 
   test("windowedCounts aggregates per event-time window under a watermark") {
     implicit val sqlCtx = spark.sqlContext
@@ -351,13 +356,79 @@ class StreamingSpec extends SparkSpec
       // batch 2: key 1 updated, key 3 inserted, STALE key-2 row ignored
       mem.addData((1L, 5L, "v5"), (3L, 1L, "x1"), (2L, 0L, "stale"))
       q.processAllAvailable()
-      val snap = Streaming.readUpsertStore(spark, dir)
+      val snap = graft.sources.SnapshotStore.snapshot(spark, dir)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
       assert(snap == Map(
         1L -> (5L, "v5"),   // latest version wins across batches
         2L -> (1L, "w1"),   // stale lower-version update discarded
         3L -> (1L, "x1")))  // new key inserted
     } finally q.stop()
+  }
+
+  test("upsertSink re-runs a batch from the query checkpoint to the same snapshot") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sources.SnapshotStore
+    val dir = "file:" + java.nio.file.Files.createTempDirectory("graft-upsert-replay").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-upsert-replay-ck").toString
+    val mem = MemoryStream[(Long, Long, String)]
+    def start() = Streaming.upsertSink(
+      mem.toDF().toDF("key", "version", "payload"),
+      keys = Seq("key"), orderCols = Seq("version"), path = dir)
+      .option("checkpointLocation", ckpt).start()
+    def rows: Set[(Long, Long, String)] = SnapshotStore.snapshot(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    val q1 = start()
+    try {
+      mem.addData((1L, 1L, "v1"), (2L, 1L, "w1"))
+      q1.processAllAvailable()
+      mem.addData((1L, 5L, "v5"), (3L, 1L, "x1"), (2L, 0L, "stale"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val before = rows
+    val v = SnapshotStore.latestVersion(spark, dir)
+    // forget that batch 1 committed: the restarted query runs it again,
+    // over the snapshot that batch 1 itself wrote
+    val commit = new java.io.File(ckpt, "commits/1")
+    assert(commit.delete(), s"premise: $commit")
+    new java.io.File(ckpt, "commits/.1.crc").delete()
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(SnapshotStore.latestVersion(spark, dir) == v + 1, "premise: the batch re-ran")
+    assert(rows == before && before == Set((1L, 5L, "v5"), (2L, 1L, "w1"), (3L, 1L, "x1")),
+      s"replayed batch changed the snapshot: $before -> $rows")
+  }
+
+  test("upsertSink keeps two versions of files: disk stays bounded over batches") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sources.SnapshotStore
+    val dir = "file:" + java.nio.file.Files.createTempDirectory("graft-upsert-bound").toString
+    val mem = MemoryStream[(Long, Long, String)]
+    def dataFiles: Int = Option(new java.io.File(new java.net.URI(s"$dir/data")).listFiles())
+      .map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
+    // the protocol clock past the vacuum grace, so every vacuum reclaims
+    val realClock = SnapshotStore.clockMillis
+    try {
+      SnapshotStore.clockMillis = () => System.currentTimeMillis() + 21L * 60 * 1000
+      val q = Streaming.upsertSink(
+        mem.toDF().toDF("key", "version", "payload"),
+        keys = Seq("key"), orderCols = Seq("version"), path = dir).start()
+      try {
+        (1 to 5).foreach { b =>
+          mem.addData((1L to 20L).map(k => (k, b.toLong, s"p$b")))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    } finally SnapshotStore.clockMillis = realClock
+    val v = SnapshotStore.latestVersion(spark, dir)
+    assert(v == 5L, s"one overwrite per batch: $v")
+    assert(SnapshotStore.vacuumFloor(spark, dir).contains(v - 1),
+      s"vacuum retains two versions: floor ${SnapshotStore.vacuumFloor(spark, dir)} at v$v")
+    val live = SnapshotStore.state(spark, dir).live.size
+    val prev = SnapshotStore.state(spark, dir, Some(v - 1)).live.size
+    assert(dataFiles == live + prev,
+      s"$dataFiles data files on disk for $live live + $prev retained")
+    assert(SnapshotStore.snapshot(spark, dir).collect()
+      .forall(r => r.getLong(1) == 5L && r.getString(2) == "p5"))
   }
 
   test("dedupStream drops same-fingerprint rows within the watermark") {
@@ -1493,6 +1564,92 @@ class StreamingSpec extends SparkSpec
       w => { memN.addData(w.map { case (i, t) => (Option(i), t) }); () })
     assert(verdictsN == verdicts)
     assert(jobsN > 0 && jobsN <= 10, s"nullable-id steady-state batch ran $jobsN Spark jobs")
+  }
+
+  test("steady-state embeddingDedupSink and containmentDedupSink batches run a pinned job count") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sources.SnapshotStore
+    // the incrementalDedupSink guard's shape: the third 40-doc batch, two
+    // of whose docs duplicate indexed docs (the screen has real matches)
+    val ids = Seq((1L to 40L), (41L to 81L), (101L to 142L))
+    val twinOf = Map(81L -> 3L, 141L -> 45L, 142L -> 7L)
+    def lastWaveJobs(idCol: String)(start: String => org.apache.spark.sql.streaming.StreamingQuery)(
+        feed: Seq[Long] => Unit): (Int, Map[Long, Boolean]) = {
+      val d = "file:" + java.nio.file.Files.createTempDirectory("graft-jobbudget2").toString
+      val q = start(d)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(js.properties).exists(
+              _.getProperty("spark.jobGroup.id") == q.runId.toString))
+            jobs.incrementAndGet()
+      }
+      try {
+        ids.init.foreach { w => feed(w); q.processAllAvailable() }
+        org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
+        spark.sparkContext.addSparkListener(listener)
+        try {
+          feed(ids.last); q.processAllAvailable()
+          org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
+        } finally spark.sparkContext.removeSparkListener(listener)
+      } finally q.stop()
+      (jobs.get, SnapshotStore.snapshot(spark, s"$d/verdicts").collect()
+        .map(r => r.getAs[Long](idCol) -> r.getAs[Boolean]("keep")).toMap)
+    }
+    def premise(verdicts: Map[Long, Boolean]): Unit =
+      assert(verdicts.size == 123 && !verdicts(81L) && !verdicts(141L) &&
+        !verdicts(142L) && verdicts(140L), s"premise: real matches: $verdicts")
+    val ct = MemoryStream[(Long, String)]
+    val (ctJobs, ctVerdicts) = lastWaveJobs("doc_id")(d => Streaming.containmentDedupSink(
+      ct.toDF().toDF("doc_id", "text"), "doc_id", "text", d).start()) { w =>
+      ct.addData(w.map(i => i -> randomDoc(twinOf.getOrElse(i, i)))); ()
+    }
+    premise(ctVerdicts)
+    info(s"containmentDedupSink steady-state batch: $ctJobs Spark jobs")
+    assert(ctJobs > 0 && ctJobs <= CtJobs, s"containment steady-state batch ran $ctJobs Spark jobs")
+    val em = MemoryStream[(Long, Seq[Float])]
+    val (emJobs, emVerdicts) = lastWaveJobs("vec_id")(d => Streaming.embeddingDedupSink(
+      em.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", d).start()) { w =>
+      em.addData(w.map(i => i -> embVec(twinOf.getOrElse(i, i)))); ()
+    }
+    premise(emVerdicts)
+    info(s"embeddingDedupSink steady-state batch: $emJobs Spark jobs")
+    assert(emJobs > 0 && emJobs <= EmJobs, s"embedding steady-state batch ran $emJobs Spark jobs")
+  }
+
+  test("embeddingDedupSink batches log no LogicalRDD output-column mismatch") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.logging.log4j.core
+    // the mismatch warning fires when a checkpointed frame's analyzed
+    // and optimized outputs disagree on a column's name or type
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new core.appender.AbstractAppender(
+        "graft-logical-rdd", null, null, true, core.config.Property.EMPTY_ARRAY) {
+      override def append(e: core.LogEvent): Unit = {
+        lines.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.execution.LogicalRDD").asInstanceOf[core.Logger]
+    logger.addAppender(appender)
+    val tmp = "file:" + java.nio.file.Files.createTempDirectory("graft-embwarn").toString
+    val mem = MemoryStream[(Long, Seq[Float])]
+    val q = Streaming.embeddingDedupSink(mem.toDF().toDF("vec_id", "embedding"),
+      "vec_id", "embedding", tmp).start()
+    try {
+      (0 until 3).foreach { b =>
+        mem.addData((1L to 4L).map(i => (b * 10L + i, embVec(b * 10L + i))))
+        q.processAllAvailable()
+      }
+    } finally {
+      q.stop()
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(graft.sources.SnapshotStore.rowCount(spark, s"$tmp/verdicts") == 12L)
+    val mismatch = lines.toArray.map(_.toString).filter(_.contains("output columns are expected"))
+    assert(mismatch.isEmpty, mismatch.mkString("\n"))
   }
 
   test("incrementalDedupSink collects stay within maxProbeKeys on the driver") {

@@ -3,10 +3,11 @@
 # the full test suite, and the DuckDB oracle compare (Verify, then
 # tools/check.py) at sf0.001 and sf0.01. check.py fails on any key that
 # does not match its oracle or has no output. Last comes a perfbench
-# smoke: the checker self-test and a 4-second dedup_stream run, which
-# must report "correct": true with 0 failed steps. A zero exit means
-# every oracle key passed at both scale factors, every test is green and
-# the benchmarked sink path verdicts correctly.
+# smoke: the checker self-test, then a 4-second run of each benchmark
+# workload (dedup_stream, nightly_ingest), each of which must report
+# "correct": true with 0 failed steps. A zero exit means every oracle
+# key passed at both scale factors, every test is green and both
+# benchmarked pipelines produce correct results.
 #
 # Usage: tools/tier1.sh <testdata dir holding sf0.001/ and sf0.01/>
 # Verify runs with $SPARK_GRAFT_CPUS threads (default 8).
@@ -35,15 +36,17 @@ for sf in sf0.001 sf0.01; do
   echo "== oracle $sf"
   python3 tools/check.py "$data/$sf" "$out/$sf" | grep -v ' PASS '
 done
-# the benchmarked streaming sink through the public API: the checkers
-# must reject corrupted results, then a short dedup_stream run must
-# verdict every batch correctly
+# both benchmark workloads through the public API: the checkers must
+# reject corrupted results, then a short run of each workload must check
+# every step correct
 echo "== perfbench smoke"
 python3 perfbench/run.py --self-test
-last=$(python3 perfbench/run.py --workload dedup_stream --seconds 4 --trace 0 | tail -n 1)
-echo "$last"
-if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$last"; then
-  echo "tier-1: perfbench dedup_stream smoke is not correct with 0 failed steps" >&2
-  exit 1
-fi
+for w in dedup_stream nightly_ingest; do
+  last=$(python3 perfbench/run.py --workload "$w" --seconds 4 --trace 0 | tail -n 1)
+  echo "$last"
+  if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$last"; then
+    echo "tier-1: perfbench $w smoke is not correct with 0 failed steps" >&2
+    exit 1
+  fi
+done
 echo "tier-1 green"
