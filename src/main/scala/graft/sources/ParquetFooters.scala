@@ -12,6 +12,13 @@ import org.apache.spark.sql.SparkSession
   * point reads refine through. Everything goes through the Hadoop
   * FileSystem API (HDFS/S3/file: alike); footers are read with
   * parquet-hadoop, which ships with Spark.
+  *
+  * The blooms it probes are sized per file: [[SnapshotStore]] staging
+  * writes each as the smallest power-of-two bitset (1 KiB to 1 MiB)
+  * holding the chunk's distinct values at a 1% false-positive rate, so
+  * a probe's false positives stay near that rate whatever the file's
+  * size. A fully dictionary-encoded chunk carries no bloom at all; its
+  * dictionary answers membership instead ([[prunedFrom]]).
   */
 object ParquetFooters {
 

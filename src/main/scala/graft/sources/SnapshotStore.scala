@@ -462,9 +462,22 @@ object SnapshotStore {
 
   // ---------------------------------------------------------- data files
 
+  /** Candidate bitsets parquet's adaptive bloom writer keeps per
+    * `bloomCols` column: powers of two from the 1 MiB cap
+    * (`parquet.bloom.filter.max.bytes`) down to 1 KiB.
+    */
+  private val BloomCandidates = 11
+
   /** Write `df` as parquet into `data/` under fresh unique names and
     * harvest footer stats. Files are unreferenced (hence invisible)
-    * until a commit names them.
+    * until a commit names them. Every bloom graft writes is requested
+    * here, and each is SIZED TO ITS FILE: parquet's adaptive writer
+    * keeps one candidate bitset per power of two from 1 MiB down to
+    * 1 KiB ([[BloomCandidates]]) and writes the smallest that holds the
+    * chunk's distinct values at parquet's default 1% false-positive
+    * rate: a 1,000-id file carries a 2 KiB bloom. A write without
+    * `bloomCols` sets no bloom option. The Spark jobs of the write are
+    * described `stage <table name>`, after the caller's description.
     */
   private def stageFiles(df: DataFrame, table: String,
                          statsCols: Seq[String],
@@ -506,10 +519,18 @@ object SnapshotStore {
     val toLogical = mapping.map(_.swap)
     def logicalKey(k: String): String = toLogical.getOrElse(k, k)
     val tmp = new Path(table, s".stage-${java.util.UUID.randomUUID()}")
-    bloomCols.map(b => mapping.getOrElse(b, b))
-      .foldLeft(physDf.write.mode("overwrite")) { (w, bc) =>
-        w.option(s"parquet.bloom.filter.enabled#$bc", "true")
-      }.parquet(tmp.toString)
+    // parquet reads the candidate count only under its per-column key
+    val blooms = bloomCols.map(b => mapping.getOrElse(b, b))
+    val writer = blooms.foldLeft(physDf.write.mode("overwrite")) { (w, bc) =>
+      w.option(s"parquet.bloom.filter.enabled#$bc", "true")
+        .option(s"parquet.bloom.filter.candidates.number#$bc", BloomCandidates.toLong)
+    }
+    val sc = spark.sparkContext
+    graft.runtime.JobDescription.within(sc, graft.runtime.JobDescription.current(sc)
+        .fold("")(_ + ": ") + s"stage ${new Path(table).getName}") {
+      (if (blooms.isEmpty) writer
+       else writer.option("parquet.bloom.filter.adaptive.enabled", "true")).parquet(tmp.toString)
+    }
     // footer harvest BEFORE the move, ONE footer open per staged file
     // ([[ParquetFooters.fileFooterStats]]): rows always;
     // [min,max] for the requested columns — long ranges where the

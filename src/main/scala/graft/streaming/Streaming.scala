@@ -878,22 +878,25 @@ object Streaming {
     * A screen reads every table through [[read]]/[[probe]], so it sees
     * the pinned version of each.
     */
-  private final class SinkBatch(val spark: SparkSession, val scope: BatchScope,
+  private final class SinkBatch(val spark: SparkSession, sink: String, val scope: BatchScope,
                                 val idCol: String, verdictsTbl: String,
                                 private var pins: Map[String, Option[SnapshotStore.Snapshot]],
                                 raw: DataFrame, ids: Option[Array[Long]]) {
+    /** Runs `body` with its Spark jobs described as the sink's step `what`. */
+    def step[T](what: String)(body: => T): T = sinkStep(spark, sink, what)(body)
+
     private val batchIds: Option[Seq[Long]] = ids.map(_.distinct.toSeq)
     // one row per id: an at-least-once source can repeat an id inside a
     // batch, where the replay skip can't see it yet (no verdict written)
     private val once: DataFrame =
       if (batchIds.exists(_.size == ids.get.length)) raw
-      else {
+      else step("replay skip") {
         val o = scope.checkpoint(raw.dropDuplicates(idCol), eager = batchIds.isEmpty)
         if (batchIds.isEmpty) graft.runtime.Checkpoints.free(raw) // `o` holds the batch now
         o
       }
-    private val verdicted: Set[Long] =
-      batchIds.fold(Set.empty[Long])(heldIds(spark, pins(verdictsTbl), idCol, _))
+    private val verdicted: Set[Long] = step("replay skip")(
+      batchIds.fold(Set.empty[Long])(heldIds(spark, pins(verdictsTbl), idCol, _)))
     /** The ids of [[fresh]], when the batch's ids fit `maxProbeKeys`. */
     val freshIds: Option[Seq[Long]] = batchIds.map(_.filterNot(verdicted))
     /** The batch's rows whose id has no verdict yet, one per id. */
@@ -904,7 +907,7 @@ object Streaming {
     private val heldBy = scala.collection.mutable.Map.empty[String, Set[Long]]
 
     /** False when every id of the batch already has a verdict. */
-    def nonEmpty: Boolean = freshIds.fold(!fresh.isEmpty)(_.nonEmpty)
+    def nonEmpty: Boolean = step("replay skip")(freshIds.fold(!fresh.isEmpty)(_.nonEmpty))
 
     def pin(table: String): Option[SnapshotStore.Snapshot] = pins(table)
 
@@ -943,7 +946,8 @@ object Streaming {
       * half-published docs.
       */
     private def held(table: String): Set[Long] =
-      heldBy.getOrElseUpdate(table, heldIds(spark, pins(table), idCol, freshIds.get))
+      heldBy.getOrElseUpdate(table,
+        step("idempotence")(heldIds(spark, pins(table), idCol, freshIds.get)))
 
     /** `df`'s rows whose id the pinned table does not hold: the
       * anti-join over the full snapshot, for batches past the cap.
@@ -956,7 +960,8 @@ object Streaming {
     /** How many fresh ids the pinned table already holds. */
     def heldCount(table: String): Long = freshIds match {
       case Some(_) => held(table).size.toLong
-      case None => fresh.count() - unheld(table, fresh.select(col(idCol))).count()
+      case None => step("idempotence")(
+        fresh.count() - unheld(table, fresh.select(col(idCol))).count())
     }
 
     /** The ordered publish: each index table's rows of the accepted
@@ -964,15 +969,16 @@ object Streaming {
       * `appendManyPinned` through the pins.
       */
     def publish(s: Screened): Unit = {
+      // a lazy checkpoint still runs its plan's shuffle stages at once
       val v = if (s.accepted.isDefined) s.verdicts
-        else scope.checkpoint(s.verdicts, eager = false)
+        else step("verdict collect")(scope.checkpoint(s.verdicts, eager = false))
       val index = freshIds match {
         case Some(all) =>
           // one job materializes the verdicts and hands the accepted ids
           // to the driver (at most maxProbeKeys: they are fresh ids)
-          val accepted = s.accepted.getOrElse(collectAll(
+          val accepted = s.accepted.getOrElse(step("verdict collect")(collectAll(
             v.select(col(idCol).cast("long"), col("keep")).queryExecution.toRdd)(
-            _.filter(_.getBoolean(1)).map(_.getLong(0))).toSeq)
+            _.filter(_.getBoolean(1)).map(_.getLong(0))).toSeq))
           s.index.flatMap { p =>
             val skip = held(p.table) ++ s.rowless.getOrElse(p.table, Set.empty)
             val keep = accepted.filterNot(skip)
@@ -982,13 +988,14 @@ object Streaming {
           val keep = v.filter(col("keep")).select(col(idCol))
           s.index.flatMap { p =>
             val rows = unheld(p.table, p.df.join(keep, Seq(idCol), "left_semi"))
-            if (rows.isEmpty) None else Some(p.copy(df = rows))
+            if (step("idempotence")(rows.isEmpty)) None else Some(p.copy(df = rows))
           }
       }
-      SnapshotStore.appendManyPinned(spark,
+      // each table's staged write is described `publish: stage <table>`
+      step("publish")(SnapshotStore.appendManyPinned(spark,
         index :+ SnapshotStore.AppendPart(v, verdictsTbl,
           statsCols = Seq(idCol), bloomCols = Seq(idCol)),
-        pins.collect { case (t, Some(p)) => t -> p })
+        pins.collect { case (t, Some(p)) => t -> p }))
       ()
     }
   }
@@ -1039,8 +1046,13 @@ object Streaming {
     *    `maxProbeKeys` elements (ids, probes, accepted ids); past it the
     *    batch loses pruning, never rows.
     *  - Every checkpoint a batch creates is freed when the batch ends.
+    *  - JOB DESCRIPTIONS: every Spark job of a batch is described
+    *    `<sink>: <step>` (count, replay skip, screen and the screen's
+    *    own steps, verdict collect, idempotence, `publish: stage
+    *    <table>` per table, maintain), so a job audit tells the steps
+    *    apart; the query's own description returns after each step.
     */
-  private def dedupSink(docs: DataFrame, idCol: String, indexPath: String,
+  private def dedupSink(docs: DataFrame, sink: String, idCol: String, indexPath: String,
                         tables: Seq[String], maxProbeKeys: Int)(
       screen: SinkBatch => Screened)(maintain: () => Unit): DataStreamWriter[Row] = {
     val spark = docs.sparkSession
@@ -1050,13 +1062,13 @@ object Streaming {
         withBatchScope { scope =>
           // lazily checkpointed: the count materializes it
           val raw = scope.checkpoint(batch.toDF(), eager = false)
-          val (n, ids) = countBatch(raw, idCol, maxProbeKeys)
+          val (n, ids) = sinkStep(spark, sink, "count")(countBatch(raw, idCol, maxProbeKeys))
           if (n > 0L) {
             val pins = (verdictsTbl +: tables).map(t => t -> SnapshotStore.current(spark, t)).toMap
-            val b = new SinkBatch(spark, scope, idCol, verdictsTbl, pins, raw, ids)
+            val b = new SinkBatch(spark, sink, scope, idCol, verdictsTbl, pins, raw, ids)
             if (b.nonEmpty) {
-              b.publish(screen(b))
-              maintain()
+              b.publish(b.step("screen")(screen(b)))
+              b.step("maintain")(maintain())
             }
           }
         }
@@ -1064,6 +1076,9 @@ object Streaming {
       ()
     }
   }
+
+  private def sinkStep[T](spark: SparkSession, sink: String, what: String)(body: => T): T =
+    graft.runtime.JobDescription.within(spark.sparkContext, s"$sink: $what")(body)
 
   /** Streaming INGESTION DEDUP: the [[graft.operators.Dedup.incrementalDedup]]
     * contract as a self-growing store, on the [[dedupSink]] frame. Each
@@ -1089,11 +1104,16 @@ object Streaming {
     * row `Dedup.screen ∘ capBuckets`. Larger batches, or probed buckets
     * holding more corpus ids than that budget, screen with those shuffle
     * joins instead — identical verdicts. A steady-state batch runs five
-    * Spark jobs (count, band collect, screen collect, two staged
-    * writes); a replayed id, a tombstone table or a compaction adds its
-    * own.
+    * Spark jobs, each described by its step (count, band collect,
+    * screen collect, `publish: stage bands`, `publish: stage
+    * verdicts`); a replayed id, a tombstone table or a compaction adds
+    * its own.
     *
-    * THE TABLES: bands, verdicts and the `capped` tombstones. Past
+    * THE TABLES: bands, verdicts and the `capped` tombstones. Every
+    * data file's blooms (`doc_id` and `__bs` on bands, `doc_id` on
+    * verdicts) are sized to the file by
+    * [[graft.sources.SnapshotStore]]'s staging: a 1,000-doc batch
+    * stages about 150 KB of band rows and 8 KB of verdicts. Past
     * `compactAfterFiles` live files the stores compact through atomic
     * snapshot commits. Band compaction also applies the bucket cap: rows
     * of oversized buckets DROP and their (band, sig) land in
@@ -1123,7 +1143,8 @@ object Streaming {
     val spark = docs.sparkSession
     val tables = MinhashTables(s"$indexPath/bands", s"$indexPath/verdicts", s"$indexPath/capped")
     val numBands = numHashes / rowsPerBand
-    dedupSink(docs, idCol, indexPath, Seq(tables.bands, tables.capped), maxProbeKeys) { b =>
+    dedupSink(docs, "incrementalDedupSink", idCol, indexPath,
+        Seq(tables.bands, tables.capped), maxProbeKeys) { b =>
       // the stored band table of the fresh docs: __bs is the point-skip
       // key; lazily checkpointed, its first read materializes it
       val fb = b.scope.checkpoint(graft.operators.Dedup.bandsOf(
@@ -1150,12 +1171,12 @@ object Streaming {
                             maxProbeKeys: Int): Screened = {
     import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
     val idCol = b.idCol
-    val rows = bandRows(fb, idCol)
+    val rows = b.step("band collect")(bandRows(fb, idCol))
     val haveIndex = b.has(tables.bands)
     val screened =
-      if (haveIndex)
+      if (haveIndex) b.step("screen collect")(
         screenBuckets(b.spark, b.pin(tables.bands).get, b.pin(tables.capped), idCol,
-          rows.map(_.bs).toSeq, fresh, maxBucketSize, maxProbeKeys)
+          rows.map(_.bs).toSeq, fresh, maxBucketSize, maxProbeKeys))
       else Some(Map.empty[Bucket, Array[Long]])
     screened match {
       // the probed buckets hold more corpus ids than the driver may
@@ -1203,7 +1224,7 @@ object Streaming {
       if (b.has(tables.bands)) {
         // every row of a probed bucket lives in a kept file, so the join
         // and the cap counts below are exact on what matters
-        val probeBs = boundedProbes(fb, "__bs", maxProbeKeys)
+        val probeBs = b.step("probe keys")(boundedProbes(fb, "__bs", maxProbeKeys))
         val raw = b.probe(tables.bands, "__bs", probeBs)
           // a crash-replayed half-indexed doc must not match itself
           .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
@@ -1361,7 +1382,7 @@ object Streaming {
     import graft.operators.Similarity.{cosineNative, signBucket, hyperplaneBucket, scaledBucketBits}
     val vecsTbl = s"$indexPath/vectors"
     val policyKey = "sink.bucketing"
-    dedupSink(vecs, idCol, indexPath, Seq(vecsTbl), maxProbeKeys) { b =>
+    dedupSink(vecs, "embeddingDedupSink", idCol, indexPath, Seq(vecsTbl), maxProbeKeys) { b =>
       // every read projects the batch checkpoint; the cast and the
       // bucket are recomputed per read (bits·dim multiply-adds, cheaper
       // than a second materialization)
@@ -1384,7 +1405,8 @@ object Streaming {
               s"index at $vecsTbl is pinned '$r'; reopening corpus-scaled " +
                 "would probe against incompatible stored buckets")
           }
-          val st = fb0.agg(count(lit(1)).as("n"), max(size(col("__v"))).as("d")).head
+          val st = b.step("bucket width")(
+            fb0.agg(count(lit(1)).as("n"), max(size(col("__v"))).as("d")).head)
           val batchDim = st.getInt(1)
           val rec = recorded.map { s =>
             val Array(_, bits, d) = s.split('|'); (bits.toInt, d.toInt)
@@ -1400,12 +1422,12 @@ object Streaming {
           if (b.has(vecsTbl) && !rec.map(_._1).contains(bits)) {
             // RE-BUCKET: one overwrite commit carrying the new policy, so
             // the data and the recorded width change together or not at all
-            SnapshotStore.overwrite(
+            b.step("re-bucket")(SnapshotStore.overwrite(
               b.read(vecsTbl).select(col(idCol), col("__v"),
                 hyperplaneBucket(col("__v"), bits, dim).as("__bucket")),
               vecsTbl, statsCols = Seq("__bucket", idCol),
               meta = Map(policyKey -> s"scaled|$bits|$dim"),
-              bloomCols = Seq(idCol))
+              bloomCols = Seq(idCol)))
             b.repin(vecsTbl)
           }
           (s"scaled|$bits|$dim", v => hyperplaneBucket(v, bits, dim))
@@ -1413,7 +1435,7 @@ object Streaming {
       val fb = fb0.select(col(idCol), col("__v"), bucketOf(col("__v")).as("__bucket"))
       val dupVsIndex =
         if (b.has(vecsTbl)) {
-          val probeBuckets = boundedProbes(fb, "__bucket", maxProbeKeys)
+          val probeBuckets = b.step("probe keys")(boundedProbes(fb, "__bucket", maxProbeKeys))
           // exclude an index row with the PROBE'S OWN id: a crash-replayed
           // vector would otherwise match itself at cos = 1
           fb.join(b.probe(vecsTbl, "__bucket", probeBuckets)
@@ -1498,7 +1520,8 @@ object Streaming {
     graft.plans.GraftExtensions.register(spark)
     val sigsTbl = s"$indexPath/sigs"
     val postTbl = s"$indexPath/postings"
-    dedupSink(docs, idCol, indexPath, Seq(sigsTbl, postTbl), maxProbeKeys) { b =>
+    dedupSink(docs, "containmentDedupSink", idCol, indexPath,
+        Seq(sigsTbl, postTbl), maxProbeKeys) { b =>
       // (id, hs, n_sh): the SAME sorted-shingle-hash signatures the batch
       // operator verifies with
       val fb = b.scope.checkpoint(graft.operators.Dedup
@@ -1509,15 +1532,16 @@ object Streaming {
       // have no postings rows to append
       val shingleless: Set[Long] =
         if (b.freshIds.isEmpty) Set.empty
-        else collectAll(fb.select(col(idCol).cast("long"), coalesce(col("n_sh"), lit(0)) <= 0)
-          .queryExecution.toRdd)(_.filter(_.getBoolean(1)).map(_.getLong(0))).toSet
+        else b.step("signatures")(collectAll(
+          fb.select(col(idCol).cast("long"), coalesce(col("n_sh"), lit(0)) <= 0)
+            .queryExecution.toRdd)(_.filter(_.getBoolean(1)).map(_.getLong(0))).toSet)
       val bpost = b.scope.checkpoint(fb.select(col(idCol), explode(col("hs")).as("h")), eager = false)
       // index postings matched to the batch's shingles — minus the
       // batch's own ids (a crash-replayed half-indexed doc must not
       // double-count its shingles' df or pair with itself)
       val iMatched = b.scope.checkpoint((
         if (b.has(postTbl))
-          b.probe(postTbl, "h", boundedProbes(bpost, "h", maxProbeKeys))
+          b.probe(postTbl, "h", b.step("probe keys")(boundedProbes(bpost, "h", maxProbeKeys)))
             .join(bpost.select(col("h")).distinct(), Seq("h"), "left_semi")
             .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
         else bpost.limit(0))
@@ -1543,11 +1567,12 @@ object Streaming {
       // that can hold a candidate keeper — zero candidates read nothing
       val aSigs = b.scope.checkpoint(
         if (b.has(sigsTbl))
-          b.probe(sigsTbl, idCol, boundedProbes(candI, "doc_a", maxProbeKeys))
+          b.probe(sigsTbl, idCol,
+              b.step("keeper probe keys")(boundedProbes(candI, "doc_a", maxProbeKeys)))
             .join(fb.select(col(idCol)), Seq(idCol), "left_anti")
             .unionByName(fb)
         else fb) // measured twice: bytes + the join build
-      val hint = graft.operators.Dedup.verifySideHint(aSigs)
+      val hint = b.step("verify side")(graft.operators.Dedup.verifySideHint(aSigs))
       val aSets = hint(aSigs.select(col(idCol).as("doc_a"),
         col("hs").as("hs_a"), col("n_sh").cast("long").as("n_a")))
       val dups = candI.union(candB)

@@ -183,6 +183,46 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(SnapshotStore.readPoints(spark, t, "id", Seq(1000L)).count() === 0L)
   }
 
+  test("append sizes each bloom to its file: 1,000 ids get a few-KiB bitset, no false negative") {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    val t = tempTable("bloomsize")
+    // 1,000 distinct scattered EVEN ids: unique values plain-encode, so
+    // the chunk carries a bloom (no complete dictionary); every odd
+    // value is absent
+    val ids = (0L until 1000L).map(i => i * 2654435761L % 1000003L * 2)
+    SnapshotStore.append(ids.toDF("id").coalesce(1), t,
+      statsCols = Seq("id"), bloomCols = Seq("id"))
+    val file = new org.apache.hadoop.fs.Path(SnapshotStore.state(spark, t).live.head.path)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try {
+      val block = reader.getFooter.getBlocks.asScala.head
+      val chunk = block.getColumns.asScala.find(_.getPath.toDotString == "id").get
+      val bloom = reader.getBloomFilterDataReader(block).readBloomFilter(chunk)
+      assert(bloom != null, "a plain-encoded bloom column must carry a bloom")
+      info(s"1,000-id bloom: ${bloom.getBitsetSize} B")
+      assert(bloom.getBitsetSize <= 16 * 1024, s"bitset of ${bloom.getBitsetSize} B")
+      assert(ids.forall(v => bloom.findHash(bloom.hash(v))), "a present id was not found")
+      val hits = (0L until 100000L).count(k => bloom.findHash(bloom.hash(2 * k + 1)))
+      info(s"absent-value hits: $hits of 100000")
+      assert(hits <= 2000, s"$hits of 100000 absent values hit")
+    } finally reader.close()
+    // q_snapshot_point's shape: four interleaved residue-class appends
+    // defeat the boxes, and the sized blooms still isolate the classes
+    // the probes live in (5, 17, 333 in class 1; 250 in class 2)
+    val tp = tempTable("bloomresidue")
+    (0 until 4).foreach { k =>
+      SnapshotStore.append((0L until 4000L).filter(_ % 4 == k).toDF("doc_id").coalesce(1), tp,
+        statsCols = Seq("doc_id"), bloomCols = Seq("doc_id"))
+    }
+    val live = SnapshotStore.state(spark, tp).live.sortBy(_.stats("doc_id")._1)
+    val kept = ParquetFooters.prunedFrom(conf,
+      live.map(f => new org.apache.hadoop.fs.Path(f.path)), "doc_id", Seq(5L, 17L, 250L, 333L))
+    assert(kept.map(_.toString) == Seq(live(1).path, live(2).path),
+      s"kept ${kept.size} of ${live.size}")
+  }
+
   test("compact is a metadata swap: fewer live files, same rows, history intact") {
     val t = tempTable("compact")
     (1 to 6).foreach(i => SnapshotStore.append(Seq(i.toLong).toDF("id").repartition(2), t))

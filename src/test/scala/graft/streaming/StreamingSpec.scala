@@ -1512,6 +1512,40 @@ class StreamingSpec extends SparkSpec
       .mkString(" ")
   }
 
+  /** The Spark jobs of one streaming query (its job group is the run
+    * id) started [[during]] a block, with the description each carried.
+    */
+  private final class SinkJobs(runId: String) {
+    // (description, call site) per job
+    private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    private val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).filter(_.getProperty("spark.jobGroup.id") == runId).foreach { p =>
+          jobs.add(String.valueOf(p.getProperty("spark.job.description")) ->
+            String.valueOf(p.getProperty("callSite.short"))); ()
+        }
+    }
+    def during(body: => Unit): Unit = {
+      org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    def count: Int = jobs.size
+    /** Every counted job names the sink step that ran it, not the
+      * query's `start` call site.
+      */
+    def assertDescribed(sink: String): Unit = {
+      import scala.jdk.CollectionConverters._
+      val (described, bare) = jobs.asScala.toSeq.partition(_._1.startsWith(s"$sink: "))
+      assert(bare.isEmpty, s"jobs without a $sink step description, by call site: ${bare.map(_._2)}")
+      info(s"$sink jobs by step: " +
+        described.groupBy(_._1).map { case (d, n) => s"$d ×${n.size}" }.mkString("; "))
+    }
+  }
+
   test("a steady-state incrementalDedupSink batch runs at most 10 Spark jobs") {
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.SnapshotStore
@@ -1526,28 +1560,18 @@ class StreamingSpec extends SparkSpec
                      add: Seq[(Long, String)] => Unit): (Int, Map[Long, Boolean]) = {
       val d = "file:" + java.nio.file.Files.createTempDirectory("graft-jobbudget").toString
       val q = Streaming.incrementalDedupSink(docs, "doc_id", "text", d).start()
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(js.properties).exists(
-              _.getProperty("spark.jobGroup.id") == q.runId.toString))
-            jobs.incrementAndGet()
-      }
+      val jobs = new SinkJobs(q.runId.toString)
       try {
         waves.init.foreach { w => add(w); q.processAllAvailable() }
-        org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          add(waves.last); q.processAllAvailable()
-          org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
-        } finally spark.sparkContext.removeSparkListener(listener)
+        jobs.during { add(waves.last); q.processAllAvailable() }
       } finally q.stop()
       // one file per table per batch: the store's bytes stay put
       Seq("bands", "verdicts").foreach { t =>
         assert(SnapshotStore.state(spark, s"$d/$t").live.size == waves.size,
           s"$t: ${SnapshotStore.state(spark, s"$d/$t").live.size} files after ${waves.size} batches")
       }
-      (jobs.get, SnapshotStore.snapshot(spark, s"$d/verdicts").collect()
+      jobs.assertDescribed("incrementalDedupSink")
+      (jobs.count, SnapshotStore.snapshot(spark, s"$d/verdicts").collect()
         .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("keep")).toMap)
     }
     val mem = MemoryStream[(Long, String)]
@@ -1573,34 +1597,25 @@ class StreamingSpec extends SparkSpec
     // of whose docs duplicate indexed docs (the screen has real matches)
     val ids = Seq((1L to 40L), (41L to 81L), (101L to 142L))
     val twinOf = Map(81L -> 3L, 141L -> 45L, 142L -> 7L)
-    def lastWaveJobs(idCol: String)(start: String => org.apache.spark.sql.streaming.StreamingQuery)(
+    def lastWaveJobs(idCol: String, sink: String)(
+        start: String => org.apache.spark.sql.streaming.StreamingQuery)(
         feed: Seq[Long] => Unit): (Int, Map[Long, Boolean]) = {
       val d = "file:" + java.nio.file.Files.createTempDirectory("graft-jobbudget2").toString
       val q = start(d)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(js.properties).exists(
-              _.getProperty("spark.jobGroup.id") == q.runId.toString))
-            jobs.incrementAndGet()
-      }
+      val jobs = new SinkJobs(q.runId.toString)
       try {
         ids.init.foreach { w => feed(w); q.processAllAvailable() }
-        org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          feed(ids.last); q.processAllAvailable()
-          org.apache.spark.sql.graftbridge.GraftShim.drainListenerBus(spark)
-        } finally spark.sparkContext.removeSparkListener(listener)
+        jobs.during { feed(ids.last); q.processAllAvailable() }
       } finally q.stop()
-      (jobs.get, SnapshotStore.snapshot(spark, s"$d/verdicts").collect()
+      jobs.assertDescribed(sink)
+      (jobs.count, SnapshotStore.snapshot(spark, s"$d/verdicts").collect()
         .map(r => r.getAs[Long](idCol) -> r.getAs[Boolean]("keep")).toMap)
     }
     def premise(verdicts: Map[Long, Boolean]): Unit =
       assert(verdicts.size == 123 && !verdicts(81L) && !verdicts(141L) &&
         !verdicts(142L) && verdicts(140L), s"premise: real matches: $verdicts")
     val ct = MemoryStream[(Long, String)]
-    val (ctJobs, ctVerdicts) = lastWaveJobs("doc_id")(d => Streaming.containmentDedupSink(
+    val (ctJobs, ctVerdicts) = lastWaveJobs("doc_id", "containmentDedupSink")(d => Streaming.containmentDedupSink(
       ct.toDF().toDF("doc_id", "text"), "doc_id", "text", d).start()) { w =>
       ct.addData(w.map(i => i -> randomDoc(twinOf.getOrElse(i, i)))); ()
     }
@@ -1608,13 +1623,58 @@ class StreamingSpec extends SparkSpec
     info(s"containmentDedupSink steady-state batch: $ctJobs Spark jobs")
     assert(ctJobs > 0 && ctJobs <= CtJobs, s"containment steady-state batch ran $ctJobs Spark jobs")
     val em = MemoryStream[(Long, Seq[Float])]
-    val (emJobs, emVerdicts) = lastWaveJobs("vec_id")(d => Streaming.embeddingDedupSink(
+    val (emJobs, emVerdicts) = lastWaveJobs("vec_id", "embeddingDedupSink")(d => Streaming.embeddingDedupSink(
       em.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", d).start()) { w =>
       em.addData(w.map(i => i -> embVec(twinOf.getOrElse(i, i)))); ()
     }
     premise(emVerdicts)
     info(s"embeddingDedupSink steady-state batch: $emJobs Spark jobs")
     assert(emJobs > 0 && emJobs <= EmJobs, s"embedding steady-state batch ran $emJobs Spark jobs")
+  }
+
+  test("every dedup sink table's data files stay under 64 KiB after three 40-doc batches") {
+    implicit val sqlCtx = spark.sqlContext
+    // a bloom column's bitset is sized to its file; a fixed 1 MiB bloom
+    // would put every verdicts, bands, vectors, sigs and postings file
+    // of a 40-doc batch over 1 MiB
+    val Budget = 64L * 1024
+    val ids = Seq((1L to 40L), (41L to 81L), (101L to 142L))
+    // 81 and 142 twin an indexed doc; 120 twins its batch-mate 119, so
+    // both are accepted and their shared buckets exceed maxBucketSize = 1:
+    // the band compaction after the third batch writes `capped` tombstones
+    val twinOf = Map(81L -> 3L, 142L -> 7L, 120L -> 119L)
+    def text(i: Long): String = randomDoc(twinOf.getOrElse(i, i))
+    def run(start: String => org.apache.spark.sql.streaming.StreamingQuery)(
+        feed: Seq[Long] => Unit)(tables: String*): Seq[(String, Long)] = {
+      val d = "file:" + java.nio.file.Files.createTempDirectory("graft-sinkbytes").toString
+      val q = start(d)
+      try ids.foreach { w => feed(w); q.processAllAvailable() } finally q.stop()
+      tables.flatMap { t =>
+        val files = Option(new java.io.File(new java.net.URI(s"$d/$t/data")).listFiles())
+          .getOrElse(Array.empty[java.io.File]).filter(_.getName.endsWith(".parquet")).toSeq
+        assert(files.nonEmpty, s"premise: $t has data files")
+        files.map(f => s"$t/${f.getName}" -> f.length)
+      }
+    }
+    val mh = MemoryStream[(Long, String)]
+    val mhFiles = run(d => Streaming.incrementalDedupSink(mh.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", d, maxBucketSize = 1, compactAfterFiles = 2).start()) { w =>
+      mh.addData(w.map(i => i -> text(i))); ()
+    }("bands", "verdicts", "capped")
+    val em = MemoryStream[(Long, Seq[Float])]
+    val emFiles = run(d => Streaming.embeddingDedupSink(em.toDF().toDF("vec_id", "embedding"),
+        "vec_id", "embedding", d, maxLiveFiles = 2).start()) { w =>
+      em.addData(w.map(i => i -> embVec(twinOf.getOrElse(i, i)))); ()
+    }("vectors", "verdicts")
+    val ct = MemoryStream[(Long, String)]
+    val ctFiles = run(d => Streaming.containmentDedupSink(ct.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", d, compactAfterFiles = 2).start()) { w =>
+      ct.addData(w.map(i => i -> text(i))); ()
+    }("sigs", "postings", "verdicts")
+    val all = mhFiles ++ emFiles ++ ctFiles
+    info(s"largest data file: ${all.maxBy(_._2)}")
+    val over = all.filter(_._2 >= Budget)
+    assert(over.isEmpty, s"data files of $Budget B or more: $over")
   }
 
   test("embeddingDedupSink batches log no LogicalRDD output-column mismatch") {

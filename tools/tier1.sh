@@ -5,9 +5,12 @@
 # does not match its oracle or has no output. Last comes a perfbench
 # smoke: the checker self-test, then a 4-second run of each benchmark
 # workload (dedup_stream, nightly_ingest), each of which must report
-# "correct": true with 0 failed steps. A zero exit means every oracle
-# key passed at both scale factors, every test is green and both
-# benchmarked pipelines produce correct results.
+# "correct": true with 0 failed steps; the dedup_stream smoke must also
+# store at most 2.0 bytes per input byte (about 0.8 with blooms sized
+# to their files; 10.0 with a fixed 1 MiB bloom per file). A zero exit
+# means every oracle key passed at both scale factors, every test is
+# green and both benchmarked pipelines produce correct results within
+# the dedup index's storage budget.
 #
 # Usage: tools/tier1.sh <testdata dir holding sf0.001/ and sf0.01/>
 # Verify runs with $SPARK_GRAFT_CPUS threads (default 8).
@@ -46,6 +49,10 @@ for w in dedup_stream nightly_ingest; do
   echo "$last"
   if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$last"; then
     echo "tier-1: perfbench $w smoke is not correct with 0 failed steps" >&2
+    exit 1
+  fi
+  if [ "$w" = dedup_stream ] && ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r["metrics"]["store_bytes_per_input_byte"]["value"] <= 2.0 else 1)' "$last"; then
+    echo "tier-1: perfbench dedup_stream smoke stores more than 2.0 bytes per input byte" >&2
     exit 1
   fi
 done
