@@ -158,7 +158,7 @@ object Bench {
         case "broadcast" =>
           operators.AsOfJoin.asOfBroadcast(grid, purchases, Seq("user_id"), "ts", "t", Seq("pval"))
         case _ =>
-          operators.AsOfJoin.asOf(grid, purchases, Seq("user_id"), "ts", "t", Seq("pval"))
+          operators.AsOfJoin.asOfWindow(grid, purchases, Seq("user_id"), "ts", "t", Seq("pval"))
       }
       build().queryExecution.toRdd.count() // warm codegen/JIT
       // median of 5 FRESH query executions: re-counting one DataFrame
@@ -253,7 +253,7 @@ object Bench {
     // 20x (disjoint ids, jittered times — the scaling section's move) so
     // the hot timeline is SORT-BOUND in one task, which is what skew
     // means at scale: the window form serializes it in ONE task (AQE can
-    // split skewed joins, not window partitions); asOfTimeSliced
+    // split skewed joins, not window partitions); asOfSliced
     // partitions on (key, 6h slice). At sf0.1 this is a 1.6M-row hot key
     // — plain ~2.1s vs sliced ~1.0s. Same fresh-execution median-of-5.
     def skewRawSafe(): String =
@@ -279,11 +279,11 @@ object Bench {
         }.sorted
         runs(runs.size / 2)
       }
-      val plain = median5(() => operators.AsOfJoin.asOf(
+      val plain = median5(() => operators.AsOfJoin.asOfWindow(
         left, right, Seq("user_id"), "t", "rt", Seq("pval")))
-      val sliced = median5(() => operators.AsOfJoin.asOfTimeSliced(
+      val sliced = median5(() => operators.AsOfJoin.asOfSliced(
         left, right, Seq("user_id"), "t", "rt", Seq("pval"),
-        sliceUs = 6L * 3600000000L, native = true))
+        sliceUs = 6L * 3600000000L))
       s"""{"plain":$plain,"sliced":$sliced}"""
     }
     val skewOp = skewRawSafe()

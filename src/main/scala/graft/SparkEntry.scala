@@ -530,7 +530,7 @@ object SparkEntry {
       val purchases = e.filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), col("ts_us").as("t"))
         .agg(max(col("value")).as("pval"))
-      AsOfJoin.asOf(grid, purchases, keys = Seq("user_id"),
+      AsOfJoin.asOfWindow(grid, purchases, keys = Seq("user_id"),
         leftTime = "ts", rightTime = "t", valueCols = Seq("pval"))
         .sortedOnce(col("user_id"), col("ts"))
     }),
@@ -557,9 +557,9 @@ object SparkEntry {
       val purchases = e.filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), col("ts_us").as("t"))
         .agg(max(col("value")).as("pval"))
-      AsOfJoin.asOfTimeSliced(grid, purchases, keys = Seq("user_id"),
+      AsOfJoin.asOfSliced(grid, purchases, keys = Seq("user_id"),
         leftTime = "ts", rightTime = "t", valueCols = Seq("pval"),
-        sliceUs = SixHoursUs, native = true)
+        sliceUs = SixHoursUs)
         .sortedOnce(col("user_id"), col("ts"))
     }),
     "q_asof_tolerance" -> ((s, d) => {
@@ -569,9 +569,9 @@ object SparkEntry {
       val purchases = e.filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), col("ts_us").as("t"))
         .agg(max(col("value")).as("pval"))
-      AsOfJoin.asOfTolerance(grid, purchases, keys = Seq("user_id"),
+      AsOfJoin.asOf(grid, purchases, keys = Seq("user_id"),
         leftTime = "ts", rightTime = "t", valueCols = Seq("pval"),
-        toleranceUs = 2L * HourUs)
+        toleranceUs = Some(2L * HourUs))
         .sortedOnce(col("user_id"), col("ts"))
     }),
     "q_asof_tolerance_native" -> ((s, d) => {
@@ -600,8 +600,8 @@ object SparkEntry {
       val purchases = e.filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), col("ts_us").as("t"))
         .agg(max(col("value")).as("pval"))
-      AsOfJoin.asOfForward(grid, purchases, keys = Seq("user_id"),
-        leftTime = "ts", rightTime = "t", valueCols = Seq("pval"))
+      AsOfJoin.asOf(grid, purchases, keys = Seq("user_id"),
+        leftTime = "ts", rightTime = "t", valueCols = Seq("pval"), forward = true)
         .sortedOnce(col("user_id"), col("ts"))
     }),
     "q_asof_native" -> ((s, d) => {
@@ -625,7 +625,7 @@ object SparkEntry {
       val purchases = e.filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), col("ts_us").as("t"))
         .agg(max(col("value")).as("pval"))
-      AsOfJoin.rangeJoin(errors, purchases, keys = Seq("user_id"),
+      AsOfJoin.rangeJoinComposed(errors, purchases, keys = Seq("user_id"),
         leftTime = "ts_us", rightTime = "t", valueCols = Seq("pval"),
         lowerUs = HourUs, upperUs = HourUs)
         .groupBy(col("event_id"))
@@ -687,10 +687,10 @@ object SparkEntry {
         .sortedOnce(col("event_id"))
     }),
     "q_asof_sql" -> ((s, d) => {
-      // the SQL-TEXT surface over AsOfJoinExec: same query as
+      // the SQL-TEXT surface over AsOfJoin.asOf: same query as
       // q_asof_native, phrased as `FROM asof_join('grid','purch',...)`
-      // through the registered table function — a SQL user reaches the
-      // codegen'd merge exec without touching the DataFrame API
+      // through the registered table function — a SQL user gets the
+      // statistics-selected form without touching the DataFrame API
       val e = eventsUs(s, d)
       graft.plans.GraftExtensions.register(s)
       Signals.timeGrid(e.select(col("user_id"), col("ts_us").as("ts")),
@@ -709,7 +709,8 @@ object SparkEntry {
         .sortedOnce(col("user_id"), col("ts"))
     }),
     "q_range_sql" -> ((s, d) => {
-      // SQL-text twin of q_range_join_native via the range_join TVF
+      // SQL-text twin of q_range_join via the range_join TVF (the
+      // statistics-selected form of AsOfJoin.rangeJoin)
       val e = eventsUs(s, d)
       graft.plans.GraftExtensions.register(s)
       e.filter(col("event_type") === "error")

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.DataType
 /** Whole-operator as-of join: logical node → strategy → physical
   * sort-merge operator.
   *
-  * Semantics match [[graft.operators.AsOfJoin.asOf]] (for each left row,
+  * The merge form of [[graft.operators.AsOfJoin.asOf]] (for each left row,
   * the value columns of the latest right row with rightTime <= leftTime
   * within the same key; inclusive), but executed as a single
   * merge pass: both sides hash-partition on the key and sort by
@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.DataType
   * frame state: strictly less memory than the window formulation and the
   * same single shuffle.
   *
-  * Right side must be unique per (key, rightTime); null keys group
-  * together (groupBy semantics, like the window formulation).
+  * Right side must be unique per (key, rightTime). The exec itself
+  * groups null keys together; `AsOfJoin` drops right rows with a null
+  * key or time before the node, so a null never matches.
   */
 case class AsOfJoinNode(
     left: LogicalPlan,

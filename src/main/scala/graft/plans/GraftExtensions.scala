@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Session extensions registering graft's native expressions as SQL
   * functions (`vec_dot`, `cosine_sim`) and its whole-operator joins as
   * SQL TABLE functions (`asof_join`, `range_join`) — the SQL-text
-  * surface over [[AsOfJoinExec]]/[[RangeJoinExec]]. Install with
+  * surface over [[graft.operators.AsOfJoin]]. Install with
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
@@ -199,9 +199,9 @@ object GraftExtensions {
   // columns are comma-separated lists; value columns default to every
   // right column except the keys and the right time. The builder runs at
   // analysis time on the driver: it resolves the named tables through
-  // the ACTIVE session's catalog and plans the same AsOfJoinNode /
-  // RangeJoinNode the DataFrame API plans, so the physical plan is the
-  // codegen'd merge exec either way.
+  // the ACTIVE session's catalog and calls the public AsOfJoin.asOf /
+  // AsOfJoin.rangeJoin, so SQL text gets the same statistics-selected
+  // physical form (broadcast probe or merge exec) as the DataFrame API.
 
   private def strArg(fn: String, args: Seq[Expression], i: Int, name: String): String = {
     require(i < args.length && args(i).foldable,
@@ -404,12 +404,13 @@ object GraftExtensions {
         val left = spark.table(strArg(fn, args, 0, "left_table"))
         val right = spark.table(strArg(fn, args, 1, "right_table"))
         val keys = csv(strArg(fn, args, 2, "keys_csv"))
+        require(keys.nonEmpty, s"$fn: keys_csv must name at least one key column")
         val lt = strArg(fn, args, 3, "left_time")
         val rt = strArg(fn, args, 4, "right_time")
         val values =
           if (args.length == 6) csv(strArg(fn, args, 5, "value_cols_csv"))
           else right.columns.filterNot((keys :+ rt).toSet).toSeq
-        graft.operators.AsOfJoin.asOfNative(left, right, keys, lt, rt, values)
+        graft.operators.AsOfJoin.asOf(left, right, keys, lt, rt, values)
           .queryExecution.analyzed
       }),
     (new FunctionIdentifier("range_join"),
@@ -423,6 +424,7 @@ object GraftExtensions {
         val left = spark.table(strArg(fn, args, 0, "left_table"))
         val right = spark.table(strArg(fn, args, 1, "right_table"))
         val keys = csv(strArg(fn, args, 2, "keys_csv"))
+        require(keys.nonEmpty, s"$fn: keys_csv must name at least one key column")
         val lt = strArg(fn, args, 3, "left_time")
         val rt = strArg(fn, args, 4, "right_time")
         val lower = longArg(fn, args, 5, "lower_us")
@@ -430,47 +432,7 @@ object GraftExtensions {
         val values =
           if (args.length == 8) csv(strArg(fn, args, 7, "value_cols_csv"))
           else right.columns.filterNot((keys :+ rt).toSet).toSeq
-        graft.operators.AsOfJoin.rangeJoinNative(left, right, keys, lt, rt,
-          values, lower, upper)
-          .queryExecution.analyzed
-      }),
-    (new FunctionIdentifier("asof_join_broadcast"),
-      new ExpressionInfo(classOf[SortedAsOfLookup].getName, "asof_join_broadcast"),
-      (args: Seq[Expression]) => {
-        val fn = "asof_join_broadcast"
-        require(args.length == 5 || args.length == 6,
-          s"usage: $fn(left_table, right_table, keys_csv, left_time, right_time[, value_cols_csv])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val left = spark.table(strArg(fn, args, 0, "left_table"))
-        val right = spark.table(strArg(fn, args, 1, "right_table"))
-        val keys = csv(strArg(fn, args, 2, "keys_csv"))
-        val lt = strArg(fn, args, 3, "left_time")
-        val rt = strArg(fn, args, 4, "right_time")
-        val values =
-          if (args.length == 6) csv(strArg(fn, args, 5, "value_cols_csv"))
-          else right.columns.filterNot((keys :+ rt).toSet).toSeq
-        graft.operators.AsOfJoin.asOfBroadcast(left, right, keys, lt, rt, values)
-          .queryExecution.analyzed
-      }),
-    (new FunctionIdentifier("range_join_broadcast"),
-      new ExpressionInfo(classOf[SortedBandSlice].getName, "range_join_broadcast"),
-      (args: Seq[Expression]) => {
-        val fn = "range_join_broadcast"
-        require(args.length == 7 || args.length == 8,
-          s"usage: $fn(left_table, right_table, keys_csv, left_time, right_time, " +
-            "lower_us, upper_us[, value_cols_csv])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val left = spark.table(strArg(fn, args, 0, "left_table"))
-        val right = spark.table(strArg(fn, args, 1, "right_table"))
-        val keys = csv(strArg(fn, args, 2, "keys_csv"))
-        val lt = strArg(fn, args, 3, "left_time")
-        val rt = strArg(fn, args, 4, "right_time")
-        val lower = longArg(fn, args, 5, "lower_us")
-        val upper = longArg(fn, args, 6, "upper_us")
-        val values =
-          if (args.length == 8) csv(strArg(fn, args, 7, "value_cols_csv"))
-          else right.columns.filterNot((keys :+ rt).toSet).toSeq
-        graft.operators.AsOfJoin.rangeJoinBroadcast(left, right, keys, lt, rt,
+        graft.operators.AsOfJoin.rangeJoin(left, right, keys, lt, rt,
           values, lower, upper)
           .queryExecution.analyzed
       }))

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
 /** Column pruning through [[AsOfJoinNode]].
   *
   * Catalyst's builtin ColumnPruning only understands builtin operators —
-  * a custom node is a pruning barrier, so `asOfNative(...).select("k")`
-  * would read and shuffle EVERY column of both inputs. This rule pushes
+  * a custom node is a pruning barrier, so a merge-form
+  * `AsOfJoin.asOf(...).select("k")` would read and shuffle EVERY column
+  * of both inputs. This rule pushes
   * the projection into both children: the left keeps its referenced
   * columns plus (keys, time); the right keeps (keys, time) plus the
   * referenced value columns, and the node's value list shrinks to match.

@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Column pruning through [[RangeJoinNode]] — the [[PruneAsOfJoin]]
   * treatment for the band join: a custom node is a pruning barrier to
-  * Catalyst's builtin ColumnPruning, so `rangeJoinNative(...).select(k)`
-  * would read and shuffle every column of both inputs. Push the
+  * Catalyst's builtin ColumnPruning, so a merge-form
+  * `AsOfJoin.rangeJoin(...).select(k)` would read and shuffle every
+  * column of both inputs. Push the
   * projection into both children (left keeps referenced ∪ keys ∪ time;
   * right keeps keys ∪ time ∪ referenced values) and shrink the node's
   * value list; the inserted Projects collapse into the scans inside the

@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Like column pruning, Catalyst's PushDownPredicates only understands
   * builtin operators — a custom node is a pushdown BARRIER, so
-  * `asOfNative(...).filter($"left_col" > x)` would shuffle and merge the
-  * whole left side and filter afterwards. Both joins preserve left rows
+  * a merge-form `AsOfJoin.asOf(...).filter($"left_col" > x)` would
+  * shuffle and merge the whole left side and filter afterwards. Both
+  * joins preserve left rows
   * and left attributes verbatim (every left row emits ≥ 1 output row
   * whose left columns are unchanged), so any deterministic conjunct that
   * references ONLY left attributes commutes with the join and pushes

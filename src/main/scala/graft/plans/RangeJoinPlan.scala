@@ -38,7 +38,7 @@ private[plans] object MergeJoinCodegen {
   * `leftTime − lower <= rightTime <= leftTime + upper` (a LEFT join —
   * unmatched left rows keep one null-extended output row).
   *
-  * Semantics match [[graft.operators.AsOfJoin.rangeJoin]], but where
+  * The merge form of [[graft.operators.AsOfJoin.rangeJoin]]. Where
   * Catalyst plans the composed form as a sort-merge join with the band
   * as a per-key-group post-filter — O(n_k · m_k) comparisons per key —
   * this exec walks both sorted sides ONCE with a sliding window buffer:
@@ -49,7 +49,7 @@ private[plans] object MergeJoinCodegen {
   * Both sides hash-partition on the key and sort by (key, time) — the
   * same single shuffle as the composed form; only the per-partition
   * algorithm changes. Times must be LongType (epoch-micros in graft's
-  * data model); use the composed variant for other types.
+  * data model).
   *
   * Null semantics (join-condition equality, like the composed form):
   * null keys and null times never match — left rows with them emit

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
   * (binary search, O(log n) per probe, zero allocation, whole-stage
   * codegen).
   *
-  * The probe kernel of [[graft.operators.AsOfJoin.asOfBroadcast]]: the
-  * right side packs each key's timeline into ONE sorted
+  * The probe kernel of [[graft.operators.AsOfJoin.asOf]]'s broadcast
+  * form, picked when Catalyst's estimate of the right side fits the
+  * broadcast threshold: the right side packs each key's timeline into ONE sorted
   * `array<struct<t, values...>>` row, the array ships inside a broadcast
   * hash join, and this expression replaces the merge exec's whole
   * shuffle+sort with a per-row search — the zero-exchange as-of for
@@ -90,7 +91,8 @@ case class SortedAsOfLookup(left: Expression, right: Expression)
   * O(log n) + output copy, whole-stage codegen). Returns an empty array
   * when nothing is in band, null on null inputs.
   *
-  * The probe kernel of [[graft.operators.AsOfJoin.rangeJoinBroadcast]]:
+  * The probe kernel of [[graft.operators.AsOfJoin.rangeJoin]]'s
+  * broadcast form:
   * `explode_outer` over this slice re-creates the range join's
   * left-join semantics (empty slice / null → one null-extended row).
   */

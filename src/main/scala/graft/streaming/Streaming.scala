@@ -453,8 +453,8 @@ object Streaming {
 
   case class AsOfOut(key: Long, ts_us: Long, value: Option[Double])
 
-  /** Streaming AS-OF join: the union-tag formulation of
-    * [[graft.operators.AsOfJoin.asOf]] as a stream — tag both inputs,
+  /** Streaming AS-OF join: [[graft.operators.AsOfJoin.asOf]] in its
+    * union-tag (window) form, as a stream — tag both inputs,
     * union them into one keyed stream, and keep ONE (lastTs, lastVal)
     * pair per key; each left row emits the latest right value
     * at-or-before it. Within a micro-batch rows sort by (ts, right
@@ -494,7 +494,7 @@ object Streaming {
   case class RangeRight(key: Long, r_ts_us: Long, value: Double)
 
   /** Streaming RANGE (band) join — the streaming twin of
-    * [[graft.operators.AsOfJoin.rangeJoin]] / `RangeJoinExec` — via
+    * [[graft.operators.AsOfJoin.rangeJoin]] — via
     * Spark's NATIVE stream-stream interval join: watermark both sides,
     * join on key equality plus a time-range condition. No custom state:
     * the built-in operator already bounds its buffers from the band and

@@ -25,17 +25,18 @@ object syntax {
 
     // ---- signal lake -------------------------------------------------
     def asOf(right: DataFrame, keys: Seq[String], leftTime: String,
-             rightTime: String, valueCols: Seq[String]): DataFrame =
-      AsOfJoin.asOf(df, right, keys, leftTime, rightTime, valueCols)
+             rightTime: String, valueCols: Seq[String],
+             toleranceUs: Option[Long] = None, forward: Boolean = false,
+             sliceUs: Option[Long] = None): DataFrame =
+      AsOfJoin.asOf(df, right, keys, leftTime, rightTime, valueCols,
+        toleranceUs, forward, sliceUs)
 
-    def asOfNative(right: DataFrame, keys: Seq[String], leftTime: String,
-                   rightTime: String, valueCols: Seq[String]): DataFrame =
-      AsOfJoin.asOfNative(df, right, keys, leftTime, rightTime, valueCols)
-
-    def asOfTolerance(right: DataFrame, keys: Seq[String], leftTime: String,
-                      rightTime: String, valueCols: Seq[String],
-                      toleranceUs: Long): DataFrame =
-      AsOfJoin.asOfTolerance(df, right, keys, leftTime, rightTime, valueCols, toleranceUs)
+    def rangeJoin(right: DataFrame, keys: Seq[String], leftTime: String,
+                  rightTime: String, valueCols: Seq[String],
+                  lowerUs: Long, upperUs: Long,
+                  sliceUs: Option[Long] = None): DataFrame =
+      AsOfJoin.rangeJoin(df, right, keys, leftTime, rightTime, valueCols,
+        lowerUs, upperUs, sliceUs)
 
     def timeGrid(groupCols: Seq[String], timeCol: String, stepUs: Long): DataFrame =
       Signals.timeGrid(df, groupCols, timeCol, stepUs)
@@ -95,20 +96,6 @@ object syntax {
                      hotThreshold: Long): DataFrame =
       SkewJoin.saltedJoin(df, right, keys, saltBuckets, hotThreshold)
 
-    def asOfBroadcast(right: DataFrame, keys: Seq[String], leftTime: String,
-                      rightTime: String, valueCols: Seq[String]): DataFrame =
-      AsOfJoin.asOfBroadcast(df, right, keys, leftTime, rightTime, valueCols)
-
-    def asOfAuto(right: DataFrame, keys: Seq[String], leftTime: String,
-                 rightTime: String, valueCols: Seq[String]): DataFrame =
-      AsOfJoin.asOfAuto(df, right, keys, leftTime, rightTime, valueCols)
-
-    def rangeJoinBroadcast(right: DataFrame, keys: Seq[String], leftTime: String,
-                           rightTime: String, valueCols: Seq[String],
-                           lowerUs: Long, upperUs: Long): DataFrame =
-      AsOfJoin.rangeJoinBroadcast(df, right, keys, leftTime, rightTime,
-        valueCols, lowerUs, upperUs)
-
     def funnel(userCol: String, typeCol: String, timeCol: String,
                steps: Seq[String], horizonUs: Long): DataFrame =
       Funnel.funnel(df, userCol, typeCol, timeCol, steps, horizonUs)
@@ -154,12 +141,6 @@ object syntax {
 
     def quantileRollup(bucketCol: Column, valueCol: Column, k: Int = 200): DataFrame =
       Analytics.quantileRollup(df, bucketCol, valueCol, k)
-
-    def asOfTimeSliced(right: DataFrame, keys: Seq[String], leftTime: String,
-                       rightTime: String, valueCols: Seq[String],
-                       sliceUs: Long, native: Boolean = false): DataFrame =
-      AsOfJoin.asOfTimeSliced(df, right, keys, leftTime, rightTime,
-        valueCols, sliceUs, native)
 
     def weightedCentroids(groupCol: String, vecCol: String,
                           weightCol: String): DataFrame =

@@ -36,7 +36,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val left = Seq((1L, 10L)).toDF("k", "t")
     val right = Seq((1L, 5L, 1.0)).toDF("k", "rt", "v")
-    val out = graft.operators.AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+    val out = graft.operators.AsOfJoin.asOfWindow(left, right, Seq("k"), "t", "rt", Seq("v"))
     assert(countExchanges(out) == 1, planOf(out).take(2000))
   }
 

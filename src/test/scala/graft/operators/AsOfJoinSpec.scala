@@ -29,7 +29,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(native.queryExecution.executedPlan.toString.contains("AsOfJoin ["))
     val got = native.orderBy("k", "t").collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[Long]("t"), Option(r.getAs[String]("v"))))
-    val viaWindow = AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+    val viaWindow = AsOfJoin.asOfWindow(left, right, Seq("k"), "t", "rt", Seq("v"))
       .orderBy("k", "t").collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[Long]("t"), Option(r.getAs[String]("v"))))
     assert(got.toSeq == viaWindow.toSeq)
@@ -53,7 +53,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val purchases = e.filter(col("event_type") === "purchase")
       .groupBy(col("user_id"), col("ts_us").as("rt"))
       .agg(max(col("value")).as("pval"))
-    val a = AsOfJoin.asOf(grid, purchases, Seq("user_id"), "t", "rt", Seq("pval"))
+    val a = AsOfJoin.asOfWindow(grid, purchases, Seq("user_id"), "t", "rt", Seq("pval"))
       .orderBy("user_id", "t").collect()
     val b = AsOfJoin.asOfNative(grid, purchases, Seq("user_id"), "t", "rt", Seq("pval"))
       .orderBy("user_id", "t").collect()
@@ -92,7 +92,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       (Some("a"), Some(10L), 1),
       (Some("a"), Some(20L), 2),
       (Some("b"), Some(10L), 3),
-      (None: Option[String], Some(10L), 4), // null key groups with null key
+      (None: Option[String], Some(10L), 4), // null key: never matches
       (Some("a"), None: Option[Long], 5)    // null time sorts first
     ).toDF("k", "t", "tag")
     val right = Seq(
@@ -106,10 +106,10 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(out(1) == None)        // a@10: right a@15 is later
     assert(out(2) == Some(1.5))   // a@20 picks a@15
     assert(out(3) == Some(2.5))   // b@10 picks b@5
-    assert(out(4) == Some(3.5))   // null key matches null-key right (groupBy semantics)
+    assert(out(4) == None)        // null key never matches, not even a null-key right row
     assert(out(5) == None)        // null time: nothing at-or-before
     // and the window formulation agrees on the same inputs
-    val win = AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+    val win = AsOfJoin.asOfWindow(left, right, Seq("k"), "t", "rt", Seq("v"))
       .collect().map(r => r.getAs[Int]("tag") ->
         (if (r.isNullAt(r.fieldIndex("v"))) None else Some(r.getDouble(r.fieldIndex("v"))))).toMap
     assert(win == out)
@@ -164,7 +164,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           if (r.isNullAt(1)) None else Some(r.getLong(1)),
           if (r.isNullAt(2)) None else Some(r.getDouble(2))))
         .sortBy(x => (x._1, x._2, x._3.map(_.toString).getOrElse("")))
-    val composed = canon(AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), 50L, 50L))
+    val composed = canon(AsOfJoin.rangeJoinComposed(left, right, Seq("k"), "t", "rt", Seq("v"), 50L, 50L))
     val native = canon(AsOfJoin.rangeJoinNative(left, right, Seq("k"), "t", "rt", Seq("v"), 50L, 50L))
     assert(native.toSeq == composed.toSeq)
     // contract sanity on top of the equivalence: a@100 matches 50/150/150-dup
@@ -214,7 +214,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }.toDF("k", "rt", "v")
       val lower = rnd.nextInt(30).toLong
       val upper = rnd.nextInt(30).toLong
-      val composed = AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), lower, upper)
+      val composed = AsOfJoin.rangeJoinComposed(left, right, Seq("k"), "t", "rt", Seq("v"), lower, upper)
       val native = AsOfJoin.rangeJoinNative(left, right, Seq("k"), "t", "rt", Seq("v"), lower, upper)
       val diff = native.exceptAll(composed).union(composed.exceptAll(native))
       assert(diff.isEmpty,
@@ -223,21 +223,25 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("property: broadcast variants ≡ composed forms on random tables and bounds") {
+    import org.apache.spark.sql.functions.{max => fmax}
     val rnd = new scala.util.Random(11) // deterministic
+    def opt[T](p: Int, v: => T): Option[T] = if (rnd.nextInt(100) < p) None else Some(v)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
     (1 to 6).foreach { round =>
       val nl = 30 + rnd.nextInt(40)
       val nr = 30 + rnd.nextInt(40)
       // small key space + clustered times force duplicates, time ties,
-      // right-only keys, and empty bands — the seams of the packed form
-      val left = (0 until nl).map { i =>
-        (rnd.nextInt(5).toLong, rnd.nextInt(40).toLong * 5, i)
-      }.toDF("k", "t", "tag")
-      val right = (0 until nr).map { i =>
-        (rnd.nextInt(6).toLong, rnd.nextInt(40).toLong * 5, i.toDouble)
-      }.toDF("k", "rt", "v")
+      // right-only keys, and empty bands — the seams of the packed form;
+      // a few null keys and times on both sides must never match
+      val leftRows = (0 until nl).map { i =>
+        (opt(8, rnd.nextInt(5).toLong), opt(8, rnd.nextInt(40).toLong * 5), i) }
+      val rightRows = (0 until nr).map { i =>
+        (opt(8, rnd.nextInt(6).toLong), opt(8, rnd.nextInt(40).toLong * 5), i.toDouble) }
+      val left = leftRows.toDF("k", "t", "tag")
+      val right = rightRows.toDF("k", "rt", "v")
       val lower = rnd.nextInt(30).toLong
       val upper = rnd.nextInt(30).toLong
-      val rComposed = AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), lower, upper)
+      val rComposed = AsOfJoin.rangeJoinComposed(left, right, Seq("k"), "t", "rt", Seq("v"), lower, upper)
       val rBcast = AsOfJoin.rangeJoinBroadcast(left, right, Seq("k"), "t", "rt", Seq("v"), lower, upper)
       val rDiff = rBcast.exceptAll(rComposed).union(rComposed.exceptAll(rBcast))
       assert(rDiff.isEmpty,
@@ -245,17 +249,49 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // as-of ties: the composed form keeps the greatest value tuple at
       // equal times ONLY when right rows are unique per (k, rt) — dedupe
       // like the real queries do before comparing the broadcast form
-      val rightUnique = right.groupBy($"k", $"rt")
-        .agg(org.apache.spark.sql.functions.max($"v").as("v"))
-      val aComposed = AsOfJoin.asOf(left, rightUnique, Seq("k"), "t", "rt", Seq("v"))
+      val rightUnique = right.groupBy($"k", $"rt").agg(fmax($"v").as("v"))
+      val aComposed = AsOfJoin.asOfWindow(left, rightUnique, Seq("k"), "t", "rt", Seq("v"))
       val aBcast = AsOfJoin.asOfBroadcast(left, rightUnique, Seq("k"), "t", "rt", Seq("v"))
       val aDiff = aBcast.exceptAll(aComposed).union(aComposed.exceptAll(aBcast))
       assert(aDiff.isEmpty,
         s"asof round $round: ${aDiff.collect().take(5).mkString(";")}")
+
+      // the public operators under both thresholds, with and without a
+      // slice width, against the references: the composed range join;
+      // for the as-of, the latest (forward: earliest) right row of the
+      // key on the right side of the left time, within the tolerance,
+      // computed here in plain Scala (rows unique per (k, rt) as above)
+      val unique = rightRows.collect { case (Some(k), Some(rt), v) => (k, rt) -> v }
+        .groupBy(_._1).map { case (kt, vs) => kt -> vs.map(_._2).max }
+      def expected(tol: Option[Long], forward: Boolean) = leftRows.map {
+        case (Some(k), Some(t), tag) =>
+          val cands = unique.collect { case ((`k`, rt), v)
+            if (if (forward) rt >= t else rt <= t) && tol.forall(math.abs(rt - t) <= _) => rt -> v }
+          val pick = if (cands.isEmpty) None
+            else Some(if (forward) cands.minBy(_._1)._2 else cands.maxBy(_._1)._2)
+          (Some(k), Some(t), tag, pick)
+        case (k, t, tag) => (k, t, tag, None)
+      }.map(x => Seq(x._1.getOrElse(null), x._2.getOrElse(null), x._3, x._4.getOrElse(null))
+        .mkString(",")).sorted
+      val tol = rnd.nextInt(30).toLong
+      val slice = 1L + rnd.nextInt(60)
+      for (threshold <- Seq("-1", "10MB"); sliceUs <- Seq(None, Some(slice))) withThreshold(threshold) {
+        val rPublic = AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"),
+          lower, upper, sliceUs)
+        assert(rows(rPublic) == rows(rComposed),
+          s"rangeJoin round $round threshold=$threshold slice=$sliceUs")
+        for ((tolUs, forward) <- Seq(None -> false, Some(tol) -> false, None -> true, Some(tol) -> true)) {
+          val out = AsOfJoin.asOf(left, rightUnique, Seq("k"), "t", "rt", Seq("v"),
+            toleranceUs = tolUs, forward = forward, sliceUs = sliceUs)
+          assert(rows(out) == expected(tolUs, forward),
+            s"asOf round $round threshold=$threshold slice=$sliceUs tol=$tolUs forward=$forward")
+          if (tolUs.isEmpty && !forward) assert(rows(out) == rows(aComposed))
+        }
+      }
     }
   }
 
-  test("property: asOfTimeSliced ≡ asOf across slice widths, negative times, slice gaps") {
+  test("property: asOfSliced ≡ asOf across slice widths, negative times, slice gaps") {
     import org.apache.spark.sql.functions.{max => fmax}
     val rnd = new scala.util.Random(19) // deterministic
     (1 to 5).foreach { round =>
@@ -270,31 +306,27 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         (rnd.nextInt(6).toLong, rnd.nextInt(200).toLong * 7 - 500, i.toDouble)
       }.toDF("k", "rt", "v")
         .groupBy($"k", $"rt").agg(fmax($"v").as("v")) // uniqueness precondition
-      val base = AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+      val base = AsOfJoin.asOfWindow(left, right, Seq("k"), "t", "rt", Seq("v"))
       // w=1: every match crosses slices (pure carries); w huge: one
       // slice (pure in-slice); 13 doesn't divide the 7-step time grid
       Seq(1L, 13L, 100L, 1000000L).foreach { w =>
-        val sliced = AsOfJoin.asOfTimeSliced(left, right, Seq("k"), "t", "rt", Seq("v"), w)
+        val sliced = AsOfJoin.asOfSliced(left, right, Seq("k"), "t", "rt", Seq("v"), w)
         val diff = sliced.exceptAll(base).union(base.exceptAll(sliced))
         assert(diff.isEmpty, s"round $round w=$w: ${diff.collect().take(5).mkString(";")}")
       }
-      val slicedNative = AsOfJoin.asOfTimeSliced(left, right, Seq("k"), "t", "rt",
-        Seq("v"), 13L, native = true)
-      val diffN = slicedNative.exceptAll(base).union(base.exceptAll(slicedNative))
-      assert(diffN.isEmpty, s"round $round native: ${diffN.collect().take(5).mkString(";")}")
     }
   }
 
-  test("asOfTimeSliced splits the hot key: the join exchange partitions on (key, slice)") {
+  test("asOfSliced splits the hot key: the join exchange partitions on (key, slice)") {
     val left = (0 until 1000).map(i => (1L, i.toLong, i)).toDF("k", "t", "tag")
     val right = (0 until 500).map(i => (1L, i.toLong * 2, i.toDouble)).toDF("k", "rt", "v")
-    val df = AsOfJoin.asOfTimeSliced(left, right, Seq("k"), "t", "rt", Seq("v"), 100L)
+    val df = AsOfJoin.asOfSliced(left, right, Seq("k"), "t", "rt", Seq("v"), 100L)
     df.collect()
     val exchanges = df.queryExecution.executedPlan.toString
       .split("\n").filter(_.contains("hashpartitioning"))
     assert(exchanges.exists(_.contains("__slice")),
       s"main exchange must partition on the slice column:\n${exchanges.mkString("\n")}")
-    val base = AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+    val base = AsOfJoin.asOfWindow(left, right, Seq("k"), "t", "rt", Seq("v"))
     val diff = df.exceptAll(base).union(base.exceptAll(df))
     assert(diff.isEmpty)
   }
@@ -312,7 +344,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }.toDF("k", "rt", "v")
       val lower = rnd.nextInt(60).toLong
       val upper = rnd.nextInt(60).toLong
-      val base = AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), lower, upper)
+      val base = AsOfJoin.rangeJoinComposed(left, right, Seq("k"), "t", "rt", Seq("v"), lower, upper)
       // w smaller than, equal to, and larger than the band width
       Seq(7L, lower + upper + 1, 500L).foreach { w =>
         val sliced = AsOfJoin.rangeJoinTimeSliced(left, right, Seq("k"), "t", "rt",
@@ -341,19 +373,19 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           s"band join must partition on the slice column:\n${exchanges.mkString("\n")}")
         d
       } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    val base = AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 10L)
+    val base = AsOfJoin.rangeJoinComposed(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 10L)
     val diff = df.exceptAll(base).union(base.exceptAll(df))
     assert(diff.isEmpty)
   }
 
-  test("asOfTimeSliced: null left times preserved; null-key/time right rows never match") {
+  test("asOfSliced: null left times preserved; null-key/time right rows never match") {
     val left = Seq((Some(1L), Some(10L)), (Some(1L), None: Option[Long])).toDF("k", "t")
     val right = Seq(
       (Some(1L), Some(5L), "a"),
       (Some(1L), None: Option[Long], "z"), // null time: dropped (SQL semantics)
       (None: Option[Long], Some(1L), "y")  // null key: dropped
     ).toDF("k", "rt", "v")
-    val out = AsOfJoin.asOfTimeSliced(left, right, Seq("k"), "t", "rt", Seq("v"), 10L)
+    val out = AsOfJoin.asOfSliced(left, right, Seq("k"), "t", "rt", Seq("v"), 10L)
       .orderBy($"t".asc_nulls_first).collect()
     assert(out.length == 2)
     assert(out(0).isNullAt(out(0).fieldIndex("v")))
@@ -389,7 +421,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val right = (0 until 600).map(i => (1L, i.toLong, i.toDouble)).toDF("k", "rt", "v")
     def run() = AsOfJoin.rangeJoinNative(left, right, Seq("k"), "t", "rt", Seq("v"),
       1000000L, 1000000L)
-    val composed = AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"),
+    val composed = AsOfJoin.rangeJoinComposed(left, right, Seq("k"), "t", "rt", Seq("v"),
       1000000L, 1000000L)
     def spillOf(df: org.apache.spark.sql.DataFrame): Option[Long] = {
       df.queryExecution.toRdd.count()
@@ -422,7 +454,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .groupBy($"user_id", $"ts_us".as("rt"))
       .agg(org.apache.spark.sql.functions.max($"value").as("v"))
     val bcast = AsOfJoin.asOfBroadcast(left, right, Seq("user_id"), "t", "rt", Seq("v"))
-    val composed = AsOfJoin.asOf(left, right, Seq("user_id"), "t", "rt", Seq("v"))
+    val composed = AsOfJoin.asOfWindow(left, right, Seq("user_id"), "t", "rt", Seq("v"))
     assert(bcast.exceptAll(composed).union(composed.exceptAll(bcast)).isEmpty)
     // the PROBE side reaches the join straight from its scan — no
     // exchange in the left subtree (the dimension side's pack aggregate
@@ -459,7 +491,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .agg(org.apache.spark.sql.functions.max($"value").as("v"))
     def run() = AsOfJoin.rangeJoinBroadcast(left, right, Seq("user_id"),
       "ts_us", "t", Seq("v"), 3600000000L, 3600000000L)
-    val composed = AsOfJoin.rangeJoin(left, right, Seq("user_id"),
+    val composed = AsOfJoin.rangeJoinComposed(left, right, Seq("user_id"),
       "ts_us", "t", Seq("v"), 3600000000L, 3600000000L)
     val bcast = run()
     assert(bcast.exceptAll(composed).union(composed.exceptAll(bcast)).isEmpty)
@@ -478,45 +510,131 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(out.length == 2 && out.forall(_.isNullAt(2)))
   }
 
-  test("asOfAuto selects by right-side statistics: broadcast small, merge large") {
-    val left = Seq((1L, 10L), (2L, 20L)).toDF("k", "t")
-    val right = Seq((1L, 5L, 1.0), (2L, 15L, 2.0)).toDF("k", "rt", "v")
-    val auto = AsOfJoin.asOfAuto(left, right, Seq("k"), "t", "rt", Seq("v"))
-    assert(auto.queryExecution.executedPlan.toString.contains("sorted_asof_lookup"),
-      "tiny right side should take the broadcast form")
-    // force the threshold below any real relation → the merge exec plans
-    val forced = AsOfJoin.asOfAuto(left, right, Seq("k"), "t", "rt", Seq("v"),
-      broadcastThresholdBytes = 1L)
-    assert(forced.queryExecution.executedPlan.toString.contains("AsOfJoin"),
-      forced.queryExecution.executedPlan.toString.take(2000))
-    // both forms agree, column for column
-    assert(auto.exceptAll(forced).union(forced.exceptAll(auto)).isEmpty)
-    // the session threshold in Spark's own upper-case unit format
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    try {
-      val mb = AsOfJoin.asOfAuto(left, right, Seq("k"), "t", "rt", Seq("v"))
-      assert(mb.queryExecution.executedPlan.toString.contains("sorted_asof_lookup"),
-        "a 10MB threshold must fit the tiny right side")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` set, then unsets it. */
+  private def withThreshold[T](threshold: String)(body: => T): T = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("rangeJoinAuto selects by right-side statistics: broadcast small, merge large") {
+  test("asOf selects by right-side statistics: broadcast small, merge large") {
+    val left = Seq((1L, 10L), (2L, 20L)).toDF("k", "t")
+    val right = Seq((1L, 5L, 1.0), (2L, 15L, 2.0)).toDF("k", "rt", "v")
+    val auto = AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+    assert(auto.queryExecution.executedPlan.toString.contains("sorted_asof_lookup"),
+      "tiny right side should take the broadcast form")
+    // broadcasting disabled in the session → the merge exec plans
+    val forced = withThreshold("-1") {
+      AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+    }
+    assert(forced.queryExecution.executedPlan.toString.contains("AsOfJoin"),
+      forced.queryExecution.executedPlan.toString.take(2000))
+    // ... or, given a slice width, the time-sliced merge
+    val sliced = withThreshold("-1") {
+      AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"), sliceUs = Some(10L))
+    }
+    assert(sliced.queryExecution.executedPlan.toString.contains("__slice"),
+      sliced.queryExecution.executedPlan.toString.take(2000))
+    // all forms agree, column for column
+    assert(auto.exceptAll(forced).union(forced.exceptAll(auto)).isEmpty)
+    assert(auto.exceptAll(sliced).union(sliced.exceptAll(auto)).isEmpty)
+    // the session threshold in Spark's own upper-case unit format
+    val mb = withThreshold("10MB") {
+      AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+    }
+    assert(mb.queryExecution.executedPlan.toString.contains("sorted_asof_lookup"),
+      "a 10MB threshold must fit the tiny right side")
+  }
+
+  test("rangeJoin selects by right-side statistics: broadcast small, merge large") {
     val left = Seq((1L, 10L), (2L, 20L)).toDF("k", "t")
     val right = Seq((1L, 5L, 1.0), (1L, 12L, 3.0), (2L, 15L, 2.0)).toDF("k", "rt", "v")
-    val auto = AsOfJoin.rangeJoinAuto(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L)
+    val auto = AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L)
     assert(auto.queryExecution.executedPlan.toString.contains("sorted_band_slice"),
       "tiny right side should take the broadcast form")
-    val forced = AsOfJoin.rangeJoinAuto(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L,
-      broadcastThresholdBytes = 1L)
+    val forced = withThreshold("-1") {
+      AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L)
+    }
     assert(forced.queryExecution.executedPlan.toString.contains("RangeJoin"),
       forced.queryExecution.executedPlan.toString.take(2000))
+    val sliced = withThreshold("-1") {
+      AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L, sliceUs = Some(20L))
+    }
+    assert(sliced.queryExecution.executedPlan.toString.contains("__slice"),
+      sliced.queryExecution.executedPlan.toString.take(2000))
     assert(auto.exceptAll(forced).union(forced.exceptAll(auto)).isEmpty)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    try {
-      val mb = AsOfJoin.rangeJoinAuto(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L)
-      assert(mb.queryExecution.executedPlan.toString.contains("sorted_band_slice"),
-        "a 10MB threshold must fit the tiny right side")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(auto.exceptAll(sliced).union(sliced.exceptAll(auto)).isEmpty)
+    val mb = withThreshold("10MB") {
+      AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L)
+    }
+    assert(mb.queryExecution.executedPlan.toString.contains("sorted_band_slice"),
+      "a 10MB threshold must fit the tiny right side")
+  }
+
+  test("asOf gives a null-key row the same answer whichever form the statistics pick") {
+    // a null key never matches, not even a null-key right row: before,
+    // the merge and window forms matched it and the broadcast and sliced
+    // forms did not, so the answer hung on the right side's size estimate
+    val left = Seq((Some("a"), 20L, 1), (None: Option[String], 10L, 2)).toDF("k", "t", "tag")
+    val right = Seq((Some("a"), 15L, 1.5), (None: Option[String], 1L, 3.5)).toDF("k", "rt", "v")
+    for (threshold <- Seq("-1", "10MB"); slice <- Seq(None, Some(4L))) {
+      val out = withThreshold(threshold) {
+        AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"), sliceUs = slice)
+          .collect().map(r => r.getAs[Int]("tag") ->
+            (if (r.isNullAt(r.fieldIndex("v"))) None else Some(r.getDouble(r.fieldIndex("v"))))).toMap
+      }
+      assert(out == Map(1 -> Some(1.5), 2 -> None), s"threshold=$threshold slice=$slice: $out")
+    }
+  }
+
+  test("asOf, rangeJoin and their table functions reject empty keys and non-bigint times by name") {
+    // a timestamp or double time would compare exactly in the merge exec
+    // but truncate to whole units in the broadcast and sliced forms, so
+    // it is refused whichever form the statistics pick
+    import org.apache.spark.sql.functions.{col, timestamp_seconds}
+    val left = Seq((1L, 10L)).toDF("k", "t")
+    val right = Seq((1L, 5L, 1.0)).toDF("k", "rt", "v")
+    val leftD = Seq((1L, 10.5)).toDF("k", "t")
+    val rightD = Seq((1L, 10.7, 1.0)).toDF("k", "rt", "v")
+    val leftTs = leftD.withColumn("t", timestamp_seconds(col("t")))
+    val rightTs = rightD.withColumn("rt", timestamp_seconds(col("rt")))
+    graft.plans.GraftExtensions.register(spark)
+    left.createOrReplaceTempView("nokey_l")
+    right.createOrReplaceTempView("nokey_r")
+    leftTs.createOrReplaceTempView("tstime_l")
+    rightTs.createOrReplaceTempView("tstime_r")
+    def rejects(name: String, hint: String)(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      assert(e.getMessage.contains(name) && e.getMessage.contains(hint), e.getMessage)
+    }
+    for (threshold <- Seq("-1", "10MB")) withThreshold(threshold) {
+      rejects("AsOfJoin.asOf", "keys") {
+        AsOfJoin.asOf(left, right, Seq.empty, "t", "rt", Seq("v")).collect()
+      }
+      rejects("AsOfJoin.rangeJoin", "keys") {
+        AsOfJoin.rangeJoin(left, right, Seq.empty, "t", "rt", Seq("v"), 1L, 1L).collect()
+      }
+      rejects("asof_join", "keys") {
+        spark.sql("SELECT * FROM asof_join('nokey_l', 'nokey_r', '', 't', 'rt')").collect()
+      }
+      rejects("range_join", "keys") {
+        spark.sql("SELECT * FROM range_join('nokey_l', 'nokey_r', ' ', 't', 'rt', 1, 1)").collect()
+      }
+      for ((l, r) <- Seq((leftTs, rightTs), (leftD, rightD), (left, rightTs));
+           slice <- Seq(None, Some(4L))) {
+        rejects("AsOfJoin.asOf", "bigint") {
+          AsOfJoin.asOf(l, r, Seq("k"), "t", "rt", Seq("v"), sliceUs = slice).collect()
+        }
+        rejects("AsOfJoin.rangeJoin", "bigint") {
+          AsOfJoin.rangeJoin(l, r, Seq("k"), "t", "rt", Seq("v"), 1L, 1L, sliceUs = slice).collect()
+        }
+      }
+      rejects("AsOfJoin.asOf", "bigint") {
+        spark.sql("SELECT * FROM asof_join('tstime_l', 'tstime_r', 'k', 't', 'rt')").collect()
+      }
+      rejects("AsOfJoin.rangeJoin", "bigint") {
+        spark.sql("SELECT * FROM range_join('tstime_l', 'tstime_r', 'k', 't', 'rt', 1, 1)").collect()
+      }
+    }
   }
 
   test("rangeJoinNative ≡ composed rangeJoin on real data, asymmetric bounds") {
@@ -526,7 +644,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val purchases = e.filter($"event_type" === "purchase")
       .groupBy($"user_id", $"ts_us".as("t"))
       .agg(org.apache.spark.sql.functions.max($"value").as("pval"))
-    val composed = AsOfJoin.rangeJoin(errors, purchases, Seq("user_id"),
+    val composed = AsOfJoin.rangeJoinComposed(errors, purchases, Seq("user_id"),
       "ts_us", "t", Seq("pval"), 600000000L, 3600000000L)
     val native = AsOfJoin.rangeJoinNative(errors, purchases, Seq("user_id"),
       "ts_us", "t", Seq("pval"), 600000000L, 3600000000L)

@@ -39,7 +39,7 @@ class PushFilterSpec extends SparkSpec {
       kept.queryExecution.optimizedPlan.toString.take(3000))
 
     // semantics unchanged vs the composed formulation
-    val reference = AsOfJoin.asOf(left, right, Seq("user_id"), "t", "rt", Seq("v"))
+    val reference = AsOfJoin.asOfWindow(left, right, Seq("user_id"), "t", "rt", Seq("v"))
       .filter($"user_id" < 50)
     assert(pushed.exceptAll(reference).union(reference.exceptAll(pushed)).isEmpty)
   }

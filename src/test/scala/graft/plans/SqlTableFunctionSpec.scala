@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.AsOfJoin
 
-/** The SQL-text surface over the native join execs: `asof_join` /
-  * `range_join` table functions must reach the same AsOfJoinExec /
-  * RangeJoinExec the DataFrame API plans, with identical results.
+/** The SQL-text surface over the temporal joins: the `asof_join` /
+  * `range_join` table functions must pick the same physical form the
+  * DataFrame API picks, with identical results.
   */
 class SqlTableFunctionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -23,19 +23,28 @@ class SqlTableFunctionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     (1L, 150L, 1.5), (1L, 290L, 2.5), (2L, 260L, 9.0)
   ).toDF("user_id", "t", "pval")
 
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` set, then unsets it. */
+  private def withThreshold[T](threshold: String)(body: => T): T = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   test("asof_join TVF plans the native exec and matches the DataFrame API") {
     grid.createOrReplaceTempView("tvf_grid")
     purch.createOrReplaceTempView("tvf_purch")
-    val sql = spark.sql(
-      "SELECT user_id, ts, pval FROM asof_join('tvf_grid', 'tvf_purch', " +
-        "'user_id', 'ts', 't', 'pval') ORDER BY user_id, ts")
-    val execs = collectWithSubqueries(sql.queryExecution.executedPlan) {
-      case e: AsOfJoinExec => e
+    // broadcasting off: the statistics pick the merge exec
+    withThreshold("-1") {
+      val sql = spark.sql(
+        "SELECT user_id, ts, pval FROM asof_join('tvf_grid', 'tvf_purch', " +
+          "'user_id', 'ts', 't', 'pval') ORDER BY user_id, ts")
+      val execs = collectWithSubqueries(sql.queryExecution.executedPlan) {
+        case e: AsOfJoinExec => e
+      }
+      assert(execs.nonEmpty, s"no AsOfJoinExec in:\n${sql.queryExecution.executedPlan}")
+      val api = AsOfJoin.asOfNative(grid, purch, Seq("user_id"), "ts", "t", Seq("pval"))
+        .orderBy(col("user_id"), col("ts"))
+      assert(sql.collect().toSeq == api.collect().toSeq)
     }
-    assert(execs.nonEmpty, s"no AsOfJoinExec in:\n${sql.queryExecution.executedPlan}")
-    val api = AsOfJoin.asOfNative(grid, purch, Seq("user_id"), "ts", "t", Seq("pval"))
-      .orderBy(col("user_id"), col("ts"))
-    assert(sql.collect().toSeq == api.collect().toSeq)
   }
 
   test("asof_join TVF defaults value columns to right minus keys and time") {
@@ -51,37 +60,45 @@ class SqlTableFunctionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("range_join TVF plans the native exec and matches the DataFrame API") {
     grid.createOrReplaceTempView("tvf_grid")
     purch.createOrReplaceTempView("tvf_purch")
-    val sql = spark.sql(
-      "SELECT user_id, ts, t, pval FROM range_join('tvf_grid', 'tvf_purch', " +
-        "'user_id', 'ts', 't', 60, 60, 'pval') ORDER BY user_id, ts, t")
-    val execs = collectWithSubqueries(sql.queryExecution.executedPlan) {
-      case e: RangeJoinExec => e
+    withThreshold("-1") {
+      val sql = spark.sql(
+        "SELECT user_id, ts, t, pval FROM range_join('tvf_grid', 'tvf_purch', " +
+          "'user_id', 'ts', 't', 60, 60, 'pval') ORDER BY user_id, ts, t")
+      val execs = collectWithSubqueries(sql.queryExecution.executedPlan) {
+        case e: RangeJoinExec => e
+      }
+      assert(execs.nonEmpty, s"no RangeJoinExec in:\n${sql.queryExecution.executedPlan}")
+      val api = AsOfJoin.rangeJoinNative(grid, purch, Seq("user_id"), "ts", "t",
+        Seq("pval"), lowerUs = 60L, upperUs = 60L)
+        .orderBy(col("user_id"), col("ts"), col("t"))
+      assert(sql.collect().toSeq == api.collect().toSeq)
     }
-    assert(execs.nonEmpty, s"no RangeJoinExec in:\n${sql.queryExecution.executedPlan}")
-    val api = AsOfJoin.rangeJoinNative(grid, purch, Seq("user_id"), "ts", "t",
-      Seq("pval"), lowerUs = 60L, upperUs = 60L)
-      .orderBy(col("user_id"), col("ts"), col("t"))
-    assert(sql.collect().toSeq == api.collect().toSeq)
   }
 
-  test("broadcast-variant TVFs match their DataFrame APIs") {
+  test("asof_join/range_join match the DataFrame API under both thresholds") {
     grid.createOrReplaceTempView("tvf_grid")
     purch.createOrReplaceTempView("tvf_purch")
-    val asofSql = spark.sql(
-      "SELECT user_id, ts, pval FROM asof_join_broadcast('tvf_grid', 'tvf_purch', " +
-        "'user_id', 'ts', 't', 'pval') ORDER BY user_id, ts")
-    assert(asofSql.queryExecution.executedPlan.toString.contains("sorted_asof_lookup"))
-    val asofApi = AsOfJoin.asOfBroadcast(grid, purch, Seq("user_id"), "ts", "t", Seq("pval"))
-      .orderBy(col("user_id"), col("ts"))
-    assert(asofSql.collect().toSeq == asofApi.collect().toSeq)
-    val rangeSql = spark.sql(
-      "SELECT user_id, ts, t, pval FROM range_join_broadcast('tvf_grid', 'tvf_purch', " +
-        "'user_id', 'ts', 't', 60, 60, 'pval') ORDER BY user_id, ts, t")
-    assert(rangeSql.queryExecution.executedPlan.toString.contains("sorted_band_slice"))
-    val rangeApi = AsOfJoin.rangeJoinBroadcast(grid, purch, Seq("user_id"), "ts", "t",
-      Seq("pval"), lowerUs = 60L, upperUs = 60L)
-      .orderBy(col("user_id"), col("ts"), col("t"))
-    assert(rangeSql.collect().toSeq == rangeApi.collect().toSeq)
+    // the tiny right side broadcasts at 10MB and takes the merge exec
+    // at -1; SQL text and the DataFrame API pick the same form
+    for ((threshold, asofKernel, rangeKernel) <- Seq(
+        ("10MB", "sorted_asof_lookup", "sorted_band_slice"),
+        ("-1", "AsOfJoin", "RangeJoin"))) withThreshold(threshold) {
+      val asofSql = spark.sql(
+        "SELECT user_id, ts, pval FROM asof_join('tvf_grid', 'tvf_purch', " +
+          "'user_id', 'ts', 't', 'pval') ORDER BY user_id, ts")
+      assert(asofSql.queryExecution.executedPlan.toString.contains(asofKernel), threshold)
+      val asofApi = AsOfJoin.asOf(grid, purch, Seq("user_id"), "ts", "t", Seq("pval"))
+        .orderBy(col("user_id"), col("ts"))
+      assert(asofSql.collect().toSeq == asofApi.collect().toSeq)
+      val rangeSql = spark.sql(
+        "SELECT user_id, ts, t, pval FROM range_join('tvf_grid', 'tvf_purch', " +
+          "'user_id', 'ts', 't', 60, 60, 'pval') ORDER BY user_id, ts, t")
+      assert(rangeSql.queryExecution.executedPlan.toString.contains(rangeKernel), threshold)
+      val rangeApi = AsOfJoin.rangeJoin(grid, purch, Seq("user_id"), "ts", "t",
+        Seq("pval"), lowerUs = 60L, upperUs = 60L)
+        .orderBy(col("user_id"), col("ts"), col("t"))
+      assert(rangeSql.collect().toSeq == rangeApi.collect().toSeq)
+    }
   }
 
   test("graft_snapshot TVFs: time travel and the change feed from pure SQL text") {
