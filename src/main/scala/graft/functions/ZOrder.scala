@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * primitive behind multi-dimensional clustering: sorting a table by the
   * interleaved bits of two columns places rows close in BOTH dimensions
   * into the same files, so per-file min/max statistics prune box queries
-  * on either column (see [[graft.sources.SnapshotStore.maintain]] with
-  * `zorderCols`). The reference pipeline partitions its scene store by
-  * (bag_file, timestamp) pairs — the same two-dimensional locality need
+  * on either column (see [[graft.sources.SnapshotStore.compact]] and
+  * [[graft.sources.SnapshotStore.maintain]] with `zorderCols`). The
+  * reference pipeline partitions its scene store by (bag_file,
+  * timestamp) pairs — the same two-dimensional locality need
   * (detect_scenes.py:129-141).
   *
   * Built ENTIRELY from builtin bitwise column functions (the classic

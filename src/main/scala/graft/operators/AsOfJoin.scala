@@ -24,12 +24,13 @@ import org.apache.spark.sql.types.LongType
   *  - the right side fits `spark.sql.autoBroadcastJoinThreshold`: the
   *    zero-shuffle broadcast probe ([[asOfBroadcast]],
   *    [[rangeJoinBroadcast]]);
-  *  - otherwise, with `sliceUs`: the time-sliced form that splits a hot
-  *    key on the time axis ([[asOfSliced]], [[rangeJoinTimeSliced]]);
   *  - otherwise: the merge exec, one shuffle per side and a single
   *    merge pass ([[asOfNative]], [[rangeJoinNative]]).
   * The estimate is `optimizedPlan.stats.sizeInBytes`, so filters and
-  * column pruning on the right side count toward fitting.
+  * column pruning on the right side count toward fitting. The
+  * time-sliced forms that split a hot key on the time axis
+  * ([[asOfSliced]], [[rangeJoinTimeSliced]]) are not picked by the
+  * entry points: they need a slice width no statistic gives yet.
   *
   * Every form shares one null rule: a null key or a null time on either
   * side never matches (SQL semantics); left rows are always preserved.
@@ -54,26 +55,22 @@ object AsOfJoin {
     *    composes over every physical form.
     *  - `forward`: the EARLIEST right row at-or-after the left time
     *    instead ("next reading"): the same join on negated times.
-    *  - `sliceUs`: when the right side is too big to broadcast, split
-    *    each key's timeline into `sliceUs`-wide slices so one hot key
-    *    spreads over many partitions ([[asOfSliced]]).
     */
   def asOf(left: DataFrame, right: DataFrame, keys: Seq[String],
            leftTime: String, rightTime: String, valueCols: Seq[String],
-           toleranceUs: Option[Long] = None, forward: Boolean = false,
-           sliceUs: Option[Long] = None): DataFrame = {
+           toleranceUs: Option[Long] = None, forward: Boolean = false): DataFrame = {
     requireValid("AsOfJoin.asOf", left, right, keys, leftTime, rightTime)
     if (forward) {
       val nl = "__asof_neg_l"
       val nr = "__asof_neg_r"
       asOf(left.withColumn(nl, -col(leftTime)), right.withColumn(nr, -col(rightTime)),
-        keys, nl, nr, valueCols, toleranceUs, forward = false, sliceUs)
+        keys, nl, nr, valueCols, toleranceUs)
         .drop(nl)
     } else toleranceUs match {
       case Some(tol) =>
         val mt = "__asof_match_t"
         val withT = asOf(left, right.withColumn(mt, col(rightTime)), keys,
-          leftTime, rightTime, valueCols :+ mt, sliceUs = sliceUs)
+          leftTime, rightTime, valueCols :+ mt)
         val fresh = col(mt).isNotNull && (col(leftTime) - col(mt)) <= tol
         valueCols.foldLeft(withT) { (df, v) =>
           df.withColumn(v, when(fresh, col(v)))
@@ -81,33 +78,28 @@ object AsOfJoin {
       case None =>
         if (fitsBroadcast(right))
           asOfBroadcast(left, right, keys, leftTime, rightTime, valueCols)
-        else sliceUs.fold(asOfNative(left, right, keys, leftTime, rightTime, valueCols))(
-          asOfSliced(left, right, keys, leftTime, rightTime, valueCols, _))
+        else asOfNative(left, right, keys, leftTime, rightTime, valueCols)
     }
   }
 
   /** Equi-key range join: each left row with ALL right rows of its key
     * in `[left.time − lowerUs, left.time + upperUs]` (inclusive, a left
     * join). Output = left columns + `rightTime` + `valueCols`.
-    * `sliceUs` as in [[asOf]] ([[rangeJoinTimeSliced]]).
     */
   def rangeJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                 leftTime: String, rightTime: String, valueCols: Seq[String],
-                lowerUs: Long, upperUs: Long,
-                sliceUs: Option[Long] = None): DataFrame = {
+                lowerUs: Long, upperUs: Long): DataFrame = {
     requireValid("AsOfJoin.rangeJoin", left, right, keys, leftTime, rightTime)
     if (fitsBroadcast(right))
       rangeJoinBroadcast(left, right, keys, leftTime, rightTime, valueCols, lowerUs, upperUs)
-    else sliceUs.fold(
-      rangeJoinNative(left, right, keys, leftTime, rightTime, valueCols, lowerUs, upperUs))(
-      rangeJoinTimeSliced(left, right, keys, leftTime, rightTime, valueCols, lowerUs, upperUs, _))
+    else rangeJoinNative(left, right, keys, leftTime, rightTime, valueCols, lowerUs, upperUs)
   }
 
-  /** The checks both public entries make before picking a form: at
-    * least one key, and `bigint` times on both sides. A `timestamp` or
-    * `double` time would compare exactly in the merge exec but truncate
-    * to whole units in the broadcast and sliced forms, so the answer
-    * would hang on the size estimate.
+  /** The checks both public entries and the time-sliced forms make
+    * before planning: at least one key, and `bigint` times on both
+    * sides. A `timestamp` or `double` time would compare exactly in the
+    * merge exec but truncate to whole units in the broadcast and sliced
+    * forms, so the answer would hang on the form.
     */
   private def requireValid(op: String, left: DataFrame, right: DataFrame, keys: Seq[String],
                            leftTime: String, rightTime: String): Unit = {
@@ -269,6 +261,7 @@ object AsOfJoin {
   private[graft] def asOfSliced(left: DataFrame, right: DataFrame, keys: Seq[String],
                                 leftTime: String, rightTime: String,
                                 valueCols: Seq[String], sliceUs: Long): DataFrame = {
+    requireValid("AsOfJoin.asOfSliced", left, right, keys, leftTime, rightTime)
     require(sliceUs > 0, s"sliceUs must be positive, got $sliceUs")
     val S = "__slice"
     require(!(left.columns ++ right.columns).contains(S), s"column $S is reserved")
@@ -372,6 +365,7 @@ object AsOfJoin {
                                          leftTime: String, rightTime: String,
                                          valueCols: Seq[String], lowerUs: Long, upperUs: Long,
                                          sliceUs: Long): DataFrame = {
+    requireValid("AsOfJoin.rangeJoinTimeSliced", left, right, keys, leftTime, rightTime)
     require(lowerUs >= 0 && upperUs >= 0,
       s"band bounds are magnitudes: lowerUs=$lowerUs upperUs=$upperUs")
     require(sliceUs > 0, s"sliceUs must be positive, got $sliceUs")

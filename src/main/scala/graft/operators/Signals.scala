@@ -92,12 +92,16 @@ object Signals {
     * Plan shape: pivot (one shuffle on (group, time)) → union with the
     * grid (no shuffle) → one window (one shuffle on group) → filter to
     * grid rows. Signal rows sort *before* grid rows at equal timestamps,
-    * so a tick at exactly t sees a signal at t (inclusive as-of).
+    * so a tick at exactly t sees a signal at t (inclusive as-of). A
+    * signal with a null time fills no tick — [[AsOfJoin]]'s rule, a null
+    * time never matches — so it is dropped before the pivot (the window
+    * would sort it first and carry it into every earlier tick).
     */
   def synchronize(signals: DataFrame, groupCols: Seq[String], timeCol: String,
                   topicCol: String, valueCol: String, topics: Seq[String],
                   stepUs: Long): DataFrame = {
-    val pivoted = topicPivot(signals, groupCols :+ timeCol, topicCol, topics,
+    val pivoted = topicPivot(signals.filter(col(timeCol).isNotNull),
+      groupCols :+ timeCol, topicCol, topics,
       max(col(valueCol))).withColumn("__src", lit(0))
     val grid = timeGrid(signals, groupCols, timeCol, stepUs)
       .withColumn("__src", lit(1))

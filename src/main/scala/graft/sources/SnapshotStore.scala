@@ -463,21 +463,44 @@ object SnapshotStore {
   // ---------------------------------------------------------- data files
 
   /** Candidate bitsets parquet's adaptive bloom writer keeps per
-    * `bloomCols` column: powers of two from the 1 MiB cap
+    * bloom column: powers of two from the 1 MiB cap
     * (`parquet.bloom.filter.max.bytes`) down to 1 KiB.
     */
   private val BloomCandidates = 11
 
+  /** Commit-meta key recording the table's bloom columns (logical names,
+    * comma-separated; `-` once a drop emptied the set, since latest-wins
+    * meta has no key removal): the layout every later staged write
+    * re-blooms. */
+  private[graft] val BloomColsKey = "graft.bloomColumns"
+
+  private def bloomColsOf(meta: Map[String, String]): Seq[String] =
+    meta.get(BloomColsKey).filter(_ != "-").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+
+  /** The meta entry recording the bloom set `edit` makes of the one
+    * `meta` holds — present only when the set changes: a write's
+    * `bloomCols` grow it, a rename re-keys it, a drop shrinks it. */
+  private def bloomMeta(meta: Map[String, String])(
+      edit: Seq[String] => Seq[String]): Map[String, String] = {
+    val recorded = bloomColsOf(meta)
+    val next = edit(recorded)
+    if (next == recorded) Map.empty
+    else Map(BloomColsKey -> (if (next.isEmpty) "-" else next.mkString(",")))
+  }
+
   /** Write `df` as parquet into `data/` under fresh unique names and
     * harvest footer stats. Files are unreferenced (hence invisible)
-    * until a commit names them. Every bloom graft writes is requested
-    * here, and each is SIZED TO ITS FILE: parquet's adaptive writer
-    * keeps one candidate bitset per power of two from 1 MiB down to
-    * 1 KiB ([[BloomCandidates]]) and writes the smallest that holds the
-    * chunk's distinct values at parquet's default 1% false-positive
-    * rate: a 1,000-id file carries a 2 KiB bloom. A write without
-    * `bloomCols` sets no bloom option. The Spark jobs of the write are
-    * described `stage <table name>`, after the caller's description.
+    * until a commit names them. Every staged write, appends and every
+    * rewrite alike, blooms the table's recorded bloom columns
+    * ([[BloomColsKey]]) plus the caller's `bloomCols`, those `df` has —
+    * so a rewrite keeps the blooms the first writer declared. Each bloom
+    * is SIZED TO ITS FILE: parquet's adaptive writer keeps one candidate
+    * bitset per power of two from 1 MiB down to 1 KiB
+    * ([[BloomCandidates]]) and writes the smallest that holds the chunk's
+    * distinct values at parquet's default 1% false-positive rate: a
+    * 1,000-id file carries a 2 KiB bloom. With no bloom column the write
+    * sets no bloom option. The Spark jobs of the write are described
+    * `stage <table name>`, after the caller's description.
     */
   private def stageFiles(df: DataFrame, table: String,
                          statsCols: Seq[String],
@@ -489,6 +512,8 @@ object SnapshotStore {
     statsCols.foreach(c => require(
       c.nonEmpty && !c.exists(ch => "\t\n=;:".contains(ch)),
       s"stats column name unsafe for the commit log (no tab/newline/=/;/:): '$c'"))
+    bloomCols.foreach(c => require(c.nonEmpty && c != "-" && !c.exists(ch => "\t\n,".contains(ch)),
+      s"bloom column name unsafe for the commit meta (no tab/newline/comma, not '-'): '$c'"))
     val spark = df.sparkSession
     val c = conf(spark)
     val data = dataDir(table)
@@ -520,7 +545,8 @@ object SnapshotStore {
     def logicalKey(k: String): String = toLogical.getOrElse(k, k)
     val tmp = new Path(table, s".stage-${java.util.UUID.randomUUID()}")
     // parquet reads the candidate count only under its per-column key
-    val blooms = bloomCols.map(b => mapping.getOrElse(b, b))
+    val blooms = (bloomColsOf(tableMeta) ++ bloomCols).distinct
+      .filter(df.columns.contains).map(b => mapping.getOrElse(b, b))
     val writer = blooms.foldLeft(physDf.write.mode("overwrite")) { (w, bc) =>
       w.option(s"parquet.bloom.filter.enabled#$bc", "true")
         .option(s"parquet.bloom.filter.candidates.number#$bc", BloomCandidates.toLong)
@@ -896,22 +922,21 @@ object SnapshotStore {
     require(parts.nonEmpty, "appendMany needs at least one part")
     require(parts.map(_.table).distinct.size == parts.size,
       s"appendMany parts must target distinct tables: ${parts.map(_.table)}")
-    // the schema to record derives against the CURRENT table meta — and
-    // re-derives on every commit attempt (by-name `meta` below): two
-    // racing widening appends must each fold in the schema the other
-    // just recorded, or the later commit silently drops the earlier
-    // column. Evaluated once per part up front too, so type drift /
-    // missing mergeSchema fails BEFORE any staging I/O.
-    def recordedOf(p: AppendPart): org.apache.spark.sql.types.StructType =
-      currentVia(spark, p.table, pinned.get(p.table)) match {
-        case None => p.df.schema
-        case Some(snap) =>
-          val m = snap.meta
-          schemaOf(m)
-            .map(evolveSchema(_, p.df.schema, p.mergeSchema, p.table, retiredPhysicals(m)))
-            .getOrElse(p.df.schema)
-      }
-    parts.foreach(p => { val _ = recordedOf(p) })
+    // the schema and bloom set to record derive against the CURRENT
+    // table meta — and re-derive on every commit attempt (by-name `meta`
+    // below): two racing widening appends must each fold in the schema
+    // the other just recorded, or the later commit silently drops the
+    // earlier column. Evaluated once per part up front too, so type
+    // drift / missing mergeSchema fails BEFORE any staging I/O.
+    def metaOf(p: AppendPart): Map[String, String] = {
+      val m = currentVia(spark, p.table, pinned.get(p.table)).fold(Map.empty[String, String])(_.meta)
+      val recorded = schemaOf(m)
+        .map(evolveSchema(_, p.df.schema, p.mergeSchema, p.table, retiredPhysicals(m)))
+        .getOrElse(p.df.schema)
+      p.meta + ("op" -> "append") + ("schema" -> recorded.json) ++
+        bloomMeta(m)(r => (r ++ p.bloomCols).distinct)
+    }
+    parts.foreach(p => { val _ = metaOf(p) })
     val staged: Seq[Seq[AddFile]] =
       if (parts.size == 1) Seq(stageFiles(parts.head.df, parts.head.table,
         parts.head.statsCols, parts.head.bloomCols, pinned.get(parts.head.table)))
@@ -928,8 +953,7 @@ object SnapshotStore {
         } finally pool.shutdown()
       }
     parts.zip(staged).map { case (p, adds) =>
-      commit(spark, p.table, adds, removes = Nil,
-        meta = p.meta + ("op" -> "append") + ("schema" -> recordedOf(p).json),
+      commit(spark, p.table, adds, removes = Nil, meta = metaOf(p),
         mustBeLive = Nil, pinned = pinned.get(p.table))
     }
   }
@@ -949,9 +973,8 @@ object SnapshotStore {
     // the recorded schema must keep those mappings for every column the
     // new layout shares — adopting df.schema verbatim would sever them
     // and readers of this very commit would null-fill the mapped columns
-    def recorded: org.apache.spark.sql.types.StructType =
-      if (latestVersion(spark, table) == 0L) df.schema
-      else schemaOf(state(spark, table).meta) match {
+    def recorded(current: Map[String, String]): org.apache.spark.sql.types.StructType =
+      schemaOf(current) match {
         case Some(c) if hasMapping(c) =>
           val resolver = spark.sessionState.analyzer.resolver
           org.apache.spark.sql.types.StructType(df.schema.fields.map { f =>
@@ -965,10 +988,13 @@ object SnapshotStore {
           })
         case _ => df.schema
       }
+    def metaNow: Map[String, String] = {
+      val current = SnapshotStore.current(spark, table).fold(Map.empty[String, String])(_.meta)
+      meta + ("op" -> "overwrite") + ("schema" -> recorded(current).json) ++
+        bloomMeta(current)(r => (r ++ bloomCols).distinct)
+    }
     val adds = stageFiles(df, table, statsCols, bloomCols)
-    commit(spark, table, adds, removes = prior,
-      meta = meta + ("op" -> "overwrite") + ("schema" -> recorded.json),
-      mustBeLive = prior)
+    commit(spark, table, adds, removes = prior, meta = metaNow, mustBeLive = prior)
   }
 
   /** Parquet reader pinned to the table's recorded schema (when
@@ -1357,20 +1383,41 @@ object SnapshotStore {
   }
 
   /** Metadata-swap compaction: rewrite the live set into `targetFiles`
-    * files and publish ONE commit that removes the fragments and adds
+    * files and publish ONE commit that removes the old files and adds
     * the rewrite — readers never see a half-compacted table (no
     * directory is ever replaced in place), and time travel to
-    * pre-compaction versions still works. No-op below `targetFiles`
-    * live files. Stats harvest on `statsCols`, or by default on every
-    * column the live files carry stats for (see [[rewriteLive]]).
+    * pre-compaction versions still works. The layout is one of three:
+    *  - plain: an arbitrary coalesce, a no-op at or below `targetFiles`;
+    *  - `clusterCols`: range-partitioned and sorted on them — for
+    *    lexicographic layouts such as the typed extraction stores'
+    *    (topic, ts_us), whose leading string key Morton order can't use;
+    *  - `zorderCols`: range-partitioned on the Morton code of 2 or 3
+    *    columns ([[graft.functions.ZOrder.zorderCols]]), so each file's
+    *    box is a small tile and [[prunedLiveFiles]] is sharp on EVERY axis.
+    * A clustered or z-ordered rewrite runs on any non-empty table, and
+    * restores the box pruning fragmented appends interleaved away; an
+    * empty table is a no-op for every form. Stats and blooms follow
+    * [[rewriteLive]].
     */
   def compact(spark: SparkSession, table: String, targetFiles: Int,
               statsCols: Seq[String] = Nil,
-              bloomCols: Seq[String] = Nil): Long = {
+              clusterCols: Seq[String] = Nil,
+              zorderCols: Seq[String] = Nil): Long = {
+    require(zorderCols.isEmpty || clusterCols.isEmpty,
+      "pass zorderCols OR clusterCols, not both — they are competing layouts")
     val snap = state(spark, table)
-    if (snap.live.size <= targetFiles) snap.version
-    else rewriteLive(spark, table, snap, _.repartition(targetFiles), Nil,
-      statsCols, bloomCols)
+    val layoutCols = zorderCols ++ clusterCols
+    if (snap.live.isEmpty || (layoutCols.isEmpty && snap.live.size <= targetFiles))
+      snap.version
+    else {
+      val layout: DataFrame => DataFrame =
+        if (zorderCols.nonEmpty) zordered(targetFiles, zorderCols)
+        else if (clusterCols.nonEmpty) {
+          val cols = clusterCols.map(col)
+          _.repartitionByRange(targetFiles, cols: _*).sortWithinPartitions(cols: _*)
+        } else _.repartition(targetFiles)
+      rewriteLive(spark, table, snap, layout, layoutCols, statsCols)
+    }
   }
 
   /** The body every compaction shares: read the live set, apply the
@@ -1378,44 +1425,48 @@ object SnapshotStore {
     * the removed files are still live with the same deletion vectors.
     * Stats harvest on `statsCols` when given, else on
     * [[statedCols]] of the live set plus the `layoutCols` — the rule the
-    * row-level rewrites follow, so a compaction never silently drops the
-    * pruning the original writers paid for.
+    * row-level rewrites follow — and the staged files carry the table's
+    * recorded blooms ([[stageFiles]]), so a compaction never silently
+    * drops the pruning the original writers paid for.
     */
   private def rewriteLive(spark: SparkSession, table: String, snap: Snapshot,
                           layout: DataFrame => DataFrame, layoutCols: Seq[String],
-                          statsCols: Seq[String], bloomCols: Seq[String]): Long = {
+                          statsCols: Seq[String]): Long = {
     val df = layout(readLive(spark, snap.meta, snap.live))
     val harvest =
       if (statsCols.nonEmpty) statsCols
       else (statedCols(snap.live) ++ layoutCols).distinct
-    val adds = stageFiles(df, table, harvest, bloomCols)
+    val adds = stageFiles(df, table, harvest)
     commit(spark, table, adds, removes = snap.live.map(_.path),
       meta = Map("op" -> "compact"), mustBeLive = snap.live.map(_.path),
       expectDv = snap.live.map(a => a.path -> a.dv).toMap)
   }
 
-  /** Size-TRIGGERED compaction — the OPTIMIZE policy a streaming
-    * [[appendSink]] or frequent small appends need: compact (to
-    * `targetFiles`) only once the live-file count exceeds
-    * `maxLiveFiles`, so maintenance amortizes instead of rewriting the
-    * table after every commit. Returns Some(newVersion) when a
-    * compaction committed, None when the table is within budget —
-    * callers run it unconditionally after ingest batches (the same
-    * trigger-not-schedule shape as TopicStore's maxFilesPerBucket).
-    * Losing the conflict race to a concurrent writer is the normal
-    * outcome of optimistic maintenance: catch the
-    * ConcurrentModificationException and retry next batch if desired.
+  private def zordered(targetFiles: Int, cols: Seq[String]): DataFrame => DataFrame =
+    _.withColumn("__z", graft.functions.ZOrder.zorderCols(cols.map(col)))
+      .repartitionByRange(targetFiles, col("__z"))
+      .sortWithinPartitions(col("__z"))
+      .drop("__z")
+
+  /** Size-TRIGGERED maintenance — the OPTIMIZE policy a streaming
+    * [[appendSink]] or frequent small appends need: a [[purgeDv]] at
+    * `purgeDvAbove`, then, only once the live-file count exceeds
+    * `maxLiveFiles`, a [[compact]] to `targetFiles` in the given layout,
+    * so maintenance amortizes instead of rewriting the table after
+    * every commit. Returns Some(newVersion) when a commit landed, None
+    * when the table is within budget — callers run it unconditionally
+    * after ingest batches (the same trigger-not-schedule shape as
+    * TopicStore's maxFilesPerBucket). Losing the conflict race to a
+    * concurrent writer is the normal outcome of optimistic maintenance:
+    * catch the ConcurrentModificationException and retry next batch.
     */
   def maintain(spark: SparkSession, table: String, maxLiveFiles: Int,
                targetFiles: Int, statsCols: Seq[String] = Nil,
                zorderCols: Seq[String] = Nil,
                clusterCols: Seq[String] = Nil,
-               purgeDvAbove: Option[Double] = None,
-               bloomCols: Seq[String] = Nil): Option[Long] = {
+               purgeDvAbove: Option[Double] = None): Option[Long] = {
     require(targetFiles > 0 && maxLiveFiles >= targetFiles,
       s"need maxLiveFiles >= targetFiles > 0, got ($maxLiveFiles, $targetFiles)")
-    require(zorderCols.isEmpty || clusterCols.isEmpty,
-      "pass zorderCols OR clusterCols, not both — they are competing layouts")
     // DV debt first: files whose deleted fraction crossed the threshold
     // rewrite clean (their dv read-side anti-join cost and dead bytes
     // amortize away) — the same trigger-not-schedule shape as the
@@ -1428,43 +1479,8 @@ object SnapshotStore {
         Some(purgeDv(spark, table, ratio))
       else None
     }
-    val snap = state(spark, table)
-    if (snap.live.size <= maxLiveFiles) purged
-    else if (zorderCols.nonEmpty)
-      // z-ordered rewrite: size-triggered maintenance RESTORES sharp
-      // box pruning too — fragmented appends interleave key ranges, so
-      // a plain compaction would leave every file's box spanning the
-      // domain while the z-ordered one re-clusters (same one-commit
-      // metadata swap)
-      Some(rewriteLive(spark, table, snap, zordered(targetFiles, zorderCols),
-        zorderCols, statsCols, bloomCols))
-    else if (clusterCols.nonEmpty)
-      Some(compactClustered(spark, table, targetFiles, clusterCols, statsCols,
-        bloomCols))
-    else Some(compact(spark, table, targetFiles, statsCols, bloomCols))
-  }
-
-  /** Compaction that RE-CLUSTERS by range on `clusterCols` — for tables
-    * whose native layout is lexicographic (e.g. the typed extraction
-    * stores: range-partitioned on (topic, ts_us), the order their
-    * time-band reads prune on). A plain [[compact]] coalesces
-    * arbitrarily, so after enough delta commits every output file's
-    * [min,max] box spans the whole domain and log-stats pruning dies;
-    * Morton [[compactZOrdered]] doesn't apply when the leading key is a
-    * STRING. Range clustering restores exactly the layout the original
-    * write produced. Stats harvest on `statsCols` (default: the live
-    * set's stated columns plus the cluster columns) so pruning sharpens
-    * in the same commit.
-    */
-  def compactClustered(spark: SparkSession, table: String, targetFiles: Int,
-                       clusterCols: Seq[String],
-                       statsCols: Seq[String] = Nil,
-                       bloomCols: Seq[String] = Nil): Long = {
-    require(clusterCols.nonEmpty, "compactClustered needs cluster columns")
-    val cols = clusterCols.map(col)
-    rewriteLive(spark, table, state(spark, table),
-      _.repartitionByRange(targetFiles, cols: _*).sortWithinPartitions(cols: _*),
-      clusterCols, statsCols, bloomCols)
+    if (state(spark, table).live.size <= maxLiveFiles) purged
+    else Some(compact(spark, table, targetFiles, statsCols, clusterCols, zorderCols))
   }
 
   /** Read the table at `asOf` (default: latest). */
@@ -1663,9 +1679,11 @@ object SnapshotStore {
     *     sharp precisely where boxes are blind: a high-cardinality
     *     hash-distributed id whose every file box spans the domain.
     *
-    * Write blooms by passing `bloomCols` to [[append]]/[[overwrite]];
-    * files without them (older commits, rewrites) just stay in the scan
-    * — either stage may only skip, never lie, and the IN predicate
+    * Declare blooms by passing `bloomCols` to a write ([[append]],
+    * [[overwrite]], an [[AppendPart]]); the table records them and every
+    * later staged write, rewrites included, blooms them too. Files
+    * without a bloom (written before the declaration) just stay in the
+    * scan — either stage may only skip, never lie, and the IN predicate
     * re-applies exactly. Values: Long/Int or String.
     */
   def readPoints(spark: SparkSession, table: String, column: String,
@@ -1862,11 +1880,11 @@ object SnapshotStore {
   /** `ALTER TABLE ... RENAME COLUMN from TO to` — METADATA-ONLY: the
     * physical (on-disk) name stays what it always was, the commit
     * records the new logical name mapped onto it, and every live file's
-    * harvested stats re-key old→new IN THE SAME COMMIT (a remove+add of
-    * the same paths — pure log metadata) so box pruning and log-answered
-    * aggregates keep working without touching a byte of data. Time
-    * travel sees each era's names: every version resolves its own
-    * recorded schema.
+    * harvested stats and the recorded bloom set re-key old→new IN THE
+    * SAME COMMIT (a remove+add of the same paths — pure log metadata) so
+    * pruning and log-answered aggregates keep working without touching a
+    * byte of data. Time travel sees each era's names: every version
+    * resolves its own recorded schema.
     */
   private[graft] def renameColumn(spark: SparkSession, table: String,
                                   from: String, to: String): Long = {
@@ -1908,7 +1926,7 @@ object SnapshotStore {
     commit(spark, table, adds = rekeyed, removes = snap.live.map(_.path),
       meta = Map("op" -> "alter_schema", "schema" -> recorded.json) ++
         (if (hasMapping(recorded)) featureMeta(snap.meta, "columnMapping")
-         else Map.empty),
+         else Map.empty) ++ bloomMeta(snap.meta)(_.map(rekey)),
       mustBeLive = snap.live.map(_.path))
   }
 
@@ -1916,8 +1934,9 @@ object SnapshotStore {
     * leaves the recorded schema (readers simply stop selecting it; the
     * bytes stay in old files until their next rewrite), its physical
     * name RETIRES so a later ADD of the same name can never resurrect
-    * the old values, and live stats drop the key in the same commit so
-    * rewrite paths stop harvesting it.
+    * the old values, and live stats and the recorded bloom set drop the
+    * column in the same commit so rewrite paths stop harvesting and
+    * blooming it.
     */
   private[graft] def dropColumn(spark: SparkSession, table: String,
                                 name: String): Long = {
@@ -1941,7 +1960,7 @@ object SnapshotStore {
       nulls = a.nulls.filter { case (k, _) => !resolver(k, name) }))
     commit(spark, table, adds = rekeyed, removes = snap.live.map(_.path),
       meta = Map("op" -> "alter_schema", "schema" -> recorded.json,
-        "schema.retired" -> retired),
+        "schema.retired" -> retired) ++ bloomMeta(snap.meta)(_.filterNot(resolver(_, name))),
       mustBeLive = snap.live.map(_.path))
   }
 
@@ -2410,26 +2429,6 @@ object SnapshotStore {
     }
     feeds.reduceOption(_ unionByName _).getOrElse(emptyFeed)
   }
-
-  /** [[compact]] that restores z-clustering while it rewrites:
-    * interleaved appends wreck per-file [min,max] boxes; re-sorting by
-    * the Morton code of 2 or 3 columns
-    * ([[graft.functions.ZOrder.zorderCols]]) range-partitions the rows
-    * so files tile the z-curve, each file's box becomes a small 2-D or
-    * 3-D tile, and [[prunedLiveFiles]] is sharp again on EVERY axis. The
-    * swap is one commit. Stats harvest on the live set's stated columns
-    * plus the z-order columns (they are the prune columns).
-    */
-  def compactZOrdered(spark: SparkSession, table: String, targetFiles: Int,
-                      zorderColumns: Seq[String]): Long =
-    rewriteLive(spark, table, state(spark, table),
-      zordered(targetFiles, zorderColumns), zorderColumns, Nil, Nil)
-
-  private def zordered(targetFiles: Int, cols: Seq[String]): DataFrame => DataFrame =
-    _.withColumn("__z", graft.functions.ZOrder.zorderCols(cols.map(col)))
-      .repartitionByRange(targetFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
 
   /** Roll the table back to `version` as a NEW commit (history is never
     * rewritten — the bad commits stay inspectable, the restore is just

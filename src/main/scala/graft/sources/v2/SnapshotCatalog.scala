@@ -149,7 +149,7 @@ class SnapshotCatalog extends TableCatalog
     val path = tablePath(ident)
     require(partitions.isEmpty,
       s"$catalogName: PARTITIONED BY is not supported — clustering is a " +
-        "maintenance op (SnapshotStore.compactZOrdered), not a DDL property")
+        "maintenance op (SnapshotStore.compact with zorderCols), not a DDL property")
     // the declared schema only lives until the first write records the
     // data's own layout — a DEFAULT declared here would silently vanish
     // with it, so refuse loudly and point at the supported path

@@ -64,7 +64,7 @@ private[v2] object SnapshotProcedures {
   /** `CALL graft.optimize(table, target_files[, zorder_cols])` —
     * metadata-swap compaction; a non-empty comma-separated
     * `zorder_cols` runs the z-ordered rewrite (restores sharp box
-    * pruning, [[SnapshotStore.compactZOrdered]]). */
+    * pruning, [[SnapshotStore.compact]] with `zorderCols`). */
   private object Optimize extends Proc("optimize",
     Seq(
       ProcedureParameter.in("table", StringType).build(),
@@ -82,9 +82,7 @@ private[v2] object SnapshotProcedures {
       val zcols = Option(in.getUTF8String(2)).map(_.toString).getOrElse("")
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
       val before = SnapshotStore.state(spark, table).live.size
-      val v =
-        if (zcols.nonEmpty) SnapshotStore.compactZOrdered(spark, table, target, zcols)
-        else SnapshotStore.compact(spark, table, target)
+      val v = SnapshotStore.compact(spark, table, target, zorderCols = zcols)
       InternalRow(v, before, SnapshotStore.state(spark, table).live.size)
     }
   }
@@ -347,9 +345,10 @@ private[v2] object SnapshotProcedures {
     * — the SQL maintenance verb for the streaming dedup sinks' state
     * (MinHash bands / embedding vectors / containment postings +
     * verdicts): every store table present under `index_path` compacts
-    * to `target_files` CLUSTERED BY ITS PRUNING KEY (bands by the
-    * `__bs` bucket hash, vectors by `__bucket`, postings by `h`,
-    * sigs/verdicts by the id), stats and blooms re-harvested, each an
+    * to `target_files` CLUSTERED BY ITS PRUNING KEY
+    * (`Streaming.sinkStoreClusterKeys`: bands by the `__bs` bucket hash,
+    * vectors by `__bucket`, postings by `h`, sigs/verdicts by the id),
+    * stats re-harvested and the recorded blooms re-written, each an
     * atomic snapshot commit — so the sinks' per-batch point-skips stay
     * sharp without waiting for the in-sink trigger. The batch world's
     * `optimize` for the sink family. Stores already at or under
@@ -393,15 +392,7 @@ private[v2] object SnapshotProcedures {
       val path = in.getUTF8String(0).toString
       val idCol = in.getUTF8String(1).toString
       val target = in.getInt(2)
-      // store -> (clusterCols, statsCols, bloomCols): the exact layouts
-      // the sinks' own maintenance uses (Streaming.scala)
-      val layouts: Seq[(String, (Seq[String], Seq[String], Seq[String]))] = Seq(
-        "bands" -> ((Seq("__bs"), Seq("__bs", idCol), Seq(idCol, "__bs"))),
-        "vectors" -> ((Seq("__bucket"), Seq("__bucket", idCol), Seq(idCol))),
-        "sigs" -> ((Seq(idCol), Seq(idCol), Seq(idCol))),
-        "postings" -> ((Seq("h"), Seq("h", idCol), Seq(idCol, "h"))),
-        "verdicts" -> ((Seq(idCol), Seq(idCol), Seq(idCol))),
-        "capped" -> ((Seq("band", "sig"), Nil, Nil)))
+      val layouts = graft.streaming.Streaming.sinkStoreClusterKeys(idCol).toSeq
       val present = layouts.filter { case (s, _) =>
         SnapshotStore.latestVersion(spark, s"$path/$s") > 0L }
       require(present.nonEmpty,
@@ -413,15 +404,14 @@ private[v2] object SnapshotProcedures {
         var before = 0
         var after = 0
         val touched = scala.collection.mutable.ArrayBuffer.empty[String]
-        present.foreach { case (s, (cc, sc, bc)) =>
+        present.foreach { case (s, cc) =>
           val t = s"$path/$s"
           val live = SnapshotStore.state(spark, t).live.size
           before += live
           // early-out: a store already at/under target (or emptied by the
-          // cap tombstones) gains nothing from a rewrite — skipping also
-          // avoids compactClustered throwing on an empty snapshot
+          // cap tombstones) gains nothing from a rewrite
           if (live > target) {
-            SnapshotStore.compactClustered(spark, t, target, cc, sc, bc)
+            SnapshotStore.compact(spark, t, target, clusterCols = cc)
             touched += s
             after += SnapshotStore.state(spark, t).live.size
           } else after += live

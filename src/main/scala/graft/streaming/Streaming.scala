@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.sources.SnapshotStore
+import scala.collection.immutable.ListMap
 
 /** Structured-streaming twins of the batch operators: the reference's
   * pipeline is batch-triggered per S3 upload (infrastructure/emr_trigger),
@@ -1157,7 +1158,8 @@ object Streaming {
         case _ => distributedScreen(b, tables, fb, maxBucketSize, maxProbeKeys)
       }
     } { () =>
-      maybeCompactIndex(spark, tables, idCol, maxBucketSize, compactAfterFiles, retainVersions)
+      maybeCompactIndex(spark, indexPath, tables, idCol, maxBucketSize, compactAfterFiles,
+        retainVersions)
     }
   }
 
@@ -1255,18 +1257,33 @@ object Streaming {
     * disk to live + one version + ~20 minutes of churn. Vacuum's
     * data-dir listing cost is paid only when a compaction happened.
     */
-  private def maintainStore(spark: SparkSession,
-                            table: String, maxLiveFiles: Int,
-                            statsCols: Seq[String], clusterCols: Seq[String],
-                            bloomCols: Seq[String],
-                            retainVersions: Int = 2): Unit =
+  private def maintainStore(spark: SparkSession, indexPath: String, store: String,
+                            idCol: String, maxLiveFiles: Int,
+                            retainVersions: Int): Unit = {
+    val table = s"$indexPath/$store"
     SnapshotStore.maintain(spark, table, maxLiveFiles,
-      math.max(1, maxLiveFiles / 8), statsCols = statsCols,
-      clusterCols = clusterCols, bloomCols = bloomCols)
+      math.max(1, maxLiveFiles / 8), clusterCols = sinkStoreClusterKeys(idCol)(store))
       .foreach { _ =>
         SnapshotStore.vacuum(spark, table, retainVersions = retainVersions)
         ()
       }
+  }
+
+  /** The key each dedup-sink store's files cluster on, by store name
+    * under the sink's index path: the pruning key of the store's probes
+    * (band bucket hash, LSH bucket, shingle hash, id). A store's stats
+    * follow its live files and its blooms its recorded bloom set, so
+    * this is the whole layout its maintenance restores; the sinks' own
+    * maintenance and `CALL graft.dedup_sink_maintain` both read it.
+    */
+  private[graft] def sinkStoreClusterKeys(idCol: String): ListMap[String, Seq[String]] =
+    ListMap(
+      "bands" -> Seq("__bs"),
+      "vectors" -> Seq("__bucket"),
+      "sigs" -> Seq(idCol),
+      "postings" -> Seq("h"),
+      "verdicts" -> Seq(idCol),
+      "capped" -> Seq("band", "sig"))
 
   /** Size-triggered maintenance for the [[incrementalDedupSink]] stores
     * — see the sink's scaladoc for the tombstone semantics. Band
@@ -1278,12 +1295,12 @@ object Streaming {
     * writer lease ([[graft.sources.SinkLease]] — acquired at batch
     * start), so a concurrent `dedup_sink_maintain` can never interleave.
     */
-  private def maybeCompactIndex(spark: SparkSession,
+  private def maybeCompactIndex(spark: SparkSession, indexPath: String,
                                 tables: MinhashTables, idCol: String,
                                 maxBucketSize: Int,
                                 compactAfterFiles: Int,
                                 retainVersions: Int): Unit = {
-    val MinhashTables(bandsTbl, verdictsTbl, cappedTbl) = tables
+    val MinhashTables(bandsTbl, _, cappedTbl) = tables
     val targetFiles = math.max(1, compactAfterFiles / 8)
 
     if (SnapshotStore.state(spark, bandsTbl).live.size > compactAfterFiles) {
@@ -1302,10 +1319,11 @@ object Streaming {
           .select(col("band"), col("sig")))
         .distinct()
         .localCheckpoint()
+      val cluster = sinkStoreClusterKeys(idCol)("bands").map(col)
       val compacted = bands
         .join(allCapped, Seq("band", "sig"), "left_anti")
-        .repartitionByRange(targetFiles, col("__bs"))
-        .sortWithinPartitions(col("__bs"))
+        .repartitionByRange(targetFiles, cluster: _*)
+        .sortWithinPartitions(cluster: _*)
         .localCheckpoint() // materialize BEFORE the snapshot it reads moves on
       // tombstones FIRST: a crash between the two commits leaves the
       // dead rows in place but already excluded by the screen's
@@ -1313,8 +1331,7 @@ object Streaming {
       // never recorded oversized, splitting a bucket's count
       if (!allCapped.isEmpty)
         SnapshotStore.overwrite(allCapped, cappedTbl)
-      SnapshotStore.overwrite(compacted, bandsTbl,
-        statsCols = Seq("__bs", idCol), bloomCols = Seq(idCol, "__bs"))
+      SnapshotStore.overwrite(compacted, bandsTbl, statsCols = Seq("__bs", idCol))
       // the overwrite superseded every prior band file: vacuum bounds
       // disk (see maintainStore — same retention/grace reasoning)
       SnapshotStore.vacuum(spark, bandsTbl, retainVersions = retainVersions)
@@ -1323,9 +1340,7 @@ object Streaming {
       // both overwrites committed: the rewrite's scratch blocks are dead
       Seq(allCapped, compacted).foreach(graft.runtime.Checkpoints.free(_))
     }
-    maintainStore(spark, verdictsTbl, compactAfterFiles,
-      statsCols = Seq(idCol), clusterCols = Seq(idCol), bloomCols = Seq(idCol),
-      retainVersions = retainVersions)
+    maintainStore(spark, indexPath, "verdicts", idCol, compactAfterFiles, retainVersions)
   }
 
   /** Streaming EMBEDDING near-dedup against a durable LSH-bucketed
@@ -1426,8 +1441,7 @@ object Streaming {
               b.read(vecsTbl).select(col(idCol), col("__v"),
                 hyperplaneBucket(col("__v"), bits, dim).as("__bucket")),
               vecsTbl, statsCols = Seq("__bucket", idCol),
-              meta = Map(policyKey -> s"scaled|$bits|$dim"),
-              bloomCols = Seq(idCol)))
+              meta = Map(policyKey -> s"scaled|$bits|$dim")))
             b.repin(vecsTbl)
           }
           (s"scaled|$bits|$dim", v => hyperplaneBucket(v, bits, dim))
@@ -1460,14 +1474,8 @@ object Streaming {
     } { () =>
       // metadata-swap compaction re-CLUSTERS vectors by __bucket (the
       // screen's pruning key) and verdicts by id (the replay skip's)
-      maintainStore(spark, vecsTbl, maxLiveFiles,
-        statsCols = Seq("__bucket", idCol),
-        clusterCols = Seq("__bucket"), bloomCols = Seq(idCol),
-        retainVersions = retainVersions)
-      maintainStore(spark, s"$indexPath/verdicts", maxLiveFiles,
-        statsCols = Seq(idCol),
-        clusterCols = Seq(idCol), bloomCols = Seq(idCol),
-        retainVersions = retainVersions)
+      Seq("vectors", "verdicts").foreach(
+        maintainStore(spark, indexPath, _, idCol, maxLiveFiles, retainVersions))
     }
   }
 
@@ -1598,15 +1606,8 @@ object Streaming {
     } { () =>
       // metadata-swap maintenance: postings re-cluster by `h` (the
       // probe's pruning key), sigs and verdicts by id (the point-skips')
-      maintainStore(spark, sigsTbl, compactAfterFiles,
-        statsCols = Seq(idCol), clusterCols = Seq(idCol),
-        bloomCols = Seq(idCol), retainVersions = retainVersions)
-      maintainStore(spark, postTbl, compactAfterFiles,
-        statsCols = Seq("h", idCol), clusterCols = Seq("h"),
-        bloomCols = Seq(idCol, "h"), retainVersions = retainVersions)
-      maintainStore(spark, s"$indexPath/verdicts", compactAfterFiles,
-        statsCols = Seq(idCol), clusterCols = Seq(idCol),
-        bloomCols = Seq(idCol), retainVersions = retainVersions)
+      Seq("sigs", "postings", "verdicts").foreach(
+        maintainStore(spark, indexPath, _, idCol, compactAfterFiles, retainVersions))
     }
   }
 

@@ -26,17 +26,15 @@ object syntax {
     // ---- signal lake -------------------------------------------------
     def asOf(right: DataFrame, keys: Seq[String], leftTime: String,
              rightTime: String, valueCols: Seq[String],
-             toleranceUs: Option[Long] = None, forward: Boolean = false,
-             sliceUs: Option[Long] = None): DataFrame =
+             toleranceUs: Option[Long] = None, forward: Boolean = false): DataFrame =
       AsOfJoin.asOf(df, right, keys, leftTime, rightTime, valueCols,
-        toleranceUs, forward, sliceUs)
+        toleranceUs, forward)
 
     def rangeJoin(right: DataFrame, keys: Seq[String], leftTime: String,
                   rightTime: String, valueCols: Seq[String],
-                  lowerUs: Long, upperUs: Long,
-                  sliceUs: Option[Long] = None): DataFrame =
+                  lowerUs: Long, upperUs: Long): DataFrame =
       AsOfJoin.rangeJoin(df, right, keys, leftTime, rightTime, valueCols,
-        lowerUs, upperUs, sliceUs)
+        lowerUs, upperUs)
 
     def timeGrid(groupCols: Seq[String], timeCol: String, stepUs: Long): DataFrame =
       Signals.timeGrid(df, groupCols, timeCol, stepUs)

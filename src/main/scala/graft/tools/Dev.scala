@@ -16,12 +16,14 @@ import graft.runtime.Checkpoints
   *
   *  - `ab <iters> <query[:sortless]>...` times the arms interleaved
   *    (ABAB…) in one session, so ambient drift hits every arm alike. The
-  *    shared dedup tables are built once; each arm is warmed once, then
-  *    every run is Bench's per-run body: the query's `toRdd.count()`,
-  *    with `Checkpoints.release()` outside the clock. `q:sortless` is `q`
+  *    shared dedup tables are built once; the arms are warmed by
+  *    [[WarmupRounds]] interleaved rounds, then every run is Bench's
+  *    per-run body: the query's `toRdd.count()`, with
+  *    `Checkpoints.release()` outside the clock. `q:sortless` is `q`
   *    with its terminal global sort stripped ([[sortless]]), so
   *    `ab n q q:sortless` measures the sort's amplification. Prints each
-  *    arm's samples in run order, its median and its quartiles.
+  *    arm's timed samples in run order, its median and its quartiles,
+  *    and apart from them its warm-up samples.
   *  - `explain <out.md> [query...]` writes one section per query (all
   *    of them when none are named): its exchange count and its full
   *    formatted plan. `explain PLANS.md` regenerates the plan audit.
@@ -68,6 +70,10 @@ object Dev {
         s"no terminal global sort to strip:\n${plan.treeString}")))
   }
 
+  /** Untimed interleaved rounds before the timed ones: after a single
+    * one, a range-join arm still fell from 3.2 s to 1.2 s while timed. */
+  private val WarmupRounds = 3
+
   /** Linear-interpolated `p`-quantile of ascending `xs`. */
   private def quantile(xs: Seq[Double], p: Double): Double = {
     val h = p * (xs.size - 1)
@@ -94,13 +100,15 @@ object Dev {
       Checkpoints.release()
       sec
     }
-    builds.foreach { case (_, b) => run(b) }
-    val samples = Seq.fill(iters)(builds.map { case (_, b) => run(b) }).transpose
-    builds.map(_._1).zip(samples).foreach { case (arm, ts) =>
+    def rounds(n: Int) = Seq.fill(n)(builds.map { case (_, b) => run(b) }).transpose
+    val warmup = rounds(WarmupRounds)
+    val samples = rounds(iters)
+    def fmt(ts: Seq[Double]) = ts.map(t => f"$t%.3f").mkString(",")
+    builds.map(_._1).lazyZip(samples).lazyZip(warmup).foreach { (arm, ts, ws) =>
       val s = ts.sorted
       println(f"[ab] $arm%-32s median=${quantile(s, 0.5)}%.3f s  " +
         f"q1=${quantile(s, 0.25)}%.3f  q3=${quantile(s, 0.75)}%.3f  " +
-        s"samples=${ts.map(t => f"$t%.3f").mkString(",")}")
+        s"samples=${fmt(ts)}  warmup=${fmt(ws)}")
     }
   }
 

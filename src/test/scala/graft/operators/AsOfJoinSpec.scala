@@ -256,8 +256,8 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(aDiff.isEmpty,
         s"asof round $round: ${aDiff.collect().take(5).mkString(";")}")
 
-      // the public operators under both thresholds, with and without a
-      // slice width, against the references: the composed range join;
+      // the public operators and the time-sliced forms under both
+      // thresholds, against the references: the composed range join;
       // for the as-of, the latest (forward: earliest) right row of the
       // key on the right side of the left time, within the tolerance,
       // computed here in plain Scala (rows unique per (k, rt) as above)
@@ -275,18 +275,24 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .mkString(",")).sorted
       val tol = rnd.nextInt(30).toLong
       val slice = 1L + rnd.nextInt(60)
-      for (threshold <- Seq("-1", "10MB"); sliceUs <- Seq(None, Some(slice))) withThreshold(threshold) {
-        val rPublic = AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"),
-          lower, upper, sliceUs)
-        assert(rows(rPublic) == rows(rComposed),
-          s"rangeJoin round $round threshold=$threshold slice=$sliceUs")
+      for (threshold <- Seq("-1", "10MB")) withThreshold(threshold) {
+        for (sliceUs <- Seq(None, Some(slice))) {
+          val r = sliceUs.fold(AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"),
+            lower, upper))(AsOfJoin.rangeJoinTimeSliced(left, right, Seq("k"), "t", "rt", Seq("v"),
+            lower, upper, _))
+          assert(rows(r) == rows(rComposed),
+            s"rangeJoin round $round threshold=$threshold slice=$sliceUs")
+        }
         for ((tolUs, forward) <- Seq(None -> false, Some(tol) -> false, None -> true, Some(tol) -> true)) {
           val out = AsOfJoin.asOf(left, rightUnique, Seq("k"), "t", "rt", Seq("v"),
-            toleranceUs = tolUs, forward = forward, sliceUs = sliceUs)
+            toleranceUs = tolUs, forward = forward)
           assert(rows(out) == expected(tolUs, forward),
-            s"asOf round $round threshold=$threshold slice=$sliceUs tol=$tolUs forward=$forward")
+            s"asOf round $round threshold=$threshold tol=$tolUs forward=$forward")
           if (tolUs.isEmpty && !forward) assert(rows(out) == rows(aComposed))
         }
+        val sliced = AsOfJoin.asOfSliced(left, rightUnique, Seq("k"), "t", "rt", Seq("v"), slice)
+        assert(rows(sliced) == expected(None, forward = false),
+          s"asOfSliced round $round threshold=$threshold slice=$slice")
       }
     }
   }
@@ -528,9 +534,9 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(forced.queryExecution.executedPlan.toString.contains("AsOfJoin"),
       forced.queryExecution.executedPlan.toString.take(2000))
-    // ... or, given a slice width, the time-sliced merge
+    // the time-sliced merge is its own private form, never picked here
     val sliced = withThreshold("-1") {
-      AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"), sliceUs = Some(10L))
+      AsOfJoin.asOfSliced(left, right, Seq("k"), "t", "rt", Seq("v"), 10L)
     }
     assert(sliced.queryExecution.executedPlan.toString.contains("__slice"),
       sliced.queryExecution.executedPlan.toString.take(2000))
@@ -557,7 +563,7 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(forced.queryExecution.executedPlan.toString.contains("RangeJoin"),
       forced.queryExecution.executedPlan.toString.take(2000))
     val sliced = withThreshold("-1") {
-      AsOfJoin.rangeJoin(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L, sliceUs = Some(20L))
+      AsOfJoin.rangeJoinTimeSliced(left, right, Seq("k"), "t", "rt", Seq("v"), 10L, 5L, 20L)
     }
     assert(sliced.queryExecution.executedPlan.toString.contains("__slice"),
       sliced.queryExecution.executedPlan.toString.take(2000))
@@ -578,7 +584,8 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val right = Seq((Some("a"), 15L, 1.5), (None: Option[String], 1L, 3.5)).toDF("k", "rt", "v")
     for (threshold <- Seq("-1", "10MB"); slice <- Seq(None, Some(4L))) {
       val out = withThreshold(threshold) {
-        AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"), sliceUs = slice)
+        slice.fold(AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v")))(
+          AsOfJoin.asOfSliced(left, right, Seq("k"), "t", "rt", Seq("v"), _))
           .collect().map(r => r.getAs[Int]("tag") ->
             (if (r.isNullAt(r.fieldIndex("v"))) None else Some(r.getDouble(r.fieldIndex("v"))))).toMap
       }
@@ -622,10 +629,12 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       for ((l, r) <- Seq((leftTs, rightTs), (leftD, rightD), (left, rightTs));
            slice <- Seq(None, Some(4L))) {
         rejects("AsOfJoin.asOf", "bigint") {
-          AsOfJoin.asOf(l, r, Seq("k"), "t", "rt", Seq("v"), sliceUs = slice).collect()
+          slice.fold(AsOfJoin.asOf(l, r, Seq("k"), "t", "rt", Seq("v")))(
+            AsOfJoin.asOfSliced(l, r, Seq("k"), "t", "rt", Seq("v"), _)).collect()
         }
         rejects("AsOfJoin.rangeJoin", "bigint") {
-          AsOfJoin.rangeJoin(l, r, Seq("k"), "t", "rt", Seq("v"), 1L, 1L, sliceUs = slice).collect()
+          slice.fold(AsOfJoin.rangeJoin(l, r, Seq("k"), "t", "rt", Seq("v"), 1L, 1L))(
+            AsOfJoin.rangeJoinTimeSliced(l, r, Seq("k"), "t", "rt", Seq("v"), 1L, 1L, _)).collect()
         }
       }
       rejects("AsOfJoin.asOf", "bigint") {

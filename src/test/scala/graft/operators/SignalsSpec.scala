@@ -56,6 +56,22 @@ class SignalsSpec extends SparkSpec {
     assert(out.forall(r => r.isNullAt(r.fieldIndex("b"))))
   }
 
+  test("synchronize: a signal with a null time fills no tick") {
+    // the window sorts nulls first: kept, the null-time a=9.0 would fill
+    // ticks 100 and 200, before any real reading of `a`
+    val df = Seq[(String, Option[Long], String, Double)](
+        ("b1", None, "a", 9.0), ("b1", Some(100L), "b", 1.0),
+        ("b1", Some(250L), "a", 2.0), ("b1", Some(400L), "b", 3.0))
+      .toDF("bag", "t", "topic", "v")
+    val out = Signals.synchronize(df, Seq("bag"), "t", "topic", "v",
+      topics = Seq("a", "b"), stepUs = 100L)
+      .orderBy("t").collect()
+    def topic(c: String) = out.map(r => Option(r.get(r.fieldIndex(c)))).toSeq
+    assert(out.map(_.getAs[Long]("t")).toSeq == Seq(100L, 200L, 300L, 400L))
+    assert(topic("a") == Seq(None, None, Some(2.0), Some(2.0)))
+    assert(topic("b") == Seq(Some(1.0), Some(1.0), Some(1.0), Some(3.0)))
+  }
+
   test("topicExtractAll sniffs per-topic object keys and parses in one pass") {
     val df = Seq(
       (1L, "cam", "[x: 1, y: 2, x: 3, y: 4]"),

@@ -355,19 +355,19 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(got === want && got.size === 512)
   }
 
-  test("maintain(zorderCols, bloomCols) pairs box pruning with point skipping") {
+  test("maintain(zorderCols) pairs box pruning with the recorded blooms' point skipping") {
     val t = tempTable("zbloom")
-    // z-ordered on (x, y) for boxes, bloom on the unrelated id for points
+    // z-ordered on (x, y) for boxes, bloom on the unrelated id for
+    // points: the appends declare it, the maintenance rewrite keeps it
     val cube = spark.range(16384).select(
       (col("id") % 128).as("x"), (col("id") / 128).cast("long").as("y"),
       (col("id") * 2654435761L % 1000003L).as("doc_id"))
     (0 until 4).foreach { i =>
       SnapshotStore.append(cube.filter(pmod(col("x"), lit(4)) === i).repartition(5),
-        t, statsCols = Seq("x", "y"))
+        t, statsCols = Seq("x", "y"), bloomCols = Seq("doc_id"))
     }
     assert(SnapshotStore.maintain(spark, t, maxLiveFiles = 16, targetFiles = 16,
-      statsCols = Seq("x", "y"), zorderCols = Seq("x", "y"),
-      bloomCols = Seq("doc_id")).nonEmpty)
+      statsCols = Seq("x", "y"), zorderCols = Seq("x", "y")).nonEmpty)
     val (boxKept, boxTotal) = SnapshotStore.prunedLiveFiles(spark, t,
       Map("x" -> (0L, 15L), "y" -> (0L, 15L)))
     assert(boxTotal === 16 && boxKept.size < boxTotal, "z-order box pruning must still work")
@@ -751,7 +751,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("vacuumed"))
   }
 
-  test("compactZOrdered restores sharp pruning as one metadata swap") {
+  test("compact(zorderCols) restores sharp pruning as one metadata swap") {
     val t = tempTable("zcompact")
     // interleaved appends: the round-robin repartition deals consecutive
     // ids across files, so every file's id-box spans nearly the whole
@@ -766,7 +766,7 @@ class SnapshotStoreSpec extends SparkSpec {
       SnapshotStore.prunedLiveFiles(spark, t, Map("id" -> (10L, 20L)))
     assert(keptBefore.size * 2 > totalBefore,
       s"interleaved appends should prune poorly (${keptBefore.size} of $totalBefore kept)")
-    SnapshotStore.compactZOrdered(spark, t, targetFiles = 4, zorderColumns = Seq("id", "v"))
+    SnapshotStore.compact(spark, t, targetFiles = 4, zorderCols = Seq("id", "v"))
     val (keptAfter, totalAfter) =
       SnapshotStore.prunedLiveFiles(spark, t, Map("id" -> (10L, 20L)))
     assert(keptAfter.size.toDouble / totalAfter < keptBefore.size.toDouble / totalBefore,

@@ -847,8 +847,7 @@ class StreamingSpec extends SparkSpec
     // deterministic final layout for the assertion (the sink's own
     // maintenance is trigger-based, so the instant of the last compact
     // varies): cluster to 8 files by the screen's pruning key
-    SnapshotStore.compactClustered(spark, tbl, 8, Seq("__bucket"),
-      Seq("__bucket", "vec_id"), Seq("vec_id"))
+    SnapshotStore.compact(spark, tbl, 8, clusterCols = Seq("__bucket"))
     // the screen's probe: ONE bucket must read a bounded slice of the
     // clustered files, not the 400-row index
     val someBucket = SnapshotStore.snapshot(spark, tbl)
@@ -1039,8 +1038,7 @@ class StreamingSpec extends SparkSpec
     val tbl = s"$tmp/postings"
     // deterministic final layout (the sink's trigger fires at its own
     // cadence): cluster to 8 files by `h` — the probe's pruning key
-    SnapshotStore.compactClustered(spark, tbl, 8, Seq("h"),
-      Seq("h", "doc_id"), Seq("doc_id", "h"))
+    SnapshotStore.compact(spark, tbl, 8, clusterCols = Seq("h"))
     // ONE batch-shaped probe (a single doc's shingle hashes) must read
     // a bounded slice of the clustered postings, not the whole index
     val oneDoc = graft.operators.Dedup.hashSignatures(

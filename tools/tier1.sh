@@ -3,10 +3,12 @@
 # the full test suite, and the DuckDB oracle compare (Verify, then
 # tools/check.py) at sf0.001 and sf0.01. check.py fails on any key that
 # does not match its oracle or has no output. Last comes a perfbench
-# smoke: the checker self-test, then a 4-second run of each benchmark
-# workload (dedup_stream, nightly_ingest), each of which must report
-# "correct": true with 0 failed steps; the dedup_stream smoke must also
-# store at most 2.0 bytes per input byte (about 0.8 with blooms sized
+# smoke: the checker self-test, then a 4-second run of dedup_stream and a
+# 12-second run of nightly_ingest (4 waves, the first run length whose
+# maintenance compacts the extraction store; 3 waves stay within its
+# live-file budget), each of which must report "correct": true with 0
+# failed steps; the dedup_stream smoke must also store at most 2.0 bytes
+# per input byte (about 0.8 with blooms sized
 # to their files; 10.0 with a fixed 1 MiB bloom per file). A zero exit
 # means every oracle key passed at both scale factors, every test is
 # green and both benchmarked pipelines produce correct results within
@@ -44,8 +46,10 @@ done
 # every step correct
 echo "== perfbench smoke"
 python3 perfbench/run.py --self-test
-for w in dedup_stream nightly_ingest; do
-  last=$(python3 perfbench/run.py --workload "$w" --seconds 4 --trace 0 | tail -n 1)
+for w in dedup_stream:4 nightly_ingest:12; do
+  secs=${w#*:}
+  w=${w%:*}
+  last=$(python3 perfbench/run.py --workload "$w" --seconds "$secs" --trace 0 | tail -n 1)
   echo "$last"
   if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$last"; then
     echo "tier-1: perfbench $w smoke is not correct with 0 failed steps" >&2
